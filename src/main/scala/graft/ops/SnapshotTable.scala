@@ -134,13 +134,20 @@ object SnapshotTable {
     * opened for predicates on it). An EMPTY map records a file with
     * no usable stats at all — the manifest still lists it, so a
     * non-empty `fileStats` is a COMPLETE inventory of the dir and
-    * pruning can rely on it. */
+    * pruning can rely on it. Bounds come from the parquet footer
+    * statistics and are CONSERVATIVE: min ≤ the true min and max ≥
+    * the true max. Integral bounds are exact; string bounds are exact
+    * unless the writer truncated its binary statistics
+    * (`parquet.statistics.truncate.length`), which keeps a prefix of
+    * the min and bumps the max upward. */
   final case class FileStat(name: String,
       bounds: Map[String, (String, String)])
 
   /** One manifest entry: a live partition dir (relative to
     * `dir/data/`) plus optional min/max of the table's stats key over
-    * that dir's rows (rendered `toString`, escaped only on disk), and
+    * that dir's rows (rendered `toString`, escaped only on disk;
+    * conservative like [[FileStat]]'s — min ≤ the true min, max ≥ the
+    * true max), and
     * optional per-file bounds harvested from the parquet FOOTERS at
     * commit time (metadata-only reads — no data pass). `dvs` lists
     * DELETION-VECTOR sidecars (parquet dirs of deleted keys, relative
@@ -377,7 +384,7 @@ object SnapshotTable {
           .drop(s"${P}z")
       else if (splits.forall(_ <= 1))
         // EXPLICIT task count = the number of partition values this
-        // write actually produces (known from the profile): a bare
+        // write actually produces (known from the estimate): a bare
         // repartition(partCols) is AQE-coalescible, and on a
         // small-bytes commit AQE folds the whole write into ONE task
         // that then creates every partition's file SERIALLY — the
@@ -936,8 +943,8 @@ object SnapshotTable {
 
   /** METADATA-ONLY row count — the Iceberg/Delta `count(*)` shape:
     * every commit records each produced entry's exact row count
-    * (`rows=` lines, from the same profile pass that derives the
-    * entry list), so a full-table count is a driver-side sum over the
+    * (`rows=` lines, from the same footers that derive the entry
+    * list), so a full-table count is a driver-side sum over the
     * manifest with ZERO files opened. Returns None — fall back to a
     * scan count — when any entry predates row tracking or carries a
     * deletion vector (a dv hides an unknowable number of rows until
@@ -1377,20 +1384,6 @@ object SnapshotTable {
         .map(_.path))
   }
 
-  /** Harvest per-file key bounds for every produced entry — the
-    * Iceberg stats-collection mechanism read back from the FOOTERS
-    * (metadata-only, never a data pass; parquet may TRUNCATE binary
-    * stats, which keeps min a lower bound and max an upper bound —
-    * the BinaryTruncator contract — so pruning with them stays
-    * sound). Listing is driver-side (bounded by the commit's touched
-    * dirs); the footer reads distribute: a small commit (the daily
-    * narrow delta) reads its few footers serially on the driver —
-    * reusing the listing's FileStatus, no extra status round-trip,
-    * no job-scheduling latency — while a large one (bulk load,
-    * OPTIMIZE over 10³-10⁵ dirs) ships the reads to the executors as
-    * one Spark job (the session's Hadoop conf rides a
-    * SerializableConfiguration — a task-side default Configuration
-    * would drop credentials/endpoint settings on a real cluster). */
   /** One written file's full commit-time harvest — everything the
     * manifest needs, from ONE footer open (a metadata-only read):
     * per-column bounds ([[FileStat]]), the file's ROW COUNT (footer
@@ -1414,23 +1407,17 @@ object SnapshotTable {
     * pooled on the driver. The crossover is well past hundreds of
     * files even on object stores (~10-50 ms per footer, 32-way
     * pooled); commits that write MORE files than this are exactly
-    * the commits whose write job dwarfs a distributed harvest.
-    * Parameterised for deployments with slower metadata paths. */
-  private def harvestDriverMaxFiles(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.snapshot.harvestDriverMaxFiles")
-      .map(_.toInt).getOrElse(512)
-
-  private def harvestFileStats(spark: SparkSession,
-      dirs: Seq[(String, Path)], cols: Seq[(String, DataType)])
-      : Map[String, Seq[FileStat]] =
-    harvestFiles(spark, dirs, cols, None).map { case (ep, hs) =>
-      ep -> hs.map(_.stat)
-    }
+    * the commits whose write job dwarfs a distributed harvest. */
+  private val HarvestDriverMaxFiles = 512
 
   /** Harvest every `.parquet` file under each dir (ONE footer open
-    * per file): driver-pooled below [[harvestDriverMaxFiles]],
-    * executor-distributed beyond. Returns the harvests grouped by
-    * the caller's entry key. */
+    * per file, metadata-only): driver-pooled below
+    * [[HarvestDriverMaxFiles]], reusing the listing's FileStatus;
+    * beyond it, one Spark job whose tasks get the session's Hadoop
+    * conf through a SerializableConfiguration (a task-side default
+    * Configuration would drop credentials/endpoint settings on a real
+    * cluster). Returns the harvests grouped by the caller's entry
+    * key. */
   private def harvestFiles(spark: SparkSession,
       dirs: Seq[(String, Path)], cols: Seq[(String, DataType)],
       censusCol: Option[String])
@@ -1445,7 +1432,7 @@ object SnapshotTable {
           .map(st => ep -> st).toSeq
       }
     val harvested: Seq[(String, FileHarvest)] =
-      if (files.size <= harvestDriverMaxFiles(spark)) {
+      if (files.size <= HarvestDriverMaxFiles) {
         if (files.size <= 4)
           files.map { case (ep, st) =>
             ep -> harvestOf(
@@ -1576,14 +1563,14 @@ object SnapshotTable {
   }
 
   /** ENTRY-level bounds from the entry's files' footer bounds —
-    * exact where recorded: min/max over the files' typed extremes
-    * equals the row-level min/max (an all-null file simply
+    * min/max over the files' typed extremes (an all-null file simply
     * contributes nothing), compared in the key's own order (integral
-    * as Long, string byte-wise). A column any file marked UNKNOWN
-    * drops from the entry entirely — a bound over the remaining
-    * files could be too narrow and prune rows that live in the
-    * unknown blocks (reads stay correct either way; pruning is
-    * conservative by contract). */
+    * as Long, string byte-wise), so as conservative as the file
+    * bounds: exact unless the footers truncated string stats. A
+    * column any file marked UNKNOWN drops from the entry entirely — a
+    * bound over the remaining files could be too narrow and prune
+    * rows that live in the unknown blocks (reads stay correct either
+    * way; pruning is conservative by contract). */
   private def entryStatsFromFiles(harvests: Seq[FileHarvest],
       cols: Seq[(String, DataType)]): Map[String, (String, String)] =
     cols.flatMap { case (k, dt) =>
@@ -1604,7 +1591,7 @@ object SnapshotTable {
 
   /** The partition LEAF dirs a write produced under `base`, relative
     * (`__gp_a=1/__gp_b=2`), exactly `depth` levels deep — the
-    * committed entry list of the footer-derived commit path. Only
+    * committed entry list of every rewriting commit. Only
     * `__gp_`-prefixed dirs descend (the committer's `_SUCCESS` /
     * `_temporary` never match). */
   private def listLeafPartDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -1625,51 +1612,9 @@ object SnapshotTable {
     if (!fs.exists(base)) Nil else rec(base, depth, "")
   }
 
-  /** Per-partition (row count, key min, key max) of `df`, collected —
-    * bounded exactly as the touched-partition collects throughout the
-    * engine (a delta spans few storage partitions by construction).
-    * One aggregation job over the already-checkpointed merge output;
-    * it feeds the committed entry list (the partitions the write
-    * REALLY produced), the hot-partition split table, and the
-    * manifest stats in a single pass. */
-  private def partProfile(df: DataFrame, partCols: Seq[String],
-      nullCensusCol: Option[String], statCols: Seq[String],
-      checks: Seq[(String, String)] = Nil)
-      : Seq[(Row, Long, Map[String, (String, String)], Long, Seq[Long])] = {
-    val censusCol = nullCensusCol.getOrElse(statCols.headOption
-      .getOrElse(df.schema.fieldNames.head))
-    val aggs = Seq(count(lit(1)).as("_n"),
-      // null-KEY census, riding the same single pass: a null merge
-      // key breaks the new-wins dedup (every null groups together)
-      // AND the CDF's equality classification — refused at commit
-      // (writeAndCommit), not silently committed
-      count(when(col(censusCol).isNull, lit(1))).as("_knull")) ++
-      statCols.flatMap(k => Seq(
-        min(col(k)).cast("string").as(s"_mn_$k"),
-        max(col(k)).cast("string").as(s"_mx_$k"))) ++
-      // CHECK-constraint census, same pass: SQL CHECK semantics — a
-      // row violates only when the expression is FALSE; null passes
-      checks.zipWithIndex.map { case ((_, e), j) =>
-        count(when(!expr(e), lit(1))).as(s"_chk$j")
-      }
-    df.groupBy(partCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val n = r.getLong(partCols.length)
-        val knull = r.getLong(partCols.length + 1)
-        val stats = statCols.zipWithIndex.flatMap { case (k, j) =>
-          val mnIdx = partCols.length + 2 + 2 * j
-          if (!r.isNullAt(mnIdx) && !r.isNullAt(mnIdx + 1))
-            Some(k -> ((r.getString(mnIdx), r.getString(mnIdx + 1))))
-          else None
-        }.toMap
-        val chkBase = partCols.length + 2 + 2 * statCols.size
-        val viol = checks.indices.map(j => r.getLong(chkBase + j))
-        (r, n, stats, knull, viol)
-      }
-  }
-
-  /** Shared write+commit tail of [[merge]]/[[mergeCdc]]/[[optimize]]/
-    * [[repartitionTable]]: lay the output's partitions down with
+  /** Shared write+commit tail of every rewriting writer — [[merge]],
+    * [[mergeCdc]], [[optimizeWhere]], [[repartitionTable]] and
+    * [[renameColumn]]: lay the output's partitions down with
     * hot-partition salting and commit `kept ++ produced`.
     * `statsCols` is the INTENT — the columns whose bounds the entries
     * should describe, MERGE KEY FIRST (the salt hash and the null
@@ -1681,51 +1626,34 @@ object SnapshotTable {
     * commits `kept` alone (a merge whose every touched row was
     * deleted).
     *
-    * TWO paths (round 20):
-    *
-    *   - FOOTER-DERIVED (the default, taken when the caller supplies
-    *     `estParts` and the table carries no CHECK constraints):
-    *     write FIRST, then derive the committed entry list, row
-    *     counts, per-column entry/file bounds, and the null-key
-    *     census from the WRITTEN FILES' parquet footers — manifest ≡
-    *     written bytes BY CONSTRUCTION (the determinism the old
-    *     pre-write localCheckpoint barrier existed to buy), so the
-    *     merge paths drop the checkpoint materialize AND the separate
-    *     profile aggregation: the output plan is computed exactly
-    *     ONCE, by the write job. `estParts` carries the partitions
-    *     the output CAN produce with estimated row counts (delta
-    *     counts + carried entry rows — an upper bound), which sizes
-    *     the write's task layout; estimates only ever OVER-split a
-    *     hot partition (bounded 2x when a delta fully replaces it),
-    *     never understaff one. A null merge key now refuses AFTER the
-    *     staged write (same message, version unburned, content
-    *     untouched — the token'd staging is sweepable garbage): the
-    *     failure path pays a wasted write so the success path saves
-    *     two driver actions per commit.
-    *
-    *   - PROFILE-FIRST (the legacy path, taken for tables with CHECK
-    *     constraints — their census needs row-level expression
-    *     evaluation — and for rewrites whose output partitioning the
-    *     manifest cannot predict, `repartitionTable`/`renameColumn`):
-    *     aggregate the output's actual partitions, refuse
-    *     null-key/CHECK violations BEFORE any write, then write.
-    *     When the caller passed `estParts` (a merge-family plan that
-    *     no longer pre-checkpoints), this path localCheckpoints the
-    *     output itself so profile and write still read one
-    *     materialization — the old determinism barrier, preserved
-    *     exactly where it is still load-bearing. */
+    * Every writer takes the same steps: claim the staging with the
+    * in-flight marker, empty `dest`, write, list the leaf dirs the
+    * write produced, harvest their footers, census, commit. The entry
+    * list, row counts, per-column entry/file bounds and the null-key
+    * census all derive from the WRITTEN FILES' parquet footers, so
+    * manifest ≡ written bytes by construction and the output plan is
+    * computed once, by the write job. `estParts` names every
+    * partition the output can produce with an estimated row count;
+    * it only sizes the write's task layout (the salted layout routes
+    * rows through it, so it must cover the output's partitions, but
+    * the counts may be off: content and manifest stay exact). Tables
+    * with CHECK constraints pay one aggregation over the written
+    * files. A null-key or CHECK violation refuses after the staged
+    * write but before the version claim: the version stays unburned,
+    * content is untouched, and the staging is unreferenced garbage
+    * the sweeps reclaim. */
   private def writeAndCommit(spark: SparkSession, dir: String,
       output: DataFrame, statsCols: Seq[String], partCols: Seq[String],
       newVer: Long, batchId: Option[Long], kept: Seq[Entry],
       schemaDdl: String,
       maxRowsPerTask: Long, dirToken: Option[String],
+      estParts: Seq[(Row, Long)],
       clusterKey: Option[Column] = None,
       head: Option[Snap] = None,
-      ref: Option[String] = None,
-      estParts: Option[Seq[(Row, Long)]] = None): Long = {
+      ref: Option[String] = None): Long = {
     val headDvKey = head.flatMap(_.dvKey)
-    // salt/profile column: the merge key when present, else any
-    // non-partition column — needed even statless for the row counts
+    // salt column: the merge key when present, else any non-partition
+    // column
     val saltCol = statsCols.headOption.orElse(
       output.schema.fieldNames.find(!partCols.contains(_)))
     require(saltCol.isDefined,
@@ -1744,7 +1672,6 @@ object SnapshotTable {
         bounds = f.bounds.filter { case (c, _) => newSet.contains(c) }))))
     val checkList = head.map(_.checks).getOrElse(Map.empty)
       .toSeq.sortBy(_._1)
-    val fastPath = estParts.isDefined && checkList.isEmpty
     // the data dir carries the attempt token when one is supplied
     // (the retrying writers): two optimistic racers at the same
     // version then stage into DISJOINT dirs — without it, the loser's
@@ -1764,103 +1691,74 @@ object SnapshotTable {
     // grace window (marker FILE mtimes are real on every store).
     val fsD = fsOf(spark, dir)
     val marker = new Path(dir, s"_inflight.$verDir")
-    // legacy-path state (empty/None on the fast path)
-    var ckpt: Option[DataFrame] = None
     try {
-      val producedF: Seq[Entry] = if (fastPath) {
-        val est = estParts.get
-        fsD.create(marker, true).close()
-        writePartitioned(output, partCols, dest,
-          xxhash64(col(key)), est, maxRowsPerTask, clusterKey)
-        val rels = listLeafPartDirs(fsD, new Path(dest), partCols.size)
-        // an empty output (a CDC feed that deleted every touched row)
-        // wrote only the committer's _SUCCESS — reclaim the husk
-        // eagerly rather than leaving it to the retention sweeps
-        if (rels.isEmpty)
-          try fsD.delete(new Path(dest), true)
-          catch { case scala.util.control.NonFatal(_) => }
-        val byEntry =
-          if (rels.isEmpty) Map.empty[String, Seq[FileHarvest]]
-          else harvestFiles(spark,
-            rels.map(r => r -> new Path(s"$dest/$r")), statTyped,
-            statsCols.headOption)
-        // the MERGE-KEY contract, from the same footers: a null key
-        // breaks new-wins dedup and silently misclassifies in the
-        // CDF as delete+insert — refuse before the commit (version
-        // unburned; the staged bytes are unreferenced garbage)
-        if (statsCols.nonEmpty) {
-          val perFile = byEntry.values.flatten.toSeq
-          val nulls =
-            if (perFile.forall(_.censusNulls.isDefined))
-              perFile.flatMap(_.censusNulls).sum
-            else // footer omitted null counts — count the bytes once
-              spark.read.parquet(dest)
-                .filter(col(statsCols.head).isNull).count()
-          require(nulls == 0L,
-            s"merge key '${statsCols.head}' is null on $nulls row(s) — " +
-              "snapshot-table keys must be non-null (new-wins dedup " +
-              "and the change data feed both classify by key equality)")
+      fsD.create(marker, true).close()
+      // EMPTY STAGING: the listing below commits every leaf dir it
+      // finds, so `dest` must hold this write's output and nothing
+      // else. A refused or crashed attempt at the same untokened
+      // v=<n> leaves partition dirs behind, and an overwrite under
+      // partitionOverwriteMode=dynamic replaces only the partitions it
+      // writes — the rest would be committed as live data
+      fsD.delete(new Path(dest), true)
+      writePartitioned(output, partCols, dest,
+        xxhash64(col(key)), estParts, maxRowsPerTask, clusterKey)
+      val rels = listLeafPartDirs(fsD, new Path(dest), partCols.size)
+      // an empty output (a CDC feed that deleted every touched row)
+      // wrote only the committer's _SUCCESS — reclaim the husk
+      // eagerly rather than leaving it to the retention sweeps
+      if (rels.isEmpty)
+        try fsD.delete(new Path(dest), true)
+        catch { case scala.util.control.NonFatal(_) => }
+      val byEntry =
+        if (rels.isEmpty) Map.empty[String, Seq[FileHarvest]]
+        else harvestFiles(spark,
+          rels.map(r => r -> new Path(s"$dest/$r")), statTyped,
+          statsCols.headOption)
+      // the MERGE-KEY contract, from the same footers: a null key
+      // breaks new-wins dedup and silently misclassifies in the
+      // CDF as delete+insert — refuse before the commit
+      if (statsCols.nonEmpty) {
+        val perFile = byEntry.values.flatten.toSeq
+        val nulls =
+          if (perFile.forall(_.censusNulls.isDefined))
+            perFile.flatMap(_.censusNulls).sum
+          else // footer omitted null counts — count the bytes once
+            spark.read.parquet(dest)
+              .filter(col(statsCols.head).isNull).count()
+        require(nulls == 0L,
+          s"merge key '${statsCols.head}' is null on $nulls row(s) — " +
+            "snapshot-table keys must be non-null (new-wins dedup " +
+            "and the change data feed both classify by key equality)")
+      }
+      // CHECK constraints (Delta's ADD CONSTRAINT shape): every write
+      // re-verifies the table's recorded checks on its OUTPUT rows, in
+      // one aggregation over the written files, naming the constraint.
+      // SQL CHECK semantics: a row violates only when the expression
+      // is FALSE; null passes
+      if (checkList.nonEmpty && rels.nonEmpty) {
+        val viol = checkList.map { case (_, e) =>
+          count(when(!expr(e), lit(1)))
         }
-        rels.map { rel =>
-          val hs = byEntry.getOrElse(rel, Nil)
-          Entry(s"$verDir/$rel",
-            stats = entryStatsFromFiles(hs, statTyped),
-            fileStats = if (newStatsCols.isEmpty) Nil else hs.map(_.stat),
-            rows = Some(hs.map(_.rows).sum))
-        }
-      } else {
-        // PROFILE-FIRST: a merge-family caller (estParts present) no
-        // longer pre-checkpoints, so materialize here — profile and
-        // write must read ONE computation of the output or an
-        // evicted block could resolve ties differently between them
-        val out = if (estParts.isDefined) {
-          val c = output.localCheckpoint(); ckpt = Some(c); c
-        } else output
-        val profile = partProfile(out, partCols, statsCols.headOption,
-          newStatsCols, checkList)
-        if (statsCols.nonEmpty) {
-          val nulls = profile.map(_._4).sum
-          require(nulls == 0L,
-            s"merge key '${statsCols.head}' is null on $nulls row(s) — " +
-              "snapshot-table keys must be non-null (new-wins dedup " +
-              "and the change data feed both classify by key equality)")
-        }
-        // CHECK constraints (Delta's ADD CONSTRAINT shape): every
-        // write path re-verifies the table's recorded checks on its
-        // OUTPUT rows — same single profile pass, zero extra jobs —
-        // and refuses BEFORE any data write, naming the constraint
+        val counts = spark.read.parquet(dest)
+          .agg(viol.head, viol.tail: _*).head()
         checkList.zipWithIndex.foreach { case ((name, e), j) =>
-          val viol = profile.map(_._5(j)).sum
-          require(viol == 0L,
-            s"CHECK constraint '$name' ($e) is violated by $viol " +
-              "row(s) — nothing was written or committed")
+          require(counts.getLong(j) == 0L,
+            s"CHECK constraint '$name' ($e) is violated by " +
+              s"${counts.getLong(j)} row(s) — nothing was committed")
         }
-        val produced = profile.map { case (r, n, st, _, _) =>
-          Entry(s"$verDir/${partKeyRow(partCols, r)}", st, rows = Some(n))
-        }
-        if (profile.nonEmpty) fsD.create(marker, true).close()
-        if (profile.nonEmpty)
-          writePartitioned(out, partCols, dest,
-            xxhash64(col(key)), profile.map(p => (p._1, p._2)),
-            maxRowsPerTask, clusterKey)
-        // file-level bounds from the freshly-written footers
-        // (metadata reads, O(files this commit wrote), ONE footer
-        // open per file for every stats column); carried entries
-        // keep theirs
-        if (newStatsCols.isEmpty) produced
-        else {
-          val byEntry = harvestFileStats(spark,
-            produced.map(e => e.path -> new Path(s"$dir/data/${e.path}")),
-            statTyped)
-          produced.map(e =>
-            e.copy(fileStats = byEntry.getOrElse(e.path, Nil)))
-        }
+      }
+      val produced = rels.map { rel =>
+        val hs = byEntry.getOrElse(rel, Nil)
+        Entry(s"$verDir/$rel",
+          stats = entryStatsFromFiles(hs, statTyped),
+          fileStats = if (newStatsCols.isEmpty) Nil else hs.map(_.stat),
+          rows = Some(hs.map(_.rows).sum))
       }
       // deletion vectors ride ONLY on kept entries (a rewritten
       // partition folded its deletes in; produced entries are dv-free
       // by construction) — the dvkey survives exactly as long as some
       // entry still needs it
-      val allEntries = keptAdj ++ producedF
+      val allEntries = keptAdj ++ produced
       // column tombstones (dropColumn's resurrect hazard) carry until
       // a FULL rewrite (kept empty = every surviving row rewrote under
       // the pinned schema) purges the dropped columns' physical bytes
@@ -1890,31 +1788,23 @@ object SnapshotTable {
         // metadata change rethrows and the retry loop rebases.
         case e: IllegalArgumentException
             if isCommitConflict(e) && dirToken.isDefined &&
-              head.isDefined && fastRecommitEnabled && ref.isEmpty =>
+              head.isDefined && ref.isEmpty =>
           // ref.isEmpty: the fast path re-resolves the WINNER's commit,
           // which on a branch would need ref-aware chain inspection —
           // branch contention is the single-audit-writer exception, so
           // a branch loser takes the honest full rebase instead
           val keptSet = kept.map(_.path).toSet
-          val ourKeys = producedF.map(e => partKeyOfEntry(e.path)).toSet ++
+          val ourKeys = produced.map(e => partKeyOfEntry(e.path)).toSet ++
             head.get.entries.filterNot(en => keptSet.contains(en.path))
               .map(en => partKeyOfEntry(en.path))
-          fastRecommit(spark, dir, head.get, producedF, ourKeys, batchId,
+          fastRecommit(spark, dir, head.get, produced, ourKeys, batchId,
             schemaDdl, partCols, newStatsCols, checkList.toMap, e)
       }
     } finally {
-      ckpt.foreach(org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint)
       try fsD.delete(marker, false)
       catch { case scala.util.control.NonFatal(_) => } // ages out
     }
   }
-
-  /** Probe/spec switch for [[fastRecommit]] — lets the round-19 probe
-    * price N-writer throughput with and without disjoint-writer
-    * conflict resolution on the identical workload. Always true in
-    * production use. */
-  @volatile private[graft] var fastRecommitEnabled = true
 
   /** Test seam: runs immediately before the FIRST commit attempt of
     * every [[writeAndCommit]] — the only way a spec can
@@ -1932,7 +1822,7 @@ object SnapshotTable {
     * of the advanced head — legal exactly when (a) table METADATA is
     * unmoved between the loser's base and the current head (schema,
     * partitioning, checks, tombstones: the loser's output was
-    * profiled and verified against its base's contract), and (b) the
+    * censused against its base's contract), and (b) the
     * entries that changed between base and head are PARTITION-DISJOINT
     * from the loser's read+write set (`ourKeys` — the partitions it
     * replaced or produced): disjointness means the winner neither saw
@@ -2178,8 +2068,7 @@ object SnapshotTable {
     // touched partitions WITH per-partition delta counts in the same
     // single collect the touched set always was: the counts (plus the
     // replaced entries' recorded rows — the manifest already knows
-    // them) give writeAndCommit's footer-derived path its task-layout
-    // estimate without a profile aggregation over the merge output
+    // them) give writeAndCommit its task-layout estimate
     val touched = deltaC.groupBy(partCols.map(col): _*)
       .agg(count(lit(1)).as("_gp_n")).collect()
     require(touched.nonEmpty, "empty delta — nothing to merge")
@@ -2195,18 +2084,12 @@ object SnapshotTable {
     val existingTouched = readTouched(spark, dir, head, replaced,
       delta.schema)
     // both sides conform to the EVOLVED types before the union (the
-    // widening seam — a no-op select when nothing widened). No
-    // localCheckpoint any more: the footer-derived commit path
-    // computes this plan exactly once (the write job) and derives the
-    // manifest from the written bytes, so there is no second reader
-    // to keep consistent — the barrier's job. The write lands in a
-    // fresh v=<n+1> dir, never a path the plan reads.
+    // widening seam — a no-op select when nothing widened)
     val existingC = conformTo(existingTouched, newSchema)
     val merged = Upsert.merge(deltaC, existingC, key, tieBreak)
     writeAndCommit(spark, dir, merged, (key +: statsCols).distinct,
       partCols, head.ver + 1, batchId, kept, newSchema.toDDL,
-      maxRowsPerTask, token, head = Some(head), ref = branch,
-      estParts = Some(est))
+      maxRowsPerTask, token, est, head = Some(head), ref = branch)
   }
 
   /** [[merge]] with OPTIMISTIC CONCURRENCY — the multi-writer-safe
@@ -2644,9 +2527,9 @@ object SnapshotTable {
     * already violates would make every future merge unfixably loud),
     * then commits a metadata-only version recording it. From that
     * version on, EVERY write path (merge, mergeCdc, optimize,
-    * repartition) re-verifies the constraint on its output rows
-    * inside the commit's existing profile pass — zero extra jobs —
-    * and refuses before writing anything. SQL CHECK semantics: a row
+    * repartition, rename) re-verifies the constraint on its output
+    * rows with one aggregation over the files it wrote, and refuses
+    * before committing anything. SQL CHECK semantics: a row
     * violates only when the expression evaluates FALSE (null passes).
     * The head's batch id carries forward (a replayed merge stays a
     * no-op across the metadata commit). */
@@ -2850,9 +2733,9 @@ object SnapshotTable {
         Row.fromSeq(partCols.indices.map(r.get)))
       require(touched.nonEmpty, "empty delta — nothing to merge")
       val (replaced, kept) = splitTouched(head, partCols, touched.toSeq)
-      // task-layout estimate for the footer-derived commit path:
-      // survivors per partition are bounded by the collapsed feed's
-      // rows plus the stored rows the manifest already counts
+      // task-layout estimate for writeAndCommit: survivors per
+      // partition are bounded by the collapsed feed's rows plus the
+      // stored rows the manifest already counts
       val replacedRows = replaced.groupBy(e => partKeyOfEntry(e.path))
         .map { case (k, es) =>
           k -> es.map(_.rows.getOrElse(maxRowsPerTask)).sum
@@ -2865,9 +2748,7 @@ object SnapshotTable {
         readTouched(spark, dir, head, replaced, dataSchema), newSchema)
       // survivors: feed winners that are not deletes, plus stored rows
       // whose key the feed never mentions (one broadcast-able anti join
-      // on the collapsed keys — the feed is delta-sized). No
-      // localCheckpoint: the footer-derived commit computes this plan
-      // once, in the write job (see merge).
+      // on the collapsed keys — the feed is delta-sized)
       val upserts = collapsed.filter(col(opCol) =!= "D").drop(opCol)
         .select(dataSchema.fieldNames.map(col).toSeq: _*)
       val carried = existingTouched.join(
@@ -2877,8 +2758,7 @@ object SnapshotTable {
       writeAndCommit(spark, dir, survivors,
         (key +: statsCols).distinct, partCols,
         head.ver + 1, batchId, kept, newSchema.toDDL,
-        maxRowsPerTask, token, head = Some(head), ref = branch,
-        estParts = Some(est))
+        maxRowsPerTask, token, est, head = Some(head), ref = branch)
     } finally org.apache.spark.sql.graftbridge.ColumnBridge
       .unpersistLocalCheckpoint(collapsed)
   }
@@ -2977,20 +2857,14 @@ object SnapshotTable {
     // no-op across the maintenance rewrite, the optimize discipline).
     // Task-layout estimate from the manifest itself: an optimize
     // rewrites IDENTICAL content, so the selected entries' recorded
-    // rows are the EXACT per-partition output counts — the
-    // footer-derived commit path then writes in one table scan where
-    // the profile-first path paid two (the r19-measured reason this
-    // family was never checkpointed).
-    val est = if (targets.forall(_.rows.isDefined))
-      Some(targets.map { e =>
-        val pv = partitionValues(e)
-        (typedPartRow(df.schema, partCols, pv), e.rows.get)
-      })
-    else None
+    // rows are the exact per-partition output counts (an entry
+    // without one sizes as a single task, as in merge)
+    val est = targets.map(e => (typedPartRow(df.schema, partCols,
+      partitionValues(e)), e.rows.getOrElse(maxRowsPerTask)))
     writeAndCommit(spark, dir, df, head.statsKeys, partCols,
       head.ver + 1, head.batchId, kept, head.schemaDdl,
-      maxRowsPerTask, dirToken = None, clusterKey = cluster,
-      head = Some(head), estParts = est)
+      maxRowsPerTask, dirToken = None, estParts = est,
+      clusterKey = cluster, head = Some(head))
   }
 
   /** A typed partition-values [[Row]] from an entry's unescaped dir
@@ -3010,28 +2884,6 @@ object SnapshotTable {
         case _ => v
       }
     })
-
-  /** The shared O(table) rewrite tail of [[optimize]] and
-    * [[repartitionTable]]: write+commit under `partCols` preserving
-    * the head's STATS KEY intent and carrying its batch id forward
-    * (a replayed last merge stays a no-op across the rewrite).
-    *
-    * Deliberately NOT localCheckpoint'ed, unlike the merge paths: the
-    * input here is a plain parquet read of immutable committed dirs —
-    * re-scanning it for the profile agg and the write is columnar,
-    * compressed, pushdown-friendly I/O, while materializing the WHOLE
-    * table as uncompressed row blocks costs more than the scans it
-    * saves (measured at 50M rows/400 partitions: checkpointed
-    * OPTIMIZE 17.7 s vs re-scanning 5.9 s). The merge paths keep
-    * their checkpoints because their inputs are delta-sized and may
-    * sit atop expensive upstream plans. */
-  private def rewriteHead(spark: SparkSession, dir: String, head: Snap,
-      df: DataFrame, partCols: Seq[String], maxRowsPerTask: Long,
-      clusterKey: Option[Column]): Long =
-    writeAndCommit(spark, dir, df, head.statsKeys, partCols,
-      head.ver + 1, head.batchId, Nil, head.schemaDdl,
-      maxRowsPerTask, dirToken = None, clusterKey = clusterKey,
-      head = Some(head))
 
   /** PARTITION EVOLUTION: rewrite the head's content under a NEW
     * partitioning and commit it as the next version — the migration
@@ -3059,8 +2911,17 @@ object SnapshotTable {
     newPartCols.foreach(c => require(df.columns.contains(c),
       s"partition column '$c' is not a table column"))
     requirePathSafe(df, newPartCols)
-    rewriteHead(spark, dir, head, df, newPartCols, maxRowsPerTask,
-      clusterKey = None)
+    // the new layout's partitions and their sizes: one count over the
+    // committed files sizes the write, which then scans them once more
+    val est = df.groupBy(newPartCols.map(col): _*).count().collect()
+      .toSeq.map { r =>
+        partKeyRow(newPartCols, r) // loud on a null partition value
+        (r: Row, r.getLong(newPartCols.size))
+      }
+    writeAndCommit(spark, dir, df, head.statsKeys, newPartCols,
+      head.ver + 1, head.batchId, Nil, head.schemaDdl,
+      maxRowsPerTask, dirToken = None, estParts = est,
+      head = Some(head))
   }
 
   /** The column names a recorded CHECK expression references —
@@ -3178,9 +3039,18 @@ object SnapshotTable {
     }
     val df = readSnap(spark, dir, head).withColumnRenamed(from, to)
     requirePathSafe(df, newPartCols)
+    // a rename keeps every partition and its rows: the head's entries,
+    // read under the renamed partition columns, are the write's layout
+    val est = head.entries.map { e =>
+      val pv = partitionValues(e).map { case (c, v) =>
+        (if (c == from) to else c) -> v
+      }
+      (typedPartRow(df.schema, newPartCols, pv),
+        e.rows.getOrElse(maxRowsPerTask))
+    }
     writeAndCommit(spark, dir, df, newStatsKeys, newPartCols,
       head.ver + 1, head.batchId, Nil, newDdl, maxRowsPerTask,
-      dirToken = None, head = Some(head))
+      dirToken = None, estParts = est, head = Some(head))
   }
 
   /** Retention cut: keep the newest `keep` versions' manifests and

@@ -608,8 +608,9 @@ class Round18Spec extends SparkSpec {
   }
 
   test("CHECK constraints: recorded in the manifest, enforced on " +
-      "every write path's output before anything lands, null passes " +
-      "(SQL semantics), add validates existing data, drop re-opens") {
+      "every write path's output so that on a violation nothing was " +
+      "committed, null passes (SQL semantics), add validates existing " +
+      "data, drop re-opens") {
     val tbl = tmpDir("checks") + "/t"
     SnapshotTable.merge(spark, tbl,
       Seq((1L, 10, 1), (2L, 20, 2)).toDF("k", "q", "p"),
@@ -617,7 +618,8 @@ class Round18Spec extends SparkSpec {
     assert(SnapshotTable.addCheck(spark, tbl, "q_nonneg", "q >= 0") == 2L)
     assert(SnapshotTable.resolve(spark, tbl).checks ==
       Map("q_nonneg" -> "q >= 0"))
-    // a valid merge passes; a violating merge refuses BEFORE writing
+    // a valid merge passes; a violating merge refuses before its
+    // commit
     assert(SnapshotTable.merge(spark, tbl,
       Seq((3L, 30, 1)).toDF("k", "q", "p"), "k", "q", Seq("p"),
       Some(3L)) == 3L)
@@ -631,6 +633,12 @@ class Round18Spec extends SparkSpec {
       s"the refusal must name the constraint: ${ex.getMessage}")
     assert(SnapshotTable.versions(spark, tbl) == Seq(1L, 2L, 3L),
       "a refused merge must not burn a version")
+    // the refused attempt's staging is unreferenced garbage
+    val staged = new Path(s"$tbl/data/v=4")
+    assert(fs(tbl).exists(staged))
+    SnapshotTable.vacuum(spark, tbl, graceMs = 0L)
+    assert(!fs(tbl).exists(staged),
+      "vacuum must reclaim a refused commit's staging")
     def ks = SnapshotTable.read(spark, tbl).select(col("k")).collect()
       .map(_.getLong(0)).toSet
     assert(ks == Set(1L, 2L, 3L))
