@@ -247,7 +247,9 @@ object Dedup {
     * map-side-combinable aggregation, lineage cut per round with
     * localCheckpoint; converges in O(component diameter) rounds (dup
     * clusters are shallow). Docs with no near-dup are singleton
-    * clusters of themselves. */
+    * clusters of themselves. Throws `IllegalStateException` when
+    * `maxIters` rounds end with labels still changing, instead of
+    * returning a component split into several clusters. */
   def dupClusters(docs: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[Column], n: Int, threshold: Double,
       maxIters: Int = 15,
@@ -286,6 +288,14 @@ object Dedup {
       labels = next.select(col("node"), col("lbl"))
       converged = !changed
       it += 1
+    }
+    if (!converged) {
+      cp.release(labels)
+      cp.release(edges)
+      throw new IllegalStateException(
+        s"dupClusters did not converge in $maxIters label-propagation " +
+          "rounds — raise maxIters (a component needs about as many " +
+          "rounds as its longest shortest path)")
     }
     cp.release(edges)
     docs.select(col(idCol).as("doc_id"))
@@ -775,26 +785,136 @@ object Dedup {
 
   /** The portable-hash banding shared by [[minHashLshPairsPortable]]
     * and [[minHashBandStats]]: (base = (_id, _sh sorted shingles),
-    * banded = slim (_id, _bandNo, _bandKey) rows, one per doc×band). */
-  private def minHashBandedPortable(docs: DataFrame, textCol: String,
+    * banded = slim (_id, _bandNo, _bandKey) rows, one per doc×band).
+    * Its band keys come from [[portableBands]], as the stored doc
+    * index's do ([[minHashDocIndex]]), so batch and stream banding
+    * cannot drift apart. */
+  private[graft] def minHashBandedPortable(docs: DataFrame, textCol: String,
       idCol: String, n: Int, numPerms: Int, rowsPerBand: Int,
       seed: Long): (DataFrame, DataFrame) = {
-    val numBands = numPerms / rowsPerBand
-    val base = docs.select(col(idCol).as("_id"),
+    val base = sortedShingles(docs, textCol, idCol, n)
+    val banded = portableBands(base, numPerms, rowsPerBand, seed)
+      .select(col("_id"), explode(col("_bands")).as("_band"))
+      .select(col("_id"),
+        col("_band._bandNo").as("_bandNo"), col("_band._bandKey").as("_bandKey"))
+    (base, banded)
+  }
+
+  /** (_id, _sh sorted word n-gram shingles), docs without a shingle
+    * dropped. */
+  private def sortedShingles(docs: DataFrame, textCol: String,
+      idCol: String, n: Int): DataFrame =
+    docs.select(col(idCol).as("_id"),
         sort_array(wordShingles(col(textCol), n)).as("_sh"))
       .filter(size(col("_sh")) > 0)
-    val banded = base
+
+  /** `base` (_id, _sh sorted shingles) plus `_bands`: the doc's
+    * portable MinHash signature cut into `numPerms / rowsPerBand`
+    * bands, an array of (_bandNo, _bandKey) structs in ascending band
+    * order, the key being the band's `rowsPerBand` signature values
+    * joined by ','. One projection per doc — no shuffle. */
+  private def portableBands(base: DataFrame, numPerms: Int,
+      rowsPerBand: Int, seed: Long): DataFrame = {
+    val numBands = numPerms / rowsPerBand
+    base
       .withColumn("_hs",
         graft.functions.VectorFunctions.polyHashAll(col("_sh")))
       .withColumn("_sig", minHashSignature(col("_hs"), numPerms, seed))
-      .select(col("_id"), explode(array((0 until numBands).map { b =>
-        struct(lit(b).as("band"),
+      .select(col("_id"), col("_sh"), array((0 until numBands).map { b =>
+        struct(lit(b).as("_bandNo"),
           concat_ws(",", slice(col("_sig"), b * rowsPerBand + 1, rowsPerBand)
-            .cast("array<string>")).as("bk"))
-      }: _*)).as("_band"))
-      .select(col("_id"),
-        col("_band.band").as("_bandNo"), col("_band.bk").as("_bandKey"))
-    (base, banded)
+            .cast("array<string>")).as("_bandKey"))
+      }: _*).as("_bands"))
+  }
+
+  /** INCREMENTAL MinHash-LSH maintenance — the daily-crawl shape: the
+    * base corpus was deduped yesterday (its internal pairs already
+    * emitted and acted on), a delta batch arrives today, and the only
+    * pairs that matter are the ones a delta doc participates in:
+    * (delta × base) ∪ (delta × delta). Banding a document depends only
+    * on its own text, so the delta's band table unions against the
+    * base's — in production the base side is the PERSISTED band index
+    * read back from storage (the [[graft.ext.Similarity.ivfUpsert]]
+    * fragment discipline), never recomputed; here both sides derive
+    * from their doc tables. The candidate join keys the (small) delta
+    * band table against base ∪ delta, so shuffle volume is
+    * O(|delta| × bands + collided buckets) — NOT O(|base|²), which is
+    * what re-running full-corpus dedup per day would cost. The exact
+    * Jaccard verify runs on the joined band rows, which carry both
+    * docs' shingles ([[minHashDeltaPairsFromIndex]]). Requires
+    * disjoint id spaces.
+    * Incremental ∪ previous-run pairs ≡ full-corpus pairs — the
+    * union-parity property Ext8Spec pins. */
+  def minHashLshDeltaPairs(baseDocs: DataFrame, deltaDocs: DataFrame,
+      textCol: String, idCol: String, n: Int = 3, numPerms: Int = 16,
+      rowsPerBand: Int = 4, threshold: Double = 0.5,
+      seed: Long = 42L): DataFrame =
+    minHashDeltaPairsFromIndex(
+      minHashDocIndex(baseDocs, textCol, idCol, n, numPerms, rowsPerBand,
+        seed),
+      minHashDocIndex(deltaDocs, textCol, idCol, n, numPerms, rowsPerBand,
+        seed),
+      threshold)
+
+  /** The STORABLE per-document dedup index row: (_id, _sh sorted
+    * shingles, _bands array of (_bandNo, _bandKey) structs in
+    * ascending band order) — one row per doc, the thing a daily
+    * pipeline persists so tomorrow's delta joins against an index read
+    * instead of re-shingling the corpus
+    * ([[graft.streaming.DedupMaintenance]] lands exactly this schema
+    * per micro-batch). Map-only: the docs are shingled once and the
+    * band array is built in the same projection, with the keys of the
+    * batch banding ([[minHashBandedPortable]] explodes this very
+    * array), so there is no shuffle. */
+  def minHashDocIndex(docs: DataFrame, textCol: String, idCol: String,
+      n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
+      seed: Long = 42L): DataFrame =
+    portableBands(sortedShingles(docs, textCol, idCol, n), numPerms,
+      rowsPerBand, seed)
+
+  /** [[minHashLshDeltaPairs]] over prebuilt [[minHashDocIndex]]
+    * tables: the delta's band rows equi-join (band, key) against the
+    * band rows of base ∪ delta, in ONE join stage.
+    *
+    *  - Each side's `_sh` and `_bands` ride through the join with its
+    *    band rows, so the exact-Jaccard verify runs inline on the
+    *    joined row: no shingle re-join, no pair `distinct`.
+    *  - A pair colliding in several bands is emitted once, at its
+    *    LOWEST colliding band: a joined row survives only if no
+    *    earlier band of the two `_bands` arrays has equal keys.
+    *  - A delta×delta pair meets itself in both orientations; only
+    *    `_d < _o` survives. A delta×base pair has one orientation,
+    *    since only the delta side drives the join.
+    *
+    * The planner picks the join strategy. When the delta is the
+    * broadcast side, the corpus-sized base rows (arrays included)
+    * stream through the hash probe where they are scanned and are
+    * never shuffled. Requires id-disjoint `baseIdx` and `deltaIdx`,
+    * both with the same band count. */
+  def minHashDeltaPairsFromIndex(baseIdx: DataFrame, deltaIdx: DataFrame,
+      threshold: Double): DataFrame = {
+    def banded(idx: DataFrame, side: String): DataFrame = idx
+      .select(col("_id").as(side), col("_sh").as(s"${side}sh"),
+        col("_bands").as(s"${side}bands"), explode(col("_bands")).as("_b"))
+      .select(col(side), col(s"${side}sh"), col(s"${side}bands"),
+        col("_b._bandNo").as("_bandNo"), col("_b._bandKey").as("_bandKey"))
+    val other = banded(baseIdx, "_o").withColumn("_oDelta", lit(false))
+      .unionByName(banded(deltaIdx, "_o").withColumn("_oDelta", lit(true)))
+    // both arrays ascend by _bandNo, so zip_with pairs up equal bands
+    val earlierCollision = exists(
+      zip_with(col("_dbands"), col("_obands"), (x, y) =>
+        x.getField("_bandNo") < col("_bandNo") &&
+          x.getField("_bandKey") === y.getField("_bandKey")),
+      c => c)
+    banded(deltaIdx, "_d")
+      .join(other, Seq("_bandNo", "_bandKey"))
+      .filter(col("_d") =!= col("_o") &&
+        (!col("_oDelta") || col("_d") < col("_o")) && !earlierCollision)
+      .withColumn("jaccard", graft.functions.VectorFunctions
+        .jaccardSorted(col("_dsh"), col("_osh")))
+      .filter(col("jaccard") >= threshold)
+      .select(least(col("_d"), col("_o")).as("doc_a"),
+        greatest(col("_d"), col("_o")).as("doc_b"), col("jaccard"))
   }
 
   /** Band-occupancy histogram of the portable MinHash-LSH banding:
@@ -812,82 +932,6 @@ object Dedup {
     * Scale shape: the doc×band rows are slim (id, band, key) triples;
     * two map-side-combinable aggregations, no join, no corpus-width
     * shuffle. */
-  /** INCREMENTAL MinHash-LSH maintenance — the daily-crawl shape: the
-    * base corpus was deduped yesterday (its internal pairs already
-    * emitted and acted on), a delta batch arrives today, and the only
-    * pairs that matter are the ones a delta doc participates in:
-    * (delta × base) ∪ (delta × delta). Banding a document depends only
-    * on its own text, so the delta's band table unions against the
-    * base's — in production the base side is the PERSISTED band index
-    * read back from storage (the [[graft.ext.Similarity.ivfUpsert]]
-    * fragment discipline), never recomputed; here both sides derive
-    * from their doc tables. The candidate join keys the (small) delta
-    * band table against base ∪ delta, so shuffle volume is
-    * O(|delta| × bands + collided buckets) — NOT O(|base|²), which is
-    * what re-running full-corpus dedup per day would cost. Exact
-    * Jaccard verify attaches shingles to surviving candidates only,
-    * like [[minHashLshPairsPortable]]. Requires disjoint id spaces.
-    * Incremental ∪ previous-run pairs ≡ full-corpus pairs — the
-    * union-parity property Ext8Spec pins. */
-  def minHashLshDeltaPairs(baseDocs: DataFrame, deltaDocs: DataFrame,
-      textCol: String, idCol: String, n: Int = 3, numPerms: Int = 16,
-      rowsPerBand: Int = 4, threshold: Double = 0.5,
-      seed: Long = 42L): DataFrame =
-    minHashDeltaPairsFromIndex(
-      minHashDocIndex(baseDocs, textCol, idCol, n, numPerms, rowsPerBand,
-        seed),
-      minHashDocIndex(deltaDocs, textCol, idCol, n, numPerms, rowsPerBand,
-        seed),
-      threshold)
-
-  /** The STORABLE per-document dedup index row: (_id, _sh sorted
-    * shingles, _bands array of (band, bk) keys) — one row per doc, the
-    * thing a daily pipeline persists so tomorrow's delta joins against
-    * an index read instead of re-shingling the corpus
-    * ([[graft.streaming.DedupMaintenance]] lands exactly this schema
-    * per micro-batch). */
-  def minHashDocIndex(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
-      seed: Long = 42L): DataFrame = {
-    val (base, banded) = minHashBandedPortable(docs, textCol, idCol, n,
-      numPerms, rowsPerBand, seed)
-    base.join(
-      banded.groupBy(col("_id")).agg(sort_array(collect_list(
-        struct(col("_bandNo"), col("_bandKey")))).as("_bands")),
-      Seq("_id"))
-  }
-
-  /** [[minHashLshDeltaPairs]] over prebuilt [[minHashDocIndex]]
-    * tables: band-key equi-join of the delta against base ∪ delta,
-    * exact-Jaccard verify on surviving candidates only. */
-  def minHashDeltaPairsFromIndex(baseIdx: DataFrame, deltaIdx: DataFrame,
-      threshold: Double): DataFrame = {
-    def banded(idx: DataFrame): DataFrame = idx
-      .select(col("_id"), explode(col("_bands")).as("_b"))
-      .select(col("_id"), col("_b._bandNo").as("_bandNo"),
-        col("_b._bandKey").as("_bandKey"))
-    val all = banded(baseIdx).unionByName(banded(deltaIdx))
-    val cand = banded(deltaIdx).select(col("_id").as("_d"), col("_bandNo"),
-        col("_bandKey"))
-      .join(all.select(col("_id").as("_o"), col("_bandNo"),
-        col("_bandKey")), Seq("_bandNo", "_bandKey"))
-      .filter(col("_d") =!= col("_o"))
-      .select(least(col("_d"), col("_o")).as("doc_a"),
-        greatest(col("_d"), col("_o")).as("doc_b"))
-      .distinct()
-    val sh = baseIdx.select(col("_id"), col("_sh"))
-      .unionByName(deltaIdx.select(col("_id"), col("_sh")))
-    cand
-      .join(sh.select(col("_id").as("doc_a"), col("_sh").as("_sha")),
-        Seq("doc_a"))
-      .join(sh.select(col("_id").as("doc_b"), col("_sh").as("_shb")),
-        Seq("doc_b"))
-      .withColumn("jaccard", graft.functions.VectorFunctions
-        .jaccardSorted(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
   def minHashBandStats(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
       seed: Long = 42L): DataFrame = {

@@ -1,8 +1,10 @@
 package graft.sources
 
+import java.io.OutputStream
 import java.net.URI
 
 import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 
 /** Latency-injecting local filesystem — the `slowfs://` scheme, a
   * standard test-harness pattern for proving latency-hiding claims
@@ -40,5 +42,26 @@ class SlowFs extends RawLocalFileSystem {
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     ttfb()
     super.open(p, bufferSize)
+  }
+
+  /** Every file create sleeps `fs.slowfs.create.delay.ms` (default 0)
+    * first — a slow write, e.g. to hold a write job mid-flight. The
+    * sleep is interruptible, as a task kill needs. Both output-stream
+    * factories are covered: every create variant goes through one. */
+  private def createDelay(): Unit = {
+    val d = getConf.getLong("fs.slowfs.create.delay.ms", 0L)
+    if (d > 0L) Thread.sleep(d)
+  }
+
+  override protected def createOutputStream(p: Path,
+      append: Boolean): OutputStream = {
+    createDelay()
+    super.createOutputStream(p, append)
+  }
+
+  override protected def createOutputStreamWithMode(p: Path,
+      append: Boolean, permission: FsPermission): OutputStream = {
+    createDelay()
+    super.createOutputStreamWithMode(p, append, permission)
   }
 }

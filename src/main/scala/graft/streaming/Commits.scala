@@ -197,6 +197,16 @@ object Commits {
     m.runs.map(r => s"$dir/${r.name}") ++ tail.map(_.toString)
   }
 
+  /** [[fragmentRoots]] without the `batch=<batchId>` fragment — the
+    * store as a batch's own pair join must read it while
+    * [[landConcurrently]] overwrites that fragment. Excluding it
+    * changes no pair: the join already anti-joins the batch's ids out
+    * of the store side. */
+  def fragmentRootsExcept(spark: SparkSession, dir: String,
+      batchId: Long): Seq[String] =
+    fragmentRoots(spark, dir)
+      .filterNot(r => new Path(r).getName == s"batch=$batchId")
+
   /** The folded high-water mark — fragments with ids ≤ this are
     * folded into runs and excluded from the tail by every reader. */
   def foldedUpTo(spark: SparkSession, dir: String): Option[Long] =
@@ -412,6 +422,93 @@ object Commits {
       .filter(_.startsWith("_retained."))
       .flatMap(_.stripPrefix("_retained.").toLongOption)
       .maxOption
+  }
+
+  /** Daemon pool for [[landConcurrently]] — threads are reused
+    * across batches and never pin JVM shutdown. */
+  private lazy val landingPool =
+    java.util.concurrent.Executors.newCachedThreadPool(
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-landing")
+        t.setDaemon(true); t
+      })
+
+  /** Land one micro-batch's two outputs concurrently, each on a
+    * pooled driver thread: `fragment` (the batch's own store fragment)
+    * and `pairs`. The two are INDEPENDENT consumers of the batch's
+    * checkpointed delta — the fragment never reads the store, and
+    * batch i's fragment only matters to batch i+1's store read — so
+    * the batch's wall is max(pairs, fragment) instead of their sum. A
+    * micro-batch is a handful of short jobs whose driver-side
+    * planning gaps dominate, which is the idle tail the overlap
+    * recovers. `pairs` must not read the fragment being overwritten:
+    * a replayed batch finds its own earlier fragment committed, so
+    * its store read goes through [[fragmentRootsExcept]].
+    *
+    * Both complete before this returns: the streaming checkpoint
+    * marks the batch done only after foreachBatch, so exactly-once on
+    * storage is unchanged (either failure fails the batch; the replay
+    * rewrites both `batch=<id>` dirs mode-Overwrite).
+    *
+    * Both threads run under the caller's local properties and one job
+    * group of their own. On the first failure, or an interrupt of the
+    * calling thread, that group's jobs are cancelled — running ones
+    * and any submitted later (an adaptive plan's broadcast can start
+    * after the cancel) — and the helper waits, uninterruptibly, for
+    * both threads to return before it rethrows. No write of this
+    * batch outlives the call into the next batch or into a stopped
+    * query. The first failure is rethrown; a later one rides along as
+    * suppressed. */
+  def landConcurrently(spark: SparkSession)(fragment: => Unit,
+      pairs: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val group = s"graft-landing-${java.util.UUID.randomUUID()}"
+    val props = org.apache.spark.sql.graftbridge.ColumnBridge
+      .localProperties(sc)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](
+      landingPool)
+    def land(what: String)(body: => Unit) =
+      done.submit(new java.util.concurrent.Callable[Unit] {
+        override def call(): Unit = org.apache.spark.sql.graftbridge
+          .ColumnBridge.withLocalProperties(sc, props) {
+            sc.setJobGroup(group, what, interruptOnCancel = true)
+            body
+          }
+      })
+    val landings = Seq(land("fragment landing")(fragment),
+      land("pairs landing")(pairs))
+    try landings.foreach(_ => done.take().get())
+    catch {
+      case t: Throwable =>
+        val primary = unwrap(t)
+        sc.cancelJobGroupAndFutureJobs(group,
+          "the batch's other landing failed or was interrupted")
+        val interrupted = landings.map(f => awaitUninterruptibly(
+          try f.get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (unwrap(e) ne primary) primary.addSuppressed(unwrap(e))
+          })).contains(true)
+        if (interrupted) Thread.currentThread().interrupt()
+        throw primary
+    }
+  }
+
+  private def unwrap(t: Throwable): Throwable = t match {
+    case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+      e.getCause
+    case o => o
+  }
+
+  /** Run the blocking `wait` to completion, retrying through
+    * interrupts; whether one arrived (the caller restores the flag). */
+  private def awaitUninterruptibly(wait: => Unit): Boolean = {
+    var interrupted = false
+    var done = false
+    while (!done)
+      try { wait; done = true }
+      catch { case _: InterruptedException => interrupted = true }
+    interrupted
   }
 
   /** Committed `batch=<n>` fragment dirs under `dir`, optionally

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.ext.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -23,17 +23,28 @@ import org.apache.spark.sql.types._
   * pairs write `mode(Overwrite)` into their own `batch=<batchId>`
   * directory, and streaming checkpoints make replays batch-id-stable.
   * A replayed batch re-reads an index that may already contain its
-  * own fragment — harmless by construction: self-joins are id-equal
-  * (excluded), and delta×delta pairs rediscovered through the stale
-  * fragment deduplicate against the fresh ones, so the overwrite
-  * converges to the run-once bytes (spec-pinned).
+  * own fragment — harmless by construction: the delta's ids are
+  * anti-joined out of the index read, so the pair plan sees the same
+  * id-disjoint sides as the first run and the overwrite converges to
+  * the run-once bytes (spec-pinned).
   *
-  * Scale shape per batch: the corpus-sized side is ONE scan of the
-  * accumulated index's banded rows; the join keys the (small) delta
-  * band table against it, so shuffle volume is O(|delta| × bands +
-  * collided buckets) per day — full-corpus re-dedup is O(corpus ×
-  * bands) per day and loses the previously-emitted-pairs bookkeeping
-  * besides. */
+  * Scale shape per batch: the batch is shingled and banded ONCE, in
+  * one map-only projection ([[graft.ext.Dedup.minHashDocIndex]]), and
+  * cut with a localCheckpoint whose `observe` row count decides
+  * emptiness (an empty batch lands nothing; no separate probe job).
+  * The corpus-sized side is ONE scan of the accumulated index; the
+  * delta's band rows join it on (band, key) in one stage, carrying
+  * both docs' shingles and band arrays, so the Jaccard verify runs on
+  * the joined row and each pair is emitted once, at its lowest
+  * colliding band ([[graft.ext.Dedup.minHashDeltaPairsFromIndex]]).
+  * When the delta is the broadcast side the index rows are never
+  * shuffled. Shuffle volume is therefore O(|delta| × bands + collided
+  * buckets) per batch — full-corpus re-dedup is O(corpus × bands)
+  * per day and loses the previously-emitted-pairs bookkeeping
+  * besides. The pairs and the fragment land concurrently
+  * ([[Commits.landConcurrently]]); a non-empty batch runs five jobs:
+  * the checkpoint, the delta-id broadcast of the replay exclusion,
+  * the band-row broadcast, the pairs write and the fragment write. */
 object DedupMaintenance {
 
   private def indexSchema: StructType = StructType(Seq(
@@ -46,15 +57,16 @@ object DedupMaintenance {
   /** The accumulated doc index: the compacted base (if the store has
     * been folded — [[compactIndex]]) plus the committed fragments
     * newer than it; empty-with-schema before the first batch lands. */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val roots = Commits.fragmentRoots(spark, indexDir)
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    indexAt(spark, Commits.fragmentRoots(spark, indexDir))
+
+  private def indexAt(spark: SparkSession, roots: Seq[String]): DataFrame =
     if (roots.nonEmpty)
       spark.read.schema(indexSchema).parquet(roots: _*)
         .select(col("_id"), col("_sh"), col("_bands"))
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema)
-  }
 
   /** LSM fold of the doc index ([[Commits.compactFlatStore]]): a
     * long-lived crawl's index otherwise accrues one fragment dir per
@@ -69,28 +81,42 @@ object DedupMaintenance {
   /** The idempotent unit of maintenance: index one micro-batch, emit
     * its delta pairs against everything landed so far, land its own
     * fragment. Replaying the same (batch, batchId) overwrites both
-    * directories with identical bytes. */
+    * directories with identical bytes. Returns whether anything
+    * landed: a batch with no shingled document (no rows, or only
+    * texts shorter than `n` words) writes neither directory. */
   def processBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, indexDir: String, pairsDir: String, n: Int = 3,
       numPerms: Int = 16, rowsPerBand: Int = 4, threshold: Double = 0.5,
-      seed: Long = 42L): Unit = {
+      seed: Long = 42L): Boolean = {
     val spark = batch.sparkSession
+    val indexed = new Observation()
     val deltaIdx = Dedup.minHashDocIndex(batch, textCol, idCol, n,
       numPerms, rowsPerBand, seed)
+      .observe(indexed, count(lit(1)).as("n"))
       // the fragment is consumed twice below (pairs join + landing)
-      // and the pairs join reads it band-exploded several times — cut
-      // it rather than re-shingle the batch per consumer; released
+      // and the pairs join reads it band-exploded twice — cut it
+      // rather than re-shingle the batch per consumer; released
       // before return, so nothing outlives the micro-batch
       .localCheckpoint()
     try {
-      // exclude this batch's own fragment on replay: the fresh delta
-      // index IS those rows — reading both would only re-derive the
-      // same pairs, but filtering keeps the replay read-set minimal
-      val baseIdx = readIndex(spark, indexDir)
-        .join(deltaIdx.select(col("_id")), Seq("_id"), "left_anti")
-      Dedup.minHashDeltaPairsFromIndex(baseIdx, deltaIdx, threshold)
-        .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-      deltaIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+      if (indexed.get("n") == 0L) false
+      else {
+        // exclude this batch's own rows on replay: the fresh delta
+        // index IS those rows, and the pair plan requires id-disjoint
+        // sides. Its own earlier fragment is not even read — the
+        // concurrent fragment landing overwrites it — and the
+        // anti-join drops the rows a compaction folded into a run
+        val baseIdx = indexAt(spark,
+            Commits.fragmentRootsExcept(spark, indexDir, batchId))
+          .join(deltaIdx.select(col("_id")), Seq("_id"), "left_anti")
+        Commits.landConcurrently(spark)(
+          fragment = deltaIdx.write.mode("overwrite")
+            .parquet(s"$indexDir/batch=$batchId"),
+          pairs = Dedup.minHashDeltaPairsFromIndex(baseIdx, deltaIdx,
+              threshold)
+            .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId"))
+        true
+      }
     } finally {
       org.apache.spark.sql.graftbridge.ColumnBridge
         .unpersistLocalCheckpoint(deltaIdx)
@@ -109,12 +135,10 @@ object DedupMaintenance {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, textCol, idCol, indexDir,
-            pairsDir, n, numPerms, rowsPerBand, threshold, seed)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactIndex(batch.sparkSession, indexDir)
-        }
+        val landed = processBatch(batch, batchId, textCol, idCol,
+          indexDir, pairsDir, n, numPerms, rowsPerBand, threshold, seed)
+        if (landed && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          compactIndex(batch.sparkSession, indexDir)
       }
       .start()
 }

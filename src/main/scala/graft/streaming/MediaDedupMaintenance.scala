@@ -138,83 +138,52 @@ object MediaDedupMaintenance {
       }
       .start()
 
-  /** Daemon pool for the per-batch job overlap below — threads are
-    * reused across batches and never pin JVM shutdown. */
-  private lazy val overlapPool =
-    java.util.concurrent.Executors.newCachedThreadPool(
-      (r: Runnable) => {
-        val t = new Thread(r, "media-maint-overlap")
-        t.setDaemon(true); t
-      })
-
   /** The shared per-batch landing core over PRECOMPUTED (media_id,
     * kind, dhash) fingerprints (checkpointed by the caller): banded
     * pruned pair join against the accumulated store, pairs through
     * `finishPairs`, the delta's banded fragment landed — one store
-    * discipline for the single- and mixed-modality maintenances.
-    *
-    * The two landings are INDEPENDENT consumers of the checkpointed
-    * delta (the fragment never reads the store; the pair join never
-    * reads the fragment — batch i's fragment only matters to batch
-    * i+1's store read), so they run as two concurrent driver-thread
-    * jobs and the batch's wall is max(pairs, fragment) instead of
-    * their sum — a micro-batch here is a handful of 20-250 ms jobs
-    * whose driver-side planning gaps dominate, the exact idle-tail
-    * shape the overlap recovers. BOTH complete before this returns:
-    * the streaming checkpoint marks the batch done only after
-    * foreachBatch, so exactly-once on storage is untouched (either
-    * failure fails the batch; the replay rewrites both batch=<id>
-    * dirs mode-Overwrite, idempotent by construction). */
+    * discipline for the single- and mixed-modality maintenances. The
+    * two landings overlap through [[Commits.landConcurrently]]. */
   private def landBatchFps(deltaFp: DataFrame, batchId: Long,
       storeDir: String, pairsDir: String, maxDist: Int, chunks: Int,
       finishPairs: DataFrame => DataFrame): Unit = {
     val spark = deltaFp.sparkSession
     val deltaBanded =
       bandDelta(deltaFp, maxDist, chunks, UnifiedStoreBuckets)
-    // fragment landing first INTO the pool: one file per (kind, band)
-    // dir, rows sorted by bucket so the parquet footer's min-max
-    // statistics carry the pruning the per-batch join pushes down;
-    // the sort is prefix-compatible with the dynamic-partition
-    // writer's required ordering. EXPLICIT partition count: a bare
-    // repartition(cols) is AQE-coalescible, and a small fragment
-    // coalesces into ONE task that then creates every (kind, band)
-    // dir's file serially — pinning the session's shuffle partition
-    // count keeps the ≤ kinds × bands writer tasks parallel (file
-    // count per dir is unchanged: all of a combo's rows still hash
-    // to one task)
-    val fragment = overlapPool.submit(new java.util.concurrent
-        .Callable[Unit] {
-      override def call(): Unit = deltaBanded
+    Commits.landConcurrently(spark)(
+      // one file per (kind, band) dir, rows sorted by bucket so the
+      // parquet footer's min-max statistics carry the pruning the
+      // per-batch join pushes down; the sort is prefix-compatible
+      // with the dynamic-partition writer's required ordering.
+      // EXPLICIT partition count: a bare repartition(cols) is
+      // AQE-coalescible, and a small fragment coalesces into ONE task
+      // that then creates every (kind, band) dir's file serially —
+      // pinning the session's shuffle partition count keeps the
+      // ≤ kinds × bands writer tasks parallel (file count per dir is
+      // unchanged: all of a combo's rows still hash to one task)
+      fragment = deltaBanded
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("kind"), col("band"))
         .sortWithinPartitions(col("kind"), col("band"), col("bucket"))
         .write.mode("overwrite")
         .partitionBy("kind", "band")
-        .parquet(s"$storeDir/batch=$batchId")
-    })
-    try {
-      // the touched-cell collect exists to PRUNE the store scan — on
-      // an empty store (every stream's first batch) there is nothing
-      // to prune and the job is pure overhead; the empty Map keeps
-      // the base side filtered to nothing, which is what it is anyway
-      val storeEmpty = Commits.fragmentRoots(spark, storeDir).isEmpty
-      val touched =
-        if (storeEmpty) Map.empty[String, Seq[(Int, Int)]]
-        else touchedCells(deltaBanded)
-      finishPairs(unifiedBatchPairs(
-          readBandedUnifiedFingerprints(spark, storeDir), deltaBanded,
-          deltaFp.select(col("media_id")), touched, maxDist, chunks))
-        .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-    } catch {
-      case e: Throwable =>
-        // the pairs failure is the primary signal; still drain the
-        // fragment job so it never bleeds into the next batch, but
-        // never let its (secondary) failure mask this one
-        try fragment.get()
-        catch { case _: Throwable => }
-        throw e
-    }
-    fragment.get() // surface a fragment-only failure
+        .parquet(s"$storeDir/batch=$batchId"),
+      pairs = {
+        // a replay's own earlier fragment is not read: the fragment
+        // landing overwrites it. The touched-cell collect exists to
+        // PRUNE the store scan — on an empty store (every stream's
+        // first batch) there is nothing to prune and the job is pure
+        // overhead; the empty Map keeps the base side filtered to
+        // nothing, which is what it is anyway
+        val roots = Commits.fragmentRootsExcept(spark, storeDir, batchId)
+        val touched =
+          if (roots.isEmpty) Map.empty[String, Seq[(Int, Int)]]
+          else touchedCells(deltaBanded)
+        finishPairs(unifiedBatchPairs(
+            bandedFingerprintsAt(spark, storeDir, roots), deltaBanded,
+            deltaFp.select(col("media_id")), touched, maxDist, chunks))
+          .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+      })
   }
 
   // ------------------------------------------- unified mixed modality
@@ -260,8 +229,12 @@ object MediaDedupMaintenance {
     * exactly-once. Filters on (kind, band, bucket) prune
     * partitions/files on EVERY side of the union. */
   def readBandedUnifiedFingerprints(spark: SparkSession,
-      storeDir: String): DataFrame = {
-    val roots = Commits.fragmentRoots(spark, storeDir)
+      storeDir: String): DataFrame =
+    bandedFingerprintsAt(spark, storeDir,
+      Commits.fragmentRoots(spark, storeDir))
+
+  private def bandedFingerprintsAt(spark: SparkSession, storeDir: String,
+      roots: Seq[String]): DataFrame = {
     val (tail, runs) = roots.partition(
       _.split('/').last.startsWith("batch="))
     val parts =

@@ -150,4 +150,22 @@ object ColumnBridge {
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }
+
+  /** A copy of the calling thread's SparkContext local properties
+    * (job group and tags, description, scheduler pool, SQL execution
+    * ids). `SparkContext.getLocalProperties` is private[spark]. */
+  def localProperties(sc: org.apache.spark.SparkContext)
+      : java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Run `body` on this thread under a copy of `props` — how a job
+    * launched from a pooled driver thread carries the submitting
+    * thread's properties (a pooled thread keeps whatever it inherited
+    * when it was created); this thread's own are restored after. */
+  def withLocalProperties[A](sc: org.apache.spark.SparkContext,
+      props: java.util.Properties)(body: => A): A = {
+    val saved = sc.getLocalProperties
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    try body finally sc.setLocalProperties(saved)
+  }
 }

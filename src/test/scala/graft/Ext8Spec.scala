@@ -408,6 +408,25 @@ class Round8PlanShapeSpec extends SparkSpec {
       == onceIdx, "replaying a batchId must leave the index unchanged")
     assert(oncePairs == full,
       "two explicit batches must also union to the full-corpus run")
+    // a zero-row JSON wave: the batch runs, and lands no fragment and
+    // no pairs
+    val jsonLanding = tmpDir("dedjson")
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(jsonLanding, "wave-000.json"))
+    val idx3 = tmpDir("dedindex3"); val pairs3 = tmpDir("dedpairs3")
+    val empty = graft.streaming.DedupMaintenance.start(
+      spark.readStream.schema("doc_id LONG, text STRING").json(jsonLanding),
+      "text", "doc_id", idx3, pairs3, tmpDir("dedckpt3"))
+    empty.awaitTermination()
+    assert(empty.recentProgress.exists(p =>
+        p.batchId == 0L && p.numInputRows == 0L),
+      "the empty wave must run as batch 0: " +
+        empty.recentProgress.map(_.json).mkString("; "))
+    assert(new java.io.File(idx3).list().isEmpty &&
+        new java.io.File(pairs3).list().isEmpty,
+      "an empty batch must land no fragment and emit no pairs")
+    assert(graft.streaming.DedupMaintenance.readIndex(spark, idx3)
+      .count() == 0L)
   }
 
   test("hash embeddings: identical texts embed identically, and the " +

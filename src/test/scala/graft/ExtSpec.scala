@@ -41,6 +41,25 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)))
   }
+
+  test("dupClusters refuses to return unconverged labels: a 20-doc " +
+      "near-dup chain needs 20 rounds, so maxIters 15 throws and 25 " +
+      "gives one cluster") {
+    // doc i = words i..i+9: neighbours share 7 of their 8 trigrams
+    // (Jaccard 7/9), docs two apart 6 of 10 — pairs form only
+    // between neighbours, a path of diameter 19
+    val docs = (0 until 20)
+      .map(i => (i.toLong, (i until i + 10).map(w => s"w$w").mkString(" ")))
+      .toDF("doc_id", "text")
+    def clusters(maxIters: Int) = Dedup.dupClusters(docs, "text",
+      "doc_id", Seq(lit("all")), n = 3, threshold = 0.7,
+      maxIters = maxIters)
+    val e = intercept[IllegalStateException](clusters(15).collect())
+    assert(e.getMessage.contains("15"), e.getMessage)
+    val labels = clusters(25).collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.length == 20 && labels.forall(_._2 == 0L),
+      labels.mkString(", "))
+  }
 }
 
 class SimilaritySpec extends SparkSpec {
