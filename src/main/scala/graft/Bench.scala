@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
 
@@ -117,26 +118,6 @@ object Bench {
     else (s(m / 2 - 1) + s(m / 2)) / 2
   }
 
-  /** Session hygiene between queries: a shared multi-query JVM must
-    * not let one query's storage (cached tables, any stray
-    * localCheckpoint blocks) ride into the next — round 6's bench
-    * recorded a ~70-80s stall on whichever cut-heavy query ran under
-    * the accumulated pressure. Unpersist EVERYTHING (blocking: a
-    * fire-and-forget unpersist queues block removals the NEXT
-    * checkpoint-heavy query then contends with — q51's recorded
-    * 3-18s swings on identical code track exactly this); each query
-    * owns its full cost and nothing else's. */
-  private def hygiene(spark: SparkSession): Unit =
-    try {
-      spark.catalog.clearCache()
-      val memoKeep = graft.ext.FrameMemo.liveRddIds
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .filter(r => !memoKeep.contains(r.id))
-        .foreach(_.unpersist(blocking = true))
-      spark.sessionState.catalog.getTempViewNames()
-        .foreach(spark.catalog.dropTempView)
-    } catch { case _: Throwable => }
-
   /** Measure one catalog query (count + hygiene). A failed query must
     * be LOUD in the record: the old catch-and-continue made a broken
     * query look like a fast one (q189 recorded 0.15s exception paths
@@ -152,7 +133,7 @@ object Bench {
         true
       }
     val dt = (System.nanoTime() - t0) / 1e9
-    hygiene(spark)
+    Session.hygiene(spark)
     (dt, failed)
   }
 
@@ -177,28 +158,18 @@ object Bench {
     // numbers) — on tmpfs the interference class does not exist
     Scratch.preferTmpfs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // a TIMESTAMP(NANOS) events fixture is readable only as long; no-op
-      // for micros fixtures (Normalize.epochNanos adapts either way)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet listing, codegen, executor pool) so the
     // first measured query doesn't absorb one-time init
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // events feeds the whole streaming family — warm its listing and
     // footers too, so the first stream query measures streaming cost,
     // not first-touch file metadata
     try spark.read.parquet(s"$sfDir/events.parquet").count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // warm the streaming machinery the same way (state store provider,
     // offset/commit logs, listener bus — paid once per JVM): a
     // one-batch stream over the 5-row region fixture that MIRRORS the
@@ -220,11 +191,11 @@ object Bench {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.catalog.dropTempView("_warm_stream")
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // machine envelope BEFORE the loop (warm JIT: one discarded pass)
     cpuScore(1)
     val cpu1 = cpuScore(1)
-    val cpuN = cpuScore(cpus.toInt)
+    val cpuN = cpuScore(cpus)
     System.err.println(f"[bench] machine cpu1=$cpu1%.2f Msteps/ms-agg " +
       f"cpu$cpus=$cpuN%.2f")
     // optional arg: comma-separated query subset (local iteration only;

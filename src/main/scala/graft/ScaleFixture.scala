@@ -1,18 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Deterministic scale-up generator for the documents/embeddings
   * fixture family — the input for the two-point scaling probe
-  * ([[ScaleProbe]]): `/root/testdata` is read-only and tops out at
-  * sf0.1, so larger inputs are generated locally with the same
-  * schemas and distribution family (30-word vocabulary, 10..100-word
-  * docs, 5 language codes, 20 sources, every 25th doc an exact
-  * duplicate of its predecessor so the dedup family has real work;
-  * 64-dim ~uniform[-0.5,0.5] embeddings, labels 0..9). All values
-  * derive from splitmix64 of the row id — no RNG state, so any row
-  * count reproduces bit-identically, distributed or local.
+  * (`Probe --dir <sf0.1>,<outDir>`): the shipped fixture dirs are
+  * read-only and top out at sf0.1, so larger inputs are generated
+  * locally with the same schemas and distribution family (30-word
+  * vocabulary, 10..100-word docs, 5 language codes, 20 sources, every
+  * 25th doc an exact duplicate of its predecessor so the dedup family
+  * has real work; 64-dim ~uniform[-0.5,0.5] embeddings, labels
+  * 0..9). All values derive from splitmix64 of the row id — no RNG
+  * state, so any row count reproduces bit-identically, distributed or
+  * local.
   *
   * Usage: ScaleFixture <outDir> <nDocs> <nVecs> */
 object ScaleFixture {
@@ -102,14 +103,10 @@ object ScaleFixture {
     val outDir = args(0)
     val nDocs = args(1).toLong
     val nVecs = args(2).toLong
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // micros on disk like the driver fixture (epochNanos adapts to
-      // either annotation, but keep the files in the same family)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
+    // micros on disk like the shipped fixture (epochNanos adapts to
+    // either annotation, but keep the files in the same family)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("ERROR")
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),

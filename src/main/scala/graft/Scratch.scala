@@ -3,10 +3,10 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** Scratch-directory lifecycle shared by the catalog's file-boundary
-  * queries and the dev probes: ONE recursive-delete implementation
-  * (walk closed, children before parents) so the pattern's past bug
-  * class — an unclosed `Files.walk` handle, fixed once in round 12's
-  * review — cannot re-diverge across copies.
+  * queries: ONE recursive-delete implementation (walk closed, children
+  * before parents) so the pattern's past bug class — an unclosed
+  * `Files.walk` handle, fixed once in round 12's review — cannot
+  * re-diverge across copies.
   *
   * Scratch lives on tmpfs when the host offers one (`/dev/shm`) —
   * the round-12 bench adjudication traced 5-7× per-query inflation
@@ -31,7 +31,7 @@ object Scratch {
   }
 
   /** Redirect the JVM's default temp dir to [[base]] — the measuring
-    * mains (Bench / Verify / probes) call this FIRST, before any
+    * mains (Bench / Verify / Probe) call this FIRST, before any
     * Spark machinery starts, so Spark's own scratch (the
     * `spark.local.dir` default, block-manager disk store, implicit
     * stream checkpoints) follows the same tmpfs discipline as the

@@ -37,8 +37,8 @@ object FrameMemo {
 
   private[graft] def size: Int = cache.size
 
-  /** RDD ids of every live cached checkpoint — the harness hygiene
-    * sweeps (Bench/Verify between-query unpersist) must exempt these:
+  /** RDD ids of every live cached checkpoint — the between-query
+    * sweep ([[graft.Session.hygiene]]) must exempt these:
     * a memoized frame whose blocks are swept replays as
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Bounded by the memo's own
     * storage contract (small-relative-to-input frames only). */

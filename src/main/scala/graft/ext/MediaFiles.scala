@@ -270,9 +270,9 @@ object MediaFiles {
       org.apache.spark.sql.types.StringType)))
 
   /** LIST ONCE into a parquet manifest — the scale fix for the
-    * measured vanilla-`FileStreamSource` law (`MediaStreamProbe`,
-    * BASELINE Law 2: getBatch re-stats EVERY archive file on the
-    * driver each micro-batch, ~0.65 ms/file — 82 of 104 s at the 25×
+    * measured vanilla-`FileStreamSource` law (BASELINE.md "The file
+    * boundary at 25×", Law 2: getBatch re-stats EVERY archive file on
+    * the driver each micro-batch, ~0.65 ms/file — 82 of 104 s at the 25×
     * probe, growing without bound with archive file count). The
     * landing dir is listed exactly once per ingest wave, through the
     * metadata-ONLY binaryFile scan (payload bytes pruned out of the

@@ -28,14 +28,11 @@ object JobMain {
     val conf = WatermarkStore.parseFlatJson(
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(configPath)), "UTF-8"))
-    val spark = SparkSession.builder()
-      .master(conf.getOrElse("master", "local[32]"))
+    // master and shuffle width are deployment settings: they come from
+    // the config file; the SQL confs are the engine's shared ones
+    val spark = graft.Session.builder(conf.getOrElse("master", "local[32]"),
+        conf.getOrElse("shufflePartitions", "32").toInt)
       .appName(s"$jobName-$env")
-      .config("spark.sql.shuffle.partitions",
-        conf.getOrElse("shufflePartitions", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, conf, trigger, jobMode)

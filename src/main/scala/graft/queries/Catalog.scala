@@ -6236,8 +6236,9 @@ object Catalog {
       GROUP BY n"""
     })
 
-  /** Composed crawl-to-trust pipeline ([[GraphE2eProbe]]'s chain as
-    * one oracled query): embedded links → host-id edges → connected
+  /** Composed crawl-to-trust pipeline (the chain of BASELINE.md
+    * "End-to-end crawl-graph pipeline", as one oracled query):
+    * embedded links → host-id edges → connected
     * components AND seed-personalized TrustRank over the host graph →
     * top-5 authority docs per community. The oracle pulls host ids
     * straight from the link regex (the planted digits are invariant

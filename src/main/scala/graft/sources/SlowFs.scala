@@ -21,11 +21,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   *   spark.hadoop.fs.slowfs.impl = graft.sources.SlowFs
   *   spark.hadoop.fs.slowfs.open.delay.ms = 25
   * }}}
-  * then address local files as `slowfs:///abs/path`. Used by
-  * `PrefetchLatencyProbe` to measure
-  * [[graft.ext.MediaFiles.streamManifest]]'s bounded read-ahead
-  * serial-vs-overlapped where the overlap actually matters — the
-  * depth-4 prefetch was justified by a TTFB argument but every local
+  * then address local files as `slowfs:///abs/path`. With it,
+  * [[graft.ext.MediaFiles.streamManifest]]'s bounded read-ahead was
+  * measured serial-vs-overlapped where the overlap actually matters
+  * (BASELINE.md "Prefetch proven under injected object-store TTFB") —
+  * the depth-4 prefetch was justified by a TTFB argument but every local
   * measurement has TTFB ~= 0, so without this wrapper the claim was
   * untested where it counts. */
 class SlowFs extends RawLocalFileSystem {

@@ -71,10 +71,10 @@ object DedupMaintenance {
   /** LSM fold of the doc index ([[Commits.compactFlatStore]]): a
     * long-lived crawl's index otherwise accrues one fragment dir per
     * micro-batch forever — the accrual law measured on the media
-    * store (StoreAccrualProbe: +79% per-batch wall at 150 fragments;
-    * flat with folding) applies to any fragment store, and the text
-    * index's rows are the HEAVIEST in the family (full shingle sets
-    * ride each row for the exact-Jaccard verify). */
+    * store (BASELINE.md "Fragment accrual measured": +79% per-batch
+    * wall at 150 fragments; flat with folding) applies to any fragment
+    * store, and the text index's rows are the HEAVIEST in the family
+    * (full shingle sets ride each row for the exact-Jaccard verify). */
   def compactIndex(spark: SparkSession, indexDir: String): Unit =
     Commits.compactFlatStore(spark, indexDir, indexSchema)
 

@@ -72,8 +72,8 @@ object SuffixMaintenance {
     * class indexes (`r0..rh`, `fin`) and the spans log each accrue
     * one fragment dir per micro-batch forever without it (the
     * measured accrual law: +79% per-batch wall at 150 fragments,
-    * StoreAccrualProbe), and every reader here consumes everything,
-    * so all of them are foldable ([[Commits.compactFlatStore]] —
+    * BASELINE.md "Fragment accrual measured"), and every reader here
+    * consumes everything, so all of them are foldable ([[Commits.compactFlatStore]] —
     * concatenating fold, contents provably unchanged). Call it from
     * the stream (`compactEvery` in [[start]]) or as out-of-band
     * maintenance. */

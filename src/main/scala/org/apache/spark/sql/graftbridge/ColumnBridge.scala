@@ -151,6 +151,13 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }
 
+  /** Block until every event posted so far has reached every
+    * listener — how a caller reads a listener's tally of the jobs it
+    * just ran without sleeping on the asynchronous bus.
+    * `SparkContext.listenerBus` is private[spark]. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** A copy of the calling thread's SparkContext local properties
     * (job group and tags, description, scheduler pool, SQL execution
     * ids). `SparkContext.getLocalProperties` is private[spark]. */

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
 
 /** The text-dedup micro-batch: the one-stage pair plan against the
   * band join → distinct → shingle re-join formulation it replaced,
-  * the map-only doc index against the batch banding, the job count
-  * of one batch, and the shared landing helper under an interrupt. */
+  * the map-only doc index against the batch banding, the job counts
+  * of one text and one media batch, and the shared landing helper
+  * under an interrupt. */
 class DedupMaintenanceSpec extends SparkSpec {
 
   import spark.implicits._
@@ -165,6 +166,23 @@ class DedupMaintenanceSpec extends SparkSpec {
     assert(DedupMaintenance.readIndex(spark, idx).count() ==
       Dedup.minHashDocIndex(d, "text", "doc_id").count())
     assert(new java.io.File(s"$pairs/batch=1/_SUCCESS").exists)
+
+    // the media stream's batch against a non-empty store: its
+    // emptiness comes from the checkpoint's observed row count, not a
+    // separate isEmpty job after the checkpoint
+    val media = Images.syntheticPngFrame(spark,
+        (0L until 80L).toDF("doc_id"), "doc_id")
+      .select(col("media_id"), col("payload")).localCheckpoint()
+    val store = tmpDir("jobsstore")
+    val mpairs = tmpDir("jobsmpairs")
+    assert(MediaDedupMaintenance.processBatch(
+      media.filter(col("media_id") < 40), 0L, store, mpairs))
+    val mediaJobs = jobsStartedDuring(assert(MediaDedupMaintenance
+      .processBatch(media.filter(col("media_id") >= 40), 1L, store, mpairs)))
+    assert(mediaJobs.size == 9, s"media batch ran ${mediaJobs.size} jobs")
+    assert(!MediaDedupMaintenance.processBatch(
+      media.filter(col("media_id") < 0), 2L, store, mpairs))
+    assert(MediaDedupMaintenance.readFingerprints(spark, store).count() == 80)
   }
 
   /** Run `batch` on its own thread, interrupt it once its fragment
