@@ -5,11 +5,14 @@ Usage: python3 scratch/bench_diff.py [OLD.json] [NEW.json]
 
 Defaults: OLD = the newest BENCH_r*.json with a parseable per-query
 map, NEW = BENCH_LOCAL.json. Prints per-query ratios for queries
-slower by >1.5x or faster by >1.5x, plus totals. A BROAD uniform
-slowdown across untouched queries means machine contention, not a
-regression — re-run the bench alone (see the bench-needs-exclusive-
-machine note): graft.Bench numbers are only comparable from
-uncontended runs.
+slower by >1.5x or faster by >1.5x, plus totals. A record with a
+"passes" map adopts the minimum of two passes per query; when only
+one of the two records has it, a warning names the single-pass one,
+since min-of-two is never compared against a single-pass record.
+A BROAD uniform slowdown across untouched queries means machine
+contention, not a regression — re-run the bench alone (see the
+bench-needs-exclusive-machine note): graft.Bench numbers are only
+comparable from uncontended runs.
 """
 import glob
 import json
@@ -18,6 +21,7 @@ import sys
 
 
 def load_queries(path):
+    """(per-query seconds, total, whether the record is two-pass)."""
     with open(path) as f:
         txt = f.read()
     try:
@@ -28,14 +32,16 @@ def load_queries(path):
     parsed = d.get("parsed")
     if isinstance(parsed, dict) and parsed.get("queries"):
         return ({k: float(v) for k, v in parsed["queries"].items()},
-                float(parsed.get("value", 0)))
+                float(parsed.get("value", 0)), "passes" in parsed)
     qs = d.get("queries")
     if qs:
-        return {k: float(v) for k, v in qs.items()}, float(d.get("value", 0))
+        return ({k: float(v) for k, v in qs.items()},
+                float(d.get("value", 0)), "passes" in d)
     # driver BENCH_r*.json keeps per-query pairs only in the raw tail
-    pairs = re.findall(r'"(q\w+)":([\d.]+)', d.get("tail", ""))
+    tail = d.get("tail", "")
+    pairs = re.findall(r'"(q\w+)":([\d.]+)', tail)
     total = float(parsed.get("value", 0)) if isinstance(parsed, dict) else 0
-    return {k: float(v) for k, v in pairs}, total
+    return {k: float(v) for k, v in pairs}, total, '"passes":' in tail
 
 
 def main():
@@ -43,16 +49,20 @@ def main():
     new_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH_LOCAL.json"
     if old_path is None:
         for cand in sorted(glob.glob("BENCH_r*.json"), reverse=True):
-            qs, _ = load_queries(cand)
+            qs, _, _ = load_queries(cand)
             if qs:
                 old_path = cand
                 break
     if old_path is None:
         sys.exit("no comparable BENCH_r*.json found")
-    old, old_total = load_queries(old_path)
-    new, new_total = load_queries(new_path)
+    old, old_total, old_two = load_queries(old_path)
+    new, new_total, new_two = load_queries(new_path)
     print(f"old {old_path}: {old_total:.1f}s/{len(old)}q   "
           f"new {new_path}: {new_total:.1f}s/{len(new)}q")
+    if old_two != new_two:
+        single = new_path if old_two else old_path
+        print(f"WARNING: {single} is a single-pass record and the other "
+              "is min-of-two-passes — the two are not comparable")
     shared = sorted(set(old) & set(new))
     flagged = []
     for q in shared:

@@ -1,84 +1,34 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ext.{FrameMemo, TrainMemo}
+
+/** The catalog's timing harness: every query is timed in two passes of
+  * the same sorted order and the record adopts the smaller reading, so
+  * a contention window shorter than a pass cannot reach both readings
+  * of a query (a reversed second pass would put the middle queries'
+  * readings side by side). Each pass starts from cleared memos in a
+  * fresh session, so a memo group's shared work (q147's BPE training,
+  * q188's span table) is charged to the same query in both passes
+  * instead of dropping out of the minimum as a memo hit. */
 object Bench {
 
-  /** Ambient-normalization anchors: pinned map-only queries with their
-    * committed quiet-machine record times (round-20 quiet run,
-    * local[32], sf0.1 — the full record is BENCH_QUIET_r20A.json,
-    * committed so per-query regressions diff against a quiet record,
-    * not a contended driver run). RE-PINNED round 20: the round-19
-    * fixture-relation memo (Catalog.tMemo) made every anchor ~2x
-    * faster than the round-11 pins, so a quiet machine read "ambient
-    * 0.53" — the instrument measured the memo, not the machine
-    * (round-19 verdict #1). The anchors touch no iterative/
-    * stream/state machinery, so their only failure mode is the
-    * machine itself — the median observed/record ratio mechanically
-    * separates ambient inflation (all anchors uniformly high) from a
-    * real regression (anchors ~1.0 while one family is slow). Spread
-    * across the alphabetical run order so a time-localized
-    * interference window lands on at least one anchor; q55/q61/q66
-    * close the q50-q68 gap the round-10 driver run's interference
-    * window (q54-q63, adjudicated between anchors q49 and q69) fell
-    * into. Re-pin whenever the anchor queries' code changes. */
-  private val anchorRecord: Map[String, Double] = Map(
-    "q18_bronze_cast" -> 0.072,
-    "q30_token_stats" -> 0.041,
-    "q49_string_funcs" -> 0.070,
-    "q55_outer_join" -> 0.052,
-    "q61_unpivot" -> 0.127,
-    "q66_scd2" -> 0.061,
-    "q69_array_funcs" -> 0.049,
-    "q77_running_sum" -> 0.043,
-    "q91_window_battery" -> 0.046,
-    "q124_zorder_key" -> 0.110,
-    "q153_pii_redact" -> 0.070,
-    "q175_blocklist_hits" -> 0.059,
-    "q184_dedup_lines_within" -> 0.069)
+  type Query = (SparkSession, String) => DataFrame
 
-  /** The three cheapest anchors, re-run around each adjudication
-    * attempt so every re-run carries its own machine reading. */
-  private val probeAnchors =
-    Seq("q30_token_stats", "q77_running_sum", "q91_window_battery")
+  /** Per query, in run order: its (seconds, failed) reading of each
+    * pass. */
+  final case class Measured(passes: Seq[(String, Seq[(Double, Boolean)])]) {
 
-  /** Trailing quiet-record medians (BENCH_MEDIANS.json, regenerated by
-    * scratch/make_medians.py from the committed BENCH_QUIET_r*.json
-    * records). A query reading far above its quiet median inside the
-    * loop is re-run at end of loop — the SELF-ADJUDICATION three
-    * consecutive rounds of manual ambient forensics asked for. Flat
-    * regex parse: the file is {"source_records":[...],"cpu1_basis":N,
-    * "medians":{"q..":sec,...}} and nothing in it nests further (the
-    * q-key regex cannot match the other fields). `cpu1_basis` is the
-    * single-core envelope the medians are expressed against
-    * (make_medians normalizes stamped records to it) — the runtime
-    * scales its outlier threshold by `basis/cpu1_now` (floored at 1:
-    * never TIGHTEN on a fast host) so the single-core-bound family
-    * (the attributed q151/q219 class) doesn't spuriously re-run on a
-    * host whose envelope is simply slower than the records'. */
-  private def loadMedians()
-      : (Map[String, Double], Option[Double], Option[Set[String]]) = {
-    val p = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_MEDIANS", "BENCH_MEDIANS.json"))
-    if (!java.nio.file.Files.exists(p))
-      return (Map.empty, None, None)
-    val s = new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val re = """"(q[0-9][^"]*)"\s*:\s*([0-9][0-9.eE+-]*)""".r
-    val basis = """"cpu1_basis"\s*:\s*([0-9][0-9.eE+-]*)""".r
-      .findFirstMatchIn(s).map(_.group(1).toDouble).filter(_ > 0)
-    // the single-core-bound family the envelope law is SCOPED to —
-    // scaling every query's threshold by the single-core ratio would
-    // loosen the parallel majority for no reason. FIELD PRESENCE is
-    // the discriminator: None = pre-scoping medians format (fall back
-    // to scaling everything, the old behavior); Some(empty) = the
-    // family was deliberately retired (scale nothing).
-    val boundSet: Option[Set[String]] =
-      """"cpu1_bound"\s*:\s*\[([^\]]*)\]""".r
-        .findFirstMatchIn(s).map(m =>
-          """"(q[0-9][^"]*)"""".r.findAllMatchIn(m.group(1))
-            .map(_.group(1)).toSet)
-    (re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble)
-      .toMap, basis, boundSet)
+    /** The queries that failed in either pass, each once. */
+    def failures: Seq[String] =
+      passes.collect { case (n, rs) if rs.exists(_._2) => n }
+
+    /** The minimum successful reading; the first pass's when none
+      * succeeded. */
+    def adopted: Seq[(String, Double)] = passes.map { case (n, rs) =>
+      val ok = rs.collect { case (dt, false) => dt }
+      n -> (if (ok.isEmpty) rs.head._1 else ok.min)
+    }
   }
 
   /** The round-16 drift forensics (q207/q219/q151 reading 1.5-2x
@@ -111,20 +61,12 @@ object Bench {
     iters * threads / 1e6 / ms
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted; val m = s.length
-    if (m == 0) 1.0
-    else if (m % 2 == 1) s(m / 2)
-    else (s(m / 2 - 1) + s(m / 2)) / 2
-  }
-
   /** Measure one catalog query (count + hygiene). A failed query must
     * be LOUD in the record: the old catch-and-continue made a broken
     * query look like a fast one (q189 recorded 0.15s exception paths
     * as wins). */
   private def runOne(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : (Double, Boolean) = {
+      fn: Query): (Double, Boolean) = {
     val t0 = System.nanoTime()
     val failed =
       try { fn(spark, sfDir).count(); false }
@@ -137,18 +79,38 @@ object Bench {
     (dt, failed)
   }
 
-  /** The machine RIGHT NOW: median observed/record over the three
-    * cheap probe anchors — stamped beside every adjudication attempt
-    * so the ledger reads "the re-run happened at ambient X", no
-    * post-hoc forensics needed. */
-  private def anchorNow(spark: SparkSession, sfDir: String): Double = {
-    val qs = SparkEntry.queries
-    median(probeAnchors.flatMap { n =>
-      qs.get(n).map { fn =>
-        val (dt, failed) = runOne(spark, sfDir, n, fn)
-        if (failed) 1.0 else dt / anchorRecord(n)
-      }
-    })
+  /** Time `queries` in two passes of the given order, each pass in a
+    * fresh session of `spark`'s context after clearing the cross-query
+    * memos. */
+  def measure(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): Measured = {
+    val passes = (1 to 2).map { pass =>
+      TrainMemo.clear()
+      FrameMemo.clear()
+      val s = spark.newSession()
+      SparkSession.setActiveSession(s)
+      try queries.map { case (name, fn) =>
+        val r = runOne(s, sfDir, name, fn)
+        System.err.println(f"[bench] pass $pass $name ${r._1}%.2fs")
+        r
+      } finally SparkSession.setActiveSession(spark)
+    }
+    Measured(queries.map(_._1).zip(passes.transpose))
+  }
+
+  /** The one-line record: `value` and `queries` carry the adopted
+    * readings, `passes` both raw readings. */
+  def record(m: Measured, machine: Seq[(String, Double)],
+      sfDir: String): String = {
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => Jfmt.str(k) + ":" + v }.mkString("{", ",", "}")
+    val adopted = m.adopted
+    val qs = obj(adopted.map { case (n, dt) => n -> dt.toString })
+    val fl = m.failures.map(Jfmt.str).mkString("[", ",", "]")
+    val ps = obj(m.passes.map { case (n, rs) =>
+      n -> rs.map(_._1).mkString("[", ",", "]") })
+    val mc = obj(machine.map { case (k, v) => k -> Jfmt.f3(v) })
+    s"""{"metric":"total","value":${adopted.map(_._2).sum},"unit":"sec","queries":$qs,"failures":$fl,"passes":$ps,"machine":$mc,"sf":${Jfmt.str(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -202,107 +164,17 @@ object Bench {
     // the driver invokes with no args = full catalog)
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    val failures = scala.collection.mutable.ArrayBuffer[String]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        val (dt, failed) = runOne(spark, sfDir, name, fn)
-        if (failed) failures += name
-        System.err.println(f"[bench] $name $dt%.2fs")
-        name -> dt
-      }
-    // ------------- SELF-ADJUDICATING RE-RUN PASS (end of loop) -------
-    // Any query whose in-loop reading exceeds 2x its trailing
-    // quiet-record median (with a 0.5s absolute floor so sub-second
-    // queries' GC jitter never trips it) is re-run now, up to twice,
-    // each attempt stamped with the probe anchors' live ambient ratio.
-    // The record adopts the MINIMUM across attempts — ambient
-    // contamination is additive noise on a quiet-idle machine, so the
-    // minimum is the code-cost estimator, and the full ledger (first
-    // reading, every re-run, the anchor ratio beside each) rides the
-    // JSON so nothing needs post-hoc adjudication.
-    val (medians, cpu1Basis, cpu1Bound) = loadMedians()
-    val firstPass = results.toMap
-    // envelope-normalized threshold, SCOPED to the attributed
-    // single-core-bound family: a median recorded on a host with a
-    // faster single-core envelope under-predicts THIS host's
-    // legitimate wall for 1-task-stage/driver-bound queries — scale
-    // their expectation by basis/now, never below 1 (a fast host
-    // keeps the unscaled, conservative trigger). Parallel queries
-    // keep the raw threshold — their wall tracks aggregate
-    // throughput, which the ambient anchors already measure.
-    val envScale = cpu1Basis.map(b => math.max(1.0, b / cpu1)).getOrElse(1.0)
-    def isOutlier(n: String, dt: Double): Boolean = {
-      // a medians file with a basis but NO family FIELD (pre-scoping
-      // format) falls back to scaling everything — conservative in
-      // the only safe direction; a PRESENT-but-empty family means
-      // the list was deliberately retired, so nothing scales
-      val scale = cpu1Bound match {
-        case None => envScale
-        case Some(fam) => if (fam.contains(n)) envScale else 1.0
-      }
-      medians.get(n).exists(m =>
-        dt > 2 * m * scale && dt - m * scale > 0.5)
-    }
-    val outliers = results
-      .filter { case (n, dt) => !failures.contains(n) && isOutlier(n, dt) }
-      .map(_._1).take(24) // bound the pass; 24 >> any quiet run's spikes
-    val qmap = SparkEntry.queries
-    val ledger = outliers.map { name =>
-      val attempts = scala.collection.mutable.ArrayBuffer[Double]()
-      val anchors = scala.collection.mutable.ArrayBuffer[Double]()
-      var failedAttempts = 0
-      var keep = true
-      while (keep && attempts.size < 2) {
-        anchors += anchorNow(spark, sfDir)
-        val (dt, failed) = runOne(spark, sfDir, name, qmap(name))
-        System.err.println(f"[bench] rerun $name $dt%.2fs " +
-          f"(median ${medians(name)}%.2f, ambient ${anchors.last}%.2f" +
-          (if (failed) ", FAILED)" else ")"))
-        // a failed RE-RUN must stay visible in the ledger (the query
-        // succeeded in-loop — the first reading stands — but "we tried
-        // to adjudicate and the attempt errored" is exactly the row a
-        // reader needs to see, not a silently shorter attempts array)
-        if (!failed) attempts += dt else failedAttempts += 1
-        keep = !failed && isOutlier(name, dt)
-      }
-      name -> ((attempts.toSeq, anchors.toSeq, failedAttempts))
-    }.toMap
-    val adopted = results.map { case (n, dt) =>
-      n -> ledger.get(n).filter(_._1.nonEmpty)
-        .fold(dt) { case (as, _, _) => math.min(dt, as.min) }
-    }
-    val qs = adopted.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = adopted.map(_._2).sum
-    val fl = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val rr = ledger.toSeq.sortBy(_._1).map { case (n, (as, an, fa)) =>
-      s""""$n":{"median":${Jfmt.f3(medians(n))},""" +
-        s""""first":${Jfmt.f3(firstPass(n))},""" +
-        as.map(Jfmt.f3).mkString("\"attempts\":[", ",", "],") +
-        an.map(Jfmt.f3).mkString("\"anchor_at_attempt\":[", ",", "],") +
-        s""""failed_attempts":$fa}"""
-    }.mkString("{", ",", "}")
-    val resMap = adopted.toMap
-    val ratios = anchorRecord.toSeq.sortBy(_._1).flatMap {
-      case (n, rec) => resMap.get(n).map(obs => n -> obs / rec)
-    }
-    val ambientRatio = if (ratios.isEmpty) 1.0 else median(ratios.map(_._2))
-    val ambient = ratios.map { case (n, r) => s""""$n":${Jfmt.f3(r)}""" }
-      .mkString(
-        s"""{"ratio":$ambientRatio,"per_anchor":{""", ",", "}}")
-    val machine =
-      s"""{"cpu1_msteps_ms":${Jfmt.f3(cpu1)},""" +
-        s""""cpu${cpus}_msteps_ms":${Jfmt.f3(cpuN)},""" +
-        s""""cpu1_basis":${cpu1Basis.map(Jfmt.f3).getOrElse("null")},""" +
-        s""""envelope_scale":${Jfmt.f3(envScale)}}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$fl,"ambient":$ambient,"reruns":$rr,"machine":$machine,"sf":"$sfDir"}"""
-    // Durable copy first: the driver greps stdout for the metric line,
-    // and rounds 1-2 both lost it to interleaved shutdown noise. The
-    // file survives regardless of log ordering.
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val measured = measure(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) })
+    val json = record(measured,
+      Seq("cpu1_msteps_ms" -> cpu1, s"cpu${cpus}_msteps_ms" -> cpuN), sfDir)
+    // Durable copy of a full-catalog run first: the driver greps stdout
+    // for the metric line, and rounds 1-2 both lost it to interleaved
+    // shutdown noise. A subset run must not overwrite the committed
+    // full record.
+    if (only.isEmpty)
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // Stop Spark BEFORE printing so state-store/executor shutdown chatter
     // can't land after (and bury) the metric line; then emit the metric
     // as the absolute last stdout line. ONE line only (round-19 verdict

@@ -3,6 +3,7 @@ package graft
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The engine's one session definition. Every main and the spec base
   * build their session here, so a conf the catalog depends on (UTC,
@@ -49,7 +50,7 @@ object Session {
       val memoKeep = graft.ext.FrameMemo.liveRddIds
       spark.sparkContext.getPersistentRDDs.valuesIterator
         .filter(r => !memoKeep.contains(r.id))
-        .foreach(_.unpersist(blocking = true))
+        .foreach(ColumnBridge.unpersistBlocking)
       spark.sessionState.catalog.getTempViewNames()
         .foreach(spark.catalog.dropTempView)
     } catch { case NonFatal(e) =>

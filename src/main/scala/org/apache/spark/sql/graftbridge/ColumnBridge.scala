@@ -35,6 +35,18 @@ object ColumnBridge {
       case _ =>
     }
 
+  /** Blocking unpersist of `rdd`. A locally checkpointed RDD is freed
+    * through `SparkContext.unpersistRDD` (private[spark]) directly:
+    * `RDD.unpersist` would log a "lineage has been truncated" WARN for
+    * it on every call, and a sweep that frees such blocks on purpose
+    * would bury its own failure lines under them. */
+  def unpersistBlocking(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    // `RDD.isLocallyCheckpointed` is private[rdd]; this is its body
+    if (rdd.checkpointData.exists(
+        _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = true)
+    else rdd.unpersist(blocking = true)
+
   /** An executor-shippable whole-file reader over the SESSION's
     * Hadoop configuration — the bridge here is
     * `org.apache.spark.util.SerializableConfiguration`, which
