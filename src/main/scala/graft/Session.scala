@@ -50,7 +50,7 @@ object Session {
       val memoKeep = graft.ext.FrameMemo.liveRddIds
       spark.sparkContext.getPersistentRDDs.valuesIterator
         .filter(r => !memoKeep.contains(r.id))
-        .foreach(ColumnBridge.unpersistBlocking)
+        .foreach(ColumnBridge.unpersist(_, blocking = true))
       spark.sessionState.catalog.getTempViewNames()
         .foreach(spark.catalog.dropTempView)
     } catch { case NonFatal(e) =>

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.schema.TableSpec
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
 
@@ -93,6 +93,18 @@ object PartitionKeys {
       .withColumn("year", year(ts))
       .withColumn("month", month(ts))
   }
+
+  /** The partitions `df` touches with their exact row counts: one row
+    * per distinct `partCols` value tuple, the count (Long) appended;
+    * empty when `df` has no rows. One job and no shuffle — tasks count
+    * locally, the driver merges. */
+  def touchedCounts(df: DataFrame, partCols: Seq[String]): Seq[Row] =
+    df.select(partCols.map(col): _*).rdd.mapPartitions { rows =>
+      val n = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+      rows.foreach(r => n(r.toSeq) = n.getOrElse(r.toSeq, 0L) + 1L)
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+      .map { case (k, c) => Row.fromSeq(k :+ c) }.toSeq
 }
 
 /** FK semi-join delta filtering (reference: gluejob.py:530-600).

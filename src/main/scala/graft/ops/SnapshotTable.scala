@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -196,7 +198,7 @@ object SnapshotTable {
   /** Per-table-dir commit monitors: the commit's check-rename-readback
     * section is serialized WITHIN this JVM, so two threads of one
     * driver (the engine's real concurrency shape —
-    * `incrementalRunParallel` futures, foreachBatch callbacks) racing
+    * pooled landing threads, foreachBatch callbacks) racing
     * the same version get exactly one winner and one loud loser; the
     * loser's [[mergeRetrying]] rebase then lands on the next version.
     * Cross-PROCESS writers stay best-effort detection, as documented
@@ -1491,7 +1493,11 @@ object SnapshotTable {
       cols: Seq[(String, DataType)],
       censusCol: Option[String]): FileHarvest = {
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // the file's own conf: the one-argument open builds a fresh one,
+    // re-parsing Hadoop's default XML resources for every footer
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(in.getConfiguration)
+        .build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -2017,6 +2023,16 @@ object SnapshotTable {
     else padToSchema(readSnap(spark, dir, head.copy(entries = replaced)),
       dataSchema)
 
+  /** The widening conform of [[conformTo]] for collected partition
+    * rows: leading values cast from `from` to `to`, the rest kept. */
+  private def conformRows(rows: Seq[Row], from: Seq[DataType],
+      to: Seq[DataType]): Seq[Row] =
+    rows.map(r => Row.fromSeq(r.toSeq.zipWithIndex.map { case (v, i) =>
+      if (i >= to.size || from(i) == to(i)) v
+      else CatalystTypeConverters.convertToScala(
+        Cast(Literal.create(v, from(i)), to(i)).eval(), to(i))
+    }))
+
   private def splitTouched(head: Snap, partCols: Seq[String],
       touchedRows: Seq[Row]): (Seq[Entry], Seq[Entry]) = {
     val touchedSet = touchedRows.map(r => partKeyRow(partCols, r)).toSet
@@ -2029,8 +2045,9 @@ object SnapshotTable {
     * copy-on-write over the partitions the delta touches, committed
     * as version head+1. Returns the committed version (the head's,
     * unchanged, when `batchId` replays). The touched-partition
-    * collect is bounded exactly as [[Upsert.upsertPartitioned]]'s —
-    * a delta spans few storage partitions by construction.
+    * counts are bounded exactly as [[Upsert.upsertPartitioned]]'s —
+    * a delta spans few storage partitions by construction; a caller
+    * that holds them passes them as `touchedCounts`.
     * `statsCols` names EXTRA columns (beyond the merge key) whose
     * per-entry/per-file min/max the manifest records — Iceberg's
     * per-column bounds — so [[readRange]] prunes on any of them.
@@ -2043,7 +2060,8 @@ object SnapshotTable {
       maxRowsPerTask: Long = DefaultMaxRowsPerTask,
       dirToken: Option[String] = None,
       statsCols: Seq[String] = Nil,
-      branch: Option[String] = None): Long = {
+      branch: Option[String] = None,
+      touchedCounts: Option[Seq[Row]] = None): Long = {
     requirePathSafe(delta, partCols)
     // branch writes ALWAYS stage under a unique per-commit token: the
     // branch's version counter overlaps main's (both append above the
@@ -2060,24 +2078,22 @@ object SnapshotTable {
         case Left(ver) => return ver
         case Right(hs) => hs
       }
-    // conform BEFORE the touched collect so the collected partition
-    // rows carry the EVOLVED types (the write's salted split table
-    // joins them against the output's columns — a widened partition
-    // column must not leave Int rows against a Long schema)
     val deltaC = conformTo(delta, newSchema)
-    // touched partitions WITH per-partition delta counts in the same
-    // single collect the touched set always was: the counts (plus the
-    // replaced entries' recorded rows — the manifest already knows
-    // them) give writeAndCommit its task-layout estimate
-    val touched = deltaC.groupBy(partCols.map(col): _*)
-      .agg(count(lit(1)).as("_gp_n")).collect()
+    // touched partitions with their delta counts (plus the replaced
+    // entries' recorded rows: writeAndCommit's task-layout estimate),
+    // in the EVOLVED types — the write's split table joins them
+    // against the output's columns
+    val touched = conformRows(
+      touchedCounts.getOrElse(PartitionKeys.touchedCounts(delta, partCols)),
+      partCols.map(c => delta.schema(c).dataType),
+      partCols.map(c => newSchema(c).dataType))
     require(touched.nonEmpty, "empty delta — nothing to merge")
-    val (replaced, kept) = splitTouched(head, partCols, touched.toSeq)
+    val (replaced, kept) = splitTouched(head, partCols, touched)
     val replacedRows = replaced.groupBy(e => partKeyOfEntry(e.path))
       .map { case (k, es) =>
         k -> es.map(_.rows.getOrElse(maxRowsPerTask)).sum
       }
-    val est = touched.toSeq.map { r =>
+    val est = touched.map { r =>
       (r: Row, r.getLong(partCols.size) +
         replacedRows.getOrElse(partKeyRow(partCols, r), 0L))
     }
@@ -2094,7 +2110,7 @@ object SnapshotTable {
 
   /** [[merge]] with OPTIMISTIC CONCURRENCY — the multi-writer-safe
     * entry point for threads of one driver (foreachBatch callbacks,
-    * `incrementalRunParallel` futures targeting a shared table): each
+    * pooled landing threads targeting a shared table): each
     * attempt stages its data under a unique per-attempt dir token (so
     * racers never touch each other's files), the commit's
     * check-rename-readback is serialized per table dir within the

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Idempotent partitioned upsert (reference: gluejob.py:173-205).
   *
@@ -43,42 +46,41 @@ object Upsert {
   /** Upsert `delta` (already bronze-normalized, with company/year/month
     * partition keys) into the hive-partitioned parquet table at `path`.
     * Only partitions present in the delta are read and rewritten
-    * (gluejob.py:190-205 read-modify-write, distributed). */
+    * (gluejob.py:190-205 read-modify-write, distributed). A caller that
+    * holds the delta's [[PartitionKeys.touchedCounts]] passes them as
+    * `touchedCounts`; absent, they are computed here. */
   def upsertPartitioned(spark: SparkSession, delta: DataFrame, path: String,
       key: String, tieBreak: String,
-      partCols: Seq[String] = Seq("company", "year", "month")): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tableExists = fs.exists(new org.apache.hadoop.fs.Path(path))
-
-    val merged = if (!tableExists) {
-      merge(delta, spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.schema),
-        key, tieBreak)
-    } else {
-      // Partition pruning: restrict the existing table scan to the
-      // (year,month) partitions the delta touches. The touched set is
-      // tiny (a daily delta spans 1-2 months), so collecting it to build
-      // an IN-filter is a driver-side constant, not a data materialization.
-      val touched = delta.select(partCols.map(col): _*).distinct().collect()
-        .map(r => partCols.map(c => r.getAs[Any](c)))
-      val existing = spark.read.parquet(path)
-      val touchedFilter = touched.map { vals =>
-        partCols.zip(vals).map { case (c, v) => col(c) === lit(v) }
-          .reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      // localCheckpoint truncates lineage so the write below does not
-      // overwrite a path its own plan is still reading (Spark rejects
-      // that); the checkpointed set is delta-touched partitions only.
-      val existingTouched = existing.filter(touchedFilter)
-        .select(delta.columns.map(col): _*).localCheckpoint()
-      merge(delta, existingTouched, key, tieBreak)
-    }
+      partCols: Seq[String] = Seq("company", "year", "month"),
+      touchedCounts: Option[Seq[Row]] = None): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Partition pruning by path: the existing dirs of the partitions the
+    // delta touches, rendered with Spark's own partition-path escaping
+    // (a dir not written yet is skipped). No listing of the table and
+    // no schema-inference job: the delta's schema is the table's.
+    val dirs =
+      if (!fs.exists(root)) Nil
+      else touchedCounts.getOrElse(PartitionKeys.touchedCounts(delta, partCols))
+        .map(r => new Path(root, partCols.indices.map(i =>
+          ExternalCatalogUtils.getPartitionPathString(partCols(i),
+            Option(r.get(i)).map(_.toString).orNull)).mkString("/")))
+        .filter(fs.exists)
+    // A lazy localCheckpoint truncates lineage so the write below does
+    // not overwrite a path its own plan is still reading (Spark rejects
+    // that). It costs no job of its own: the write's first stage fills
+    // it, and dynamic overwrite replaces dirs only at job commit.
+    val existing = Option.when(dirs.nonEmpty)(
+      spark.read.schema(delta.schema).option("basePath", path)
+        .parquet(dirs.map(_.toString): _*)
+        .select(delta.columns.map(col): _*).localCheckpoint(eager = false))
+    val merged = merge(delta, existing.getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], delta.schema)), key, tieBreak)
 
     // one write task per storage partition (no small-file spray from the
     // merge window's hash partitioning), bounded file sizes for the
     // scan-side at scale
-    merged.repartition(partCols.map(col): _*)
+    try merged.repartition(partCols.map(col): _*)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -86,5 +88,6 @@ object Upsert {
       .option("maxRecordsPerFile", 5000000L)
       .partitionBy(partCols: _*)
       .parquet(path)
+    finally existing.foreach(ColumnBridge.unpersistLocalCheckpoint)
   }
 }

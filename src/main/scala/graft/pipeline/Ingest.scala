@@ -4,8 +4,10 @@ import graft.ops.{Normalize, PartitionKeys, SnapshotTable, Upsert}
 import graft.schema.{TableSpec, Tables}
 import graft.sources.CsvSource
 import graft.state.WatermarkStore
+import graft.streaming.Commits
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Flow dispatch + per-table orchestration (reference: gluejob.py:141-171,
   * 306-327, 602-627; README.md:6-17).
@@ -20,6 +22,14 @@ import org.apache.spark.sql.functions._
   * unknown modes no-op. Watermarks commit once, after every selected
   * table succeeds (gluejob.py:621-623) — at-least-once, idempotent via
   * the upsert dedup.
+  *
+  * Each table's delta is extracted ONCE, like the reference's in-memory
+  * frame (gluejob.py:264-280): the filtered, normalized delta is cut
+  * (`localCheckpoint`) and the first job over the cut counts its rows
+  * per storage partition. No counts means an empty delta; otherwise the
+  * sink reads the cut and takes the counts, so every decision and the
+  * write see the same rows (in production each evaluation would be a
+  * full JDBC read). [[incrementalRun]] lands its tables concurrently.
   */
 object Ingest {
 
@@ -65,24 +75,35 @@ object Ingest {
     * before the sink (gluejob.py:175-179). */
   def ingestTable(spark: SparkSession, spec: TableSpec, source: DataFrame,
       watermark: String, outRoot: String,
-      sink: Sink = OverwriteSink): Boolean = {
-    val delta = source.filter(
-      coalesce(col(spec.updatedCol).cast("string"), lit("")) >= watermark)
-    if (delta.isEmpty) false
-    else {
-      val bronze = PartitionKeys.withCompanyYearMonth(
-        Normalize.toBronze(delta, spec), spec.dateCol)
-      sink match {
+      sink: Sink = OverwriteSink): Boolean =
+    land(spark, spec, source.filter(
+      coalesce(col(spec.updatedCol).cast("string"), lit("")) >= watermark),
+      outRoot, sink, batchId = None)
+
+  /** Extract `raw` once and land it through `sink`: the cut, one
+    * counting job, the sink over the cut, the cut released. False (and
+    * no sink call) when the delta is empty. */
+  private def land(spark: SparkSession, spec: TableSpec, raw: DataFrame,
+      outRoot: String, sink: Sink, batchId: Option[Long]): Boolean = {
+    val partCols = Seq("company", "year", "month")
+    val delta = PartitionKeys.withCompanyYearMonth(
+        Normalize.toBronze(raw, spec), spec.dateCol)
+      .localCheckpoint(eager = false)
+    try {
+      val touched = PartitionKeys.touchedCounts(delta, partCols)
+      if (touched.nonEmpty) sink match {
         case OverwriteSink =>
-          Upsert.upsertPartitioned(spark, bronze, s"$outRoot/${spec.name}",
-            key = spec.idCol, tieBreak = spec.updatedCol)
-        case SnapshotSink =>
-          SnapshotTable.merge(spark, s"$outRoot/${spec.name}", bronze,
+          Upsert.upsertPartitioned(spark, delta, s"$outRoot/${spec.name}",
             key = spec.idCol, tieBreak = spec.updatedCol,
-            partCols = Seq("company", "year", "month"))
+            partCols = partCols, touchedCounts = Some(touched))
+        case SnapshotSink =>
+          SnapshotTable.merge(spark, s"$outRoot/${spec.name}", delta,
+            key = spec.idCol, tieBreak = spec.updatedCol,
+            partCols = partCols, batchId = batchId,
+            touchedCounts = Some(touched))
       }
-      true
-    }
+      touched.nonEmpty
+    } finally ColumnBridge.unpersistLocalCheckpoint(delta)
   }
 
   /** Initial CSV load: no watermark filter, no watermark advance
@@ -94,92 +115,44 @@ object Ingest {
   def initialLoad(spark: SparkSession, csvRoot: String, outRoot: String,
       tables: Seq[TableSpec] = Tables.active,
       sink: Sink = OverwriteSink): Seq[String] =
-    tables.flatMap { spec =>
-      val df = CsvSource.read(spark, spec, s"$csvRoot/${spec.name}.csv")
-      if (df.isEmpty) None
-      else {
-        val bronze = PartitionKeys.withCompanyYearMonth(
-          Normalize.toBronze(df, spec), spec.dateCol)
-        sink match {
-          case OverwriteSink =>
-            Upsert.upsertPartitioned(spark, bronze,
-              s"$outRoot/${spec.name}",
-              key = spec.idCol, tieBreak = spec.updatedCol)
-          case SnapshotSink =>
-            // reserved SEED batch id: a replayed initial load finds
-            // batch 0 at the head and no-ops like every other commit
-            // here, so "the seed is version 1" stays true across
-            // reruns (the content was always identical via new-wins
-            // dedup; the id makes the HISTORY identical too)
-            SnapshotTable.merge(spark, s"$outRoot/${spec.name}", bronze,
-              key = spec.idCol, tieBreak = spec.updatedCol,
-              partCols = Seq("company", "year", "month"),
-              batchId = Some(0L))
-        }
-        Some(spec.name)
-      }
-    }
+    tables.filter { spec =>
+      // reserved SEED batch id on the snapshot sink: a replayed initial
+      // load finds batch 0 at the head and no-ops like every other
+      // commit here, so "the seed is version 1" stays true across
+      // reruns (the content was always identical via new-wins dedup;
+      // the id makes the HISTORY identical too)
+      land(spark, spec,
+        CsvSource.read(spark, spec, s"$csvRoot/${spec.name}.csv"),
+        outRoot, sink, batchId = Some(0L))
+    }.map(_.name)
 
   /** Incremental run over pre-built source frames (the JDBC read in
     * prod; any frame in tests). `probeTime` is the source-DB time
     * captured at batch start (S5) — becomes the next watermark for every
-    * table that ingested. Watermarks commit only after all succeed. */
+    * table that ingested.
+    *
+    * The tables land concurrently through [[Commits.landConcurrently]]
+    * (the reference walks them sequentially, gluejob.py:306-327, leaving
+    * the cluster idle through every small table's latency). Watermarks
+    * are read on the caller thread before any table starts, and
+    * advanced and committed only after every table returned: any
+    * table's failure cancels the others' jobs, waits for them, and
+    * rethrows with no watermark moved (at-least-once, recovered by the
+    * idempotent upsert). */
   def incrementalRun(spark: SparkSession, store: WatermarkStore,
       sources: Map[String, DataFrame], probeTime: String, outRoot: String,
       tables: Seq[TableSpec] = Tables.active,
       sink: Sink = OverwriteSink): Seq[String] = {
-    val done = tables.filter(t => sources.contains(t.name)).map { spec =>
-      ingestTable(spark, spec, sources(spec.name), store.get(spec.name),
-        outRoot, sink)
-      store.advance(spec.name, probeTime)
-      spec.name
-    }
-    store.commit()
-    done
-  }
-
-  /** [[incrementalRun]] with bounded per-table parallelism. The
-    * reference walks its tables strictly sequentially
-    * (gluejob.py:306-327), leaving the cluster idle through every
-    * small table's latency; on Spark each table's
-    * filter→normalize→upsert is an independent job against a disjoint
-    * output path, so the idiomatic upgrade is to submit tables from a
-    * bounded driver pool and let the scheduler interleave their stages
-    * across the executor pool. `parallelism` caps in-flight tables
-    * (source-connection and driver-memory budget).
-    *
-    * Semantics are IDENTICAL to the sequential path: disjoint sinks
-    * per table, watermarks read once up front on the caller thread,
-    * advances + the single commit happen only after EVERY table
-    * returned — any table's failure aborts the commit for all
-    * (at-least-once, recovered by the idempotent upsert). */
-  def incrementalRunParallel(spark: SparkSession, store: WatermarkStore,
-      sources: Map[String, DataFrame], probeTime: String, outRoot: String,
-      tables: Seq[TableSpec] = Tables.active,
-      parallelism: Int = 4, sink: Sink = OverwriteSink): Seq[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    require(parallelism > 0)
     val selected = tables.filter(t => sources.contains(t.name))
-    if (selected.isEmpty) { store.commit(); return Nil }
-    // watermarks read on the caller thread — the store stays
-    // single-threaded; futures only touch Spark
     val wms = selected.map(s => s.name -> store.get(s.name)).toMap
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, selected.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val done =
-      try Await.result(
-        Future.sequence(selected.map { spec =>
-          Future {
-            ingestTable(spark, spec, sources(spec.name), wms(spec.name),
-              outRoot, sink)
-            spec.name
-          }
-        }), Duration.Inf)
-      finally pool.shutdown()
+    Commits.landConcurrently(spark)(selected.map(spec => spec.name -> {
+      () =>
+        ingestTable(spark, spec, sources(spec.name), wms(spec.name),
+          outRoot, sink)
+        ()
+    }): _*)
     selected.foreach(spec => store.advance(spec.name, probeTime))
     store.commit()
-    done
+    selected.map(_.name)
   }
 }

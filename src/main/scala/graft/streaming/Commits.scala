@@ -433,57 +433,52 @@ object Commits {
         t.setDaemon(true); t
       })
 
-  /** Land one micro-batch's two outputs concurrently, each on a
-    * pooled driver thread: `fragment` (the batch's own store fragment)
-    * and `pairs`. The two are INDEPENDENT consumers of the batch's
-    * checkpointed delta — the fragment never reads the store, and
-    * batch i's fragment only matters to batch i+1's store read — so
-    * the batch's wall is max(pairs, fragment) instead of their sum. A
-    * micro-batch is a handful of short jobs whose driver-side
-    * planning gaps dominate, which is the idle tail the overlap
-    * recovers. `pairs` must not read the fragment being overwritten:
-    * a replayed batch finds its own earlier fragment committed, so
-    * its store read goes through [[fragmentRootsExcept]].
+  /** Run independent `landings` concurrently, each named one on a
+    * pooled driver thread, and return when all have. Callers land
+    * outputs that do not read each other: a micro-batch's store
+    * fragment and its pairs (batch i's fragment only matters to batch
+    * i+1's store read — a replayed batch's pairs read the store through
+    * [[fragmentRootsExcept]]), or an incremental run's tables. Each is
+    * a handful of short jobs whose driver-side planning gaps dominate;
+    * overlapped, the wall is the slowest landing instead of the sum.
     *
-    * Both complete before this returns: the streaming checkpoint
-    * marks the batch done only after foreachBatch, so exactly-once on
-    * storage is unchanged (either failure fails the batch; the replay
-    * rewrites both `batch=<id>` dirs mode-Overwrite).
+    * Every landing completes before this returns, so whatever the
+    * caller commits afterwards (a stream's checkpoint, a run's
+    * watermarks) commits only work that is done: any failure fails
+    * the call, and the replay rewrites every output.
     *
-    * Both threads run under the caller's local properties and one job
+    * The threads run under the caller's local properties and one job
     * group of their own. On the first failure, or an interrupt of the
     * calling thread, that group's jobs are cancelled — running ones
     * and any submitted later (an adaptive plan's broadcast can start
     * after the cancel) — and the helper waits, uninterruptibly, for
-    * both threads to return before it rethrows. No write of this
-    * batch outlives the call into the next batch or into a stopped
-    * query. The first failure is rethrown; a later one rides along as
+    * every landing to return before it rethrows. No write outlives the
+    * call. The first failure is rethrown; later ones ride along as
     * suppressed. */
-  def landConcurrently(spark: SparkSession)(fragment: => Unit,
-      pairs: => Unit): Unit = {
+  def landConcurrently(spark: SparkSession)(
+      landings: (String, () => Unit)*): Unit = {
     val sc = spark.sparkContext
     val group = s"graft-landing-${java.util.UUID.randomUUID()}"
     val props = org.apache.spark.sql.graftbridge.ColumnBridge
       .localProperties(sc)
     val done = new java.util.concurrent.ExecutorCompletionService[Unit](
       landingPool)
-    def land(what: String)(body: => Unit) =
+    val futures = landings.map { case (what, body) =>
       done.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = org.apache.spark.sql.graftbridge
           .ColumnBridge.withLocalProperties(sc, props) {
             sc.setJobGroup(group, what, interruptOnCancel = true)
-            body
+            body()
           }
       })
-    val landings = Seq(land("fragment landing")(fragment),
-      land("pairs landing")(pairs))
-    try landings.foreach(_ => done.take().get())
+    }
+    try futures.foreach(_ => done.take().get())
     catch {
       case t: Throwable =>
         val primary = unwrap(t)
         sc.cancelJobGroupAndFutureJobs(group,
-          "the batch's other landing failed or was interrupted")
-        val interrupted = landings.map(f => awaitUninterruptibly(
+          "another landing of the call failed or was interrupted")
+        val interrupted = futures.map(f => awaitUninterruptibly(
           try f.get()
           catch {
             case e: java.util.concurrent.ExecutionException =>

@@ -110,11 +110,11 @@ object DedupMaintenance {
             Commits.fragmentRootsExcept(spark, indexDir, batchId))
           .join(deltaIdx.select(col("_id")), Seq("_id"), "left_anti")
         Commits.landConcurrently(spark)(
-          fragment = deltaIdx.write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId"),
-          pairs = Dedup.minHashDeltaPairsFromIndex(baseIdx, deltaIdx,
-              threshold)
-            .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId"))
+          "fragment landing" -> (() => deltaIdx.write.mode("overwrite")
+            .parquet(s"$indexDir/batch=$batchId")),
+          "pairs landing" -> (() => Dedup.minHashDeltaPairsFromIndex(
+              baseIdx, deltaIdx, threshold)
+            .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")))
         true
       }
     } finally {

@@ -161,14 +161,14 @@ object MediaDedupMaintenance {
       // pinning the session's shuffle partition count keeps the
       // ≤ kinds × bands writer tasks parallel (file count per dir is
       // unchanged: all of a combo's rows still hash to one task)
-      fragment = deltaBanded
+      "fragment landing" -> (() => deltaBanded
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("kind"), col("band"))
         .sortWithinPartitions(col("kind"), col("band"), col("bucket"))
         .write.mode("overwrite")
         .partitionBy("kind", "band")
-        .parquet(s"$storeDir/batch=$batchId"),
-      pairs = {
+        .parquet(s"$storeDir/batch=$batchId")),
+      "pairs landing" -> { () =>
         // a replay's own earlier fragment is not read: the fragment
         // landing overwrites it. The touched-cell collect exists to
         // PRUNE the store scan — on an empty store (every stream's

@@ -31,21 +31,22 @@ object ColumnBridge {
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
+        unpersist(l.rdd, blocking = false)
       case _ =>
     }
 
-  /** Blocking unpersist of `rdd`. A locally checkpointed RDD is freed
-    * through `SparkContext.unpersistRDD` (private[spark]) directly:
+  /** Unpersist `rdd`. A locally checkpointed RDD is freed through
+    * `SparkContext.unpersistRDD` (private[spark]) directly:
     * `RDD.unpersist` would log a "lineage has been truncated" WARN for
-    * it on every call, and a sweep that frees such blocks on purpose
-    * would bury its own failure lines under them. */
-  def unpersistBlocking(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    * it on every call, burying real failure lines under releases made
+    * on purpose. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_],
+      blocking: Boolean): Unit =
     // `RDD.isLocallyCheckpointed` is private[rdd]; this is its body
     if (rdd.checkpointData.exists(
         _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
-      rdd.sparkContext.unpersistRDD(rdd.id, blocking = true)
-    else rdd.unpersist(blocking = true)
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+    else rdd.unpersist(blocking)
 
   /** An executor-shippable whole-file reader over the SESSION's
     * Hadoop configuration — the bridge here is

@@ -1,11 +1,7 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.ext.{Dedup, Images}
 import graft.streaming.{DedupMaintenance, MediaDedupMaintenance}
-import org.apache.spark.JobExecutionStatus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -121,36 +117,6 @@ class DedupMaintenanceSpec extends SparkSpec {
   }
 
   private val sc = spark.sparkContext
-
-  /** Ids of the jobs started while `body` ran, its pooled driver
-    * threads' jobs included. Job starts reach a listener in order, so
-    * once a fence job started after `body` is seen, every earlier
-    * start has been. The status store is fenced too: the fence job
-    * shows as succeeded there only after every earlier job event. */
-  private def jobsStartedDuring(body: => Unit): Seq[Int] = {
-    val fence = s"fence-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    @volatile var fenced = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == fence)) fenced = true
-        else if (!fenced) seen.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(fence, "listener fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      def settled = fenced && sc.statusTracker.getJobIdsForGroup(fence)
-        .exists(id => sc.statusTracker.getJobInfo(id)
-          .exists(_.status == JobExecutionStatus.SUCCEEDED))
-      while (!settled && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(settled, "listener fence never arrived")
-      seen.asScala.map(_.intValue).toSeq
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a micro-batch against a non-empty index runs five jobs (nine " +
       "before the map-only index and the one-stage pair plan)") {

@@ -58,48 +58,89 @@ class ParallelIngestSpec extends SparkSpec {
   import graft.state.WatermarkStore
   import org.apache.spark.sql.Row
 
-  private def srcFor(spec: TableSpec, ids: Range, ts: String) = {
-    val rows = ids.map { i =>
+  private def rowsFor(spec: TableSpec, ids: Range, ts: String) =
+    ids.map { i =>
       Row.fromSeq(spec.columns.map {
         case c if c == spec.idCol => i.toString
         case c if c == spec.updatedCol || c == spec.dateCol => ts
         case _ => "x"
       })
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), spec.schema)
-  }
+
+  private def srcFor(spec: TableSpec, ids: Range, ts: String) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rowsFor(spec, ids, ts)), spec.schema)
+
+  private val clock = () => java.time.LocalDateTime.of(2024, 2, 2, 4, 0, 0)
+  private def storeAt(root: String) =
+    new WatermarkStore(java.nio.file.Paths.get(s"$root/wm.json"), clock)
 
   test("parallel incremental run = sequential run: same rows, same watermarks") {
     val tables = Tables.active.take(4)
     val ts = "2024-02-01 10:00:00"
     val sources = tables.map(t => t.name -> srcFor(t, 0 until 50, ts)).toMap
-    val clock = () => java.time.LocalDateTime.of(2024, 2, 2, 4, 0, 0)
     val rootA = tmpDir("ingseq"); val rootB = tmpDir("ingpar")
-    val storeA = new WatermarkStore(
-      java.nio.file.Paths.get(s"$rootA/wm.json"), clock)
-    val storeB = new WatermarkStore(
-      java.nio.file.Paths.get(s"$rootB/wm.json"), clock)
+    val storeA = storeAt(rootA)
     val probe = "2024-02-02 04:00:00"
-    val doneA = Ingest.incrementalRun(spark, storeA, sources, probe,
-      s"$rootA/raw", tables)
-    val doneB = Ingest.incrementalRunParallel(spark, storeB, sources, probe,
-      s"$rootB/raw", tables, parallelism = 4)
-    assert(doneA.toSet == doneB.toSet && doneB.size == 4)
+    // the sequential reference: one table after another, watermarks
+    // advanced and committed after the last
+    tables.foreach { t =>
+      Ingest.ingestTable(spark, t, sources(t.name), storeA.get(t.name),
+        s"$rootA/raw")
+      storeA.advance(t.name, probe)
+    }
+    storeA.commit()
+    val doneB = Ingest.incrementalRun(spark, storeAt(rootB), sources, probe,
+      s"$rootB/raw", tables)
+    assert(doneB.toSet == tables.map(_.name).toSet && doneB.size == 4)
+    val (committedA, committedB) = (storeAt(rootA), storeAt(rootB))
     tables.foreach { t =>
       val a = spark.read.parquet(s"$rootA/raw/${t.name}")
         .collect().map(_.toString).sorted.toSeq
       val b = spark.read.parquet(s"$rootB/raw/${t.name}")
         .collect().map(_.toString).sorted.toSeq
       assert(a == b, s"row mismatch for ${t.name}")
-      assert(storeA.get(t.name) == storeB.get(t.name))
+      assert(committedA.get(t.name) == committedB.get(t.name))
+      assert(committedB.get(t.name) == probe)
     }
-    // degenerate pool of 1 = strictly sequential, still identical
-    val rootC = tmpDir("ingone")
-    val storeC = new WatermarkStore(
-      java.nio.file.Paths.get(s"$rootC/wm.json"), clock)
-    val doneC = Ingest.incrementalRunParallel(spark, storeC, sources, probe,
-      s"$rootC/raw", tables, parallelism = 1)
-    assert(doneC.toSet == doneA.toSet)
+  }
+
+  test("a table whose sink throws fails the run only after the other " +
+      "table returned, and no watermark advances") {
+    val Seq(slow, failing) = Tables.active.take(2)
+    val root = tmpDir("ingfail")
+    val store = storeAt(root)
+    store.advance(slow.name, "2024-01-01 00:00:00")
+    store.commit()
+    val wmFile = java.nio.file.Paths.get(s"$root/wm.json")
+    val before = java.nio.file.Files.readAllBytes(wmFile)
+    // the failing table's dir already holds a snapshot table
+    // partitioned differently: its merge refuses after the extraction
+    import spark.implicits._
+    graft.ops.SnapshotTable.merge(spark, s"$root/out/${failing.name}",
+      Seq(("1", "x")).toDF("k", "company"), "k", "k", Seq("company"))
+    // the slow table's extraction runs until its job is cancelled
+    val slowSrc = spark.createDataFrame(spark.sparkContext
+      .parallelize(rowsFor(slow, 0 until 5, "2024-02-01 10:00:00"), 1)
+      .mapPartitions { rows => Thread.sleep(120000L); rows }, slow.schema)
+    val sources = Map(slow.name -> slowSrc,
+      failing.name -> srcFor(failing, 0 until 5, "2024-02-01 10:00:00"))
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalArgumentException](Ingest.incrementalRun(
+      spark, store, sources, "2024-02-02 04:00:00", s"$root/out",
+      Seq(slow, failing), Ingest.SnapshotSink))
+    assert(err.getMessage.contains("partitioned by"))
+    // the slow table's outcome (its cancelled job) rides along: the run
+    // waited for it before rethrowing
+    assert(err.getSuppressed.exists(
+      _.isInstanceOf[org.apache.spark.SparkException]),
+      s"suppressed: ${err.getSuppressed.toSeq}")
+    assert((System.nanoTime() - t0) / 1e9 < 60,
+      "the slow table was not cancelled")
+    assert(java.util.Arrays.equals(before,
+      java.nio.file.Files.readAllBytes(wmFile)), "a watermark was committed")
+    assert(store.get(slow.name) == "2024-01-01 00:00:00" &&
+      store.get(failing.name) == store.defaultWatermark)
   }
 }
 

@@ -3,6 +3,7 @@ package graft
 import graft.pipeline.Ingest
 import graft.schema.Tables
 import graft.state.WatermarkStore
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -196,6 +197,89 @@ class IngestSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/raw/retail_orders").exists())
   }
 
+  private val spec = Tables.registry("retail_order_migrations")
+
+  private def row(id: String, createdAt: String, updatedAt: String) =
+    Row.fromSeq(spec.columns.map {
+      case "id" => id
+      case "created_at" => createdAt
+      case "updated_at" => updatedAt
+      case _ => "x"
+    })
+
+  private def frame(rows: Seq[Row]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      spec.schema)
+
+  // partition 2024-03 holds ids 1 and 2; the day's delta touches only
+  // 2024-01, and the late row updates id 1 in 2024-03
+  private val seed = Seq(
+    row("1", "2024-03-05 10:00:00", "2024-03-05 10:00:00"),
+    row("2", "2024-03-06 10:00:00", "2024-03-06 10:00:00"))
+  private val day = Seq(
+    row("10", "2024-01-05 10:00:00", "2024-04-02 09:00:00"),
+    row("11", "2024-01-06 10:00:00", "2024-04-02 09:00:00"))
+  private val late = row("1", "2024-03-05 10:00:00", "2024-04-02 11:00:00")
+
+  test("one extraction: the source is evaluated once per table per run, " +
+      "so a row arriving mid-run can neither drop seeded rows (overwrite " +
+      "sink) nor commit a key twice (snapshot sink)") {
+    val root = tmpDir("oneextract")
+    Seq(Ingest.OverwriteSink -> "ow", Ingest.SnapshotSink -> "sn").foreach {
+      case (sink, tag) =>
+        val out = s"$root/$tag"
+        assert(Ingest.ingestTable(spark, spec, frame(seed),
+          "2024-01-01 00:00:00", out, sink))
+        val src = LateRowSource.frame(spark, spec.schema, tag, day, late)
+        assert(Ingest.ingestTable(spark, spec, src, "2024-04-01 00:00:00",
+          out, sink))
+        assert(LateRowSource.evaluations(tag) == 1,
+          s"$tag: source evaluated ${LateRowSource.evaluations(tag)} times")
+        val table = s"$out/${spec.name}"
+        val ids = (sink match {
+          case Ingest.OverwriteSink => spark.read.parquet(table)
+          case Ingest.SnapshotSink =>
+            graft.ops.SnapshotTable.read(spark, table)
+        }).select("id").collect().map(_.getString(0)).toSeq
+        assert(Set("1", "2", "10", "11").subsetOf(ids.toSet),
+          s"$tag: a row was lost: ${ids.sorted}")
+        assert(ids.size == ids.distinct.size,
+          s"$tag: a key was committed twice: ${ids.sorted}")
+    }
+  }
+
+  test("one job before each sink's write per table, exactly one for an " +
+      "empty delta") {
+    import graft.ops.{Normalize, PartitionKeys, SnapshotTable, Upsert}
+    val partCols = Seq("company", "year", "month")
+    Seq(Ingest.OverwriteSink, Ingest.SnapshotSink).foreach { sink =>
+      val root = tmpDir("ingestjobs")
+      Seq("alone", "ingest").foreach(t => assert(Ingest.ingestTable(spark,
+        spec, frame(seed), "2024-01-01 00:00:00", s"$root/$t", sink)))
+      val src = frame(day :+ late)
+      // the sink alone over an extracted delta and its counts
+      val cut = PartitionKeys.withCompanyYearMonth(
+        Normalize.toBronze(src, spec), spec.dateCol).localCheckpoint()
+      val counts = PartitionKeys.touchedCounts(cut, partCols)
+      val alone = s"$root/alone/${spec.name}"
+      val sinkJobs = jobsStartedDuring(sink match {
+        case Ingest.OverwriteSink =>
+          Upsert.upsertPartitioned(spark, cut, alone, spec.idCol,
+            spec.updatedCol, partCols, touchedCounts = Some(counts))
+        case Ingest.SnapshotSink =>
+          SnapshotTable.merge(spark, alone, cut, spec.idCol, spec.updatedCol,
+            partCols, touchedCounts = Some(counts))
+      }).size
+      val ingestJobs = jobsStartedDuring(assert(Ingest.ingestTable(spark,
+        spec, src, "2024-04-01 00:00:00", s"$root/ingest", sink))).size
+      assert(ingestJobs == sinkJobs + 1,
+        s"$sink: ingestTable ran $ingestJobs jobs, its sink $sinkJobs")
+      val emptyJobs = jobsStartedDuring(assert(!Ingest.ingestTable(spark,
+        spec, src, "2099-01-01 00:00:00", s"$root/ingest", sink))).size
+      assert(emptyJobs == 1, s"$sink: an empty delta ran $emptyJobs jobs")
+    }
+  }
+
   test("flow dispatch (gluejob.py:141-155, 306-327)") {
     assert(Ingest.flowOf("OnDemand") == Ingest.OnDemand)
     assert(Ingest.flowOf("Scheduled") == Ingest.Scheduled)
@@ -205,6 +289,24 @@ class IngestSpec extends SparkSpec {
       Seq("retail_plans"))
     assert(Ingest.selectTables("checkout_orders").isEmpty) // disabled
     assert(Ingest.selectTables("nope").isEmpty)
+  }
+}
+
+/** A source frame that counts its evaluations per key and, from its
+  * third on, returns one more row: a row that arrived between reads. */
+object LateRowSource {
+  private val evals = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
+
+  def evaluations(key: String): Int = evals.get(key).get
+
+  def frame(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType, key: String,
+      rows: Seq[Row], late: Row): org.apache.spark.sql.DataFrame = {
+    evals.put(key, new java.util.concurrent.atomic.AtomicInteger)
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(key), 1)
+      .flatMap(k => if (evals.get(k).incrementAndGet() >= 3) rows :+ late
+        else rows), schema)
   }
 }
 

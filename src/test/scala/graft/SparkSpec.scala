@@ -19,6 +19,39 @@ trait SparkSpec extends AnyFunSuite {
       .drop("ts")
   }
 
+  /** Ids of the jobs started while `body` ran, its pooled driver
+    * threads' jobs included. Job starts reach a listener in order, so
+    * once a fence job started after `body` is seen, every earlier
+    * start has been. The status store is fenced too: the fence job
+    * shows as succeeded there only after every earlier job event. */
+  def jobsStartedDuring(body: => Unit): Seq[Int] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val fence = s"fence-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    @volatile var fenced = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == fence)) fenced = true
+        else if (!fenced) seen.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def settled = fenced && sc.statusTracker.getJobIdsForGroup(fence)
+        .exists(id => sc.statusTracker.getJobInfo(id).exists(
+          _.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(settled, "listener fence never arrived")
+      seen.asScala.map(_.intValue).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(sys.props("user.dir"), "target"), prefix)
