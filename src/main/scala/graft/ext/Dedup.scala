@@ -394,21 +394,21 @@ object Dedup {
     graft.functions.VectorFunctions.minHashSig(sh, numPerms, seed)
 
 
-  /** [[minHashLshPairs]] with every hash in the chain SQL-replayable:
-    * shingle ids are the rolling polynomial fingerprint (instead of
-    * xxhash64), permutations are the public seeded (a_j, b_j) literals
-    * ([[graft.functions.MinHashSig.perms]]), and band keys are the RAW
-    * signature slices as comma strings (instead of hashing the slice).
-    * An external engine can therefore replay signatures, buckets,
-    * candidate pairs, and the exact-Jaccard verify — the full LSH
-    * recall surface gets a hash-equality oracle (q118), where the
-    * xxhash64 variant can only be checked rows-only (q23).
+  /** LSH near-dup pairs over word n-gram shingles: signature → bands
+    * of `rowsPerBand` → explode → equi-join on (band, band key) →
+    * exact Jaccard verify ≥ threshold, with every hash in the chain
+    * SQL-replayable: shingle ids are the rolling polynomial
+    * fingerprint, permutations are the public seeded (a_j, b_j)
+    * literals ([[graft.functions.MinHashSig.perms]]), and band keys are
+    * the RAW signature slices as comma strings. An external engine can
+    * therefore replay signatures, buckets, candidate pairs, and the
+    * exact-Jaccard verify — the full LSH recall surface gets a
+    * hash-equality oracle (q118).
     *
-    * Same scale shape as [[minHashLshPairs]]: slim (id, band, key)
-    * rows through the candidate join, shingles attached to surviving
-    * candidates only. The string band key is a few dozen bytes vs the
-    * 8-byte hashed key — the price of replayability; prefer the
-    * xxhash64 variant when cross-engine auditability isn't needed. */
+    * Scale shape: slim (id, band, key) rows through the candidate
+    * join, shingles attached to surviving candidates only. The string
+    * band key is a few dozen bytes vs an 8-byte hashed key — the price
+    * of replayability. */
   def minHashLshPairsPortable(docs: DataFrame, textCol: String,
       idCol: String, n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.5, seed: Long = 42L): DataFrame = {
@@ -926,8 +926,7 @@ object Dedup {
     * hotter-bucket cap). Because every hash in the portable chain
     * replays in ANSI SQL, the full histogram — not just its row count —
     * carries a DuckDB oracle (q136), pinning the banding/bucketing
-    * semantics that the xxhash64 fast path (q23) can only expose
-    * rows-only.
+    * semantics.
     *
     * Scale shape: the doc×band rows are slim (id, band, key) triples;
     * two map-side-combinable aggregations, no join, no corpus-width
@@ -944,120 +943,21 @@ object Dedup {
       .agg(count(lit(1)).as("n_buckets"))
   }
 
-  /** LSH near-dup pairs over word n-gram shingles: signature → bands
-    * of `rowsPerBand` → explode → equi-join on (band, bandHash) →
-    * exact Jaccard verify ≥ threshold. Shuffle volume is #docs × #bands
-    * small rows; the verify join attaches shingle sets only to the
-    * (band-collided) candidate pairs. */
-  def minHashLshPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, numPerms: Int = 32, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val numBands = numPerms / rowsPerBand
-    val base = docs.select(col(idCol).as("_id"),
-        sort_array(wordShingles(col(textCol), n)).as("_sh"))
-      .filter(size(col("_sh")) > 0)
-    // banded rows are SLIM (id, bandNo, bandHash) — the shingle arrays
-    // never ride through the candidate join or the pair-dedup shuffle.
-    val banded = base
-      .withColumn("_sig", minHashSignature(col("_sh"), numPerms))
-      .select(col("_id"),
-        explode(transform(sequence(lit(0), lit(numBands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-              .as("bh")))).as("_band"))
-      .select(col("_id"),
-        col("_band.band").as("_bandNo"), col("_band.bh").as("_bandHash"))
-    val cand = banded.select(col("_id").as("doc_a"), col("_bandNo"),
-        col("_bandHash"))
-      .join(banded.select(col("_id").as("doc_b"), col("_bandNo"),
-        col("_bandHash")), Seq("_bandNo", "_bandHash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct() // candidate may fire in >1 band
-    // verify: attach shingle sets back to the (small) candidate set
-    cand
-      .join(base.select(col("_id").as("doc_a"), col("_sh").as("_sha")),
-        Seq("doc_a"))
-      .join(base.select(col("_id").as("doc_b"), col("_sh").as("_shb")),
-        Seq("doc_b"))
-      .withColumn("jaccard", graft.functions.VectorFunctions
-        .jaccardSorted(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
   // ---- SimHash -----------------------------------------------------------
 
-  /** 64-bit SimHash over whitespace tokens: per bit, sign of the +1/-1
-    * sum across token xxhash64 bits. One JVM loop per row (custom
-    * expression) — per-row, no shuffle. */
-  def simHash64(text: Column): Column =
-    graft.functions.VectorFunctions.simHash64(text)
-
-  /** Near-pairs with hamming(simhash) ≤ maxDist via block-combination
-    * banding (Manku/Jain/Sarma, WWW'07 §3): split 64 bits into `chunks`
-    * blocks; a pair within distance d has at least chunks−d untouched
-    * blocks, so it collides on at least one of the C(chunks, chunks−d)
-    * combinations of chunks−d blocks. Each combination's block values
-    * pack into ONE wide long key — wider keys ⇒ exponentially smaller
-    * join buckets than single-block banding (8-bit blocks give 256
-    * bucket values and a quadratic candidate blowup; two packed blocks
-    * give 65536). Exact bit_count(xor) ≤ maxDist verifies BEFORE the
-    * pair-dedup shuffle, so only true near-pairs are shuffled. */
-  def simHashPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxDist: Int = 3, chunks: Int = 4): DataFrame = {
-    // Pigeonhole: maxDist differing bits can touch at most maxDist
-    // chunks, so an untouched combination exists only if
-    // maxDist < chunks. Anything looser silently drops pairs whose
-    // diff bits spread across every chunk.
-    require(maxDist < chunks,
-      s"simHashPairs recall guarantee needs maxDist < chunks " +
-        s"(got maxDist=$maxDist, chunks=$chunks)")
-    require(64 % chunks == 0, s"chunks must divide 64 (got $chunks)")
-    val width = 64 / chunks
-    def block(c: Int): Column =
-      shiftright(col("_fp"), c * width).bitwiseAND(lit((1L << width) - 1))
-    // All combinations of chunks−maxDist blocks, each packed into a
-    // single long (total width (chunks−maxDist)·width ≤ 64 bits). For
-    // maxDist = chunks−1 this degenerates to classic one-block-per-band.
-    val combos = (0 until chunks).combinations(chunks - maxDist).toSeq
-    val bands = combos.zipWithIndex.map { case (combo, i) =>
-      val packed = combo.map(block).reduce((acc, b) =>
-        shiftleft(acc, width).bitwiseOR(b))
-      struct(lit(i).as("no"), packed.as("v"))
-    }
-    val base = docs.select(col(idCol).as("_id"),
-        simHash64(col(textCol)).as("_fp"))
-      .withColumn("_band", explode(array(bands: _*)))
-      .select(col("_id"), col("_fp"),
-        col("_band.no").as("_cno"), col("_band.v").as("_cv"))
-    val a = base.select(col("_id").as("doc_a"), col("_fp").as("_fpa"),
-      col("_cno"), col("_cv"))
-    val b = base.select(col("_id").as("doc_b"), col("_fp").as("_fpb"),
-      col("_cno"), col("_cv"))
-    a.join(b, Seq("_cno", "_cv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("_fpa").bitwiseXOR(col("_fpb"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .dropDuplicates("doc_a", "doc_b")
-  }
-
-  /** [[simHashPairs]] with the ENGINE-PORTABLE hash chain: distinct
+  /** SimHash near-pairs with the ENGINE-PORTABLE hash chain: distinct
     * whitespace tokens → rolling polynomial hash → [[graft.functions.SimHashPoly]]
     * majority-vote fingerprint from the public seeded (a_j, b_j)
     * reshuffles. Every arithmetic step replays in ANSI SQL, so the
     * whole hamming-pair surface — fingerprints, distances, the pair
-    * set — carries a brute-force DuckDB oracle (q137); the xxhash64
-    * variant (q24) can only be checked rows-only. The oracle need not
+    * set — carries a brute-force DuckDB oracle (q137). The oracle need not
     * replay the banding: pigeonhole banding has EXACT recall for
     * hamming ≤ maxDist, so banded pairs ≡ brute-force pairs, and the
     * oracle equivalence doubles as a recall proof of the banding
     * itself.
     *
-    * Same pigeonhole block-combination banding as [[simHashPairs]]
-    * (Manku et al., WWW'07), parameterized to the nBits-wide portable
-    * fingerprint: a pair within distance d shares at least chunks−d
+    * Pigeonhole block-combination banding (Manku et al., WWW'07),
+    * parameterized to the nBits-wide portable fingerprint: a pair within distance d shares at least chunks−d
     * untouched blocks, so it collides on ≥1 of the C(chunks, chunks−d)
     * packed block combinations. Shuffle = doc×combos slim rows; exact
     * bit_count(xor) verifies before the pair-dedup shuffle. */

@@ -157,7 +157,7 @@ object Similarity {
     // ride through the pair join/dedup shuffle — with b buckets per
     // band the join emits O(n²/b) rows per band, and at 64 floats per
     // side that is a multi-GB shuffle the 16-byte id-pair rows avoid
-    // (same discipline as Dedup.minHashLshPairs)
+    // (same discipline as Dedup.minHashLshPairsPortable)
     val banded = n.withColumn("_bb", explode(bands))
       .select(col("_id"),
         col("_bb.band").as("_band"), col("_bb.bucket").as("_bucket"))

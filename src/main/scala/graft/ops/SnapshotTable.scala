@@ -33,15 +33,19 @@ import org.apache.spark.sql.types._
   *                                           on every write's output)
   *     base=<ver-1>                        DELTA manifest: entries are
   *     drop=<path>                           base minus drops plus the
-  *     entry=v=<writerVer>/<partKey>         entry= lines (full
+  *     entry=v=<n>-<tok>/<partKey>         entry= lines (full
   *     stat=<i> <k> <minEnc> <maxEnc>        manifests re-emitted every
   *     fstat=<i> <file> <k> <mn> <mx>        ManifestCheckpointEvery)
   *     dv=<i> <dvPathEnc>                  per-entry sidecar refs
   *     rows=<i> <n>                        exact per-entry row counts
   *                                           (metadata-only count(*))
-  *   dir/data/v=<writerVer>/<partKey>/part-*.parquet
-  *   dir/data/v=<writerVer>/_dv/part-*.parquet   deleted-key sidecars
+  *   dir/data/v=<n>-<tok>/<partKey>/part-*.parquet
+  *   dir/data/v=<n>-<tok>/_dv/part-*.parquet   deleted-key sidecars
   * }}}
+  * `v=<n>-<tok>` is the staging dir of the attempt that committed
+  * version `<n>` (the token is fresh per attempt, [[stagingDir]]);
+  * tables written before every attempt carried a token name their
+  * dirs `v=<n>` and read the same — entries are opaque paths.
   * `<partKey>` is `__gp_<col>=<escaped value>[/…]`: the writer
   * duplicates each partition column into a hidden `__gp_` twin and
   * partitions by THAT, so the ORIGINAL columns stay real data columns
@@ -60,7 +64,7 @@ import org.apache.spark.sql.types._
   * MERGE = [[Upsert.merge]] (the reference's deterministic new-wins
   * dedup, gluejob.py:173-205) executed COPY-ON-WRITE at partition
   * granularity: only partitions the delta touches are read and
-  * rewritten into fresh `v=<ver>` dirs (ONE `partitionBy` write job,
+  * rewritten into fresh `v=<n>-<tok>` dirs (ONE `partitionBy` write job,
   * never a per-partition driver loop); untouched partitions carry
   * into the new manifest BY REFERENCE — the manifest indirection that
   * keeps the write cost O(delta + touched partitions), exactly the
@@ -99,17 +103,20 @@ import org.apache.spark.sql.types._
   * so a silent fallback would only ever mask corruption).
   *
   * Concurrency, in three tiers:
-  *  - WITHIN one driver JVM, [[mergeRetrying]]/[[mergeCdcRetrying]]
-  *    are fully safe under concurrency (optimistic, Delta's public
-  *    shape): each attempt stages data under a unique per-attempt dir
-  *    token, the commit's check-rename-readback section is serialized
-  *    per table dir, exactly one writer wins each version, and losers
-  *    rebase — re-resolve the advanced head and recompute; loser
-  *    stagings are unreferenced and [[vacuum]] reclaims them.
-  *  - Plain [[merge]]/[[mergeCdc]]/[[optimize]] keep the single-writer
-  *    discipline of every store in this engine, with a violation made
-  *    LOUD: the commit refuses if `_snap.<ver>` already exists before
-  *    its rename, claims the version with a NO-CLOBBER rename, and
+  *  - Every writer stages its data under a unique per-attempt dir
+  *    (`data/v=<n>-<token>`), so no two attempts ever share a staging
+  *    dir, and the commit's check-rename-readback section is
+  *    serialized per table dir: exactly one writer wins each version.
+  *  - WITHIN one driver JVM, [[merge]], [[mergeCdc]] and
+  *    [[deleteKeys]] are fully safe under concurrency (optimistic,
+  *    Delta's public shape): a loser re-commits its staging when the
+  *    winner's change is partition-disjoint, and otherwise rebases —
+  *    re-resolves the advanced head and recomputes; loser stagings are
+  *    unreferenced and [[vacuum]] reclaims them. The maintenance
+  *    rewrites ([[optimize]], [[repartitionTable]], [[renameColumn]])
+  *    keep the single-writer discipline with a violation made LOUD:
+  *    the commit refuses if `_snap.<ver>` already exists before its
+  *    rename, claims the version with a NO-CLOBBER rename, and
   *    re-reads the manifest after the rename requiring its own bytes.
   *  - Across PROCESSES the version CLAIM is the filesystem's own:
   *    the commit renames through [[org.apache.hadoop.fs.FileContext]]
@@ -119,7 +126,7 @@ import org.apache.spark.sql.types._
   *    contract Delta's HDFS LogStore publishes), check-then-rename on
   *    the local filesystem (the window shrinks to the syscall gap).
   *    A cross-process loser surfaces as the same retryable conflict
-  *    the in-JVM monitor raises, so [[mergeRetrying]] rebases across
+  *    the in-JVM monitor raises, so [[merge]] rebases across
   *    processes too. The post-rename read-back stays as
   *    defense-in-depth for stores whose rename can still clobber
   *    (raw object stores without a rename primitive) — only THERE is
@@ -200,7 +207,7 @@ object SnapshotTable {
     * driver (the engine's real concurrency shape —
     * pooled landing threads, foreachBatch callbacks) racing
     * the same version get exactly one winner and one loud loser; the
-    * loser's [[mergeRetrying]] rebase then lands on the next version.
+    * loser's [[merge]] rebase then lands on the next version.
     * Cross-PROCESS writers stay best-effort detection, as documented
     * on the object. The map grows one Object per table dir touched by
     * this JVM — bounded by the tables a driver writes, not by data. */
@@ -446,12 +453,12 @@ object SnapshotTable {
     * the same retryable conflict the in-JVM monitor does (and sweeps
     * our staging); any OTHER rename failure (permissions, quota, fs
     * fault) propagates as the IOException it is — retrying a
-    * persistent failure would recompute the full merge `maxAttempts`
-    * times and then blame a writer that never existed. Package-
-    * private so the spec can drive the exact cross-client
-    * interleaving (two writers past the exists check, both staged,
-    * both renaming) that the in-JVM monitor makes unreachable
-    * through merge(). */
+    * persistent failure would recompute the full merge
+    * [[MaxCommitAttempts]] times and then blame a writer that never
+    * existed. Package-private so the spec can drive the exact
+    * cross-client interleaving (two writers past the exists check,
+    * both staged, both renaming) that the in-JVM monitor makes
+    * unreachable through merge(). */
   private[graft] def claimVersion(spark: SparkSession, tmp: Path,
       dst: Path): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1294,7 +1301,7 @@ object SnapshotTable {
     val stamped = changeFeedRange(spark, dir, key, from, to)
     val dest = new Path(out, s"changes_v${from}_v$to")
     if (fs.exists(dest)) return // replayed
-    // per-ATTEMPT staging name (the mergeRetrying dir-token
+    // per-ATTEMPT staging name (the snapshot writers' dir-token
     // discipline): two racing publishers of the same range stage into
     // disjoint dirs, so neither can half-overwrite the other's files;
     // the rename is the single contention point
@@ -1621,7 +1628,8 @@ object SnapshotTable {
   /** Shared write+commit tail of every rewriting writer — [[merge]],
     * [[mergeCdc]], [[optimizeWhere]], [[repartitionTable]] and
     * [[renameColumn]]: lay the output's partitions down with
-    * hot-partition salting and commit `kept ++ produced`.
+    * hot-partition salting and commit `kept ++ produced` as version
+    * `head.ver + 1`.
     * `statsCols` is the INTENT — the columns whose bounds the entries
     * should describe, MERGE KEY FIRST (the salt hash and the null
     * census ride the head of the list), plus any caller-requested
@@ -1632,10 +1640,10 @@ object SnapshotTable {
     * commits `kept` alone (a merge whose every touched row was
     * deleted).
     *
-    * Every writer takes the same steps: claim the staging with the
-    * in-flight marker, empty `dest`, write, list the leaf dirs the
-    * write produced, harvest their footers, census, commit. The entry
-    * list, row counts, per-column entry/file bounds and the null-key
+    * Every writer takes the same steps: claim a fresh staging dir
+    * (`v=<n>-<token>`) with the in-flight marker, write, list the leaf
+    * dirs the write produced, harvest their footers, census, commit.
+    * The entry list, row counts, per-column entry/file bounds and the null-key
     * census all derive from the WRITTEN FILES' parquet footers, so
     * manifest ≡ written bytes by construction and the output plan is
     * computed once, by the write job. `estParts` names every
@@ -1647,17 +1655,16 @@ object SnapshotTable {
     * files. A null-key or CHECK violation refuses after the staged
     * write but before the version claim: the version stays unburned,
     * content is untouched, and the staging is unreferenced garbage
-    * the sweeps reclaim. */
+    * the sweeps reclaim. A lost claim on main raises a [[LostClaim]]
+    * carrying what a re-commit of the staging needs; only
+    * [[retrying]] acts on it, so for the maintenance rewrites a
+    * conflict stays a loud refusal. */
   private def writeAndCommit(spark: SparkSession, dir: String,
       output: DataFrame, statsCols: Seq[String], partCols: Seq[String],
-      newVer: Long, batchId: Option[Long], kept: Seq[Entry],
-      schemaDdl: String,
-      maxRowsPerTask: Long, dirToken: Option[String],
-      estParts: Seq[(Row, Long)],
+      batchId: Option[Long], kept: Seq[Entry], schemaDdl: String,
+      maxRowsPerTask: Long, estParts: Seq[(Row, Long)], head: Snap,
       clusterKey: Option[Column] = None,
-      head: Option[Snap] = None,
       ref: Option[String] = None): Long = {
-    val headDvKey = head.flatMap(_.dvKey)
     // salt column: the merge key when present, else any non-partition
     // column
     val saltCol = statsCols.headOption.orElse(
@@ -1676,35 +1683,16 @@ object SnapshotTable {
       stats = e.stats.filter { case (c, _) => newSet.contains(c) },
       fileStats = e.fileStats.map(f => f.copy(
         bounds = f.bounds.filter { case (c, _) => newSet.contains(c) }))))
-    val checkList = head.map(_.checks).getOrElse(Map.empty)
-      .toSeq.sortBy(_._1)
-    // the data dir carries the attempt token when one is supplied
-    // (the retrying writers): two optimistic racers at the same
-    // version then stage into DISJOINT dirs — without it, the loser's
-    // mode(overwrite) write could clobber the winner's committed data
-    // BEFORE either commit resolves the race. Entries are opaque
-    // paths, so readers/vacuum/retention are name-agnostic.
-    val verDir = dirToken.fold(s"v=$newVer")(t => s"v=$newVer-$t")
+    val checkList = head.checks.toSeq.sortBy(_._1)
+    val verDir = stagingDir(head.ver + 1)
     val dest = s"$dir/data/$verDir"
     val statTyped = newStatsCols.map(c => c -> output.schema(c).dataType)
-    // IN-FLIGHT MARKER (the store-portable staleness signal): a tiny
-    // `_inflight.<verDir>` file claims the staged tree for the
-    // duration of the write+commit, so retention/vacuum sweeps spare
-    // it by NAME — no directory-mtime reasoning, which S3-class
-    // stores synthesize. Removed in the finally whatever the outcome
-    // (committed → referenced; refused/abandoned → sweepable
-    // garbage); a crashed writer's marker ages out under the sweeps'
-    // grace window (marker FILE mtimes are real on every store).
     val fsD = fsOf(spark, dir)
-    val marker = new Path(dir, s"_inflight.$verDir")
-    try {
-      fsD.create(marker, true).close()
+    withInflight(spark, dir, verDir) {
       // EMPTY STAGING: the listing below commits every leaf dir it
       // finds, so `dest` must hold this write's output and nothing
-      // else. A refused or crashed attempt at the same untokened
-      // v=<n> leaves partition dirs behind, and an overwrite under
-      // partitionOverwriteMode=dynamic replaces only the partitions it
-      // writes — the rest would be committed as live data
+      // else. The token makes the dir fresh; the delete keeps the
+      // listing exact even if a dir of that name were ever left behind
       fsD.delete(new Path(dest), true)
       writePartitioned(output, partCols, dest,
         xxhash64(col(key)), estParts, maxRowsPerTask, clusterKey)
@@ -1768,49 +1756,70 @@ object SnapshotTable {
       // column tombstones (dropColumn's resurrect hazard) carry until
       // a FULL rewrite (kept empty = every surviving row rewrote under
       // the pinned schema) purges the dropped columns' physical bytes
-      val tombstones =
-        if (kept.isEmpty) Nil
-        else head.map(_.droppedCols).getOrElse(Nil)
+      val tombstones = if (kept.isEmpty) Nil else head.droppedCols
       onBeforeCommit() // test seam — no-op in production
       try {
-        commitManifest(spark, dir, newVer, batchId, allEntries,
+        commitManifest(spark, dir, head.ver + 1, batchId, allEntries,
           schemaDdl, partCols, newStatsCols,
-          headDvKey.filter(_ => allEntries.exists(_.dvs.nonEmpty)),
-          base = head, checks = checkList.toMap,
+          head.dvKey.filter(_ => allEntries.exists(_.dvs.nonEmpty)),
+          base = Some(head), checks = checkList.toMap,
           droppedCols = tombstones, ref = ref)
-        newVer
+        head.ver + 1
       } catch {
-        // DISJOINT-WRITER CONFLICT RESOLUTION (Delta's public
-        // conflict-detection shape): a lost claim does not always mean
-        // the computed merge is stale — when the winner's changed
-        // entries are partition-disjoint from this commit's read+write
-        // set (and table metadata didn't move), the already-written
-        // staging is EXACTLY what a rebase would recompute, so
-        // re-commit it at the next version instead of paying the full
-        // O(delta + touched) merge again. N same-table writers then
-        // cost N merge computations, not N²/2. Only optimistic writers
-        // (dirToken present — their stagings are race-safe by
-        // construction) take the fast path; a genuine overlap or
-        // metadata change rethrows and the retry loop rebases.
+        // a lost claim reports the partitions this commit read or
+        // wrote, for [[fastRecommit]]. On a branch the re-commit would
+        // need ref-aware chain inspection — branch contention is the
+        // single-audit-writer exception, so a branch loser takes the
+        // honest full rebase instead
         case e: IllegalArgumentException
-            if isCommitConflict(e) && dirToken.isDefined &&
-              head.isDefined && ref.isEmpty =>
-          // ref.isEmpty: the fast path re-resolves the WINNER's commit,
-          // which on a branch would need ref-aware chain inspection —
-          // branch contention is the single-audit-writer exception, so
-          // a branch loser takes the honest full rebase instead
+            if isCommitConflict(e) && ref.isEmpty =>
           val keptSet = kept.map(_.path).toSet
           val ourKeys = produced.map(e => partKeyOfEntry(e.path)).toSet ++
-            head.get.entries.filterNot(en => keptSet.contains(en.path))
+            head.entries.filterNot(en => keptSet.contains(en.path))
               .map(en => partKeyOfEntry(en.path))
-          fastRecommit(spark, dir, head.get, produced, ourKeys, batchId,
-            schemaDdl, partCols, newStatsCols, checkList.toMap, e)
+          throw new LostClaim(e, head, verDir, produced, ourKeys, batchId,
+            schemaDdl, partCols, newStatsCols)
       }
-    } finally {
-      try fsD.delete(marker, false)
+    }
+  }
+
+  /** IN-FLIGHT MARKER (the store-portable staleness signal): a tiny
+    * `_inflight.<verDir>` file claims the staged tree `data/<verDir>`
+    * while `body` runs, so retention/vacuum sweeps spare it by NAME —
+    * no directory-mtime reasoning, which S3-class stores synthesize.
+    * Removed whatever the outcome (committed → referenced; refused or
+    * abandoned → sweepable garbage); a crashed writer's marker ages
+    * out under the sweeps' grace window (marker FILE mtimes are real
+    * on every store). */
+  private def withInflight[T](spark: SparkSession, dir: String,
+      verDir: String)(body: => T): T = {
+    val fs = fsOf(spark, dir)
+    val marker = new Path(dir, s"_inflight.$verDir")
+    fs.create(marker, true).close()
+    try body
+    finally {
+      try fs.delete(marker, false)
       catch { case scala.util.control.NonFatal(_) => } // ages out
     }
   }
+
+  /** A fresh staging dir name for version `ver`: `v=<ver>-<token>`,
+    * unique per attempt, so no two attempts — racers at one version,
+    * a branch and main at overlapping numbers, a dropped-then-recreated
+    * branch — ever write into the same dir. Entries are opaque paths,
+    * so readers, vacuum and retention are name-agnostic. */
+  private def stagingDir(ver: Long): String =
+    s"v=$ver-" + java.lang.Long.toHexString(
+      java.util.concurrent.ThreadLocalRandom.current().nextLong())
+
+  /** The version an entry's writer staged for —
+    * `v=3-ab12/__gp_p=1` → 3 (and `v=3/__gp_p=1` → 3, the untokened
+    * name tables written before every staging carried a token use).
+    * It is the version that first committed the entry, unless a
+    * [[fastRecommit]] landed that staging at a later one. */
+  private[graft] def versionOf(entryPath: String): Long =
+    entryPath.stripPrefix("v=").takeWhile(c => c != '-' && c != '/')
+      .toLong
 
   /** Test seam: runs immediately before the FIRST commit attempt of
     * every [[writeAndCommit]] — the only way a spec can
@@ -1824,8 +1833,8 @@ object SnapshotTable {
   private def partKeyOfEntry(p: String): String =
     p.substring(p.indexOf('/') + 1)
 
-  /** Re-commit an optimistic loser's already-written staging on top
-    * of the advanced head — legal exactly when (a) table METADATA is
+  /** Re-commit a [[LostClaim]]'s already-written staging on top of the
+    * advanced head — legal exactly when (a) table METADATA is
     * unmoved between the loser's base and the current head (schema,
     * partitioning, checks, tombstones: the loser's output was
     * censused against its base's contract), and (b) the
@@ -1835,59 +1844,62 @@ object SnapshotTable {
     * nor touched any row the loser's merge read or writes, so the
     * serial order "winner then loser" yields byte-identical content
     * to the loser's staging. Entry-level evidence is free: the delta
-    * manifests record exactly the per-commit changed set. Anything
-    * else rethrows `orig` and the caller's retry loop rebases (the
+    * manifests record exactly the per-commit changed set. N same-table
+    * disjoint writers then cost N merge computations, not N²/2.
+    * Anything else returns None and [[retrying]] rebases (the
     * always-correct slow path). A dv attached to a loser partition, a
     * new CHECK, a schema move — all surface as changed entries or
-    * metadata drift and refuse the fast path. */
-  private def fastRecommit(spark: SparkSession, dir: String, base: Snap,
-      produced: Seq[Entry], ourKeys: Set[String], batchId: Option[Long],
-      schemaDdl: String, partCols: Seq[String], newStatsCols: Seq[String],
-      expectedChecks: Map[String, String],
-      orig: IllegalArgumentException): Long = {
+    * metadata drift and refuse the fast path, as does a staging a
+    * sweep removed after the lost claim. */
+  private def fastRecommit(spark: SparkSession, dir: String,
+      lost: LostClaim): Option[Long] = {
+    val base = lost.base
+    val fs = fsOf(spark, dir)
+    if (!lost.produced.forall(e =>
+        fs.exists(new Path(s"$dir/data/${e.path}")))) return None
     var attempts = 0
     while (attempts < 16) {
       attempts += 1
       val cur = resolve(spark, dir)
       // the racer was a replay of our own batch — the no-op contract
-      if (batchId.isDefined && cur.batchId == batchId) return cur.ver
+      if (lost.batchId.isDefined && cur.batchId == lost.batchId)
+        return Some(cur.ver)
       val metaOk = cur.schemaDdl == base.schemaDdl &&
-        cur.partCols == base.partCols && cur.partCols == partCols &&
-        cur.checks == expectedChecks &&
-        cur.droppedCols == base.droppedCols
-      if (!metaOk) throw orig
+        cur.partCols == base.partCols && cur.partCols == lost.partCols &&
+        cur.checks == base.checks && cur.droppedCols == base.droppedCols
+      if (!metaOk) return None
       val baseBy = base.entries.map(e => e.path -> e).toMap
       val curBy = cur.entries.map(e => e.path -> e).toMap
       val changedKeys =
         (base.entries.filterNot(e => curBy.get(e.path).contains(e)) ++
           cur.entries.filterNot(e => baseBy.get(e.path).contains(e)))
           .map(e => partKeyOfEntry(e.path)).toSet
-      if (changedKeys.intersect(ourKeys).nonEmpty) throw orig
+      if (changedKeys.intersect(lost.ourKeys).nonEmpty) return None
       // per-column stats carry for the NEW kept set, exactly as the
       // first attempt adjusted its own
-      val newSet = newStatsCols.toSet
+      val newSet = lost.statsCols.toSet
       val keptNew = cur.entries
-        .filterNot(e => ourKeys.contains(partKeyOfEntry(e.path)))
+        .filterNot(e => lost.ourKeys.contains(partKeyOfEntry(e.path)))
         .map(e => e.copy(
           stats = e.stats.filter { case (c, _) => newSet.contains(c) },
           fileStats = e.fileStats.map(f => f.copy(
             bounds = f.bounds.filter { case (c, _) =>
               newSet.contains(c) }))))
-      val all = keptNew ++ produced
+      val all = keptNew ++ lost.produced
       val tomb = if (keptNew.isEmpty) Nil else cur.droppedCols
       try {
-        commitManifest(spark, dir, cur.ver + 1, batchId, all, schemaDdl,
-          partCols, newStatsCols,
+        commitManifest(spark, dir, cur.ver + 1, lost.batchId, all,
+          lost.schemaDdl, lost.partCols, lost.statsCols,
           cur.dvKey.filter(_ => all.exists(_.dvs.nonEmpty)),
           base = Some(cur), checks = cur.checks, droppedCols = tomb)
-        return cur.ver + 1
+        return Some(cur.ver + 1)
       } catch {
         // ANOTHER racer landed while we re-committed: loop — each
         // pass is manifest I/O only, never a merge recompute
         case e2: IllegalArgumentException if isCommitConflict(e2) =>
       }
     }
-    throw orig
+    None
   }
 
   /** Head resolution + the shared merge preamble: replay check,
@@ -2053,25 +2065,42 @@ object SnapshotTable {
     * per-column bounds — so [[readRange]] prunes on any of them.
     * `branch` stages the commit on a [[createBranch writable branch]]
     * instead of main (the write-audit-publish workflow) — same
-    * semantics, invisible to main's readers until [[fastForward]]. */
+    * semantics, invisible to main's readers until [[fastForward]].
+    *
+    * OPTIMISTIC CONCURRENCY ([[retrying]]) — safe for threads of one
+    * driver (foreachBatch callbacks, pooled landing threads targeting
+    * a shared table): each attempt stages under a unique dir token (so
+    * racers never touch each other's files), the commit's
+    * check-rename-readback is serialized per table dir within the JVM
+    * (exactly one winner per version), and a losing attempt either
+    * re-commits its staging (the winner's change was partition-
+    * disjoint) or REBASES — re-resolves the advanced head, recomputes
+    * the new-wins merge over it, and commits the next version. Merge
+    * is deterministic given (head, delta), so the outcome is the
+    * serial order the commits actually took. Loser attempts' staged
+    * dirs are unreferenced by construction — [[vacuum]] reclaims
+    * them. A retry that finds its own batchId at the head (the racer
+    * was a replay of the same batch) no-ops. Refusals that retrying
+    * cannot fix (schema evolution, partitioning, null partition
+    * values) propagate immediately. */
   def merge(spark: SparkSession, dir: String, delta: DataFrame,
       key: String, tieBreak: String, partCols: Seq[String],
       batchId: Option[Long] = None,
       maxRowsPerTask: Long = DefaultMaxRowsPerTask,
-      dirToken: Option[String] = None,
       statsCols: Seq[String] = Nil,
       branch: Option[String] = None,
       touchedCounts: Option[Seq[Row]] = None): Long = {
     requirePathSafe(delta, partCols)
-    // branch writes ALWAYS stage under a unique per-commit token: the
-    // branch's version counter overlaps main's (both append above the
-    // fork), so an untokened `v=<n>` staging dir could collide with —
-    // and mode(overwrite) clobber — a main commit's at the same
-    // number; and a dropped-then-recreated branch must never reuse a
-    // dir name an already-published manifest still references
-    val token = branch.fold(dirToken)(_ => Some(
-      s"b${java.lang.Long.toHexString(System.nanoTime())}" +
-        dirToken.fold("")(t => s"-$t")))
+    retrying(spark, dir)(mergeOnce(spark, dir, delta, key, tieBreak,
+      partCols, batchId, maxRowsPerTask, statsCols, branch, touchedCounts))
+  }
+
+  /** One [[merge]] attempt, against the head it resolves. */
+  private def mergeOnce(spark: SparkSession, dir: String,
+      delta: DataFrame, key: String, tieBreak: String,
+      partCols: Seq[String], batchId: Option[Long], maxRowsPerTask: Long,
+      statsCols: Seq[String], branch: Option[String],
+      touchedCounts: Option[Seq[Row]]): Long = {
     val (head, newSchema) =
       mergePreamble(spark, dir, delta.schema, partCols, batchId,
         branch) match {
@@ -2104,56 +2133,17 @@ object SnapshotTable {
     val existingC = conformTo(existingTouched, newSchema)
     val merged = Upsert.merge(deltaC, existingC, key, tieBreak)
     writeAndCommit(spark, dir, merged, (key +: statsCols).distinct,
-      partCols, head.ver + 1, batchId, kept, newSchema.toDDL,
-      maxRowsPerTask, token, est, head = Some(head), ref = branch)
+      partCols, batchId, kept, newSchema.toDDL, maxRowsPerTask, est,
+      head, ref = branch)
   }
-
-  /** [[merge]] with OPTIMISTIC CONCURRENCY — the multi-writer-safe
-    * entry point for threads of one driver (foreachBatch callbacks,
-    * pooled landing threads targeting a shared table): each
-    * attempt stages its data under a unique per-attempt dir token (so
-    * racers never touch each other's files), the commit's
-    * check-rename-readback is serialized per table dir within the
-    * JVM (exactly one winner per version), and a losing attempt
-    * REBASES — re-resolves the advanced head, recomputes the new-wins
-    * merge over it, and commits the next version. Merge is
-    * deterministic given (head, delta), so the rebase is equivalent
-    * to having run after the winner: the outcome is the serial order
-    * the commits actually took. Loser attempts' staged dirs are
-    * unreferenced by construction — [[vacuum]] reclaims them. Replay
-    * stays idempotent: a retry that finds its own batchId at the
-    * head (the racer was a replay of the same batch) no-ops. Refusals
-    * that retrying cannot fix (schema evolution, partitioning,
-    * null partition values) propagate immediately. */
-  def mergeRetrying(spark: SparkSession, dir: String, delta: DataFrame,
-      key: String, tieBreak: String, partCols: Seq[String],
-      batchId: Option[Long] = None,
-      maxRowsPerTask: Long = DefaultMaxRowsPerTask,
-      maxAttempts: Int = 8, statsCols: Seq[String] = Nil,
-      branch: Option[String] = None): Long =
-    retrying(spark, dir, maxAttempts)(token =>
-      merge(spark, dir, delta, key, tieBreak, partCols, batchId,
-        maxRowsPerTask, Some(token), statsCols, branch))
-
-  /** [[mergeCdc]] with the same optimistic-concurrency loop as
-    * [[mergeRetrying]]. */
-  def mergeCdcRetrying(spark: SparkSession, dir: String,
-      delta: DataFrame, key: String, seqCols: Seq[String], opCol: String,
-      partCols: Seq[String], batchId: Option[Long] = None,
-      maxRowsPerTask: Long = DefaultMaxRowsPerTask,
-      maxAttempts: Int = 8, statsCols: Seq[String] = Nil,
-      branch: Option[String] = None): Long =
-    retrying(spark, dir, maxAttempts)(token =>
-      mergeCdc(spark, dir, delta, key, seqCols, opCol, partCols,
-        batchId, maxRowsPerTask, Some(token), statsCols, branch))
 
   /** MERGE-ON-READ point deletes — deletion vectors, the public
     * Delta-DV / Iceberg-equality-delete shape rebuilt on the
     * manifest: a delete commits ONE parquet sidecar of deleted keys
-    * (`data/v=<n>/_dv`) plus a manifest whose affected entries gain a
-    * `dv=` reference; NO data partition is rewritten, so the delete
-    * costs O(delete keys) however many partitions — and however many
-    * BYTES — the keys touch, where [[mergeCdc]]'s tombstones pay a
+    * (`data/v=<n>-<token>/_dv`) plus a manifest whose affected entries
+    * gain a `dv=` reference; NO data partition is rewritten, so the
+    * delete costs O(delete keys) however many partitions — and however
+    * many BYTES — the keys touch, where [[mergeCdc]]'s tombstones pay a
     * full rewrite of every touched partition. Reads anti-join the
     * sidecar per referencing entry ([[readSnap]]); [[optimize]] and
     * any merge that rewrites a referencing partition FOLD the
@@ -2176,11 +2166,17 @@ object SnapshotTable {
     * dir's true bounds). Time travel below the delete reads the
     * pre-delete rows — the sidecar is referenced only from the new
     * manifest. Replay-idempotent via `batchId` like every commit
-    * here. Returns the committed version (the head's when the delete
-    * set misses every entry — nothing changed, nothing committed). */
+    * here, and optimistic like [[merge]]: a losing delete re-resolves
+    * the advanced head and re-attaches to its entries. Returns the
+    * committed version (the head's when the delete set misses every
+    * entry — nothing changed, nothing committed). */
   def deleteKeys(spark: SparkSession, dir: String, delKeys: DataFrame,
-      key: String, batchId: Option[Long] = None,
-      dirToken: Option[String] = None): Long = {
+      key: String, batchId: Option[Long] = None): Long =
+    retrying(spark, dir)(deleteKeysOnce(spark, dir, delKeys, key, batchId))
+
+  /** One [[deleteKeys]] attempt, against the head it resolves. */
+  private def deleteKeysOnce(spark: SparkSession, dir: String,
+      delKeys: DataFrame, key: String, batchId: Option[Long]): Long = {
     val head = resolve(spark, dir)
     if (batchId.isDefined && head.batchId == batchId) return head.ver
     val schema = StructType.fromDDL(head.schemaDdl)
@@ -2215,15 +2211,9 @@ object SnapshotTable {
       else (None, None)
     val targets = pruneByKey(head, key, lo, hi).entryPaths.toSet
     if (targets.isEmpty) return head.ver // provably misses every entry
-    val verDir = dirToken.fold(s"v=${head.ver + 1}")(
-      t => s"v=${head.ver + 1}-$t")
+    val verDir = stagingDir(head.ver + 1)
     val dvPath = s"$verDir/_dv"
-    // in-flight marker around the sidecar write + commit, exactly as
-    // writeAndCommit's (the sweeps spare the staged tree by name)
-    val fsD = fsOf(spark, dir)
-    val marker = new Path(dir, s"_inflight.$verDir")
-    fsD.create(marker, true).close()
-    try {
+    withInflight(spark, dir, verDir) {
       // a small delete set lands as one file (no 32-way spray for a
       // handful of keys); a bulk erasure keeps its parallelism
       (if (prof.getLong(0) <= DefaultMaxRowsPerTask) keys.coalesce(1)
@@ -2237,20 +2227,8 @@ object SnapshotTable {
         base = Some(head), checks = head.checks,
         droppedCols = head.droppedCols)
       head.ver + 1
-    } finally {
-      try fsD.delete(marker, false)
-      catch { case scala.util.control.NonFatal(_) => } // ages out
     }
   }
-
-  /** [[deleteKeys]] with the same optimistic-concurrency loop as
-    * [[mergeRetrying]] — a losing delete re-resolves the advanced
-    * head and re-attaches to its entries. */
-  def deleteKeysRetrying(spark: SparkSession, dir: String,
-      delKeys: DataFrame, key: String, batchId: Option[Long] = None,
-      maxAttempts: Int = 8): Long =
-    retrying(spark, dir, maxAttempts)(token =>
-      deleteKeys(spark, dir, delKeys, key, batchId, Some(token)))
 
   /** NAMED TAG (Iceberg's refs): pin a version under a stable name —
     * `_tag.<name>` holds the version number, claimed CREATE-EXCLUSIVE
@@ -2619,16 +2597,36 @@ object SnapshotTable {
     }
   }
 
-  private def retrying(spark: SparkSession, dir: String,
-      maxAttempts: Int)(attempt: String => Long): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
+  /** A lost version claim of a rewriting writer, carrying what a
+    * re-commit of its already-written staging needs ([[fastRecommit]]):
+    * the head it was computed against, its staging dir, the entries it
+    * produced, and the partition keys it read or wrote. Only
+    * [[retrying]] acts on it; to every other caller it is the conflict
+    * it wraps (same message). */
+  private final class LostClaim(orig: IllegalArgumentException,
+      val base: Snap, val verDir: String, val produced: Seq[Entry],
+      val ourKeys: Set[String], val batchId: Option[Long],
+      val schemaDdl: String, val partCols: Seq[String],
+      val statsCols: Seq[String])
+      extends IllegalArgumentException(orig.getMessage, orig)
+
+  /** Attempts a [[retrying]] commit makes before its conflict
+    * propagates: the first plus up to seven rebases. */
+  private val MaxCommitAttempts = 8
+
+  /** The ONE commit protocol of [[merge]], [[mergeCdc]] and
+    * [[deleteKeys]]: run `attempt`; when it loses its version claim,
+    * re-commit its staging over the winner where [[fastRecommit]]
+    * allows, else REBASE — run `attempt` again against the advanced
+    * head — up to [[MaxCommitAttempts]] in all. Every attempt stages
+    * under a fresh dir token ([[stagingDir]]). */
+  private def retrying(spark: SparkSession, dir: String)(
+      attempt: => Long): Long = {
     var n = 0
     while (true) {
       n += 1
-      val token = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
       try {
-        if (n == 1) return attempt(token)
+        if (n == 1) return attempt
         // REBASE attempts serialize per table dir WITHIN this JVM
         // (the same monitor the commit section already uses, held for
         // the whole recompute): N same-JVM losers racing the same
@@ -2646,10 +2644,16 @@ object SnapshotTable {
         // they were about to pay anyway.
         val lock = commitLocks.computeIfAbsent(lockKey(spark, dir),
           _ => new Object)
-        lock.synchronized { return attempt(token) }
+        lock.synchronized { return attempt }
       } catch {
+        case lost: LostClaim =>
+          // the staging is re-marked in flight for the re-commit
+          val v = withInflight(spark, dir, lost.verDir)(
+            fastRecommit(spark, dir, lost))
+          if (v.isDefined) return v.get
+          if (n >= MaxCommitAttempts) throw lost
         case e: IllegalArgumentException
-            if isCommitConflict(e) && n < maxAttempts => // rebase + retry
+            if isCommitConflict(e) && n < MaxCommitAttempts => // rebase
       }
     }
     -1L // unreachable
@@ -2675,12 +2679,12 @@ object SnapshotTable {
     * drops those partitions (and an empty table refuses on read, like
     * every empty snapshot). `branch` stages the CDC commit on a
     * [[createBranch writable branch]] — a change feed is exactly what
-    * an audit pipeline wants quarantined until the gate passes. */
+    * an audit pipeline wants quarantined until the gate passes.
+    * Concurrent writers resolve exactly as [[merge]]'s do. */
   def mergeCdc(spark: SparkSession, dir: String, delta: DataFrame,
       key: String, seqCols: Seq[String], opCol: String,
       partCols: Seq[String], batchId: Option[Long] = None,
       maxRowsPerTask: Long = DefaultMaxRowsPerTask,
-      dirToken: Option[String] = None,
       statsCols: Seq[String] = Nil,
       branch: Option[String] = None): Long = {
     require(seqCols.nonEmpty, "seqCols must name >= 1 column")
@@ -2689,11 +2693,15 @@ object SnapshotTable {
     require(!(partCols :+ key).contains(opCol),
       s"op column '$opCol' cannot double as key or partition column")
     requirePathSafe(delta, partCols)
-    // same unique-staging rule as merge's branch path (version-number
-    // overlap with main, dropped-and-recreated branch dir reuse)
-    val token = branch.fold(dirToken)(_ => Some(
-      s"b${java.lang.Long.toHexString(System.nanoTime())}" +
-        dirToken.fold("")(t => s"-$t")))
+    retrying(spark, dir)(mergeCdcOnce(spark, dir, delta, key, seqCols,
+      opCol, partCols, batchId, maxRowsPerTask, statsCols, branch))
+  }
+
+  /** One [[mergeCdc]] attempt, against the head it resolves. */
+  private def mergeCdcOnce(spark: SparkSession, dir: String,
+      delta: DataFrame, key: String, seqCols: Seq[String], opCol: String,
+      partCols: Seq[String], batchId: Option[Long], maxRowsPerTask: Long,
+      statsCols: Seq[String], branch: Option[String]): Long = {
     val dataSchema = StructType(
       delta.schema.fields.filterNot(_.name == opCol))
     val (head, newSchema) =
@@ -2772,9 +2780,8 @@ object SnapshotTable {
         .select(dataSchema.fieldNames.map(col).toSeq: _*)
       val survivors = upserts.unionByName(carried)
       writeAndCommit(spark, dir, survivors,
-        (key +: statsCols).distinct, partCols,
-        head.ver + 1, batchId, kept, newSchema.toDDL,
-        maxRowsPerTask, token, est, head = Some(head), ref = branch)
+        (key +: statsCols).distinct, partCols, batchId, kept,
+        newSchema.toDDL, maxRowsPerTask, est, head, ref = branch)
     } finally org.apache.spark.sql.graftbridge.ColumnBridge
       .unpersistLocalCheckpoint(collapsed)
   }
@@ -2878,9 +2885,8 @@ object SnapshotTable {
     val est = targets.map(e => (typedPartRow(df.schema, partCols,
       partitionValues(e)), e.rows.getOrElse(maxRowsPerTask)))
     writeAndCommit(spark, dir, df, head.statsKeys, partCols,
-      head.ver + 1, head.batchId, kept, head.schemaDdl,
-      maxRowsPerTask, dirToken = None, estParts = est,
-      clusterKey = cluster, head = Some(head))
+      head.batchId, kept, head.schemaDdl, maxRowsPerTask, est, head,
+      clusterKey = cluster)
   }
 
   /** A typed partition-values [[Row]] from an entry's unescaped dir
@@ -2935,9 +2941,7 @@ object SnapshotTable {
         (r: Row, r.getLong(newPartCols.size))
       }
     writeAndCommit(spark, dir, df, head.statsKeys, newPartCols,
-      head.ver + 1, head.batchId, Nil, head.schemaDdl,
-      maxRowsPerTask, dirToken = None, estParts = est,
-      head = Some(head))
+      head.batchId, Nil, head.schemaDdl, maxRowsPerTask, est, head)
   }
 
   /** The column names a recorded CHECK expression references —
@@ -3065,8 +3069,7 @@ object SnapshotTable {
         e.rows.getOrElse(maxRowsPerTask))
     }
     writeAndCommit(spark, dir, df, newStatsKeys, newPartCols,
-      head.ver + 1, head.batchId, Nil, newDdl, maxRowsPerTask,
-      dirToken = None, estParts = est, head = Some(head))
+      head.batchId, Nil, newDdl, maxRowsPerTask, est, head)
   }
 
   /** Retention cut: keep the newest `keep` versions' manifests and
@@ -3076,7 +3079,7 @@ object SnapshotTable {
     * retention discipline.
     *
     * IN-FLIGHT protection, two tiers: every writer claims its staged
-    * `v=<n>[-<token>]` tree with an `_inflight.<verDir>` MARKER FILE
+    * `v=<n>-<token>` tree with an `_inflight.<verDir>` MARKER FILE
     * for the duration of its write+commit (removed in its finally) —
     * the sweep spares marked trees by name, which is store-portable
     * (marker-file mtimes are real on every store, where the
@@ -3219,7 +3222,7 @@ object SnapshotTable {
 
   /** VACUUM: reclaim data a crash stranded — a writer that died
     * between its data write and its manifest commit leaves a fully-
-    * written `data/v=<n>/` tree (and possibly a `_snap.<n>.tmp`) that
+    * written `data/v=<n>-<token>/` tree (and possibly a `_snap.<n>.tmp`) that
     * NO manifest references and [[retainNewest]]'s live-reference
     * sweep (which only runs below the retention cut) never touches.
     * Orphanhood is decided at the whole-version granularity — every

@@ -83,8 +83,9 @@ object Ingest {
   /** Extract `raw` once and land it through `sink`: the cut, one
     * counting job, the sink over the cut, the cut released. False (and
     * no sink call) when the delta is empty. */
-  private def land(spark: SparkSession, spec: TableSpec, raw: DataFrame,
-      outRoot: String, sink: Sink, batchId: Option[Long]): Boolean = {
+  private[graft] def land(spark: SparkSession, spec: TableSpec,
+      raw: DataFrame, outRoot: String, sink: Sink,
+      batchId: Option[Long]): Boolean = {
     val partCols = Seq("company", "year", "month")
     val delta = PartitionKeys.withCompanyYearMonth(
         Normalize.toBronze(raw, spec), spec.dateCol)

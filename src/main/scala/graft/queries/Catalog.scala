@@ -10018,7 +10018,7 @@ object Catalog {
       FROM orders WHERE o_orderkey BETWEEN 1000 AND 3000"""))
 
   /** OPTIMISTIC CONCURRENT MERGE on the snapshot table
-    * ([[graft.ops.SnapshotTable.mergeRetrying]] — Delta's public
+    * ([[graft.ops.SnapshotTable.merge]] — Delta's public
     * optimistic-concurrency shape rebuilt on the manifest protocol):
     * FOUR driver threads race key-disjoint order slices into ONE
     * table whose partitions (year/month) all four share, so every
@@ -10031,8 +10031,9 @@ object Catalog {
     * emitted `ver_count` pins the protocol's version discipline:
     * exactly one dense version per racer, retries never burn version
     * numbers. Losing attempts' staged dirs are unreferenced by
-    * construction (per-attempt dir tokens) — reclaim is
-    * [[graft.ops.SnapshotTable.vacuum]]'s job, spec-pinned. */
+    * construction (every attempt stages under its own dir token) —
+    * reclaim is [[graft.ops.SnapshotTable.vacuum]]'s job,
+    * spec-pinned. */
   private val q268 = Q("q268_snapshot_concurrent_merge",
     (s, dir) => {
       val tbl = graft.Scratch.createTempDir("q268tbl").toString + "/t"
@@ -10048,7 +10049,7 @@ object Catalog {
         ExecutionContext.fromExecutor(pool)
       try Await.result(Future.sequence((0 until 4).map { i =>
         Future {
-          graft.ops.SnapshotTable.mergeRetrying(s, tbl,
+          graft.ops.SnapshotTable.merge(s, tbl,
             o.filter(col("o_orderkey") % 4 === i),
             "o_orderkey", "order_date", Seq("year", "month"),
             Some(10L + i))
@@ -10731,7 +10732,8 @@ object Catalog {
       graft.ops.SnapshotTable.merge(s, tbl, delta, "k", "total",
         Seq("bucket"), Some(2L))
       val head = graft.ops.SnapshotTable.resolve(s, tbl)
-      val carried = head.entries.count(_.path.startsWith("v=1/"))
+      val carried = head.entries.count(e =>
+        graft.ops.SnapshotTable.versionOf(e.path) == 1L)
       graft.ops.SnapshotTable.read(s, tbl)
         .select(col("k"), col("st"), col("total"), col("bucket"),
           lit(carried).as("carried"))
@@ -11131,7 +11133,7 @@ object Catalog {
 
   /** STREAMING SINK door ([[graft.sources.SnapshotSink]] — the write
     * half of "one table, every door": `writeStream.format(...)`
-    * lands each microbatch as one `mergeRetrying` commit with the
+    * lands each microbatch as one `merge` commit with the
     * epoch id as the batch id, so re-delivered epochs replay as
     * no-ops — Delta's idempotent txn-write shape on the manifest's
     * `batch=` line): q263's EXACT two-wave landing-drain scenario

@@ -18,12 +18,12 @@ import org.apache.spark.sql.streaming.OutputMode
   *     .option("checkpointLocation", ckpt)
   *     .start()
   * }}}
-  * Each microbatch lands as one [[SnapshotTable.mergeRetrying]]
-  * commit — the same upsert/evolution/stats/CHECK semantics as every
-  * other merge, optimistic-concurrency included (several streams and
-  * batch writers can target one table). With `opCol` + `seqCols`
-  * options, batches apply as CHANGE FEEDS through
-  * [[SnapshotTable.mergeCdcRetrying]] (`'D'` deletes, the CDC rung);
+  * Each microbatch lands as one [[SnapshotTable.merge]] commit — the
+  * same upsert/evolution/stats/CHECK semantics and optimistic
+  * concurrency as every other merge (several streams and batch
+  * writers can target one table). With `opCol` + `seqCols` options,
+  * batches apply as CHANGE FEEDS through [[SnapshotTable.mergeCdc]]
+  * (`'D'` deletes, the CDC rung);
   * with `branch`, commits stage on a writable branch — a streaming
   * write-audit-publish pipeline needs exactly this quarantine.
   *
@@ -77,7 +77,6 @@ class SnapshotSink extends StreamSinkProvider {
     val statsCols = p.get("statscols")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Nil)
-    val maxAttempts = p.get("maxattempts").map(_.toInt).getOrElse(8)
     val opCol = p.get("opcol")
     val seqCols = p.get("seqcols")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
@@ -99,13 +98,11 @@ class SnapshotSink extends StreamSinkProvider {
         val id = Some(appShift | (batchId & 0xFFFFFFFFL))
         opCol match {
           case Some(op) =>
-            SnapshotTable.mergeCdcRetrying(spark, dir, df, key,
-              seqCols.get, op, parts, id, maxAttempts = maxAttempts,
-              statsCols = statsCols, branch = branch)
+            SnapshotTable.mergeCdc(spark, dir, df, key, seqCols.get,
+              op, parts, id, statsCols = statsCols, branch = branch)
           case None =>
-            SnapshotTable.mergeRetrying(spark, dir, df, key, tieBreak,
-              parts, id, maxAttempts = maxAttempts,
-              statsCols = statsCols, branch = branch)
+            SnapshotTable.merge(spark, dir, df, key, tieBreak, parts,
+              id, statsCols = statsCols, branch = branch)
         }
       }
       override def toString: String = s"graft-snapshot-sink($dir)"

@@ -46,10 +46,8 @@ import org.apache.spark.sql.SparkSession
 object Commits {
 
   /** One live sorted run of a tiered store: its directory name under
-    * the store root (`run=<rid>`, or `compact=<upTo>` for a store
-    * folded by the pre-tiered single-level code) and its byte size —
-    * recorded in the manifest so tiering decisions never re-list
-    * run contents. */
+    * the store root (`run=<rid>`) and its byte size — recorded in the
+    * manifest so tiering decisions never re-list run contents. */
   final case class RunInfo(name: String, bytes: Long)
 
   /** The persisted state of a tiered store: `ver` the manifest
@@ -57,13 +55,10 @@ object Commits {
     * which fragments have been folded into runs (None = nothing
     * folded yet), `next` the next run id to allocate (monotonic —
     * a crashed fold's orphan run dir is either overwritten by the
-    * reused id or swept as not-live), `runs` the live run set.
-    * `persisted` is false for states synthesized from a legacy
-    * `_compacted.<upTo>` marker or an empty store — cleanup must
-    * never treat a synthesized view as licence to delete the legacy
-    * marker it was synthesized FROM. */
+    * reused id or swept as not-live), `runs` the live run set. An
+    * empty store's state has `ver` -1. */
   final case class RunManifest(ver: Long, upTo: Option[Long],
-      next: Long, runs: Seq[RunInfo], persisted: Boolean)
+      next: Long, runs: Seq[RunInfo])
 
   private def batchId(p: Path): Long =
     p.getName.stripPrefix("batch=").toLong
@@ -79,22 +74,17 @@ object Commits {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
 
   /** The current manifest of a possibly-tiered store: the
-    * max-version `_runs.<ver>` file when one exists; synthesized
-    * from the legacy single-level `_compacted.<upTo>` marker (the
-    * base as one run) when only that exists; the empty state
-    * otherwise. `sizeLegacy` controls whether the legacy synthesis
-    * pays the one content-summary walk for the base's bytes — reads
-    * don't need sizes, only the fold does. */
-  def runManifest(spark: SparkSession, dir: String,
-      sizeLegacy: Boolean = false): RunManifest = {
+    * max-version `_runs.<ver>` file when one exists, the empty state
+    * otherwise. */
+  def runManifest(spark: SparkSession, dir: String): RunManifest = {
     val root = new Path(dir)
     val fs = storeFs(spark, dir)
-    if (!fs.exists(root))
-      return RunManifest(-1L, None, 0L, Nil, persisted = false)
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val vers = names.filter(_.startsWith("_runs."))
+    if (!fs.exists(root)) return RunManifest(-1L, None, 0L, Nil)
+    val vers = fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("_runs."))
       .flatMap(_.stripPrefix("_runs.").toLongOption)
-    if (vers.nonEmpty) {
+    if (vers.isEmpty) RunManifest(-1L, None, 0L, Nil)
+    else {
       val ver = vers.max
       val in = fs.open(new Path(root, s"_runs.$ver"))
       val text =
@@ -120,27 +110,12 @@ object Commits {
       val upTo = one("upTo").map(v => v.toLongOption.getOrElse(
         throw new IllegalStateException(
           s"corrupt run manifest _runs.$ver in $dir: bad upTo=$v")))
-      // a run may be a `run=<rid>` dir or a surviving legacy
-      // `compact=<upTo>` base carried over from the single-level code
-      val runs = lines.filter(l =>
-        l.startsWith("run=") || l.startsWith("compact=")).map { l =>
+      val runs = lines.filter(_.startsWith("run=")).map { l =>
         val i = l.lastIndexOf(':')
         require(i > 0, s"corrupt run line '$l' in _runs.$ver")
         RunInfo(l.take(i), l.drop(i + 1).toLong)
       }.toSeq
-      RunManifest(ver, upTo, next, runs, persisted = true)
-    } else {
-      names.filter(_.startsWith("_compacted."))
-        .flatMap(_.stripPrefix("_compacted.").toLongOption)
-        .maxOption match {
-        case Some(u) =>
-          val base = s"compact=$u"
-          RunManifest(-1L, Some(u), 0L,
-            Seq(RunInfo(base,
-              if (sizeLegacy) dirBytes(fs, new Path(root, base)) else 0L)),
-            persisted = false)
-        case None => RunManifest(-1L, None, 0L, Nil, persisted = false)
-      }
+      RunManifest(ver, upTo, next, runs)
     }
   }
 
@@ -164,9 +139,8 @@ object Commits {
   }
 
   /** The readable roots of a possibly-compacted fragment store: the
-    * live runs (from the manifest — or the legacy `compact=<upTo>`
-    * base) plus the committed `batch=<n>` fragments NEWER than the
-    * folded high-water mark. Folding is transparent to readers that
+    * live runs (from the manifest) plus the committed `batch=<n>`
+    * fragments NEWER than the folded high-water mark. Folding is transparent to readers that
     * consume the whole store, and stays EXACT for aggregating stores
     * whose fold merges by an associative law (HLL register max,
     * count-min cell sum); what a fold does give up is the
@@ -302,11 +276,11 @@ object Commits {
       sizeRatio: Double = 2.0): Unit = {
     require(maxRuns >= 1, s"maxRuns must be >= 1, got $maxRuns")
     val fs = storeFs(spark, dir)
-    val prev = runManifest(spark, dir, sizeLegacy = true)
+    val prev = runManifest(spark, dir)
     val tail = committedBatchDirs(spark, dir)
       .filter(p => prev.upTo.forall(batchId(p) > _))
     if (tail.isEmpty) {
-      if (prev.persisted) cleanup(spark, dir, prev)
+      if (prev.ver >= 0) cleanup(spark, dir, prev)
       return
     }
     val newUpTo = (tail.map(batchId) ++ prev.upTo).max
@@ -327,28 +301,24 @@ object Commits {
       s"$dir/$newName")
     val newRun = RunInfo(newName, dirBytes(fs, new Path(dir, newName)))
     writeRunManifest(spark, dir, RunManifest(prev.ver + 1, Some(newUpTo),
-      prev.next + 1, survivors :+ newRun, persisted = true))
+      prev.next + 1, survivors :+ newRun))
     cleanup(spark, dir, prev)
   }
 
   /** Delete everything that was already DEAD as of manifest `m`:
-    * fragments at or below its folded mark, run/compact dirs it does
-    * not list (excluding run ids it had not allocated yet — those
-    * belong to the fold that is committing right now), manifests
-    * older than it, and — once any v2 manifest exists — the legacy
-    * single-level markers it superseded. Called with the PREVIOUS
-    * manifest at fold time (grace: this fold's own inputs stay one
-    * more interval) and with the CURRENT manifest on an empty-tail
-    * call (their grace has elapsed). */
+    * fragments at or below its folded mark, run dirs it does not list
+    * (excluding run ids it had not allocated yet — those belong to the
+    * fold that is committing right now), and manifests older than it.
+    * Called with the PREVIOUS manifest at fold time (grace: this fold's
+    * own inputs stay one more interval) and with the CURRENT manifest
+    * on an empty-tail call (their grace has elapsed). */
   private def cleanup(spark: SparkSession, dir: String,
       m: RunManifest): Unit = {
     val root = new Path(dir)
     val fs = storeFs(spark, dir)
     if (!fs.exists(root)) return
     val live = m.runs.map(_.name).toSet
-    val entries = fs.listStatus(root).toSeq
-    val hasV2 = entries.exists(_.getPath.getName.startsWith("_runs."))
-    entries.foreach { e =>
+    fs.listStatus(root).toSeq.foreach { e =>
       val n = e.getPath.getName
       val stale =
         (n.startsWith("batch=") &&
@@ -356,10 +326,8 @@ object Commits {
             m.upTo.exists(id <= _))) ||
         (n.startsWith("run=") && !live(n) &&
           n.stripPrefix("run=").toLongOption.exists(_ < m.next)) ||
-        (n.startsWith("compact=") && !live(n)) ||
         (n.startsWith("_runs.") &&
-          n.stripPrefix("_runs.").toLongOption.exists(_ < m.ver)) ||
-        (n.startsWith("_compacted.") && hasV2)
+          n.stripPrefix("_runs.").toLongOption.exists(_ < m.ver))
       if (stale) fs.delete(e.getPath, true)
     }
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.ops.{Normalize, PartitionKeys, SemiJoins, Upsert}
+import graft.ops.SemiJoins
+import graft.pipeline.Ingest
 import graft.schema.TableSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +20,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    per-run extract)
   *  - stream-static semi-join against the parent table applies the
   *    delta-filter chain (gluejob.py:530-600) per micro-batch
-  *  - sink: foreachBatch → Upsert.upsertPartitioned — MERGE semantics
+  *  - sink: foreachBatch → the batch path's landing ([[Ingest.land]]:
+  *    the micro-batch is extracted once, counted per storage partition,
+  *    and upserted through Upsert.upsertPartitioned) — MERGE semantics
   *    per micro-batch with exactly the batch path's dedup, so replays
   *    are idempotent (checkpoint + at-least-once source ⇒ effectively
   *    exactly-once table state)
@@ -56,13 +59,9 @@ object IncrementalIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val bronze = PartitionKeys.withCompanyYearMonth(
-            Normalize.toBronze(batch, spec), spec.dateCol)
-          Upsert.upsertPartitioned(spark, bronze,
-            s"$outRoot/${spec.name}", key = spec.idCol,
-            tieBreak = spec.updatedCol)
-        }
+        Ingest.land(spark, spec, batch, outRoot, Ingest.OverwriteSink,
+          batchId = None)
+        ()
       }
       .start()
   }

@@ -25,7 +25,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash-LSH finds the fixture near-dup pair (12, 360)") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val pairs = Dedup.minHashLshPairs(docs, "text", "doc_id",
+    val pairs = Dedup.minHashLshPairsPortable(docs, "text", "doc_id",
       threshold = 0.9)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -37,7 +37,8 @@ class DedupSpec extends SparkSpec {
       (2L, "spark scan merge join table"),
       (3L, "completely different words entirely elsewhere"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.simHashPairs(docs, "text", "doc_id", maxDist = 0)
+    val pairs = Dedup.simHashPairsPortable(docs, "text", "doc_id",
+      maxDist = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)))
   }

@@ -251,8 +251,7 @@ class Round13Spec extends SparkSpec {
     // size-tiered runs — bounded by maxRuns — and no batch dirs
     MediaDedupMaintenance.compactUnifiedStore(spark, foldedStore)
     val names = new java.io.File(foldedStore).list().toSeq
-    val runs = names.count(n =>
-      n.startsWith("run=") || n.startsWith("compact="))
+    val runs = names.count(_.startsWith("run="))
     assert(runs >= 1 && runs <= 4 &&
       !names.exists(_.startsWith("batch=")),
       s"expected 1..4 tiered runs and no fragments, got $names")
@@ -265,7 +264,7 @@ class Round13Spec extends SparkSpec {
       "compaction changed the logical store")
     // a post-compaction delta (a byte-identical clone of doc 0's
     // media under a fresh id) must find its duplicate IN the folded
-    // base — the pruned read works against compact=<upTo>
+    // runs — the pruned read works against them
     val latePairs = tmpDir("compactpairslate")
     val dup = Multimodal.syntheticMixedFrameGrouped(spark,
       Seq(0L).toDF("doc_id"), "doc_id")
@@ -308,8 +307,7 @@ class Round13Spec extends SparkSpec {
     // retire call reclaims the grace-kept last-fold inputs
     graft.streaming.DedupMaintenance.compactIndex(spark, foldedIdx)
     val names = new java.io.File(foldedIdx).list().toSeq
-    val runs = names.count(n =>
-      n.startsWith("run=") || n.startsWith("compact="))
+    val runs = names.count(_.startsWith("run="))
     assert(runs >= 1 && runs <= 4 &&
       !names.exists(_.startsWith("batch=")),
       s"expected 1..4 tiered runs and no fragments, got $names")

@@ -191,7 +191,8 @@ class Round16Spec extends SparkSpec {
     assert(content(SnapshotTable.read(spark, tbl, Some(1L))) == v1Content)
     // carry-by-REFERENCE: v2's manifest names v1's p=2 dir verbatim
     val m2 = SnapshotTable.resolve(spark, tbl)
-    assert(m2.entryPaths.toSet == Set("v=2/__gp_p=1", "v=1/__gp_p=2"),
+    assert(m2.entryPaths.map(untokened).toSet ==
+      Set("v=2/__gp_p=1", "v=1/__gp_p=2"),
       s"expected partition-scoped copy-on-write entries, got ${m2.entries}")
     // retention: drop v1's manifest; time travel below the cut is
     // loud; the p=2/v=1 DIR survives because the retained v2
@@ -202,9 +203,10 @@ class Round16Spec extends SparkSpec {
     }
     val fs = new org.apache.hadoop.fs.Path(tbl).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tbl/data/v=1/__gp_p=1")),
+    val v1Dir = versionDir(tbl, 1L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(v1Dir, "__gp_p=1")),
       "the superseded, unreferenced v=1/__gp_p=1 dir must be swept")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$tbl/data/v=1/__gp_p=2")),
+    assert(fs.exists(new org.apache.hadoop.fs.Path(v1Dir, "__gp_p=2")),
       "v=1/__gp_p=2 is referenced by the retained head and must survive")
     assert(content(SnapshotTable.read(spark, tbl)) ==
       Set((1L, "a1", 1), (2L, "b2", 1), (9L, "b9", 1), (3L, "a3", 2),
@@ -243,7 +245,7 @@ class Round16Spec extends SparkSpec {
     assert(content(SnapshotTable.read(spark, tbl)) == want,
       "optimize changed the table's content")
     val m3 = SnapshotTable.resolve(spark, tbl)
-    assert(m3.entryPaths.forall(_.startsWith("v=3/")) &&
+    assert(m3.entryPaths.forall(SnapshotTable.versionOf(_) == 3L) &&
       m3.entries.size == 2,
       s"optimize must compact every partition under its version: ${m3.entries}")
     assert(content(SnapshotTable.readSnap(spark, tbl, held)) == want,

@@ -92,7 +92,7 @@ class Round17Spec extends SparkSpec {
     assert(SnapshotTable.merge(spark, tbl, delta, "k", "v", Seq("p"),
       Some(1L)) == 1L)
     val m = SnapshotTable.resolve(spark, tbl)
-    assert(m.entryPaths == Seq("v=1/__gp_p=2"),
+    assert(m.entryPaths.map(untokened) == Seq("v=1/__gp_p=2"),
       s"only the winner's partition may be committed: ${m.entryPaths}")
     assert(content(SnapshotTable.read(spark, tbl)) == Set((5L, "z", 2)))
     // and a later merge over the same table still works end to end
@@ -113,17 +113,17 @@ class Round17Spec extends SparkSpec {
     SnapshotTable.merge(spark, tbl, b1, "k", "v", Seq("p"), Some(1L))
     val s1 = SnapshotTable.resolve(spark, tbl)
     assert(s1.statsKey.contains("k"))
-    val stats1 = s1.entries.map(e => e.path -> e.stats).toMap
+    val stats1 = s1.entries.map(e => untokened(e.path) -> e.stats).toMap
     assert(stats1("v=1/__gp_p=1").get("k").contains(("1", "10")) &&
       stats1("v=1/__gp_p=2").get("k").contains(("101", "110")),
       s"entry stats must carry the key bounds: $stats1")
     // pruning: [3,7] can only live in p=1's entry
     assert(SnapshotTable.pruneByKey(s1, "k", Some(3L), Some(7L))
-      .entryPaths == Seq("v=1/__gp_p=1"))
+      .entryPaths.map(untokened) == Seq("v=1/__gp_p=1"))
     // numeric (not lexicographic) compare: 101 > 20 even though
     // "101" < "20" as strings — [20, 120] must keep p=2
     assert(SnapshotTable.pruneByKey(s1, "k", Some(20L), Some(120L))
-      .entryPaths == Seq("v=1/__gp_p=2"))
+      .entryPaths.map(untokened) == Seq("v=1/__gp_p=2"))
     assert(content(SnapshotTable.readRange(spark, tbl, "k",
       Some(3L), Some(7L))) ==
       (3L to 7L).map(k => (k, s"a$k", 1)).toSet)
@@ -136,13 +136,13 @@ class Round17Spec extends SparkSpec {
       Seq((150L, "b150", 2)).toDF("k", "v", "p"), "k", "v", Seq("p"),
       Some(2L))
     val s2 = SnapshotTable.resolve(spark, tbl)
-    val stats2 = s2.entries.map(e => e.path -> e.stats).toMap
+    val stats2 = s2.entries.map(e => untokened(e.path) -> e.stats).toMap
     assert(stats2("v=1/__gp_p=1").get("k").contains(("1", "10")),
       "a carried entry must keep its stats")
     assert(stats2("v=2/__gp_p=2").get("k").contains(("101", "150")),
       s"the rewritten entry must record fresh bounds: $stats2")
     assert(SnapshotTable.pruneByKey(s2, "k", Some(1L), Some(2L))
-      .entryPaths == Seq("v=1/__gp_p=1"))
+      .entryPaths.map(untokened) == Seq("v=1/__gp_p=1"))
     // merging on a DIFFERENT key re-keys the stats: kept entries'
     // old bounds are stripped (pruning on either key stays correct —
     // entries without stats are never pruned)
@@ -151,7 +151,8 @@ class Round17Spec extends SparkSpec {
       Some(3L))
     val s3 = SnapshotTable.resolve(spark, tbl)
     assert(s3.statsKey.contains("v"))
-    assert(s3.entries.find(_.path == "v=1/__gp_p=1").get.stats.isEmpty,
+    assert(s3.entries.find(e => untokened(e.path) == "v=1/__gp_p=1")
+      .get.stats.isEmpty,
       "a stats-key change must strip carried entries' bounds")
     assert(SnapshotTable.pruneByKey(s3, "k", Some(1L), Some(2L))
       .entries == s3.entries,
@@ -171,7 +172,9 @@ class Round17Spec extends SparkSpec {
     def taskPrefixes(rel: String): Set[String] = {
       val fs = new org.apache.hadoop.fs.Path(tbl).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$tbl/data/$rel"))
+      val entry = SnapshotTable.resolve(spark, tbl).entryPaths
+        .find(untokened(_) == rel).get
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$tbl/data/$entry"))
         .map(_.getPath.getName).filter(_.startsWith("part-"))
         .map(_.split("-")(1)).toSet
     }
@@ -185,7 +188,7 @@ class Round17Spec extends SparkSpec {
       "salting must not change the merged content")
     // stats are computed pre-salt over the whole partition
     val st = SnapshotTable.resolve(spark, tbl).entries
-      .find(_.path == "v=1/__gp_p=1").get.stats
+      .find(e => untokened(e.path) == "v=1/__gp_p=1").get.stats
     assert(st.get("k").contains(("1", "60")),
       s"salted partition stats: $st")
   }
@@ -342,7 +345,7 @@ class Round17Spec extends SparkSpec {
       Some(3L))
     val s3 = SnapshotTable.resolve(spark, tbl)
     assert(s3.entries.forall(e =>
-      e.path.startsWith("v=3/") ||
+      SnapshotTable.versionOf(e.path) == 3L ||
         (e.stats.isEmpty && e.fileStats.isEmpty)),
       s"carried entries must lose stale file bounds on a key change: " +
         s"${s3.entries}")
@@ -361,7 +364,7 @@ class Round17Spec extends SparkSpec {
     val head = SnapshotTable.resolve(spark, tbl)
     assert(head.partCols == Seq("p") &&
       head.entryPaths.forall(e =>
-        e.startsWith("v=2/__gp_p=") && !e.contains("__gp_q=")),
+        untokened(e).startsWith("v=2/__gp_p=") && !e.contains("__gp_q=")),
       s"the evolved layout must drop q from the dirs: ${head.entryPaths}")
     def all(df: org.apache.spark.sql.DataFrame) =
       df.select(col("k"), col("v"), col("p"), col("q")).collect()
@@ -560,7 +563,8 @@ class Round17Spec extends SparkSpec {
     val (fe, te) = SnapshotTable.cdfEntries(
       SnapshotTable.resolve(spark, tbl, Some(1L)),
       SnapshotTable.resolve(spark, tbl, Some(2L)))
-    assert(fe == Seq("v=1/__gp_p=1") && te == Seq("v=2/__gp_p=1"),
+    assert(fe.map(untokened) == Seq("v=1/__gp_p=1") &&
+      te.map(untokened) == Seq("v=2/__gp_p=1"),
       s"carried entries must be skipped from both sides: $fe / $te")
     // identical versions (OPTIMIZE rewrites everything, content
     // unchanged): every row compares equal — the CDF is EMPTY even
@@ -601,7 +605,7 @@ class Round17Spec extends SparkSpec {
         Future {
           // disjoint keys, overlapping partitions — every thread's
           // rebase must re-read what the others committed
-          SnapshotTable.mergeRetrying(spark, tbl,
+          SnapshotTable.merge(spark, tbl,
             Seq((i.toLong, s"t$i", i % 2)).toDF("k", "v", "p"),
             "k", "v", Seq("p"), batchId = Some(100L + i))
         }

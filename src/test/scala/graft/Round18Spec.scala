@@ -149,11 +149,12 @@ class Round18Spec extends SparkSpec {
     // grace-guarded cut: manifests below the cut go, but the young
     // staging AND the young superseded v=1 dir are spared (any of
     // them could be an in-flight writer's)
+    val v1 = versionDir(tbl, 1L)
     SnapshotTable.retainNewest(spark, tbl, 1)
     assert(SnapshotTable.versions(spark, tbl) == Seq(2L))
     assert(f.exists(staging),
       "an in-flight writer's staging must survive a concurrent cut")
-    assert(f.exists(new Path(s"$tbl/data/v=1")),
+    assert(f.exists(v1),
       "the young superseded dir is spared too — it is " +
         "indistinguishable from an in-flight writer's by age")
     assert(content(SnapshotTable.read(spark, tbl)) == Set((1L, "b", 1)))
@@ -164,7 +165,7 @@ class Round18Spec extends SparkSpec {
     SnapshotTable.retainNewest(spark, tbl, 1, graceMs = 0L)
     assert(!f.exists(staging.getParent),
       "aged unreferenced dirs must sweep after the grace window")
-    assert(!f.exists(new Path(s"$tbl/data/v=1")))
+    assert(!f.exists(v1))
     assert(content(SnapshotTable.read(spark, tbl)) == Set((1L, "c", 1)))
   }
 
@@ -219,15 +220,16 @@ class Round18Spec extends SparkSpec {
     val b1 = Seq((1L, "a1", 1), (2L, "a2", 1), (3L, "a3", 2),
       (4L, "a4", 2)).toDF("k", "v", "p")
     SnapshotTable.merge(spark, tbl, b1, "k", "v", Seq("p"), Some(1L))
-    val dataDirsBefore = fs(tbl).listStatus(new Path(s"$tbl/data/v=1"))
+    val v1 = versionDir(tbl, 1L)
+    val dataDirsBefore = fs(tbl).listStatus(v1)
       .map(_.getPath.getName).toSet
     assert(SnapshotTable.deleteKeys(spark, tbl,
       Seq(1L, 3L, 99L).toDF("k"), "k", Some(2L)) == 2L)
     // merge-on-read: v=1's partition dirs are byte-untouched, only a
     // sidecar dir appeared under v=2
-    assert(fs(tbl).listStatus(new Path(s"$tbl/data/v=1"))
+    assert(fs(tbl).listStatus(v1)
       .map(_.getPath.getName).toSet == dataDirsBefore)
-    assert(fs(tbl).exists(new Path(s"$tbl/data/v=2/_dv")))
+    assert(fs(tbl).exists(new Path(versionDir(tbl, 2L), "_dv")))
     assert(content(SnapshotTable.read(spark, tbl)) ==
       Set((2L, "a2", 1), (4L, "a4", 2)),
       "deleted keys must vanish from the head read (k=99 was absent " +
@@ -271,7 +273,8 @@ class Round18Spec extends SparkSpec {
     val head = SnapshotTable.resolve(spark, tbl)
     assert(head.entries.find(_.path.contains("p=2")).get.dvs.nonEmpty,
       "the untouched partition must still reference the sidecar")
-    assert(head.entries.find(_.path.startsWith("v=3")).get.dvs.isEmpty,
+    assert(head.entries.find(e => SnapshotTable.versionOf(e.path) == 3L)
+      .get.dvs.isEmpty,
       "the rewritten partition must have folded its deletes in")
     // a rewrite that also carries the deleted key's row must NOT
     // resurrect k=3's old row through the touched-partition read
@@ -298,7 +301,8 @@ class Round18Spec extends SparkSpec {
     assert(content(SnapshotTable.read(spark, tbl)) == want)
     // vacuum with no grace: the sidecar is REFERENCED — must survive
     SnapshotTable.vacuum(spark, tbl, graceMs = 0L)
-    assert(fs(tbl).exists(new Path(s"$tbl/data/v=2/_dv")))
+    val dv = new Path(versionDir(tbl, 2L), "_dv")
+    assert(fs(tbl).exists(dv))
     assert(content(SnapshotTable.read(spark, tbl)) == want)
     SnapshotTable.optimize(spark, tbl, Seq("p"))
     val head = SnapshotTable.resolve(spark, tbl)
@@ -308,7 +312,7 @@ class Round18Spec extends SparkSpec {
       "the folding rewrite must be content-identical")
     // retention below the dv'd versions reclaims the sidecar
     SnapshotTable.retainNewest(spark, tbl, 1, graceMs = 0L)
-    assert(!fs(tbl).exists(new Path(s"$tbl/data/v=2")),
+    assert(!fs(tbl).exists(dv.getParent),
       "an unreferenced sidecar version dir sweeps with its manifests")
     assert(content(SnapshotTable.read(spark, tbl)) == want)
   }
@@ -564,7 +568,7 @@ class Round18Spec extends SparkSpec {
     assert(v == 3L)
     val after = SnapshotTable.resolve(spark, tbl)
     val p1 = after.entries.find(_.path.contains("__gp_p=1")).get
-    assert(p1.path.startsWith("v=3/") && p1.dvs.isEmpty,
+    assert(SnapshotTable.versionOf(p1.path) == 3L && p1.dvs.isEmpty,
       s"the selected partition must be rewritten dv-free: $p1")
     val carried = after.entries.filterNot(_.path.contains("__gp_p=1"))
     assert(carried.toSet ==
@@ -634,7 +638,7 @@ class Round18Spec extends SparkSpec {
     assert(SnapshotTable.versions(spark, tbl) == Seq(1L, 2L, 3L),
       "a refused merge must not burn a version")
     // the refused attempt's staging is unreferenced garbage
-    val staged = new Path(s"$tbl/data/v=4")
+    val staged = versionDir(tbl, 4L)
     assert(fs(tbl).exists(staged))
     SnapshotTable.vacuum(spark, tbl, graceMs = 0L)
     assert(!fs(tbl).exists(staged),

@@ -243,7 +243,7 @@ class Round19Spec extends SparkSpec {
     assert(content(out) ==
       Set((1L, "a", 1), (2L, "b", 2), (3L, "c", 1)))
     // and the carried partition really is the ORIGINAL v1 file
-    assert(head.entries.exists(_.path.startsWith("v=1/")),
+    assert(head.entries.exists(e => SnapshotTable.versionOf(e.path) == 1L),
       s"partition 2 must carry by reference: ${head.entryPaths}")
     // range reads still prune with the int-era recorded bounds
     assert(content(SnapshotTable.readRange(spark, dir, "k",
@@ -342,19 +342,6 @@ class Round19Spec extends SparkSpec {
     else f.listStatus(root).toSeq.map(_.getPath.getName).sorted
   }
 
-  /** Run `loser` with a winner's commit deterministically interleaved
-    * into the window between the loser's merge computation and its
-    * version claim (the onBeforeCommit seam — self-clearing so the
-    * winner's own nested commit does not recurse). */
-  private def withInterleavedWinner[T](winner: => Unit)(loser: => T): T = {
-    SnapshotTable.onBeforeCommit = () => {
-      SnapshotTable.onBeforeCommit = () => ()
-      winner
-    }
-    try loser
-    finally SnapshotTable.onBeforeCommit = () => ()
-  }
-
   test("disjoint-writer conflict detection: a loser whose partitions " +
       "are DISJOINT from the winner's changed entries re-commits its " +
       "already-written staging — zero extra merge computations, zero " +
@@ -370,7 +357,7 @@ class Round19Spec extends SparkSpec {
       SnapshotTable.merge(spark, dir, kvp((10L, "w", 9)),
         "k", "v", Seq("p"), Some(2L))                     // v2
     } {
-      SnapshotTable.mergeRetrying(spark, dir, kvp((3L, "c", 1)),
+      SnapshotTable.merge(spark, dir, kvp((3L, "c", 1)),
         "k", "v", Seq("p"), Some(3L))                     // v3, fast path
     }
     assert(SnapshotTable.versions(spark, dir) == Seq(1L, 2L, 3L))
@@ -383,7 +370,9 @@ class Round19Spec extends SparkSpec {
     // and the fast-committed manifest carries the WINNER's entry for
     // partition 9, not the loser's stale base view
     val head = SnapshotTable.resolve(spark, dir)
-    assert(head.entries.map(_.path).exists(_.startsWith("v=2/")),
+    assert(head.entries.exists(e =>
+      SnapshotTable.partitionValues(e)("p") == "9" &&
+        SnapshotTable.versionOf(e.path) == 2L),
       s"the winner's p=9 entry must carry: ${head.entryPaths}")
   }
 
@@ -398,7 +387,7 @@ class Round19Spec extends SparkSpec {
       SnapshotTable.merge(spark, dir, kvp((2L, "win", 1)),
         "k", "v", Seq("p"), Some(2L))                     // v2: SAME p=1
     } {
-      SnapshotTable.mergeRetrying(spark, dir, kvp((3L, "lose", 1)),
+      SnapshotTable.merge(spark, dir, kvp((3L, "lose", 1)),
         "k", "v", Seq("p"), Some(3L))                     // must rebase
     }
     assert(SnapshotTable.versions(spark, dir) == Seq(1L, 2L, 3L))
@@ -423,7 +412,7 @@ class Round19Spec extends SparkSpec {
     } {
       // disjoint partitions, but the check landed mid-window: the
       // loser must rebase so its output is verified against it
-      SnapshotTable.mergeRetrying(spark, dir, kvp((3L, "c", 1)),
+      SnapshotTable.merge(spark, dir, kvp((3L, "c", 1)),
         "k", "v", Seq("p"), Some(3L))
     }
     assert(SnapshotTable.resolve(spark, dir).checks.contains("k_pos"))
@@ -435,7 +424,7 @@ class Round19Spec extends SparkSpec {
       SnapshotTable.addCheck(spark, dir, "k_small", "k < 100")
     } {
       val ex = intercept[IllegalArgumentException] {
-        SnapshotTable.mergeRetrying(spark, dir, kvp((500L, "big", 1)),
+        SnapshotTable.merge(spark, dir, kvp((500L, "big", 1)),
           "k", "v", Seq("p"), Some(4L))
       }
       assert(ex.getMessage.contains("k_small"), ex.getMessage)
@@ -454,7 +443,7 @@ class Round19Spec extends SparkSpec {
       SnapshotTable.deleteKeys(spark, dir, Seq(2L).toDF("k"), "k",
         Some(2L))                                         // dv on p=1
     } {
-      SnapshotTable.mergeRetrying(spark, dir, kvp((3L, "c", 1)),
+      SnapshotTable.merge(spark, dir, kvp((3L, "c", 1)),
         "k", "v", Seq("p"), Some(3L))
     }
     assert(content(SnapshotTable.read(spark, dir)) ==
@@ -481,7 +470,7 @@ class Round19Spec extends SparkSpec {
     try Await.result(Future.sequence((0 until n).map { i =>
       Future {
         barrier.await()
-        SnapshotTable.mergeRetrying(spark, dir,
+        SnapshotTable.merge(spark, dir,
           kvp((100L + i, s"w$i", i)),
           "k", "v", Seq("p"), Some(10L + i))
       }
@@ -605,7 +594,9 @@ class Round19Spec extends SparkSpec {
       Seq("p"), Some(1L), maxRowsPerTask = 20L)
     def taskIds(rel: String): Set[String] = {
       val f = fs(dir)
-      f.listStatus(new Path(s"$dir/data/$rel"))
+      val entry = SnapshotTable.resolve(spark, dir).entryPaths
+        .find(untokened(_) == rel).get
+      f.listStatus(new Path(s"$dir/data/$entry"))
         .map(_.getPath.getName).filter(_.startsWith("part-"))
         .map(_.split("-")(1)).toSet
     }
@@ -620,7 +611,7 @@ class Round19Spec extends SparkSpec {
       .isEmpty)
     assert(content(SnapshotTable.read(spark, dir)) == rows.toSet)
     val st = SnapshotTable.resolve(spark, dir).entries
-      .find(_.path == "v=1/__gp_p=1").get
+      .find(e => untokened(e.path) == "v=1/__gp_p=1").get
     assert(st.stats.get("k").contains(("1", "100")))
     assert(st.rows.contains(100L))
   }
@@ -829,8 +820,8 @@ class Round19Spec extends SparkSpec {
     // published data was never moved: the branch's staged dirs are
     // what main's manifests now reference
     val pubPaths = SnapshotTable.resolve(spark, dir).entries.map(_.path)
-    assert(pubPaths.exists(_.startsWith("v=2-b")) &&
-      pubPaths.exists(_.startsWith("v=3-b")), s"got: $pubPaths")
+    assert(pubPaths.exists(SnapshotTable.versionOf(_) == 2L) &&
+      pubPaths.exists(SnapshotTable.versionOf(_) == 3L), s"got: $pubPaths")
     SnapshotTable.dropBranch(spark, dir, "wap")
     assert(SnapshotTable.branches(spark, dir).isEmpty)
     intercept[IllegalArgumentException] {
@@ -893,7 +884,7 @@ class Round19Spec extends SparkSpec {
       "k", "v", Seq("p"), Some(5L), branch = Some("keepme"))
     val stagedDirs = SnapshotTable
       .resolveBranch(spark, dir, "keepme").entries.map(_.path)
-      .filter(_.startsWith("v=3-b"))
+      .filter(SnapshotTable.versionOf(_) == 3L)
       .map(_.split("/")(0)).distinct
     assert(stagedDirs.nonEmpty)
     SnapshotTable.merge(spark, dir, kvp((3L, "c", 1)),

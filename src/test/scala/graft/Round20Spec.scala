@@ -147,7 +147,7 @@ class Round20Spec extends SparkSpec {
     assert(snap.entries.map(e =>
       SnapshotTable.partitionValues(e)("p")) == Seq("2"))
     // the empty staged v=2 dir was reclaimed eagerly
-    assert(!fs(dir).exists(new Path(s"$dir/data/v=2")),
+    assert(versionDirs(dir, 2L).isEmpty,
       "an all-deleted commit must not leave an empty staged dir")
     assertManifestMatchesBytes(dir)
   }
@@ -179,7 +179,7 @@ class Round20Spec extends SparkSpec {
     val base = (1L to 40L).map(k => (k, s"v$k", (k % 4).toInt))
     SnapshotTable.merge(spark, dir, base.toDF("k", "v", "p"), "k", "v",
       Seq("p"), Some(1L))
-    // a refused or crashed attempt's leftover partition at v=2
+    // a crashed writer's leftover partition under a v=2 dir name
     Seq((900L, "stale", 9)).toDF("k", "v", "p")
       .write.parquet(s"$dir/data/v=2/__gp_p=9")
     val mode = "spark.sql.sources.partitionOverwriteMode"

@@ -52,6 +52,45 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A snapshot-table entry path without its staging token —
+    * `v=3-ab12/__gp_p=1` → `v=3/__gp_p=1` — so a spec can name the
+    * entries a version's commit wrote without knowing its token. */
+  def untokened(entryPath: String): String =
+    s"v=${graft.ops.SnapshotTable.versionOf(entryPath)}" +
+      entryPath.dropWhile(_ != '/')
+
+  /** The staged dirs under `tbl/data` whose writer targeted version
+    * `ver` — one per attempt that reached its write (a refused or
+    * losing attempt's staging included). */
+  def versionDirs(tbl: String, ver: Long): Seq[org.apache.hadoop.fs.Path] = {
+    val root = new org.apache.hadoop.fs.Path(tbl, "data")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(p => graft.ops.SnapshotTable.versionOf(p.getName) == ver)
+  }
+
+  /** The one staged dir of version `ver` (loud when there is not
+    * exactly one). */
+  def versionDir(tbl: String, ver: Long): org.apache.hadoop.fs.Path = {
+    val ds = versionDirs(tbl, ver)
+    assert(ds.size == 1, s"expected one v=$ver dir under $tbl/data: $ds")
+    ds.head
+  }
+
+  /** Run `loser` with a winner's commit deterministically interleaved
+    * into the window between the loser's merge computation and its
+    * version claim (the onBeforeCommit seam — self-clearing so the
+    * winner's own nested commit does not recurse). */
+  def withInterleavedWinner[T](winner: => Unit)(loser: => T): T = {
+    graft.ops.SnapshotTable.onBeforeCommit = () => {
+      graft.ops.SnapshotTable.onBeforeCommit = () => ()
+      winner
+    }
+    try loser
+    finally graft.ops.SnapshotTable.onBeforeCommit = () => ()
+  }
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(sys.props("user.dir"), "target"), prefix)
