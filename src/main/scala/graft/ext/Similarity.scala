@@ -632,23 +632,6 @@ object Similarity {
         col("_csim").as("cos_to_centroid"))
   }
 
-  /** Symmetric int8 quantization of an embedding column — the 100 TB
-    * storage path (4x smaller vectors; scan-side dequant is one
-    * multiply). scale = max|x|/127; q_i = floor(x_i/scale + 0.5)
-    * (explicit floor — engine-portable rounding, no round() dialect
-    * drift). Returns struct(scale, int8 array). */
-  def quantizeInt8(vec: Column): Column = {
-    val scale = array_max(transform(vec, x => abs(x.cast("double")))) / lit(127.0)
-    // All-zero vector ⇒ scale = 0 ⇒ x/scale is NaN; pin q = 0 there
-    // (exact reconstruction, max_err 0) instead of leaking NaN.
-    struct(
-      scale.as("scale"),
-      transform(vec, x =>
-        when(scale === 0, lit(0))
-          .otherwise(floor(x.cast("double") / scale + lit(0.5)))
-          .cast("int")).as("q"))
-  }
-
   /** Squared L2 over one PQ subspace as a strictly sequential fold
     * (init 0.0, ascending element order), so DuckDB's
     * `list_reduce(list_prepend(0.0, [...]))` replays it bitwise. Both

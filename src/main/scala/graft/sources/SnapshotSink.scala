@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.SnapshotTable
+import graft.ops.{PartitionKeys, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -93,17 +93,25 @@ class SnapshotSink extends StreamSinkProvider {
     new Sink {
       override def addBatch(batchId: Long, data: DataFrame): Unit = {
         val spark = data.sparkSession
-        val df = ColumnBridge.asBatchFrame(data)
-        if (df.isEmpty) return // nothing to commit, nothing to replay
-        val id = Some(appShift | (batchId & 0xFFFFFFFFL))
-        opCol match {
-          case Some(op) =>
-            SnapshotTable.mergeCdc(spark, dir, df, key, seqCols.get,
-              op, parts, id, statsCols = statsCols, branch = branch)
-          case None =>
-            SnapshotTable.merge(spark, dir, df, key, tieBreak, parts,
-              id, statsCols = statsCols, branch = branch)
-        }
+        // cut once, lazily: the touched-partition count evaluates the
+        // batch plan, and the merge reads the cut
+        val df = ColumnBridge.asBatchFrame(data).localCheckpoint(eager = false)
+        try {
+          val touched = PartitionKeys.touchedCounts(df, parts)
+          // no rows: nothing to commit, nothing to replay
+          if (touched.nonEmpty) {
+            val id = Some(appShift | (batchId & 0xFFFFFFFFL))
+            opCol match {
+              case Some(op) =>
+                SnapshotTable.mergeCdc(spark, dir, df, key, seqCols.get,
+                  op, parts, id, statsCols = statsCols, branch = branch)
+              case None =>
+                SnapshotTable.merge(spark, dir, df, key, tieBreak, parts,
+                  id, statsCols = statsCols, branch = branch,
+                  touchedCounts = Some(touched))
+            }
+          }
+        } finally ColumnBridge.unpersistLocalCheckpoint(df)
       }
       override def toString: String = s"graft-snapshot-sink($dir)"
     }

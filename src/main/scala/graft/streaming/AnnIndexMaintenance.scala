@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ANN index maintenance — the composition of
   * [[graft.ext.Similarity.ivfPqUpsertIndex]]'s frozen-state fragment
-  * map with Structured Streaming's foreachBatch: every micro-batch of
+  * map with Structured Streaming micro-batches: every micro-batch of
   * arriving vectors is assigned and PQ-encoded against the FROZEN
   * coarse quantizer + codebook (both broadcast, both trained once on
   * the base corpus) and lands in a cell-partitioned parquet index
@@ -19,15 +19,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * never changes the index. Cell-partitioned storage means a probe
   * with `nProbe` cells reads only those directories.
   *
-  * Delivery is EXACTLY-ONCE on the index contents: each micro-batch
-  * writes (mode Overwrite) its own `batch=<batchId>` directory, and
-  * the streaming checkpoint makes replays batch-id-stable — the same
-  * batchId always carries the same source offsets, so a batch retried
-  * after any failure (including one that died between the data write
-  * and the offset commit) overwrites its own directory with the same
-  * rows and the index converges to the run-once state. A blind
-  * `append` here would be at-least-once: the retry would duplicate
-  * the batch's rows. The layout price is one extra top-level
+  * Delivery is EXACTLY-ONCE on the index contents through the
+  * maintenance driver ([[Commits.runBatches]]): each micro-batch
+  * overwrites its own `batch=<batchId>` directory, where a blind
+  * `append` would duplicate a retried batch's rows. The layout price
+  * is one extra top-level
   * partition column (`batch`) that probes ignore; cell pruning still
   * holds — `cell` remains a partition directory level under each
   * batch, and a cell-key filter prunes across all batches.
@@ -52,16 +48,15 @@ object AnnIndexMaintenance {
 
   /** The idempotent unit of maintenance: encode one micro-batch and
     * overwrite its own `batch=<batchId>` directory. Running this
-    * twice with the same (batch, batchId) — a foreachBatch replay —
+    * twice with the same (batch, batchId) — a micro-batch replay —
     * leaves the index byte-identical to running it once
-    * (spec-pinned). */
+    * (spec-pinned). Whether it held a row ([[Commits.landFragment]]). */
   def writeFragment(batch: DataFrame, batchId: Long, idCol: String,
       vecCol: String, cents: DataFrame, codebook: DataFrame,
-      indexDir: String, nSub: Int = 8, dim: Int = 64): Unit =
-    Similarity.ivfPqIndexFragment(batch, idCol, vecCol, codebook, cents,
-        nSub, dim)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/batch=$batchId")
+      indexDir: String, nSub: Int = 8, dim: Int = 64): Boolean =
+    Commits.landFragment(Similarity.ivfPqIndexFragment(batch, idCol,
+        vecCol, codebook, cents, nSub, dim),
+      s"$indexDir/batch=$batchId", partitionBy = Seq("cell"))
 
   /** The probeable index: live compacted RUNS plus committed
     * `batch=` fragments newer than the folded mark, each root read
@@ -119,16 +114,9 @@ object AnnIndexMaintenance {
       checkpointDir: String, nSub: Int = 8, dim: Int = 64,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeFragment(batch, batchId, idCol, vecCol, cents, codebook,
-            indexDir, nSub, dim)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactIndex(batch.sparkSession, indexDir)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger,
+        Commits.Hook(compactEvery, compactIndex(_, indexDir))) {
+      (batch, batchId) => writeFragment(batch, batchId, idCol, vecCol,
+        cents, codebook, indexDir, nSub, dim)
+    }
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The ONE definition of the maintenance-family commit-detection
   * rule (previously duplicated verbatim in [[HllMaintenance]] and
@@ -42,7 +44,10 @@ import org.apache.spark.sql.SparkSession
   * it). A maintenance call that finds NOTHING to fold still runs the
   * cleanup, so an interrupted fold's garbage — or a retired stream's
   * grace leftovers — is reclaimed on the next call rather than
-  * lingering forever. */
+  * lingering forever.
+  *
+  * It also owns the streams' one micro-batch driver ([[runBatches]])
+  * and their one empty-aware fragment write ([[landFragment]]). */
 object Commits {
 
   /** One live sorted run of a tiered store: its directory name under
@@ -390,6 +395,58 @@ object Commits {
       .filter(_.startsWith("_retained."))
       .flatMap(_.stripPrefix("_retained.").toLongOption)
       .maxOption
+  }
+
+  /** A post-batch hook of [[runBatches]]: `run` after every landed
+    * batch whose id `b` has `(b + 1) % every == 0` — `every = 1` runs
+    * it after each landed batch (a retention cut's `keep min 1`),
+    * `every <= 0` never. */
+  final case class Hook(every: Int, run: SparkSession => Unit)
+
+  /** The ONE micro-batch driver of the maintenance streams: starts
+    * `source` with `checkpointDir` and `trigger`, hands each
+    * micro-batch and its id to `unit`, and runs the `hooks` (store
+    * folds, retention cuts) only after a batch `unit` reports landed.
+    *
+    * Exactly-once on storage is the units' discipline, which this
+    * driver relies on: a unit overwrites only its own `batch=<id>`
+    * outputs, and Structured Streaming's checkpoint makes
+    * `foreachBatch` replays batch-id-stable — the same id always
+    * carries the same source offsets — so a batch retried after any
+    * failure rewrites the same rows. A unit decides emptiness from a
+    * count it already computes ([[landFragment]]'s observed row
+    * count, a checkpoint's) and reports `false` having landed
+    * nothing; no separate emptiness job runs. `stop()` cancels the
+    * running batch's jobs with the query's own job group; landings
+    * under [[landConcurrently]] cancel theirs on the interrupt. */
+  def runBatches(source: DataFrame, checkpointDir: String,
+      trigger: Trigger, hooks: Hook*)(
+      unit: (DataFrame, Long) => Boolean): StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (unit(batch, batchId))
+          hooks.filter(h => h.every > 0 && (batchId + 1) % h.every == 0)
+            .foreach(_.run(batch.sparkSession))
+      }
+      .start()
+
+  /** Overwrite-write `df` as the fragment dir `dir` (partitioned by
+    * `partitionBy`) and report whether it held a row, counted by an
+    * `observe` on the write itself. An empty write still leaves a
+    * schema-only part file (or only `_SUCCESS` when partitioned), so
+    * on a zero count the dir is deleted: an empty batch lands
+    * nothing. Until the delete — or, after a crash between the two,
+    * until the batch's replay — the empty fragment is committed. */
+  def landFragment(df: DataFrame, dir: String,
+      partitionBy: Seq[String] = Nil): Boolean = {
+    val rows = new Observation()
+    df.observe(rows, count(lit(1)).as("n"))
+      .write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir)
+    val landed = rows.get("n") != 0L
+    if (!landed) storeFs(df.sparkSession, dir).delete(new Path(dir), true)
+    landed
   }
 
   /** Daemon pool for [[landConcurrently]] — threads are reused

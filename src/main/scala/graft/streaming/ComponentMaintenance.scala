@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * edge log every refresh — rank is a function of the whole graph),
   * the label snapshot IS complete state: labels_i = fold(labels_{i−1},
   * fragment_i), so a batch reads ONE fragment and ONE snapshot,
-  * whatever the log length. Exactly-once by the same discipline:
-  * fragment and snapshot each overwrite their own `batch=<batchId>`
-  * directory; the snapshot warm-starts from the latest snapshot with
+  * whatever the log length. Exactly-once through the maintenance
+  * driver ([[Commits.runBatches]]): fragment and snapshot each
+  * overwrite their own `batch=<batchId>` directory; the snapshot
+  * warm-starts from the latest snapshot with
   * id < batchId and folds only its OWN landed fragment, so replaying
   * a batch after later batches have landed reproduces its original
   * bytes (spec-pinned).
@@ -70,26 +71,29 @@ object ComponentMaintenance {
 
   /** The idempotent unit: land one micro-batch of edges, fold it into
     * the latest earlier snapshot. Replaying the same (batch, batchId)
-    * overwrites both directories with identical bytes. */
+    * overwrites both directories with identical bytes. Returns whether
+    * it landed: an edge-less batch writes neither directory. */
   def processBatch(batch: DataFrame, batchId: Long, srcCol: String,
       dstCol: String, edgesDir: String, labelsDir: String,
-      maxIters: Int = 50): Unit = {
+      maxIters: Int = 50): Boolean = {
     val spark = batch.sparkSession
-    batch.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct()
-      .write.mode("overwrite").parquet(s"$edgesDir/batch=$batchId")
-    // fold the LANDED fragment (not the in-flight batch) so a replay
-    // reads exactly what the original run read
-    val frag = spark.read.schema(edgeSchema)
-      .parquet(s"$edgesDir/batch=$batchId")
-    val labels = readLabels(spark, labelsDir,
-        beforeBatch = Some(batchId)) match {
-      case Some(prev) => GraphOps.connectedComponentsDelta(
-        prev, frag, "src", "dst", maxIters = maxIters)
-      case None => GraphOps.connectedComponents(
-        frag, "src", "dst", maxIters = maxIters)
+    Commits.landFragment(batch.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")).distinct(),
+      s"$edgesDir/batch=$batchId") && {
+      // fold the LANDED fragment (not the in-flight batch) so a replay
+      // reads exactly what the original run read
+      val frag = spark.read.schema(edgeSchema)
+        .parquet(s"$edgesDir/batch=$batchId")
+      val labels = readLabels(spark, labelsDir,
+          beforeBatch = Some(batchId)) match {
+        case Some(prev) => GraphOps.connectedComponentsDelta(
+          prev, frag, "src", "dst", maxIters = maxIters)
+        case None => GraphOps.connectedComponents(
+          frag, "src", "dst", maxIters = maxIters)
+      }
+      labels.write.mode("overwrite").parquet(s"$labelsDir/batch=$batchId")
+      true
     }
-    labels.write.mode("overwrite").parquet(s"$labelsDir/batch=$batchId")
   }
 
   /** Start maintaining label snapshots from a streaming `source`
@@ -100,17 +104,9 @@ object ComponentMaintenance {
       maxIters: Int = 50,
       trigger: Trigger = Trigger.AvailableNow(),
       keepState: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, srcCol, dstCol, edgesDir,
-            labelsDir, maxIters)
-          if (keepState > 0)
-            retainState(batch.sparkSession, edgesDir, labelsDir,
-              keepState)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger, Commits.Hook(
+        keepState min 1, retainState(_, edgesDir, labelsDir, keepState))) {
+      (batch, batchId) => processBatch(batch, batchId, srcCol, dstCol,
+        edgesDir, labelsDir, maxIters)
+    }
 }

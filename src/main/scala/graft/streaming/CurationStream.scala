@@ -11,14 +11,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * spec) and lands in a batch-partitioned parquet area downstream
   * packing/dedup stages read directly.
   *
-  * Delivery is EXACTLY-ONCE on the curated contents, by the
-  * [[AnnIndexMaintenance]] discipline: each micro-batch OVERWRITES
-  * its own `batch=<batchId>` directory, and the streaming checkpoint
-  * makes replays batch-id-stable — the same batchId always carries
-  * the same source offsets, so a batch retried after any failure
-  * (including one that died between the data write and the offset
-  * commit) rewrites its own directory with the same rows. A blind
-  * append sink would duplicate the retried batch's survivors.
+  * Delivery is EXACTLY-ONCE on the curated contents through the
+  * maintenance driver ([[Commits.runBatches]]); a blind append sink
+  * would duplicate a retried batch's survivors.
   *
   * Because the kernel is stateless map-only, N micro-batches over a
   * split of the corpus produce exactly the batch run's rows — the
@@ -29,25 +24,20 @@ object CurationStream {
 
   /** The idempotent unit: curate one micro-batch and overwrite its
     * own `batch=<batchId>` directory. Running this twice with the
-    * same (batch, batchId) — a foreachBatch replay — leaves the
-    * curated area byte-identical to running it once (spec-pinned). */
+    * same (batch, batchId) — a micro-batch replay — leaves the
+    * curated area byte-identical to running it once (spec-pinned).
+    * Whether a document survived ([[Commits.landFragment]]). */
   def writeFragment(batch: DataFrame, batchId: Long, textCol: String,
-      idCol: String, outDir: String): Unit =
-    Curation.gateAndRedact(batch, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      idCol: String, outDir: String): Boolean =
+    Commits.landFragment(Curation.gateAndRedact(batch, textCol, idCol),
+      s"$outDir/batch=$batchId")
 
   /** Start curating the streaming `source` (must carry `textCol` and
     * `idCol`) into `outDir`. */
   def start(source: DataFrame, textCol: String, idCol: String,
       outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeFragment(batch, batchId, textCol, idCol, outDir)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger) { (batch, batchId) =>
+      writeFragment(batch, batchId, textCol, idCol, outDir)
+    }
 }

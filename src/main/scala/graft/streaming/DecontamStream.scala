@@ -17,10 +17,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale shape: eval sets are small by construction (10³–10⁵ docs),
   * so the gram set is a bounded static table joined per batch —
   * map-only aside from the per-doc count; the corpus never joins
-  * itself. Delivery is EXACTLY-ONCE by the [[CurationStream]]
-  * discipline: each micro-batch overwrites its own `batch=<batchId>`
-  * directory and checkpointed offsets make replays batch-id-stable.
-  * Stateless per batch, so N micro-batches over a split of the shard
+  * itself. Delivery is EXACTLY-ONCE through the maintenance driver
+  * ([[Commits.runBatches]]). Stateless per batch, so N micro-batches over a split of the shard
   * produce exactly the batch audit's rows (spec-pinned). */
 object DecontamStream {
 
@@ -32,11 +30,13 @@ object DecontamStream {
     Dedup.gramKeySet(benchmark, textCol, n).localCheckpoint()
 
   /** The idempotent unit: score one micro-batch against the gram set
-    * and overwrite its own `batch=<batchId>` directory. */
+    * and overwrite its own `batch=<batchId>` directory; whether it
+    * held a report row ([[Commits.landFragment]]). */
   def writeFragment(batch: DataFrame, batchId: Long, grams: DataFrame,
-      textCol: String, idCol: String, n: Int, outDir: String): Unit =
-    Dedup.gramOverlapAgainst(grams, batch, textCol, idCol, n)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      textCol: String, idCol: String, n: Int, outDir: String): Boolean =
+    Commits.landFragment(
+      Dedup.gramOverlapAgainst(grams, batch, textCol, idCol, n),
+      s"$outDir/batch=$batchId")
 
   /** Start monitoring the streaming `source` (must carry `textCol`
     * and `idCol`) against the static `benchmark`. */
@@ -45,14 +45,8 @@ object DecontamStream {
       n: Int = 3,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val grams = gramIndex(benchmark, textCol, n)
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeFragment(batch, batchId, grams, textCol, idCol, n, outDir)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger) { (batch, batchId) =>
+      writeFragment(batch, batchId, grams, textCol, idCol, n, outDir)
+    }
   }
 }

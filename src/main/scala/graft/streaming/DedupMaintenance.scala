@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming dedup maintenance — [[graft.ext.Dedup.minHashLshDeltaPairs]]
-  * composed with Structured Streaming's foreachBatch, the way a crawl
+  * composed with Structured Streaming micro-batches, the way a crawl
   * actually runs dedup: documents arrive in micro-batches, each batch
   * is shingled/signed ONCE, joined band-by-band against the
   * accumulated document index, and two things land atomically per
@@ -18,11 +18,9 @@ import org.apache.spark.sql.types._
   * discoverable only at batch j (at batch i, b's index row does not
   * exist yet), and batch-internal pairs only at their own batch.
   *
-  * Delivery is exactly-once on storage by the
-  * [[AnnIndexMaintenance]] discipline: both the fragment and the
-  * pairs write `mode(Overwrite)` into their own `batch=<batchId>`
-  * directory, and streaming checkpoints make replays batch-id-stable.
-  * A replayed batch re-reads an index that may already contain its
+  * Delivery is exactly-once on storage through the maintenance driver
+  * ([[Commits.runBatches]]): the fragment and the pairs each
+  * overwrite their own `batch=<batchId>` directory. A replayed batch re-reads an index that may already contain its
   * own fragment — harmless by construction: the delta's ids are
   * anti-joined out of the index read, so the pair plan sees the same
   * id-disjoint sides as the first run and the overwrite converges to
@@ -131,14 +129,9 @@ object DedupMaintenance {
       threshold: Double = 0.5, seed: Long = 42L,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val landed = processBatch(batch, batchId, textCol, idCol,
-          indexDir, pairsDir, n, numPerms, rowsPerBand, threshold, seed)
-        if (landed && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactIndex(batch.sparkSession, indexDir)
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger,
+        Commits.Hook(compactEvery, compactIndex(_, indexDir))) {
+      (batch, batchId) => processBatch(batch, batchId, textCol, idCol,
+        indexDir, pairsDir, n, numPerms, rowsPerBand, threshold, seed)
+    }
 }

@@ -8,17 +8,16 @@ import org.apache.spark.sql.types._
 
 /** Streaming authority-rank maintenance — the q159 warm-start
   * discipline ([[GraphOps.pageRankFixedPoint]] with `initRanks`)
-  * composed with Structured Streaming's foreachBatch, the way a crawl
+  * composed with Structured Streaming micro-batches, the way a crawl
   * actually refreshes source authority: link-graph edges arrive in
   * micro-batches, each batch lands its own distinct edge fragment,
   * and the rank table is refreshed with `refreshIters` warm-start
   * rounds over the accumulated edge log instead of re-running the
   * full cold power iteration per day.
   *
-  * Exactly-once on storage by the [[AnnIndexMaintenance]] discipline:
-  * both the edge fragment and the rank snapshot write
-  * `mode(Overwrite)` into their own `batch=<batchId>` directory, and
-  * streaming checkpoints make replays batch-id-stable. Batch i's rank
+  * Exactly-once on storage through the maintenance driver
+  * ([[Commits.runBatches]]): the edge fragment and the rank snapshot
+  * each overwrite their own `batch=<batchId>` directory. Batch i's rank
   * snapshot is a pure function of fragments with id ≤ i: the rank
   * refresh reads ONLY edge fragments `batch <= batchId` and warm
   * starts from the LATEST rank snapshot with id < batchId, so
@@ -99,20 +98,23 @@ object GraphMaintenance {
   /** The idempotent unit of maintenance: land one micro-batch of
     * edges, refresh ranks over fragments ≤ batchId from the latest
     * earlier snapshot. Replaying the same (batch, batchId) overwrites
-    * both directories with identical bytes. */
+    * both directories with identical bytes. Returns whether it
+    * landed: an edge-less batch writes neither directory. */
   def processBatch(batch: DataFrame, batchId: Long, srcCol: String,
       dstCol: String, edgesDir: String, ranksDir: String,
-      refreshIters: Int = 1, dampMicro: Long = 850000L): Unit = {
+      refreshIters: Int = 1, dampMicro: Long = 850000L): Boolean = {
     val spark = batch.sparkSession
-    batch.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct()
-      .write.mode("overwrite").parquet(s"$edgesDir/batch=$batchId")
-    val edges = readEdges(spark, edgesDir, upToBatch = Some(batchId))
-    val warm = readRanks(spark, ranksDir, beforeBatch = Some(batchId))
-    GraphOps.pageRankFixedPoint(edges, "src", "dst",
-        iters = refreshIters, dampMicro = dampMicro,
-        cp = ShuffleBarrier, initRanks = warm)
-      .write.mode("overwrite").parquet(s"$ranksDir/batch=$batchId")
+    Commits.landFragment(batch.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")).distinct(),
+      s"$edgesDir/batch=$batchId") && {
+      val edges = readEdges(spark, edgesDir, upToBatch = Some(batchId))
+      val warm = readRanks(spark, ranksDir, beforeBatch = Some(batchId))
+      GraphOps.pageRankFixedPoint(edges, "src", "dst",
+          iters = refreshIters, dampMicro = dampMicro,
+          cp = ShuffleBarrier, initRanks = warm)
+        .write.mode("overwrite").parquet(s"$ranksDir/batch=$batchId")
+      true
+    }
   }
 
   /** Start maintaining the edge log + rank snapshots from a streaming
@@ -125,18 +127,10 @@ object GraphMaintenance {
       refreshIters: Int = 1, dampMicro: Long = 850000L,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0, keepRanks: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, srcCol, dstCol, edgesDir,
-            ranksDir, refreshIters, dampMicro)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactEdges(batch.sparkSession, edgesDir)
-          if (keepRanks > 0)
-            retainRanks(batch.sparkSession, ranksDir, keepRanks)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger,
+        Commits.Hook(compactEvery, compactEdges(_, edgesDir)),
+        Commits.Hook(keepRanks min 1, retainRanks(_, ranksDir, keepRanks))) {
+      (batch, batchId) => processBatch(batch, batchId, srcCol, dstCol,
+        edgesDir, ranksDir, refreshIters, dampMicro)
+    }
 }

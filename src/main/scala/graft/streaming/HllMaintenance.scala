@@ -23,9 +23,8 @@ import org.apache.spark.sql.types._
   * Scale shape: per batch one map-side-combinable max-agg into
   * ≤ keys·m rows (fragment size bounded by key cardinality, not
   * batch rows), merge-on-read a keyed max over #batches × keys·m
-  * sliver rows, estimates via the batch arithmetic. Exactly-once by
-  * the batchId-keyed overwrite discipline shared with the other
-  * maintenance streams. */
+  * sliver rows, estimates via the batch arithmetic. Exactly-once
+  * through the maintenance driver ([[Commits.runBatches]]). */
 object HllMaintenance {
 
   private def regSchema(keyType: DataType): StructType = StructType(Seq(
@@ -33,13 +32,13 @@ object HllMaintenance {
     StructField("reg", IntegerType)))
 
   /** The idempotent unit: register-sketch one micro-batch and
-    * overwrite its own `batch=<batchId>` fragment. */
+    * overwrite its own `batch=<batchId>` fragment; whether it held a
+    * register row ([[Commits.landFragment]]). */
   def writeFragment(batch: DataFrame, batchId: Long, keyCol: String,
       hashCol: Column, outDir: String, m: Int = 64,
-      maxRank: Int = 30): Unit =
-    Hll.registers(batch, keyCol, hashCol, m, maxRank)
-      .withColumnRenamed(keyCol, "key")
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      maxRank: Int = 30): Boolean =
+    Commits.landFragment(Hll.registers(batch, keyCol, hashCol, m, maxRank)
+      .withColumnRenamed(keyCol, "key"), s"$outDir/batch=$batchId")
 
   /** The current merged register table: cell-wise max of the live
     * runs and the landed fragments with id ≤ `upToBatch` (None =
@@ -103,14 +102,7 @@ object HllMaintenance {
       outDir: String, checkpointDir: String, m: Int = 64,
       maxRank: Int = 30,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeFragment(batch, batchId, keyCol, hashCol, outDir, m,
-            maxRank)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger) { (batch, batchId) =>
+      writeFragment(batch, batchId, keyCol, hashCol, outDir, m, maxRank)
+    }
 }

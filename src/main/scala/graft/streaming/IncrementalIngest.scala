@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    per-run extract)
   *  - stream-static semi-join against the parent table applies the
   *    delta-filter chain (gluejob.py:530-600) per micro-batch
-  *  - sink: foreachBatch → the batch path's landing ([[Ingest.land]]:
+  *  - sink: the maintenance driver ([[Commits.runBatches]]) → the
+  *    batch path's landing ([[Ingest.land]]:
   *    the micro-batch is extracted once, counted per storage partition,
   *    and upserted through Upsert.upsertPartitioned) — MERGE semantics
   *    per micro-batch with exactly the batch path's dedup, so replays
@@ -55,14 +56,9 @@ object IncrementalIngest {
         SemiJoins.semiJoinChain(raw, Seq((fk, parent, idCol)))
       case None => raw
     }
-    filtered.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Ingest.land(spark, spec, batch, outRoot, Ingest.OverwriteSink,
-          batchId = None)
-        ()
-      }
-      .start()
+    Commits.runBatches(filtered, checkpointDir, trigger) { (batch, _) =>
+      Ingest.land(spark, spec, batch, outRoot, Ingest.OverwriteSink,
+        batchId = None)
+    }
   }
 }

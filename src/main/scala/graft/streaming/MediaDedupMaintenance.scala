@@ -22,11 +22,10 @@ import org.apache.spark.sql.types._
   * (a, b) with a in batch i ≤ batch j ∋ b is discoverable only at
   * batch j, batch-internal pairs only at their own batch.
   *
-  * Delivery is exactly-once on storage by the maintenance-family
-  * discipline: fragment and pairs both write `mode(Overwrite)` into
-  * their own `batch=<batchId>` dir; checkpoints make replays
-  * batch-id-stable, and a replayed batch converges to the run-once
-  * bytes (spec-pinned).
+  * Delivery is exactly-once on storage through the maintenance driver
+  * ([[Commits.runBatches]]): fragment and pairs each overwrite their
+  * own `batch=<batchId>` dir, and a replayed batch converges to the
+  * run-once bytes (spec-pinned).
   *
   * Scale shape per batch: decode is map-only over the delta
   * payloads; the corpus-sized side is ONE scan of the stored slim
@@ -126,17 +125,11 @@ object MediaDedupMaintenance {
       checkpointDir: String, maxDist: Int = 2, chunks: Int = 4,
       trigger: Trigger = Trigger.AvailableNow(),
       mirrorAware: Boolean = false, compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val landed = processBatch(batch, batchId, storeDir, pairsDir,
-          maxDist, chunks, mirrorAware)
-        if (landed && compactEvery > 0 &&
-            (batchId + 1) % compactEvery == 0)
-          compactUnifiedStore(batch.sparkSession, storeDir)
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger,
+        Commits.Hook(compactEvery, compactUnifiedStore(_, storeDir))) {
+      (batch, batchId) => processBatch(batch, batchId, storeDir, pairsDir,
+        maxDist, chunks, mirrorAware)
+    }
 
   /** The shared per-batch landing core over PRECOMPUTED (media_id,
     * kind, dhash) fingerprints (checkpointed by the caller): banded
@@ -429,15 +422,9 @@ object MediaDedupMaintenance {
       chunks: Int = 4,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val landed = processBatchUnified(batch, batchId, storeDir,
-          pairsDir, maxDist, chunks)
-        if (landed && compactEvery > 0 &&
-            (batchId + 1) % compactEvery == 0)
-          compactUnifiedStore(batch.sparkSession, storeDir)
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger,
+        Commits.Hook(compactEvery, compactUnifiedStore(_, storeDir))) {
+      (batch, batchId) => processBatchUnified(batch, batchId, storeDir,
+        pairsDir, maxDist, chunks)
+    }
 }

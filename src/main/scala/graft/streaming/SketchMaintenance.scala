@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * one map-side-combinable aggregation into ≤ d·w cells (fragment
   * size is CONSTANT regardless of batch size), merge-on-read is a sum
   * over #batches × d·w tiny rows, and the merged sketch broadcasts to
-  * downstream estimate probes. Exactly-once by the batchId-keyed
-  * overwrite discipline shared with the other maintenance streams. */
+  * downstream estimate probes. Exactly-once through the maintenance
+  * driver ([[Commits.runBatches]]). */
 object SketchMaintenance {
 
   private def cellSchema: StructType = StructType(Seq(
@@ -28,11 +28,13 @@ object SketchMaintenance {
     StructField("cnt", LongType)))
 
   /** The idempotent unit: sketch one micro-batch and overwrite its
-    * own `batch=<batchId>` fragment. */
+    * own `batch=<batchId>` fragment; whether it held a cell
+    * ([[Commits.landFragment]]). */
   def writeFragment(batch: DataFrame, batchId: Long, textCol: String,
-      outDir: String, d: Int = 4, w: Int = 512, seed: Long = 11L): Unit =
-    TextAnalysis.countMinCells(batch, textCol, d, w, seed)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      outDir: String, d: Int = 4, w: Int = 512,
+      seed: Long = 11L): Boolean =
+    Commits.landFragment(TextAnalysis.countMinCells(batch, textCol, d, w,
+      seed), s"$outDir/batch=$batchId")
 
   /** The current corpus sketch: cell-wise sum of the live runs and
     * the committed fragments with id ≤ `upToBatch` (None =
@@ -80,13 +82,7 @@ object SketchMaintenance {
       checkpointDir: String, d: Int = 4, w: Int = 512,
       seed: Long = 11L,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeFragment(batch, batchId, textCol, outDir, d, w, seed)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger) { (batch, batchId) =>
+      writeFragment(batch, batchId, textCol, outDir, d, w, seed)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ext.SuffixDedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -19,10 +19,9 @@ import org.apache.spark.sql.types._
   * structurally exactly-once: a doc's spans are computable only at
   * its own batch (its positions exist in no other batch).
   *
-  * Delivery is exactly-once on storage by the [[AnnIndexMaintenance]]
-  * discipline: every fragment and the spans write `mode(Overwrite)`
-  * into their own `batch=<batchId>` directory and streaming
-  * checkpoints make replays batch-id-stable. A replayed batch
+  * Delivery is exactly-once on storage through the maintenance driver
+  * ([[Commits.runBatches]]): every fragment and the spans overwrite
+  * their own `batch=<batchId>` directory. A replayed batch
   * re-reads indexes that may already contain its OWN fragments; those
   * rows are excluded DATA-LEVEL — a representative is a member, so a
   * row belongs to this batch iff its representative's doc id is one
@@ -101,16 +100,19 @@ object SuffixMaintenance {
     * against the landed indexes, land its fragments and spans.
     * Replaying the same (batch, batchId) overwrites every directory
     * with identical bytes. `idCol` must be a unique long across the
-    * stream. */
+    * stream. Returns whether it landed: a batch without ids (the
+    * observed count of the id cut) writes no directory. */
   def processBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, indexDir: String, spansDir: String,
-      spanLen: Int = 12): Unit = {
+      spanLen: Int = 12): Boolean = {
     val spark = batch.sparkSession
     val h = 63 - java.lang.Long.numberOfLeadingZeros(spanLen.toLong)
+    val cut = new Observation()
     val batchIds = batch
       .select(col(idCol).cast("long").as("_bid")).distinct()
+      .observe(cut, count(lit(1)).as("n"))
       .localCheckpoint()
-    try {
+    try cut.get("n") != 0L && {
       val idx0 = excludeOwn(
         readFrags(spark, s"$indexDir/r0", r0Schema), "_br", batchIds)
       val idxKs = (1 to h.toInt).map(k => excludeOwn(
@@ -145,6 +147,7 @@ object SuffixMaintenance {
       } finally outs.foreach(
         org.apache.spark.sql.graftbridge.ColumnBridge
           .unpersistLocalCheckpoint)
+      true
     } finally {
       org.apache.spark.sql.graftbridge.ColumnBridge
         .unpersistLocalCheckpoint(batchIds)
@@ -170,17 +173,9 @@ object SuffixMaintenance {
       spanLen: Int = 12,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, textCol, idCol, indexDir,
-            spansDir, spanLen)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactStores(batch.sparkSession, indexDir, spansDir,
-              spanLen)
-        }
-      }
-      .start()
+    Commits.runBatches(source, checkpointDir, trigger, Commits.Hook(
+        compactEvery, compactStores(_, indexDir, spansDir, spanLen))) {
+      (batch, batchId) => processBatch(batch, batchId, textCol, idCol,
+        indexDir, spansDir, spanLen)
+    }
 }
