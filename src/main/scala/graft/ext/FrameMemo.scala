@@ -14,14 +14,18 @@ import org.apache.spark.sql.DataFrame
   * cardinality scales with corpus duplication, not with a
   * hyper-parameter).
   *
-  * So the cached value is a `localCheckpoint`ed DataFrame —
-  * materialized once in executor block storage, replayed by
-  * reference on every hit. Unlike [[TrainMemo]] the entry is bound
-  * to its SparkSession (a checkpoint does not survive session
-  * teardown), so the key adds session identity; [[clear]] unpersists
-  * eagerly. Same soundness contract as TrainMemo: inputs immutable
-  * for the life of the session — a corpus-rewriting service must
-  * clear between generations.
+  * So the cached value is an eager [[LocalCheckpoint.cut]] — the
+  * engine's one cut primitive, unscoped here because the entry
+  * outlives the call — materialized once in executor block storage,
+  * replayed by reference on every hit; [[clear]] frees each entry
+  * with [[LocalCheckpoint.release]]. This is session-level result
+  * reuse (Incremental Based Framework for Efficient Top-K Similarity
+  * Search in Interactive Data Analysis Sessions, EDBT 2020). Unlike
+  * [[TrainMemo]] the entry is bound to its SparkSession (a
+  * checkpoint does not survive session teardown), so the key adds
+  * session identity. Same soundness contract as TrainMemo: inputs
+  * immutable for the life of the session — a corpus-rewriting
+  * service must clear between generations.
   *
   * Storage discipline: cache ONLY frames that are small relative to
   * their input by construction (spans, merge tables, per-key
@@ -55,8 +59,7 @@ object FrameMemo {
   /** Unpersist every cached checkpoint and forget it. */
   def clear(): Unit = {
     cache.values().forEach { df =>
-      try org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint(df)
+      try LocalCheckpoint.release(df)
       catch { case _: Exception => () } // session already stopped
     }
     cache.clear()
@@ -64,7 +67,7 @@ object FrameMemo {
 
   /** The memoized frame for (`params`, `input`'s canonicalized plan,
     * `input`'s session): on miss, runs the derivation and cuts it
-    * with an eager localCheckpoint; on hit, returns the materialized
+    * with [[LocalCheckpoint.cut]]; on hit, returns the materialized
     * frame — zero cluster work. */
   def cached(params: String, input: DataFrame)
       (run: => DataFrame): DataFrame = {
@@ -72,7 +75,7 @@ object FrameMemo {
       System.identityHashCode(input.sparkSession))
     cache.computeIfAbsent(key, _ => {
       computes.incrementAndGet()
-      run.localCheckpoint()
+      LocalCheckpoint.cut(run)
     })
   }
 }

@@ -2717,14 +2717,12 @@ object SnapshotTable {
     // (possibly widened) types first, so survivors union type-exact.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key)).orderBy(seqCols.map(col(_).desc): _*)
-    val collapsed = conformTo(delta, newSchema)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-      .localCheckpoint()
-    // EVERYTHING after the checkpoint runs under its finally — a
+    // EVERYTHING after the checkpoint runs inside its scope — a
     // refusal in the touched collect or the partition-key render
     // (empty feed, null partition value) must not leak the blocks
-    try {
+    graft.ext.LocalCheckpoint.within(conformTo(delta, newSchema)
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")) { collapsed =>
       // touched partitions + FEED HYGIENE in one pass (the census
       // rides the same job the touched collect always was): a NULL op
       // value would silently behave as a delete (the upsert filter
@@ -2782,8 +2780,7 @@ object SnapshotTable {
       writeAndCommit(spark, dir, survivors,
         (key +: statsCols).distinct, partCols, batchId, kept,
         newSchema.toDDL, maxRowsPerTask, est, head, ref = branch)
-    } finally org.apache.spark.sql.graftbridge.ColumnBridge
-      .unpersistLocalCheckpoint(collapsed)
+    }
   }
 
   /** OPTIMIZE: rewrite the head's content into fresh compacted

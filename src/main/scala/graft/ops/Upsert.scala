@@ -1,11 +1,11 @@
 package graft.ops
 
+import graft.ext.LocalCheckpoint
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Idempotent partitioned upsert (reference: gluejob.py:173-205).
   *
@@ -66,28 +66,27 @@ object Upsert {
           ExternalCatalogUtils.getPartitionPathString(partCols(i),
             Option(r.get(i)).map(_.toString).orNull)).mkString("/")))
         .filter(fs.exists)
-    // A lazy localCheckpoint truncates lineage so the write below does
-    // not overwrite a path its own plan is still reading (Spark rejects
-    // that). It costs no job of its own: the write's first stage fills
-    // it, and dynamic overwrite replaces dirs only at job commit.
-    val existing = Option.when(dirs.nonEmpty)(
-      spark.read.schema(delta.schema).option("basePath", path)
-        .parquet(dirs.map(_.toString): _*)
-        .select(delta.columns.map(col): _*).localCheckpoint(eager = false))
-    val merged = merge(delta, existing.getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], delta.schema)), key, tieBreak)
-
     // one write task per storage partition (no small-file spray from the
     // merge window's hash partitioning), bounded file sizes for the
     // scan-side at scale
-    try merged.repartition(partCols.map(col): _*)
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", 5000000L)
-      .partitionBy(partCols: _*)
-      .parquet(path)
-    finally existing.foreach(ColumnBridge.unpersistLocalCheckpoint)
+    def write(existing: DataFrame): Unit =
+      merge(delta, existing, key, tieBreak)
+        .repartition(partCols.map(col): _*)
+        .write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "snappy")
+        .option("maxRecordsPerFile", 5000000L)
+        .partitionBy(partCols: _*)
+        .parquet(path)
+    // A lazy cut truncates lineage so the write does not overwrite a
+    // path its own plan is still reading (Spark rejects that). It costs
+    // no job and opens no action of its own: the write's first stage
+    // fills it, and dynamic overwrite replaces dirs only at job commit.
+    if (dirs.isEmpty) write(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], delta.schema))
+    else LocalCheckpoint.lazily(spark.read.schema(delta.schema)
+      .option("basePath", path).parquet(dirs.map(_.toString): _*)
+      .select(delta.columns.map(col): _*))(write)
   }
 }

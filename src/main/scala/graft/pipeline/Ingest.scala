@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ext.LocalCheckpoint
 import graft.ops.{Normalize, PartitionKeys, SnapshotTable, Upsert}
 import graft.schema.{TableSpec, Tables}
 import graft.sources.CsvSource
@@ -7,7 +8,6 @@ import graft.state.WatermarkStore
 import graft.streaming.Commits
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Flow dispatch + per-table orchestration (reference: gluejob.py:141-171,
   * 306-327, 602-627; README.md:6-17).
@@ -25,7 +25,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *
   * Each table's delta is extracted ONCE, like the reference's in-memory
   * frame (gluejob.py:264-280): the filtered, normalized delta is cut
-  * (`localCheckpoint`) and the first job over the cut counts its rows
+  * lazily ([[LocalCheckpoint.lazily]], which opens no action of its
+  * own) and the first job over the cut counts its rows
   * per storage partition. No counts means an empty delta; otherwise the
   * sink reads the cut and takes the counts, so every decision and the
   * write see the same rows (in production each evaluation would be a
@@ -87,10 +88,8 @@ object Ingest {
       raw: DataFrame, outRoot: String, sink: Sink,
       batchId: Option[Long]): Boolean = {
     val partCols = Seq("company", "year", "month")
-    val delta = PartitionKeys.withCompanyYearMonth(
-        Normalize.toBronze(raw, spec), spec.dateCol)
-      .localCheckpoint(eager = false)
-    try {
+    LocalCheckpoint.lazily(PartitionKeys.withCompanyYearMonth(
+        Normalize.toBronze(raw, spec), spec.dateCol)) { delta =>
       val touched = PartitionKeys.touchedCounts(delta, partCols)
       if (touched.nonEmpty) sink match {
         case OverwriteSink =>
@@ -104,7 +103,7 @@ object Ingest {
             touchedCounts = Some(touched))
       }
       touched.nonEmpty
-    } finally ColumnBridge.unpersistLocalCheckpoint(delta)
+    }
   }
 
   /** Initial CSV load: no watermark filter, no watermark advance

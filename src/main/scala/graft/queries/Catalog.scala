@@ -8644,11 +8644,9 @@ object Catalog {
         // and _sb probe sides), and the joins carry no broadcast
         // hint: AQE sees the checkpoint's actual size at runtime and
         // picks broadcast when it fits, shuffle join when it doesn't.
-        val suspect = docLedger.select(col("doc_id"))
-          .unionByName(hotDocs).distinct()
-          .withColumn("_s", lit(true))
-          .localCheckpoint()
-        try {
+        graft.ext.LocalCheckpoint.within(docLedger.select(col("doc_id"))
+            .unionByName(hotDocs).distinct()
+            .withColumn("_s", lit(true))) { suspect =>
         val out = img.join(txt.select(col("doc_a"), col("doc_b")),
             Seq("doc_a", "doc_b"), "left_anti")
           .join(suspect.select(col("doc_id").as("doc_a"),
@@ -8662,8 +8660,7 @@ object Catalog {
         // count — collect it local BEFORE releasing the cache txt
         // still reads from (no cached blocks outlive the query)
         s.createDataFrame(out.collectAsList(), out.schema)
-        } finally org.apache.spark.sql.graftbridge.ColumnBridge
-          .unpersistLocalCheckpoint(suspect)
+        }
         } finally outs.release()
       } finally { fps.unpersist(); () }
     },

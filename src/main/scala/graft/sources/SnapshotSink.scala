@@ -1,9 +1,9 @@
 package graft.sources
 
+import graft.ext.LocalCheckpoint
 import graft.ops.{PartitionKeys, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.sources.StreamSinkProvider
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -52,7 +52,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * receive-a-DataFrame contract expresses exactly — a DSv2
   * per-executor `DataWriter` cannot plan a join, let alone a commit
   * protocol. The batch frame detaches from the stream's
-  * IncrementalExecution through [[ColumnBridge.asBatchFrame]]. */
+  * IncrementalExecution through its lazy cut
+  * ([[LocalCheckpoint.lazily]]), built over the compiled batch RDD. */
 class SnapshotSink extends StreamSinkProvider {
 
   override def createSink(ctx: SQLContext,
@@ -95,8 +96,7 @@ class SnapshotSink extends StreamSinkProvider {
         val spark = data.sparkSession
         // cut once, lazily: the touched-partition count evaluates the
         // batch plan, and the merge reads the cut
-        val df = ColumnBridge.asBatchFrame(data).localCheckpoint(eager = false)
-        try {
+        LocalCheckpoint.lazily(data) { df =>
           val touched = PartitionKeys.touchedCounts(df, parts)
           // no rows: nothing to commit, nothing to replay
           if (touched.nonEmpty) {
@@ -111,7 +111,7 @@ class SnapshotSink extends StreamSinkProvider {
                   touchedCounts = Some(touched))
             }
           }
-        } finally ColumnBridge.unpersistLocalCheckpoint(df)
+        }
       }
       override def toString: String = s"graft-snapshot-sink($dir)"
     }

@@ -4,6 +4,7 @@ import graft.ext.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 /** Streaming ANN index maintenance — the composition of
   * [[graft.ext.Similarity.ivfPqUpsertIndex]]'s frozen-state fragment
@@ -58,6 +59,19 @@ object AnnIndexMaintenance {
         vecCol, codebook, cents, nSub, dim),
       s"$indexDir/batch=$batchId", partitionBy = Seq("cell"))
 
+  /** The stored index's one schema: `n_id` and `codes` as
+    * [[graft.ext.Similarity.ivfPqIndexFragment]] writes them, `cell`
+    * as partition discovery infers it. Reads name it rather than
+    * infer each root, so an empty partitioned fragment (only
+    * `_SUCCESS`) reads as no rows instead of failing inference. */
+  private val indexSchema: StructType = StructType(Seq(
+    StructField("n_id", LongType),
+    StructField("codes", ArrayType(IntegerType)),
+    StructField("cell", IntegerType)))
+
+  private def readRoot(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(indexSchema).option("basePath", root).parquet(root)
+
   /** The probeable index: live compacted RUNS plus committed
     * `batch=` fragments newer than the folded mark, each root read
     * with itself as `basePath` so `cell` stays a DISCOVERED partition
@@ -71,8 +85,7 @@ object AnnIndexMaintenance {
     require(roots.nonEmpty,
       s"ANN index at $indexDir has no committed fragments — was " +
         "writeBase run?")
-    roots.map(r =>
-      spark.read.option("basePath", r).parquet(r)
+    roots.map(readRoot(spark, _)
         .select(col("n_id"), col("cell"), col("codes")))
       .reduce(_.unionByName(_))
   }
@@ -88,9 +101,7 @@ object AnnIndexMaintenance {
   def compactIndex(spark: SparkSession, indexDir: String,
       maxRuns: Int = 4): Unit =
     Commits.tieredCompact(spark, indexDir, (inputs, out) =>
-      inputs.map(in =>
-        spark.read.option("basePath", in).parquet(in)
-          .select(col("n_id"), col("codes"), col("cell")))
+      inputs.map(readRoot(spark, _))
         .reduce(_.unionByName(_))
         // explicit count: a bare repartition(cell) AQE-coalesces a
         // small fold into one task that writes every cell dir

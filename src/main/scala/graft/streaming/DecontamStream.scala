@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ext.Dedup
+import graft.ext.{Dedup, LocalCheckpoint}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -23,11 +23,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object DecontamStream {
 
   /** The benchmark's distinct gram set, derived once and materialized
-    * (localCheckpoint) so per-batch probes replay the checkpoint
-    * instead of re-shingling the benchmark. */
+    * ([[LocalCheckpoint.cut]]) so per-batch probes replay the
+    * checkpoint instead of re-shingling the benchmark. */
   def gramIndex(benchmark: DataFrame, textCol: String,
       n: Int = 3): DataFrame =
-    Dedup.gramKeySet(benchmark, textCol, n).localCheckpoint()
+    LocalCheckpoint.cut(Dedup.gramKeySet(benchmark, textCol, n))
 
   /** The idempotent unit: score one micro-batch against the gram set
     * and overwrite its own `batch=<batchId>` directory; whether it

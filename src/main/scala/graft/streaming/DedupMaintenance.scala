@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.ext.Dedup
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import graft.ext.{Dedup, LocalCheckpoint}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -87,17 +87,13 @@ object DedupMaintenance {
       numPerms: Int = 16, rowsPerBand: Int = 4, threshold: Double = 0.5,
       seed: Long = 42L): Boolean = {
     val spark = batch.sparkSession
-    val indexed = new Observation()
-    val deltaIdx = Dedup.minHashDocIndex(batch, textCol, idCol, n,
-      numPerms, rowsPerBand, seed)
-      .observe(indexed, count(lit(1)).as("n"))
-      // the fragment is consumed twice below (pairs join + landing)
-      // and the pairs join reads it band-exploded twice — cut it
-      // rather than re-shingle the batch per consumer; released
-      // before return, so nothing outlives the micro-batch
-      .localCheckpoint()
-    try {
-      if (indexed.get("n") == 0L) false
+    // the fragment is consumed twice below (pairs join + landing)
+    // and the pairs join reads it band-exploded twice — cut it
+    // rather than re-shingle the batch per consumer; released
+    // before return, so nothing outlives the micro-batch
+    LocalCheckpoint.counted(Dedup.minHashDocIndex(batch, textCol, idCol,
+        n, numPerms, rowsPerBand, seed)) { (deltaIdx, rows) =>
+      if (rows == 0L) false
       else {
         // exclude this batch's own rows on replay: the fresh delta
         // index IS those rows, and the pair plan requires id-disjoint
@@ -115,9 +111,6 @@ object DedupMaintenance {
             .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")))
         true
       }
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint(deltaIdx)
     }
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.ext.{Dedup, Images, Multimodal}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, shiftleft}
+import graft.ext.{Dedup, Images, LocalCheckpoint, Multimodal}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, shiftleft}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -92,18 +92,14 @@ object MediaDedupMaintenance {
     // decode ONCE: the fingerprint frame feeds every downstream
     // consumer from one checkpoint; released before return
     val payloads = batch.select(col("media_id"), col("payload"))
-    val decoded = new Observation()
-    val deltaFp = (if (mirrorAware)
+    LocalCheckpoint.counted((if (mirrorAware)
         Images.dHashesBothOrientations(spark, payloads)
       else Images.dHashes(spark, payloads))
-      .withColumn("kind", lit("image"))
-      .observe(decoded, count(lit(1)).as("n"))
-      .localCheckpoint()
-    try {
+      .withColumn("kind", lit("image"))) { (deltaFp, rows) =>
       // emptiness from the checkpoint job's own row count: an empty
       // batch costs one empty decode job and no other, a non-empty
       // one no emptiness job at all
-      if (decoded.get("n") == 0L) false
+      if (rows == 0L) false
       else {
         landBatchFps(deltaFp, batchId, storeDir, pairsDir, maxDist,
           chunks, finishPairs = raw => {
@@ -112,9 +108,6 @@ object MediaDedupMaintenance {
           })
         true
       }
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint(deltaFp)
     }
   }
 
@@ -387,24 +380,18 @@ object MediaDedupMaintenance {
     // 2-3× slower per batch (the shuffle-through-checkpoint shape
     // serializes the batch's job pipeline) — keep the checkpoint at
     // the slim pre-explode frame.
-    val decoded = new Observation()
-    val deltaFp = Multimodal.unifiedFingerprints(spark,
+    LocalCheckpoint.counted(Multimodal.unifiedFingerprints(spark,
         batch.select(col("media_id"), col("payload")))
       .select(col("media_id"), col("kind"),
-        col("fp_lo").bitwiseOR(shiftleft(col("fp_hi"), 32)).as("dhash"))
-      .observe(decoded, count(lit(1)).as("n"))
-      .localCheckpoint()
-    try {
-      // emptiness from the checkpoint job's row count — see processBatch
-      if (decoded.get("n") == 0L) false
-      else {
-        landBatchFps(deltaFp, batchId, storeDir, pairsDir, maxDist,
-          chunks, finishPairs = identity)
-        true
-      }
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint(deltaFp)
+        col("fp_lo").bitwiseOR(shiftleft(col("fp_hi"), 32)).as("dhash"))) {
+      (deltaFp, rows) =>
+        // emptiness from the checkpoint job's row count — see processBatch
+        if (rows == 0L) false
+        else {
+          landBatchFps(deltaFp, batchId, storeDir, pairsDir, maxDist,
+            chunks, finishPairs = identity)
+          true
+        }
     }
   }
 

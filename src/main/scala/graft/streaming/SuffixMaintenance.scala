@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.ext.SuffixDedup
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import graft.ext.{LocalCheckpoint, SuffixDedup}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -107,50 +107,44 @@ object SuffixMaintenance {
       spanLen: Int = 12): Boolean = {
     val spark = batch.sparkSession
     val h = 63 - java.lang.Long.numberOfLeadingZeros(spanLen.toLong)
-    val cut = new Observation()
-    val batchIds = batch
-      .select(col(idCol).cast("long").as("_bid")).distinct()
-      .observe(cut, count(lit(1)).as("n"))
-      .localCheckpoint()
-    try cut.get("n") != 0L && {
-      val idx0 = excludeOwn(
-        readFrags(spark, s"$indexDir/r0", r0Schema), "_br", batchIds)
-      val idxKs = (1 to h.toInt).map(k => excludeOwn(
-        readFrags(spark, s"$indexDir/r$k", rkSchema), "_brn", batchIds))
-      // fin must be unique per key for the delta join: fragments are
-      // disjoint by construction (only unseen keys land), but replay
-      // hygiene aggregates anyway
-      val fin = excludeOwn(
-        readFrags(spark, s"$indexDir/fin", finSchema), "_bkeep", batchIds)
-        .groupBy(col("_r"), col("_k2"))
-        .agg(min(col("_bkeep")).as("_bkeep"))
-      val (dups, frag0, fragKs, fragFin) = SuffixDedup.deltaAgainstIndex(
-        batch, textCol, idCol, spanLen, idx0, idxKs, fin)
-      // materialize EVERY output before the first overwrite: on replay
-      // the lazy chains read this batch's own stale fragment files,
-      // and overwriting those directories mid-job would yank files out
-      // from under the later writes' scans (FAILED_READ_FILE). Eager
-      // local checkpoints sever the lineage first; all are
-      // batch-sized, and all are released before return.
-      val outs = (SuffixDedup.spansOf(dups, idCol, spanLen)
-        +: frag0 +: fragKs :+ fragFin).map(_.localCheckpoint())
-      try {
-        val spans +: f0 +: rest = outs: @unchecked
-        spans.write.mode("overwrite").parquet(s"$spansDir/batch=$batchId")
-        f0.write.mode("overwrite").parquet(s"$indexDir/r0/batch=$batchId")
-        rest.init.zipWithIndex.foreach { case (f, i) =>
-          f.write.mode("overwrite")
-            .parquet(s"$indexDir/r${i + 1}/batch=$batchId")
+    LocalCheckpoint.counted(batch
+        .select(col(idCol).cast("long").as("_bid")).distinct()) {
+      (batchIds, rows) => rows != 0L && {
+        val idx0 = excludeOwn(
+          readFrags(spark, s"$indexDir/r0", r0Schema), "_br", batchIds)
+        val idxKs = (1 to h.toInt).map(k => excludeOwn(
+          readFrags(spark, s"$indexDir/r$k", rkSchema), "_brn", batchIds))
+        // fin must be unique per key for the delta join: fragments are
+        // disjoint by construction (only unseen keys land), but replay
+        // hygiene aggregates anyway
+        val fin = excludeOwn(
+          readFrags(spark, s"$indexDir/fin", finSchema), "_bkeep", batchIds)
+          .groupBy(col("_r"), col("_k2"))
+          .agg(min(col("_bkeep")).as("_bkeep"))
+        val (dups, frag0, fragKs, fragFin) = SuffixDedup.deltaAgainstIndex(
+          batch, textCol, idCol, spanLen, idx0, idxKs, fin)
+        // materialize EVERY output before the first overwrite: on replay
+        // the lazy chains read this batch's own stale fragment files,
+        // and overwriting those directories mid-job would yank files out
+        // from under the later writes' scans (FAILED_READ_FILE). Eager
+        // local checkpoints, nested in output order, sever the lineage
+        // first; all are batch-sized, and all are released before return.
+        val outs = (SuffixDedup.spansOf(dups, idCol, spanLen) -> spansDir) ::
+          (frag0 -> s"$indexDir/r0") :: fragKs.toList.zipWithIndex.map {
+            case (f, i) => f -> s"$indexDir/r${i + 1}" } :::
+          List(fragFin -> s"$indexDir/fin")
+        def cutAll(dfs: List[DataFrame])(land: List[DataFrame] => Unit)
+            : Unit = dfs match {
+          case f :: more =>
+            LocalCheckpoint.within(f)(c => cutAll(more)(cs => land(c :: cs)))
+          case Nil => land(Nil)
         }
-        rest.last.write.mode("overwrite")
-          .parquet(s"$indexDir/fin/batch=$batchId")
-      } finally outs.foreach(
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .unpersistLocalCheckpoint)
-      true
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistLocalCheckpoint(batchIds)
+        cutAll(outs.map(_._1))(_.zip(outs.map(_._2)).foreach {
+          case (c, dir) =>
+            c.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+        })
+        true
+      }
     }
   }
 

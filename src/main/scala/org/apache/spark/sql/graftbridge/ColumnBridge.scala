@@ -94,21 +94,21 @@ object ColumnBridge {
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
-  /** The INVERSE of [[asStreamingFrame]]: detach a V1 streaming
-    * sink's per-batch DataFrame from its IncrementalExecution so the
-    * multi-action commit protocols (merge's profile + write + stats
-    * passes) can re-execute it freely — `addBatch` hands a frame
-    * whose plan belongs to the running MicroBatchExecution, and
-    * re-planning THAT through a second action is undefined; the
-    * compiled per-batch RDD, re-wrapped as a plain batch frame, is
-    * exactly how Spark's own V1 sink consumers detach. Lazy — no job
-    * runs here. */
-  def asBatchFrame(df: org.apache.spark.sql.DataFrame)
+  /** A LAZY local checkpoint of `df`: its compiled RDD, marked for a
+    * local checkpoint, under a LogicalRDD that carries the origin
+    * plan's stats and constraints — what `Dataset.localCheckpoint(
+    * eager = false)` builds, made without its `withAction`, so no SQL
+    * execution opens, no query listener fires and no job runs here.
+    * The first job that reads the result fills its blocks. The RDD is
+    * the plan compiled once, so a stream sink's per-batch frame
+    * detaches from its IncrementalExecution through it too. */
+  def lazyLocalCheckpoint(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
+    rdd.localCheckpoint()
+    ofRows(ds.sparkSession, org.apache.spark.sql.execution.LogicalRDD
+      .fromDataset(rdd, ds, isStreaming = false))
   }
 
   /** A KEYED localCheckpoint: lay `df` out by `keys` (an explicit

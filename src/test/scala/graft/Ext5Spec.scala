@@ -126,6 +126,28 @@ class IvfUpsertIndexSpec extends SparkSpec {
     assert(spark.read.parquet(indexDir).count() == once.size)
   }
 
+  test("readIndex reads an empty partitioned fragment (only _SUCCESS) " +
+      "as no rows, not as a schema-inference failure") {
+    val cb = conventionCodebook(emb)
+    val cents = Similarity.coarseCentroids(
+      emb.filter(col("vec_id") < 300), "vec_id", "embedding", 16)
+    val indexDir = tmpDir("annempty")
+    def fragment(df: DataFrame) = Similarity.ivfPqIndexFragment(df,
+      "vec_id", "embedding", cb, cents)
+    fragment(emb.filter(col("vec_id") < 50)).write.partitionBy("cell")
+      .parquet(s"$indexDir/batch=0")
+    fragment(emb.filter(lit(false))).write.partitionBy("cell")
+      .parquet(s"$indexDir/batch=1")
+    val empty = new java.io.File(s"$indexDir/batch=1").list().toSeq
+      .filterNot(_.startsWith("."))
+    assert(empty == Seq("_SUCCESS"), empty)
+    def keyed(df: DataFrame) = collectSet(df.select(col("n_id"),
+      col("cell").cast("long"), concat_ws(",", col("codes"))))
+    val read = graft.streaming.AnnIndexMaintenance.readIndex(spark, indexDir)
+    assert(keyed(read) == keyed(spark.read.parquet(s"$indexDir/batch=0")))
+    assert(read.count() == 50L)
+  }
+
   test("farthest-first seeding: spread seeds, strictly lower quantization error than first-k on a clustered fixture") {
     import spark.implicits._
     // adversarial for first-k: ids 0..3 all sit in cluster A; clusters
