@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.state.Claims
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -116,21 +117,19 @@ import org.apache.spark.sql.types._
   *    rewrites ([[optimize]], [[repartitionTable]], [[renameColumn]])
   *    keep the single-writer discipline with a violation made LOUD:
   *    the commit refuses if `_snap.<ver>` already exists before its
-  *    rename, claims the version with a NO-CLOBBER rename, and
-  *    re-reads the manifest after the rename requiring its own bytes.
+  *    claim, claims the version, and re-reads the manifest after the
+  *    claim requiring its own bytes.
   *  - Across PROCESSES the version CLAIM is the filesystem's own:
-  *    the commit renames through [[org.apache.hadoop.fs.FileContext]]
-  *    WITHOUT `Options.Rename.OVERWRITE`, which refuses an existing
-  *    destination — ATOMICALLY on HDFS-class stores (the namenode
-  *    picks exactly one winner; this is the `FileContext` rename
-  *    contract Delta's HDFS LogStore publishes), check-then-rename on
-  *    the local filesystem (the window shrinks to the syscall gap).
-  *    A cross-process loser surfaces as the same retryable conflict
-  *    the in-JVM monitor raises, so [[merge]] rebases across
-  *    processes too. The post-rename read-back stays as
-  *    defense-in-depth for stores whose rename can still clobber
-  *    (raw object stores without a rename primitive) — only THERE is
-  *    the protection best-effort detection rather than a claim. */
+  *    every manifest and ref commits through [[graft.state.Claims]]
+  *    (per-attempt tmp, then the no-clobber `FileContext` rename —
+  *    atomic on HDFS-class stores, check-then-rename on the local
+  *    filesystem). A cross-process loser surfaces as the same typed
+  *    [[graft.state.Claims.Conflict]] the in-JVM monitor raises, so
+  *    [[merge]] rebases across processes too. The post-claim
+  *    read-back stays as defense-in-depth for stores whose rename can
+  *    still clobber (raw object stores without a rename primitive) —
+  *    only THERE is the protection best-effort detection rather than a
+  *    claim. */
 object SnapshotTable {
 
   /** Per-file, PER-COLUMN bounds inside an entry's dir (`name` is the
@@ -232,31 +231,6 @@ object SnapshotTable {
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Per-filesystem [[org.apache.hadoop.fs.FileContext]] cache:
-    * FileContext is thread-safe, but unlike `FileSystem.get` Hadoop
-    * does NOT cache its AbstractFileSystem — every `getFileContext`
-    * pays a reflective construction, which on the per-commit paths
-    * (version claim, head pointer) would tax every merge. One
-    * instance per (scheme, authority) per JVM, the commitLocks
-    * discipline. CAVEAT (deliberate, mirrors `FileSystem.get`'s own
-    * cache): the instance binds the Hadoop configuration seen at
-    * FIRST use per filesystem — credential/endpoint changes made to
-    * the session conf afterwards do not reach the commit paths. A
-    * deployment that rotates per-session conf should key this cache
-    * on a config fingerprint; none of this engine's paths do. */
-  private val fileContexts = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.hadoop.fs.FileContext]()
-
-  private def fcOf(spark: SparkSession,
-      p: Path): org.apache.hadoop.fs.FileContext = {
-    val u = p.toUri
-    val key = Option(u.getScheme).getOrElse("") + "://" +
-      Option(u.getAuthority).getOrElse("")
-    fileContexts.computeIfAbsent(key,
-      _ => org.apache.hadoop.fs.FileContext.getFileContext(u,
-        spark.sparkContext.hadoopConfiguration))
-  }
 
   /** Nullability-normalized type (containers forced nullable,
     * recursively) — `toDDL`/`fromDDL` loses `containsNull`-class
@@ -445,38 +419,6 @@ object SnapshotTable {
       .parquet(dest)
   }
 
-  /** Atomically CLAIM a version: rename `tmp` onto `dst` refusing an
-    * existing destination — [[org.apache.hadoop.fs.FileContext]]
-    * without `Options.Rename.OVERWRITE`, the portable no-clobber
-    * rename (atomic on HDFS-class stores, check-then-rename on the
-    * local FS — object doc, tier 3). A claim lost to a racer raises
-    * the same retryable conflict the in-JVM monitor does (and sweeps
-    * our staging); any OTHER rename failure (permissions, quota, fs
-    * fault) propagates as the IOException it is — retrying a
-    * persistent failure would recompute the full merge
-    * [[MaxCommitAttempts]] times and then blame a writer that never
-    * existed. Package-private so the spec can drive the exact
-    * cross-client interleaving (two writers past the exists check,
-    * both staged, both renaming) that the in-JVM monitor makes
-    * unreachable through merge(). */
-  private[graft] def claimVersion(spark: SparkSession, tmp: Path,
-      dst: Path): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fc = fcOf(spark, dst)
-    try fc.rename(tmp, dst) // Options.Rename.NONE: no-clobber
-    catch {
-      case e: java.io.IOException =>
-        val fs = dst.getFileSystem(conf)
-        if (fs.exists(dst)) {
-          fs.delete(tmp, false) // our staging lost; reclaim eagerly
-          throw new IllegalArgumentException(
-            s"snapshot manifest $dst already exists — a concurrent " +
-              s"writer committed this version first " +
-              s"(${e.getClass.getSimpleName})", e)
-        } else throw e
-    }
-  }
-
   /** Serialize the entry lines (`entry=`/`stat=`/`fstat=`/`dv=`) for
     * `entries`, indices into THEIR OWN sorted order — a full
     * manifest's whole inventory, or a delta manifest's added set. */
@@ -549,7 +491,7 @@ object SnapshotTable {
       entryLines(entries, statsKeys)).mkString("\n")
 
   /** Commit a manifest: refuse if the destination version already
-    * exists, tmp write, no-clobber rename ([[claimVersion]] — the
+    * exists, then claim it ([[graft.state.Claims.claim]] — the
     * filesystem picks exactly one winner per version), then READ BACK
     * and require our own bytes (defense-in-depth for stores whose
     * rename can clobber — see the object doc's concurrency tiers),
@@ -588,15 +530,10 @@ object SnapshotTable {
       s"stats columns must be distinct, comma/space-free names: " +
         statsKeys.mkString(", "))
     val fs = fsOf(spark, dir)
-    // tmp name unique per ATTEMPT (not per version): two in-JVM racers
-    // at the same version must never overwrite each other's staging
-    // bytes; stale attempts sweep as *.tmp in [[vacuum]]
     // a branch commit claims in its own namespace (`_bsnap.<name>.<v>`)
     // — invisible to main's resolution until fastForward adopts it
-    val mname = ref.fold(s"_snap.$newVer")(b => s"_bsnap.$b.$newVer")
-    val tmp = new Path(dir,
-      s"$mname.${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-    val dst = new Path(dir, mname)
+    val dst = new Path(dir,
+      ref.fold(s"_snap.$newVer")(b => s"_bsnap.$b.$newVer"))
     val body = base match {
       case Some(b) if b.ver == newVer - 1 && b.ver > 0 &&
           b.depth + 1 < ManifestCheckpointEvery =>
@@ -624,20 +561,11 @@ object SnapshotTable {
     val lock = commitLocks.computeIfAbsent(lockKey(spark, dir),
       _ => new Object)
     lock.synchronized {
-      require(!fs.exists(dst),
+      if (fs.exists(dst)) throw new Claims.Conflict(
         s"snapshot manifest $dst already exists — a concurrent writer " +
           "committed this version first")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      claimVersion(spark, tmp, dst)
-      val in = fs.open(dst)
-      val back =
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-          new String(bos.toByteArray, "UTF-8")
-        } finally in.close()
-      require(back == body,
+      Claims.claim(spark, dst, body)
+      if (Claims.read(fs, dst) != body) throw new Claims.Conflict(
         s"snapshot manifest $dst was replaced by a concurrent writer — " +
           "cross-process commits are best-effort detection; the other " +
           "commit won")
@@ -648,18 +576,11 @@ object SnapshotTable {
   }
 
   private def writeHeadPointer(spark: SparkSession, dir: String,
-      ver: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir,
-      s"_head.${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(ver.toString.getBytes("UTF-8")) finally out.close()
-    fcOf(spark, tmp).rename(tmp, new Path(dir, "_head"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      ver: Long): Unit =
+    Claims.replace(spark, new Path(dir, "_head"), ver.toString)
 
   /** Advance the advisory `_head` pointer (Delta's `_last_checkpoint`
-    * shape): tmp write + overwrite rename, BEST-EFFORT — a crash (or
+    * shape): a [[graft.state.Claims.replace]], BEST-EFFORT — a crash (or
     * an out-of-order cross-process landing) leaves it lagging, and
     * [[headVersion]] probes forward from whatever it reads, so the
     * pointer only ever has to be close, never exact. Failures are
@@ -689,16 +610,7 @@ object SnapshotTable {
       try {
         val p = new Path(dir, "_head")
         if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val text =
-            try {
-              val bos = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 256, false)
-              new String(bos.toByteArray, "UTF-8").trim
-            } finally in.close()
-          text.toLongOption
-        }
+        else Claims.read(fs, p).trim.toLongOption
       } catch { case _: java.io.IOException => None }
     ptr.filter(v => fs.exists(new Path(dir, s"_snap.$v"))) match {
       case Some(v) =>
@@ -711,17 +623,6 @@ object SnapshotTable {
         vs.max
     }
   }
-
-  /** True for the refusals a LOSING optimistic writer raises at
-    * commit time — the retryable class: the table advanced under us;
-    * re-resolve and recompute. Schema/partitioning/null refusals are
-    * NOT in it (retrying cannot fix a contract violation), and
-    * neither is a rename that failed WITHOUT the destination
-    * appearing (permissions, quota — [[claimVersion]] lets those
-    * propagate as IOExceptions, which this filter never sees). */
-  private def isCommitConflict(e: IllegalArgumentException): Boolean =
-    e.getMessage != null && (e.getMessage.contains("already exists") ||
-      e.getMessage.contains("replaced by a concurrent writer"))
 
   /** The staged version dirs live `_inflight.<verDir>` markers
     * protect (see writeAndCommit's marker) — the STORE-PORTABLE
@@ -747,14 +648,8 @@ object SnapshotTable {
   }
 
   /** All committed versions, ascending (empty = no table yet). */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = fsOf(spark, dir)
-    val root = new Path(dir)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("_snap.") && !n.endsWith(".tmp"))
-      .flatMap(_.stripPrefix("_snap.").toLongOption).sorted
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    Claims.numbered(fsOf(spark, dir), new Path(dir), "_snap.")
 
   /** Resolve a manifest — the newest (via the `_head` pointer, never
     * an O(versions) listing), or the pinned `version`. Loud when the
@@ -784,14 +679,8 @@ object SnapshotTable {
       require(false, s"version $ver of $dir is not retained" +
         ref.fold("")(b => s" (resolving branch '$b')"))
     }
-    val in = fs.open(manifest)
-    val text =
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        new String(bos.toByteArray, "UTF-8")
-      } finally in.close()
-    val lines = text.split("\n").map(_.trim).filter(_.nonEmpty)
+    val lines = Claims.read(fs, manifest).split("\n").map(_.trim)
+      .filter(_.nonEmpty)
     val batch = lines.filter(_.startsWith("batch="))
       .flatMap(_.stripPrefix("batch=").toLongOption).headOption
     val paths = lines.filter(_.startsWith("entry="))
@@ -1293,8 +1182,8 @@ object SnapshotTable {
 
   /** Land ONE range dir `changes_v<from>_v<to>` — the single-range
     * protocol every publish step runs: replay no-op, per-attempt
-    * staging, rename, nested-dir cleanup, overlap defense. `from = 0`
-    * seeds with version `to`'s full content as `insert` rows. */
+    * staging, claim, overlap defense. `from = 0` seeds with version
+    * `to`'s full content as `insert` rows. */
   private def publishOne(spark: SparkSession, dir: String, key: String,
       fs: org.apache.hadoop.fs.FileSystem, out: Path, from: Long,
       to: Long): Unit = {
@@ -1304,27 +1193,17 @@ object SnapshotTable {
     // per-ATTEMPT staging name (the snapshot writers' dir-token
     // discipline): two racing publishers of the same range stage into
     // disjoint dirs, so neither can half-overwrite the other's files;
-    // the rename is the single contention point
+    // the claim is the single contention point
     val tmp = new Path(out,
       s"_staging_changes_v${from}_v$to." +
         java.lang.Long.toHexString(System.nanoTime()))
     stamped.write.mode("overwrite")
       .option("compression", "snappy").parquet(tmp.toString)
-    if (fs.exists(dest)) {
-      // the racer won while we were writing; both computed the same
-      // deterministic diff from the same range, so the published
-      // content is the same — drop our staging and accept
-      fs.delete(tmp, true)
-      return
-    }
-    val renamed = fs.rename(tmp, dest)
-    // POSIX rename into an EXISTING dir nests the source inside it —
-    // if a racer's dest appeared in the window, our staging landed as
-    // a hidden child of the winner's dir; remove it and accept
-    val nested = new Path(dest, tmp.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
-    require(renamed || fs.exists(dest),
-      s"failed to publish $dest")
+    // a lost claim means the racer published first; both computed the
+    // same deterministic diff from the same range, so the published
+    // content is the same — the claim dropped our staging; accept
+    try Claims.claimStaged(spark, tmp, dest)
+    catch { case _: Claims.Conflict => return }
     // cross-process defense (in-JVM publishers are serialized by the
     // caller's monitor): a publisher that resolved a STALE head
     // commits a range overlapping ours — the duplication must be
@@ -1689,11 +1568,9 @@ object SnapshotTable {
     val statTyped = newStatsCols.map(c => c -> output.schema(c).dataType)
     val fsD = fsOf(spark, dir)
     withInflight(spark, dir, verDir) {
-      // EMPTY STAGING: the listing below commits every leaf dir it
-      // finds, so `dest` must hold this write's output and nothing
-      // else. The token makes the dir fresh; the delete keeps the
-      // listing exact even if a dir of that name were ever left behind
-      fsD.delete(new Path(dest), true)
+      // the listing below commits every leaf dir it finds; `dest` holds
+      // this write's output and nothing else because [[stagingDir]]
+      // draws a fresh token per attempt
       writePartitioned(output, partCols, dest,
         xxhash64(col(key)), estParts, maxRowsPerTask, clusterKey)
       val rels = listLeafPartDirs(fsD, new Path(dest), partCols.size)
@@ -1771,8 +1648,7 @@ object SnapshotTable {
         // need ref-aware chain inspection — branch contention is the
         // single-audit-writer exception, so a branch loser takes the
         // honest full rebase instead
-        case e: IllegalArgumentException
-            if isCommitConflict(e) && ref.isEmpty =>
+        case e: Claims.Conflict if ref.isEmpty =>
           val keptSet = kept.map(_.path).toSet
           val ourKeys = produced.map(e => partKeyOfEntry(e.path)).toSet ++
             head.entries.filterNot(en => keptSet.contains(en.path))
@@ -1896,7 +1772,7 @@ object SnapshotTable {
       } catch {
         // ANOTHER racer landed while we re-committed: loop — each
         // pass is manifest I/O only, never a merge recompute
-        case e2: IllegalArgumentException if isCommitConflict(e2) =>
+        case _: Claims.Conflict =>
       }
     }
     None
@@ -2257,9 +2133,9 @@ object SnapshotTable {
   def tag(spark: SparkSession, dir: String, name: String,
       version: Option[Long] = None): Long = {
     require(name.nonEmpty && name.matches("[A-Za-z0-9._-]+") &&
-      !name.endsWith(".tmp"),
-      s"tag name must be a [A-Za-z0-9._-]+ token not ending .tmp: " +
-        s"'$name'")
+      Claims.stagedFor(s"_tag.$name").isEmpty,
+      s"tag name must be a [A-Za-z0-9._-]+ token that does not read " +
+        s"as a claim tmp (<name>.<hex>.tmp): '$name'")
     val lock = commitLocks.computeIfAbsent(lockKey(spark, dir),
       _ => new Object)
     lock.synchronized {
@@ -2267,11 +2143,7 @@ object SnapshotTable {
       val fs = fsOf(spark, dir)
       require(fs.exists(new Path(dir, s"_snap.$v")),
         s"version $v of $dir is not retained — cannot tag it")
-      val tmp = new Path(dir,
-        s"_tag.$name.${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      claimVersion(spark, tmp, new Path(dir, s"_tag.$name"))
+      Claims.claim(spark, new Path(dir, s"_tag.$name"), v.toString)
       // post-claim re-verify (cross-process retention may have cut v
       // between the check above and the claim): a dangling pin must
       // surface NOW, to the tagger, not months later to the audit
@@ -2293,18 +2165,10 @@ object SnapshotTable {
     val root = new Path(dir)
     if (!fs.exists(root)) return Map.empty
     fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && !n.endsWith(".tmp"))
-      .flatMap { n =>
-        val name = n.stripPrefix(prefix)
-        val in = fs.open(new Path(dir, n))
-        val text =
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 256, false)
-            new String(bos.toByteArray, "UTF-8").trim
-          } finally in.close()
-        text.toLongOption.map(name -> _)
-      }.toMap
+      .filter(n => n.startsWith(prefix) && Claims.stagedFor(n).isEmpty)
+      .flatMap(n => Claims.read(fs, new Path(dir, n)).trim.toLongOption
+        .map(n.stripPrefix(prefix) -> _))
+      .toMap
   }
 
   /** All tags: name → pinned version. */
@@ -2369,11 +2233,7 @@ object SnapshotTable {
       val fs = fsOf(spark, dir)
       require(fs.exists(new Path(dir, s"_snap.$v")),
         s"version $v of $dir is not retained — cannot branch from it")
-      val tmp = new Path(dir, s"_branch.$name." +
-        s"${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      claimVersion(spark, tmp, new Path(dir, s"_branch.$name"))
+      Claims.claim(spark, new Path(dir, s"_branch.$name"), v.toString)
       // post-claim re-verify — the same dangling-pin discipline as tag()
       if (!fs.exists(new Path(dir, s"_snap.$v"))) {
         fs.delete(new Path(dir, s"_branch.$name"), false)
@@ -2471,20 +2331,10 @@ object SnapshotTable {
           "commits")
       val fs = fsOf(spark, dir)
       (fork + 1 to bh).foreach { v =>
-        val in = fs.open(new Path(dir, s"_bsnap.$name.$v"))
-        val bytes =
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-            bos.toByteArray
-          } finally in.close()
-        val tmp = new Path(dir, s"_snap.$v." +
-          s"${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(bytes) finally out.close()
-        try claimVersion(spark, tmp, new Path(dir, s"_snap.$v"))
+        try Claims.claim(spark, new Path(dir, s"_snap.$v"),
+          Claims.read(fs, new Path(dir, s"_bsnap.$name.$v")))
         catch {
-          case e: IllegalArgumentException if isCommitConflict(e) =>
+          case e: Claims.Conflict =>
             throw new IllegalArgumentException(
               s"fast-forward of branch '$name' was interrupted at v$v " +
                 s"by a concurrent main commit — versions ${fork + 1}.." +
@@ -2603,12 +2453,12 @@ object SnapshotTable {
     * produced, and the partition keys it read or wrote. Only
     * [[retrying]] acts on it; to every other caller it is the conflict
     * it wraps (same message). */
-  private final class LostClaim(orig: IllegalArgumentException,
+  private final class LostClaim(orig: Claims.Conflict,
       val base: Snap, val verDir: String, val produced: Seq[Entry],
       val ourKeys: Set[String], val batchId: Option[Long],
       val schemaDdl: String, val partCols: Seq[String],
       val statsCols: Seq[String])
-      extends IllegalArgumentException(orig.getMessage, orig)
+      extends Claims.Conflict(orig.getMessage, orig)
 
   /** Attempts a [[retrying]] commit makes before its conflict
     * propagates: the first plus up to seven rebases. */
@@ -2652,8 +2502,7 @@ object SnapshotTable {
             fastRecommit(spark, dir, lost))
           if (v.isDefined) return v.get
           if (n >= MaxCommitAttempts) throw lost
-        case e: IllegalArgumentException
-            if isCommitConflict(e) && n < MaxCommitAttempts => // rebase
+        case _: Claims.Conflict if n < MaxCommitAttempts => // rebase
       }
     }
     -1L // unreachable
@@ -3136,14 +2985,9 @@ object SnapshotTable {
         retained.foreach { v =>
           val s = resolved(v)
           if (s.depth > 0 && !retainedSet.contains(v - 1)) {
-            val body = fullBody(s.batchId, s.entries, s.schemaDdl,
-              s.partCols, s.statsKeys, s.dvKey, s.checks, s.droppedCols)
-            val tmp = new Path(dir, s"_snap.$v." +
-              s"${java.lang.Long.toHexString(System.nanoTime())}.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(body.getBytes("UTF-8")) finally out.close()
-            fcOf(spark, tmp).rename(tmp, new Path(dir, s"_snap.$v"),
-              org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+            Claims.replace(spark, new Path(dir, s"_snap.$v"),
+              fullBody(s.batchId, s.entries, s.schemaDdl, s.partCols,
+                s.statsKeys, s.dvKey, s.checks, s.droppedCols))
             resolved += v -> s.copy(depth = 0) // now a checkpoint
           }
         }
@@ -3219,7 +3063,7 @@ object SnapshotTable {
 
   /** VACUUM: reclaim data a crash stranded — a writer that died
     * between its data write and its manifest commit leaves a fully-
-    * written `data/v=<n>-<token>/` tree (and possibly a `_snap.<n>.tmp`) that
+    * written `data/v=<n>-<token>/` tree (and possibly a claim tmp) that
     * NO manifest references and [[retainNewest]]'s live-reference
     * sweep (which only runs below the retention cut) never touches.
     * Orphanhood is decided at the whole-version granularity — every
@@ -3250,17 +3094,15 @@ object SnapshotTable {
         .map(p => p.substring(0, p.indexOf('/')))
     }.toSet
     val cutoff = System.currentTimeMillis() - graceMs
-    // stale tmp manifests / head-pointer / tag / branch stagings from
-    // a crashed commit (rename never ran), plus ORPHANED branch
-    // manifests — a commit that raced its own branch's drop claimed a
-    // `_bsnap.` file no `_branch.` pointer names, unresolvable forever
+    // stale claim tmps from a crashed commit (rename never ran), plus
+    // ORPHANED branch manifests — a commit that raced its own branch's
+    // drop claimed a `_bsnap.` file no `_branch.` pointer names,
+    // unresolvable forever
     fs.listStatus(root)
       .filter { st =>
         val n = st.getPath.getName
-        val staleTmp = (n.startsWith("_snap.") || n.startsWith("_head.") ||
-          n.startsWith("_tag.") || n.startsWith("_branch.") ||
-          n.startsWith("_bsnap.")) && n.endsWith(".tmp")
-        val orphanBsnap = n.startsWith("_bsnap.") && !n.endsWith(".tmp") &&
+        val staleTmp = Claims.stagedFor(n).isDefined
+        val orphanBsnap = n.startsWith("_bsnap.") && !staleTmp &&
           !bs.contains(n.stripPrefix("_bsnap.").reverse.dropWhile(_ != '.')
             .drop(1).reverse)
         (staleTmp || orphanBsnap) && st.getModificationTime <= cutoff

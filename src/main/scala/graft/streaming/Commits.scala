@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.state.Claims
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
@@ -30,12 +31,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * cost tracks the FOLDED bytes, not store size, and cumulative
   * compaction I/O over a long-lived stream is O(N log N) instead of
   * the single-level fold's O(N²/period). The live run set rides a
-  * VERSIONED MANIFEST (`_runs.<ver>`, max version wins, written
-  * atomically via tmp+rename AFTER the new run commits and BEFORE
-  * any folded input is deleted) — every crash window leaves a
-  * correct view: manifest missing → the previous manifest's inputs
-  * are all still present; manifest present → the runs it names are
-  * committed. Cleanup is GRACE-DEFERRED: a fold deletes only inputs
+  * VERSIONED MANIFEST (`_runs.<ver>`, max version wins, claimed
+  * through [[graft.state.Claims]] — per-attempt tmp, no-clobber
+  * rename — AFTER the new run commits and BEFORE any folded input is
+  * deleted) — every crash window leaves a correct view: manifest
+  * missing → the previous manifest's inputs are all still present;
+  * manifest present → the runs it names are committed. Cleanup is GRACE-DEFERRED: a fold deletes only inputs
   * that were already dead in the PREVIOUS manifest, so a concurrent
   * monitor whose lazy scan planned against the pre-fold roots keeps
   * its files for at least one full maintenance interval (the
@@ -84,21 +85,12 @@ object Commits {
   def runManifest(spark: SparkSession, dir: String): RunManifest = {
     val root = new Path(dir)
     val fs = storeFs(spark, dir)
-    if (!fs.exists(root)) return RunManifest(-1L, None, 0L, Nil)
-    val vers = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_runs."))
-      .flatMap(_.stripPrefix("_runs.").toLongOption)
+    val vers = Claims.numbered(fs, root, "_runs.")
     if (vers.isEmpty) RunManifest(-1L, None, 0L, Nil)
     else {
-      val ver = vers.max
-      val in = fs.open(new Path(root, s"_runs.$ver"))
-      val text =
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-          new String(bos.toByteArray, "UTF-8")
-        } finally in.close()
-      // loud on a torn manifest: the tmp+rename write makes one
+      val ver = vers.last
+      val text = Claims.read(fs, new Path(root, s"_runs.$ver"))
+      // loud on a torn manifest: the claim's tmp+rename makes one
       // impossible in normal operation, so a parse failure is real
       // corruption and silently treating it as empty would re-read
       // folded-away fragments as if never folded
@@ -124,24 +116,15 @@ object Commits {
     }
   }
 
-  /** Commit a manifest version: write to a tmp name, then rename —
-    * the manifest is visible fully-written or not at all (the torn-
-    * marker window an in-place create would leave). */
+  /** Claim a manifest version ([[graft.state.Claims.claim]]): the
+    * manifest is visible fully-written or not at all, and a fold that
+    * lost the version to a racer raises
+    * [[graft.state.Claims.Conflict]]. */
   private def writeRunManifest(spark: SparkSession, dir: String,
-      m: RunManifest): Unit = {
-    val fs = storeFs(spark, dir)
-    val tmp = new Path(dir, s"_runs.${m.ver}.tmp")
-    val dst = new Path(dir, s"_runs.${m.ver}")
-    val out = fs.create(tmp, true)
-    try {
-      val body = (m.upTo.map(u => s"upTo=$u").toSeq ++
-        Seq(s"next=${m.next}") ++
-        m.runs.map(r => s"${r.name}:${r.bytes}")).mkString("\n")
-      out.write(body.getBytes("UTF-8"))
-    } finally out.close()
-    require(fs.rename(tmp, dst),
-      s"failed to commit run manifest $dst — version collision?")
-  }
+      m: RunManifest): Unit =
+    Claims.claim(spark, new Path(dir, s"_runs.${m.ver}"),
+      (m.upTo.map(u => s"upTo=$u").toSeq ++ Seq(s"next=${m.next}") ++
+        m.runs.map(r => s"${r.name}:${r.bytes}")).mkString("\n"))
 
   /** The readable roots of a possibly-compacted fragment store: the
     * live runs (from the manifest) plus the committed `batch=<n>`
@@ -271,11 +254,11 @@ object Commits {
     *
     * Crash-window discipline: new run written (Overwrite — a crashed
     * attempt's orphan is simply overwritten when its id is reused,
-    * or swept as not-live) → manifest committed via tmp+rename →
-    * grace cleanup of inputs dead since the PREVIOUS manifest. A
-    * call with an empty tail runs just the cleanup, so interrupted
-    * folds and retired streams converge to a garbage-free store on
-    * the next maintenance call instead of never. */
+    * or swept as not-live) → manifest claimed → grace cleanup of
+    * inputs dead since the PREVIOUS manifest. A call with an empty
+    * tail runs just the cleanup, so interrupted folds and retired
+    * streams converge to a garbage-free store on the next maintenance
+    * call instead of never. */
   def tieredCompact(spark: SparkSession, dir: String,
       rewrite: (Seq[String], String) => Unit, maxRuns: Int = 4,
       sizeRatio: Double = 2.0): Unit = {
@@ -316,14 +299,19 @@ object Commits {
     * fold that is committing right now), and manifests older than it.
     * Called with the PREVIOUS manifest at fold time (grace: this fold's
     * own inputs stay one more interval) and with the CURRENT manifest
-    * on an empty-tail call (their grace has elapsed). */
+    * on an empty-tail call (their grace has elapsed). Also deletes the
+    * claim tmps of manifest versions already claimed: a crashed or
+    * losing fold's staging, which nothing else would ever reclaim. */
   private def cleanup(spark: SparkSession, dir: String,
       m: RunManifest): Unit = {
     val root = new Path(dir)
     val fs = storeFs(spark, dir)
     if (!fs.exists(root)) return
     val live = m.runs.map(_.name).toSet
-    fs.listStatus(root).toSeq.foreach { e =>
+    val entries = fs.listStatus(root).toSeq
+    val claimed = entries.flatMap(e =>
+      Claims.number(e.getPath.getName, "_runs.")).maxOption
+    entries.foreach { e =>
       val n = e.getPath.getName
       val stale =
         (n.startsWith("batch=") &&
@@ -331,8 +319,9 @@ object Commits {
             m.upTo.exists(id <= _))) ||
         (n.startsWith("run=") && !live(n) &&
           n.stripPrefix("run=").toLongOption.exists(_ < m.next)) ||
-        (n.startsWith("_runs.") &&
-          n.stripPrefix("_runs.").toLongOption.exists(_ < m.ver))
+        Claims.number(n, "_runs.").exists(_ < m.ver) ||
+        Claims.stagedFor(n).flatMap(Claims.number(_, "_runs."))
+          .exists(v => claimed.exists(v <= _))
       if (stale) fs.delete(e.getPath, true)
     }
   }
@@ -369,33 +358,22 @@ object Commits {
     if (committed.size <= keep) return
     val victims = committed.dropRight(keep)
     val floor = batchId(committed(victims.size)) // oldest KEPT id
-    val marker = new Path(dir, s"_retained.$floor")
-    if (!fs.exists(marker)) {
-      val out = fs.create(marker, false)
-      try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
-    }
+    // a conflict is the same floor's marker, already present
+    try Claims.claim(spark, new Path(dir, s"_retained.$floor"),
+      floor.toString)
+    catch { case _: Claims.Conflict => }
     victims.foreach(p => fs.delete(p, true))
     // older markers are now redundant (max wins) — sweep them
-    fs.listStatus(new Path(dir)).foreach { e =>
-      val n = e.getPath.getName
-      if (n.startsWith("_retained.") &&
-          n.stripPrefix("_retained.").toLongOption.exists(_ < floor))
-        fs.delete(e.getPath, false)
-    }
+    Claims.numbered(fs, new Path(dir), "_retained.").filter(_ < floor)
+      .foreach(f => fs.delete(new Path(dir, s"_retained.$f"), false))
   }
 
   /** The oldest batch id retention has promised still exists — reads
     * at or above it are complete; a point-in-time read BELOW it must
     * refuse loudly (its fragments are gone). None = never cut. */
-  def retainedFloor(spark: SparkSession, dir: String): Option[Long] = {
-    val root = new Path(dir)
-    val fs = storeFs(spark, dir)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_retained."))
-      .flatMap(_.stripPrefix("_retained.").toLongOption)
-      .maxOption
-  }
+  def retainedFloor(spark: SparkSession, dir: String): Option[Long] =
+    Claims.numbered(storeFs(spark, dir), new Path(dir), "_retained.")
+      .lastOption
 
   /** A post-batch hook of [[runBatches]]: `run` after every landed
     * batch whose id `b` has `(b + 1) % every == 0` — `every = 1` runs

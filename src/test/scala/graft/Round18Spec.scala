@@ -41,9 +41,9 @@ class Round18Spec extends SparkSpec {
     // and fully staged — exactly the cross-process window
     val tmpA = stage("_snap.7.aaaa.tmp", "winner-bytes")
     val tmpB = stage("_snap.7.bbbb.tmp", "loser-bytes")
-    SnapshotTable.claimVersion(spark, tmpA, dst) // A claims first
+    graft.state.Claims.claimStaged(spark, tmpA, dst) // A claims first
     val ex = intercept[IllegalArgumentException] {
-      SnapshotTable.claimVersion(spark, tmpB, dst) // B must LOSE, loudly
+      graft.state.Claims.claimStaged(spark, tmpB, dst) // B must LOSE, loudly
     }
     assert(ex.getMessage.contains("already exists"),
       s"the lost claim must surface as the retryable conflict: " +
@@ -83,7 +83,7 @@ class Round18Spec extends SparkSpec {
       try Await.result(Future.sequence((0 until n).map { i =>
         Future {
           barrier.await()
-          try { SnapshotTable.claimVersion(spark, tmps(i), dst); "won" }
+          try { graft.state.Claims.claimStaged(spark, tmps(i), dst); "won" }
           catch {
             case e: IllegalArgumentException
                 if e.getMessage.contains("already exists") => "conflict"
@@ -101,7 +101,7 @@ class Round18Spec extends SparkSpec {
       "an IOException the optimistic retry loop never swallows") {
     val dir = tmpDir("claimhard")
     intercept[java.io.IOException] {
-      SnapshotTable.claimVersion(spark,
+      graft.state.Claims.claimStaged(spark,
         new Path(dir, "_snap.1.never-written.tmp"), new Path(dir, "_snap.1"))
     }
     assert(!fs(dir).exists(new Path(dir, "_snap.1")),
