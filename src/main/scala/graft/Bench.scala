@@ -64,13 +64,13 @@ object Bench {
   /** Measure one catalog query (count + hygiene). A failed query must
     * be LOUD in the record: the old catch-and-continue made a broken
     * query look like a fast one (q189 recorded 0.15s exception paths
-    * as wins). */
+    * as wins). An interrupt is no query's failure: it ends the run. */
   private def runOne(spark: SparkSession, sfDir: String, name: String,
       fn: Query): (Double, Boolean) = {
     val t0 = System.nanoTime()
     val failed =
       try { fn(spark, sfDir).count(); false }
-      catch { case e: Throwable =>
+      catch { case e: Throwable if !e.isInstanceOf[InterruptedException] =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         true
       }

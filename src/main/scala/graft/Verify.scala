@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. One query's
+  * failure is logged and the dump goes on; an interrupt ends it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     Scratch.preferTmpfs() // scratch on tmpfs (see Scratch's doc)
@@ -18,7 +19,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case e: Throwable if !e.isInstanceOf[InterruptedException] =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       Session.hygiene(spark)

@@ -25,6 +25,16 @@ final case class Q(name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+/** The catalog: every query's Spark side and its DuckDB oracle.
+  *
+  * The fixture replay formulas the oracles share (the planted-duplicate
+  * rule and media seed, the dHash grid and bits, the two-word bit pack
+  * and Hamming pairs, the audio samples and energy bins, the pinned
+  * double folds, tokenization, the snapshot family's rows, the PageRank
+  * step) live only in the "oracle fragments" section, one string
+  * builder each; an oracle calls the builder instead of spelling the
+  * formula, so a fixture change is one edit. `OracleFragmentSpec`
+  * fails when one of them reappears inline elsewhere in this file. */
 object Catalog {
 
   /** Fixture-relation memo: one resolved DataFrame per (session,
@@ -458,16 +468,12 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, v, nrm, cell FROM (
         SELECT n.vec_id AS n_id, n.v, n.nrm, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       prb AS (SELECT q_id, qv, qn, cell FROM (
         SELECT n.vec_id AS q_id, n.v AS qv, n.nrm AS qn,
           cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 50) z WHERE pr <= 2)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT p.q_id, a.n_id,
@@ -490,9 +496,7 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, v, cell FROM (
         SELECT n.vec_id AS n_id, n.v, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       m AS (SELECT cell, i.i AS pos, count(*) AS cnt,
           CAST(sum(CAST(floor(a.v[i.i] * 1000000.0 + 0.5) AS BIGINT))
@@ -519,15 +523,11 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, cell FROM (
         SELECT n.vec_id AS n_id, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       cb AS (SELECT vec_id AS c, v AS cv2 FROM e WHERE vec_id < 16),
       pa AS (SELECT e.vec_id, cb.c, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.cv2[i]) * (e.v[i] - cb.cv2[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.cv2", "js.j")} AS d
         FROM e CROSS JOIN cb CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, c FROM (
           SELECT vec_id, j, c,
@@ -535,20 +535,15 @@ object Catalog {
           FROM pa) z WHERE rn = 1),
       prb AS (SELECT q_id, qv, cell FROM (
         SELECT n.vec_id AS q_id, n.v AS qv, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 50) z WHERE pr <= 2),
       tj AS (SELECT s.vec_id, p.q_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qv[i] - cb.cv2[i]) * (p.qv[i] - cb.cv2[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS t
+          ${subDistFoldSql("p.qv", "cb.cv2", "s.j")} AS t
         FROM sel s JOIN cb ON cb.c = s.c
         JOIN asg a ON a.n_id = s.vec_id
         JOIN prb p ON p.cell = a.cell),
       dist AS (SELECT q_id, vec_id AS n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY j)),
-            (x, y) -> x + y) AS d
+          ${foldSql("list(t ORDER BY j)")} AS d
         FROM tj GROUP BY q_id, vec_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id,
@@ -713,8 +708,8 @@ object Catalog {
         (as(0), bs(0))
       }
       s"""WITH d AS (SELECT doc_id, text,
-        list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS tk,
-        list_filter(string_split_regex(trim(substr(text, 1, 100)), '\\s+'), x -> len(x) > 0) AS tkp
+        ${tokensSql("text")} AS tk,
+        ${tokensSql("substr(text, 1, 100)")} AS tkp
         FROM documents),
       s AS (SELECT doc_id,
         list_distinct([array_to_string(tk[i:i+2], ' ')
@@ -748,13 +743,10 @@ object Catalog {
       Similarity.topKPlanned(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", k = 5)
     },
-    Some(cosineOracleCte + """
+    Some(cosineOracleCte + s"""
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              [q.v[i] * c.v[i] FOR i IN range(1, len(q.v) + 1)]), (a, b) -> a + b)
-             / sqrt(q.nrm * c.nrm)) DESC, c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM n q JOIN n c ON q.vec_id < 10 AND c.vec_id <> q.vec_id) z
       WHERE rank <= 5"""))
 
@@ -829,14 +821,13 @@ object Catalog {
       "text", "doc_id",
       blockCols = Seq(col("lang"), expr("n_chars div 64")),
       n = 3, threshold = 0.6),
-    Some("""WITH t AS (
+    Some(s"""WITH t AS (
         SELECT doc_id, lang || CAST(n_chars // 64 AS VARCHAR) AS blk,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (
         SELECT doc_id, blk,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3)
       SELECT doc_a, doc_b, jaccard FROM (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -962,14 +953,13 @@ object Catalog {
       "text", "doc_id",
       blockCols = Seq(col("lang"), expr("n_chars div 64")),
       n = 3, threshold = 0.6),
-    Some("""WITH RECURSIVE t AS (
+    Some(s"""WITH RECURSIVE t AS (
         SELECT doc_id, lang || CAST(n_chars // 64 AS VARCHAR) AS blk,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (
         SELECT doc_id, blk,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       p AS (
         SELECT a.doc_id AS da, b.doc_id AS db
@@ -990,30 +980,21 @@ object Catalog {
   // only ever get rows-only checks; the portable twins q118/q136 and
   // q137 oracle the same recall surfaces and cost laws in full.
 
+  // ------------------------------------------------------ oracle fragments
+  // The fixture replay formulas that the DuckDB oracles share, one
+  // builder each. A builder is a pure string function of only what
+  // differs between its call sites (an alias, a relation, a literal).
+  // None calls engine code; `lshBucketSql`'s seeded literal planes,
+  // taken from `Similarity.bandPlanes`, are the one exception.
+  // OracleFragmentSpec fails when one of these formulas reappears
+  // inline outside this section.
+
   private def cosineOracleCte: String =
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       n AS (SELECT vec_id, v,
         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           [v[i] * v[i] FOR i IN range(1, len(v) + 1)]), (a, b) -> a + b) AS nrm
         FROM e)"""
-
-  /** Brute-force exact cosine top-5 for the first 10 query vectors.
-    * Cosine = pinned sequential double fold on both engines. */
-  private val q25 = Q("q25_cosine_topk",
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5)
-    },
-    Some(cosineOracleCte + """
-      SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-        SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              [q.v[i] * c.v[i] FOR i IN range(1, len(q.v) + 1)]), (a, b) -> a + b)
-             / sqrt(q.nrm * c.nrm)) DESC, c.vec_id ASC) AS rank
-        FROM n q JOIN n c ON q.vec_id < 10 AND c.vec_id <> q.vec_id) z
-      WHERE rank <= 5"""))
 
   /** DuckDB replay of one sign-LSH band bucket: same literal planes,
     * same sequential dot fold as the Spark side, so the sign (and hence
@@ -1025,6 +1006,270 @@ object Catalog {
         [v[i] * ([$lits])[i] FOR i IN range(1, ${p.length} + 1)]),
         (a, b) -> a + b) > 0 THEN ${1 << i} ELSE 0 END)"""
     }.mkString(" + ")
+
+  /** The pinned-order double sum of a SQL list: a sequential left fold
+    * from 0.0, the order the engine folds in, so doubles are
+    * bitwise-equal. */
+  private def foldSql(terms: String): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms),
+      (x, y) -> x + y)"""
+
+  /** The shared sequential-fold cosine term for ANN oracles (identical
+    * arithmetic to the DotProduct expression → bitwise-equal doubles). */
+  private def dotFoldSql(a: String, b: String): String =
+    foldSql(s"[$a[i] * $b[i] FOR i IN range(1, len($a) + 1)]")
+
+  /** Each vector's cosine rank of the IVF centroids `cent` (`n` holds
+    * vec_id, v, nrm; `cent` cent_id, cv, cn), ties to the lower id. */
+  private def centroidRankSql: String =
+    s"""row_number() OVER (PARTITION BY n.vec_id ORDER BY
+      (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
+      cent.cent_id ASC)"""
+
+  /** Each query vector `q`'s exact cosine rank of candidate `c`. */
+  private def cosineRankSql: String =
+    s"""row_number() OVER (PARTITION BY q.vec_id ORDER BY
+      (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
+      c.vec_id ASC)"""
+
+  /** Squared L2 distance between `a` and `b` over the `j`-th 8-wide PQ
+    * sub-vector, folded in the same pinned order. */
+  private def subDistFoldSql(a: String, b: String, j: String): String =
+    foldSql(s"""[($a[i] - $b[i]) * ($a[i] - $b[i])
+      FOR i IN range($j * 8 + 1, $j * 8 + 9)]""")
+
+  /** Whitespace tokenization with empty tokens dropped. */
+  private def tokensSql(text: String): String =
+    s"""list_filter(string_split_regex(trim($text), '\\s+'),
+      x -> len(x) > 0)"""
+
+  /** The word 3-gram shingles of a `toks` token list. */
+  private def trigramsSql: String =
+    """[toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+      FOR i IN range(1, len(toks) - 1)]"""
+
+  /** The fixture's planted duplicate id: every 25th document copies its
+    * predecessor exactly, every 50k+7th is a perturbed copy. */
+  private def plantedIdSql(id: String): String =
+    s"""CASE WHEN $id > 0 AND $id % 25 = 0 THEN $id - 1
+      WHEN $id > 6 AND $id % 50 = 7 THEN $id - 1
+      ELSE $id END"""
+
+  /** Whether document `id` is a planted perturbed copy. */
+  private def perturbedSql(id: String): String =
+    s"($id > 6 AND $id % 50 = 7)"
+
+  /** The multiplicative seed hash of a synthetic media pattern. */
+  private def seedSql(x: String): String =
+    s"($x * 2654435761) % 2147483647"
+
+  /** The 31-bit Knuth multiplicative hash the fixture samplers and
+    * orderings replay. */
+  private def knuthSql(x: String): String =
+    s"(($x % 2147483648) * 2654435761) % 2147483647"
+
+  /** One row per document: its planted pattern id and perturbation. */
+  private def plantedRowsSql: String =
+    s"""SELECT doc_id, ${plantedIdSql("doc_id")} AS pid,
+        ${perturbedSql("doc_id")} AS pert
+      FROM documents"""
+
+  /** The synthetic image's grey value at pixel (x, y) under seed `m`,
+    * before the perturbation and the final `% 256`. */
+  private def pixelSql(x: String, y: String): String =
+    s"""(m % 256 + 1) * (7*$x + 13*$y + 1)
+      + ((m // 256) % 256) * ($x*$x + 11*$y + 3)
+      + ((m // 65536) % 256) * (3*$x + 5*$y*$y + 2)"""
+
+  /** The 9×8 dHash grid of the 36×32 image of each (m, pert) row of
+    * `src`: integer 4×4 box means. */
+  private def imageCellsSql(src: String): String =
+    s"""SELECT doc_id, cx, cy,
+        sum((${pixelSql("(cx*4+dx)", "(cy*4+dy)")}
+          + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
+          % 256) // 16 AS g
+      FROM $src, range(9) r1(cx), range(8) r2(cy),
+        range(4) r3(dx), range(4) r4(dy)
+      GROUP BY doc_id, cx, cy"""
+
+  /** The dHash grid of each video's first frame (`vd`: doc_id, m). */
+  private def videoCellsSql: String =
+    s"""SELECT doc_id, cx, cy,
+        sum((${pixelSql("(cx*4+dx)", "(cy*4+dy)")})
+          % 256) // 16 AS g
+      FROM vd, range(9) r1(cx), range(8) r2(cy),
+        range(4) r3(dx), range(4) r4(dy)
+      GROUP BY doc_id, cx, cy"""
+
+  /** The dHash grid of every frame `f` of `fr`, pixel column `x`. */
+  private def frameCellsSql(x: String): String =
+    s"""SELECT doc_id, f, cx, cy,
+        sum((${pixelSql(x, "(cy*4+dy)")})
+          % 256) // 16 AS g
+      FROM fr, range(9) r1(cx), range(8) r2(cy),
+        range(4) r3(dx), range(4) r4(dy)
+      GROUP BY doc_id, f, cx, cy"""
+
+  /** dHash bits: grid cell `g` of `cell` against its right neighbour. */
+  private def gridBitsSql(cell: String, g: String): String =
+    s"""SELECT l.doc_id, l.cy * 8 + l.cx AS k,
+        CASE WHEN r.$g > l.$g THEN 1 ELSE 0 END AS bit
+      FROM $cell l JOIN $cell r ON r.doc_id = l.doc_id
+        AND r.cy = l.cy AND r.cx = l.cx + 1
+      WHERE l.cx < 8"""
+
+  /** dHash bits of every frame of `cell` (doc_id, f, cx, cy, g). */
+  private def frameBitsSql: String =
+    """SELECT l.doc_id, l.f, l.cy * 8 + l.cx AS k,
+        CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
+      FROM cell l JOIN cell r ON r.doc_id = l.doc_id AND r.f = l.f
+        AND r.cy = l.cy AND r.cx = l.cx + 1
+      WHERE l.cx < 8"""
+
+  /** The low and high 32-bit words of a 64-bit fingerprint from its
+    * (k, bit) rows: DuckDB raises on `1 << 63`, so no oracle builds a
+    * sign-bit BIGINT. */
+  private def loWordSql: String =
+    """bit_or(CASE WHEN bit = 1 AND k < 32
+        THEN (1::BIGINT << k) ELSE 0 END)"""
+  private def hiWordSql: String =
+    """bit_or(CASE WHEN bit = 1 AND k >= 32
+        THEN (1::BIGINT << (k - 32)) ELSE 0 END)"""
+  private def bitPackSql(lo: String, hi: String): String =
+    s"$loWordSql AS $lo,\n      $hiWordSql AS $hi"
+
+  /** The image near-dup fixture replayed to its 64-bit dHash: CTEs `b`
+    * (seed, perturbation), `cell`, `bits` and `h` (doc_id, lo, hi). */
+  private def imageHashCtes: String =
+    s"""b AS (SELECT doc_id,
+        ${seedSql(plantedIdSql("doc_id"))} AS m,
+        ${perturbedSql("doc_id")} AS pert
+        FROM documents),
+      cell AS (${imageCellsSql("b")}),
+      bits AS (${gridBitsSql("cell", "g")}),
+      h AS (SELECT doc_id,
+          ${bitPackSql("lo", "hi")}
+        FROM bits GROUP BY doc_id)"""
+
+  /** The mixed-media fixture's three fingerprint chains over the
+    * planted rows `b`, split three ways by `modality` (0 image, 1 audio,
+    * 2 video): CTEs `ih`, `ah` and `vh` (doc_id, lo, hi). */
+  private def unifiedHashCtes(modality: String): String =
+    s"""im AS (SELECT doc_id, ${seedSql("pid")} AS m, pert
+        FROM b WHERE $modality = 0),
+      icell AS (${imageCellsSql("im")}),
+      ibits AS (${gridBitsSql("icell", "g")}),
+      ih AS (SELECT doc_id,
+          ${bitPackSql("lo", "hi")}
+        FROM ibits GROUP BY doc_id),
+      ad AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
+        400 + (pid * 11) % 257 AS n FROM b WHERE $modality = 1),
+      sa AS (${audioSamplesSql("ad")}),
+      abins AS (${energyBinsSql("sa")}),
+      abits AS (${energyBitsSql("abins")}),
+      ah AS (SELECT doc_id,
+          ${bitPackSql("lo", "hi")}
+        FROM abits GROUP BY doc_id),
+      vd AS (SELECT doc_id,
+          ${seedSql("pid * 8")} AS m
+        FROM b WHERE $modality = 2),
+      vcell AS ($videoCellsSql),
+      vbits AS (${gridBitsSql("vcell", "g")}),
+      vh AS (SELECT doc_id,
+          ${bitPackSql("lo", "hi")}
+        FROM vbits GROUP BY doc_id)"""
+
+  /** Hamming distance between the two-word fingerprints `a` and `z`. */
+  private def hammingSql(a: String, z: String): String =
+    s"bit_count(xor($a.lo, $z.lo)) + bit_count(xor($a.hi, $z.hi))"
+
+  /** Brute-force pairs of fingerprint table `h` within Hamming 2. */
+  private def hammingPairsSql(h: String): String =
+    s"""SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
+        CAST(${hammingSql("a", "z")} AS INT) AS hamming
+      FROM $h a JOIN $h z ON a.doc_id < z.doc_id
+      WHERE ${hammingSql("a", "z")} <= 2"""
+
+  /** The synthetic WAV's 16-bit sample `i` under seed `m`. */
+  private def audioSampleSql: String =
+    """((m % 256 + 1) * (5*i + 7)
+        + ((m // 256) % 256) * ((i*i) % 1009)
+        + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
+        % 65536 - 32768"""
+
+  /** Every sample of each clip of `src` (doc_id, m, pert, n). */
+  private def audioSamplesSql(src: String): String =
+    s"""SELECT doc_id, n, i, $audioSampleSql AS v
+      FROM $src, range(657) r(i) WHERE i < n"""
+
+  /** Each clip's 65 energy bins over `samples`, and the 64 gradient
+    * bits between adjacent bins of `bins`. */
+  private def energyBinsSql(samples: String): String =
+    s"""SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
+      FROM $samples GROUP BY doc_id, (i * 65) // n"""
+  private def energyBitsSql(bins: String): String =
+    s"""SELECT l.doc_id, l.bin AS k,
+        CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
+      FROM $bins l JOIN $bins r ON r.doc_id = l.doc_id
+        AND r.bin = l.bin + 1
+      WHERE l.bin < 64"""
+
+  /** The snapshot family's v1 rows: each order's line 1, partitioned
+    * by `l_orderkey % 4`. */
+  private def snapshotBaseSql: String =
+    """SELECT l_orderkey, l_linenumber, quantity, part FROM (
+        SELECT l_orderkey, l_linenumber,
+          CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
+          l_orderkey % 4 AS part,
+          row_number() OVER (PARTITION BY l_orderkey
+            ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
+              DESC) rn
+        FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1"""
+
+  /** The snapshot family's CDC feed: each order's last line from line
+    * 2 on, line 7 a delete ('D'), every other an upsert ('U'). */
+  private def snapshotFeedSql: String =
+    """SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
+        SELECT l_orderkey, l_linenumber,
+          CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
+          CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
+          l_orderkey % 4 AS part,
+          row_number() OVER (PARTITION BY l_orderkey
+            ORDER BY l_linenumber DESC,
+              CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
+              DESC) rn
+        FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1"""
+
+  /** One fixed-point PageRank step `out` from ranks `prev` over edges
+    * `e`, node set `nodes` and out-degrees `deg`, in micro-units with
+    * damping 0.85; `seed` is each node's teleport mass. */
+  private def pageRankStepSql(e: String, nodes: String, deg: String,
+      seed: String, prev: String, out: String): String =
+    s"""$out AS (SELECT $nodes.n,
+        CAST($seed + coalesce(x.s, 0) AS BIGINT) AS r
+      FROM $nodes LEFT JOIN (
+        SELECT $e.dst AS n,
+          CAST(sum((r.r * 850000) // ($deg.d * 1000000)) AS BIGINT) AS s
+        FROM $e JOIN $prev r ON r.n = $e.src
+        JOIN $deg ON $deg.src = $e.src
+        GROUP BY $e.dst) x ON $nodes.n = x.n)"""
+
+  // -------------------------------------------------- end oracle fragments
+
+  /** Brute-force exact cosine top-5 for the first 10 query vectors.
+    * Cosine = pinned sequential double fold on both engines. */
+  private val q25 = Q("q25_cosine_topk",
+    (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb,
+        "vec_id", "embedding", k = 5)
+    },
+    Some(cosineOracleCte + s"""
+      SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
+        SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+          $cosineRankSql AS rank
+        FROM n q JOIN n c ON q.vec_id < 10 AND c.vec_id <> q.vec_id) z
+      WHERE rank <= 5"""))
 
   /** Cosine near-dup pairs ≥ 0.4 via banded sign-LSH candidates +
     * exact-cosine verify (embedding-space dedup, the 100 TB shape:
@@ -1048,20 +1293,13 @@ object Catalog {
           AND a.vec_id < b.vec_id)
       SELECT vec_a, vec_b, cos FROM (
         SELECT c.vec_a, c.vec_b,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [a.v[i] * b.v[i] FOR i IN range(1, len(a.v) + 1)]), (x, y) -> x + y)
+          ${dotFoldSql("a.v", "b.v")}
            / sqrt(a.nrm * b.nrm) AS cos
         FROM cand c
         JOIN n a ON a.vec_id = c.vec_a
         JOIN n b ON b.vec_id = c.vec_b) z
       WHERE cos >= 0.4"""
     })
-
-  /** The shared sequential-fold cosine term for ANN oracles (identical
-    * arithmetic to the DotProduct expression → bitwise-equal doubles). */
-  private def dotFoldSql(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      [$a[i] * $b[i] FOR i IN range(1, len($a) + 1)]), (x, y) -> x + y)"""
 
   /** Approximate top-3 via random-hyperplane LSH buckets (the 10^9-row
     * path). The bucketing is DETERMINISTIC (seeded literal planes), so
@@ -1082,9 +1320,7 @@ object Catalog {
       b AS (SELECT vec_id, v, nrm, ${lshBucketSql(planes)} AS bucket FROM n)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
-            c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM b q JOIN b c ON q.bucket = c.bucket
           AND q.vec_id < 100 AND c.vec_id <> q.vec_id) z
       WHERE rank <= 3"""
@@ -1110,9 +1346,7 @@ object Catalog {
         FROM b WHERE vec_id < 100)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
-            c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM qp q JOIN b c ON q.probe = c.bucket
           AND c.vec_id <> q.vec_id) z
       WHERE rank <= 3"""
@@ -1123,14 +1357,14 @@ object Catalog {
     (s, dir) => t(s, dir, "documents")
       .select(col("doc_id"),
         TextAnalysis.langIdHeuristic(col("text")).as("detected")),
-    Some("""SELECT doc_id,
+    Some(s"""SELECT doc_id,
       CASE WHEN n = 0 THEN 'empty'
            WHEN hits * 1.0 / n >= 0.10 THEN 'en'
            WHEN hits * 1.0 / n >= 0.05 THEN 'en_like'
            ELSE 'other' END AS detected
       FROM (SELECT doc_id,
-        len(list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0)) AS n,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
+        len(${tokensSql("text")}) AS n,
+        len(list_filter(string_split_regex(trim(text), '\\s+'),
           x -> x IN ('the','a','of','and','is'))) AS hits
         FROM documents) z"""))
 
@@ -1144,15 +1378,15 @@ object Catalog {
         TextAnalysis.nonWsChars(col("text")).as("ink_chars"),
         TextAnalysis.meanTokenLen(col("text")).as("mean_tok_len"),
         TextAnalysis.qualityScore(col("text")).as("score")),
-    Some("""SELECT doc_id, CAST(n AS INT) AS n_tokens,
+    Some(s"""SELECT doc_id, CAST(n AS INT) AS n_tokens,
       CAST(len(text) AS INT) AS n_chars_m,
       CAST(ink AS INT) AS ink_chars,
       CASE WHEN n = 0 THEN 0.0 ELSE ink * 1.0 / n END AS mean_tok_len,
       (CASE WHEN len(text) = 0 THEN 0.0 ELSE ink * 1.0 / len(text) END)
         * (least(n, 200) * 1.0 / 200.0) AS score
       FROM (SELECT doc_id, text,
-        len(list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0)) AS n,
-        len(regexp_replace(text, '\s', '', 'g')) AS ink
+        len(${tokensSql("text")}) AS n,
+        len(regexp_replace(text, '\\s', '', 'g')) AS ink
         FROM documents) z"""))
 
   /** Token counting: whitespace + BPE-ish regex tokenizer. */
@@ -1161,9 +1395,9 @@ object Catalog {
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("ws_tokens"),
         TextAnalysis.regexTokenCount(col("text")).as("re_tokens")),
-    Some("""SELECT doc_id,
-      CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0)) AS INT) AS ws_tokens,
-      CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS re_tokens
+    Some(s"""SELECT doc_id,
+      CAST(len(${tokensSql("text")}) AS INT) AS ws_tokens,
+      CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS re_tokens
       FROM documents"""))
 
   /** Rolling polynomial document fingerprint (char-level, mod 1e9+7). */
@@ -1507,13 +1741,11 @@ object Catalog {
           (lit(1.0) - col("n_distinct").cast("double") /
             col("n_tokens").cast("double")).as("dup_ratio"))
     },
-    Some("""SELECT doc_id, n_tokens, n_distinct,
+    Some(s"""SELECT doc_id, n_tokens, n_distinct,
       1.0 - CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS dup_ratio
       FROM (SELECT doc_id,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS INT) AS n_tokens,
-        CAST(len(list_distinct(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0))) AS INT) AS n_distinct
+        CAST(len(${tokensSql("text")}) AS INT) AS n_tokens,
+        CAST(len(list_distinct(${tokensSql("text")})) AS INT) AS n_distinct
         FROM documents) z
       WHERE n_tokens > 0"""))
 
@@ -1629,8 +1861,8 @@ object Catalog {
           count(when(col("owner") < col("doc_id"), 1)).as("n_dup_grams"))
         .withColumn("dup_pct", expr("n_dup_grams * 100 div n_grams"))
     },
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id, unnest(list_distinct(
           [array_to_string(toks[i:i+7], ' ') FOR i IN range(1, len(toks) - 6)])) AS gram
@@ -1661,8 +1893,8 @@ object Catalog {
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 3)
     },
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id, unnest(list_distinct(
           [array_to_string(toks[i:i+3], ' ') FOR i IN range(1, len(toks) - 2)])) AS gram
@@ -1898,14 +2130,13 @@ object Catalog {
         n = 3, threshold = 0.6)
       graft.ext.Curation.clusterKeepers(docs, clusters, "text", "doc_id")
     },
-    Some("""WITH RECURSIVE t AS (
+    Some(s"""WITH RECURSIVE t AS (
         SELECT doc_id, lang || CAST(n_chars // 64 AS VARCHAR) AS blk,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (
         SELECT doc_id, blk,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       p AS (
         SELECT a.doc_id AS da, b.doc_id AS db
@@ -1921,8 +2152,7 @@ object Catalog {
       c AS (SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
         FROM r GROUP BY node),
       s AS (SELECT c.cluster_id, c.doc_id,
-          len(list_filter(string_split_regex(trim(d.text), '\s+'),
-            x -> len(x) > 0)) AS ntok
+          len(${tokensSql("d.text")}) AS ntok
         FROM c JOIN documents d ON c.doc_id = d.doc_id)
       SELECT cluster_id, doc_id AS keeper_id, n_docs FROM (
         SELECT cluster_id, doc_id,
@@ -1938,12 +2168,11 @@ object Catalog {
   private val q89 = Q("q89_curation_pipeline",
     (s, dir) => graft.ext.Curation.curate(
       t(s, dir, "documents"), "text", "doc_id"),
-    Some("""WITH s AS (SELECT doc_id, text,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS n,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
+    Some(s"""WITH s AS (SELECT doc_id, text,
+        len(${tokensSql("text")}) AS n,
+        len(list_filter(string_split_regex(trim(text), '\\s+'),
           x -> x IN ('the','a','of','and','is'))) AS hits,
-        len(regexp_replace(text, '\s', '', 'g')) AS ink
+        len(regexp_replace(text, '\\s', '', 'g')) AS ink
         FROM documents),
       f AS (SELECT doc_id, text, n FROM s
         WHERE n > 0 AND hits * 1.0 / n >= 0.05
@@ -1951,7 +2180,7 @@ object Catalog {
             ELSE ink * 1.0 / len(text) END)
             * (least(n, 200) * 1.0 / 200.0) >= 0.2),
       d AS (SELECT doc_id, text, n, row_number() OVER (
-          PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
+          PARTITION BY lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
           ORDER BY doc_id ASC) AS rn
         FROM f)
       SELECT doc_id, CAST(n AS INT) AS n_tokens,
@@ -2118,9 +2347,8 @@ object Catalog {
       s.sql("""SELECT doc_id, g.pos, g.gram
         FROM q96_docs LATERAL VIEW pos_ngrams(text, 3) g AS pos, gram""")
     },
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents WHERE doc_id % 20 = 0),
       u AS (SELECT doc_id, toks,
           unnest(range(1, len(toks) - 1)) AS i
@@ -2195,9 +2423,8 @@ object Catalog {
         concat_ws(",", transform(sort_array(collect_set(col("doc_id"))),
           x => x.cast("string"))).as("postings"))
       .filter(col("df") >= 10),
-    Some("""WITH t AS (SELECT doc_id,
-        unnest(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS tok
+    Some(s"""WITH t AS (SELECT doc_id,
+        unnest(${tokensSql("text")}) AS tok
         FROM documents WHERE doc_id % 10 = 0)
       SELECT tok, count(DISTINCT doc_id) AS df,
         array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
@@ -2208,12 +2435,10 @@ object Catalog {
     * same sequential fold Spark runs, argmin with the (d, c) tie
     * break. Replays [[graft.ext.Similarity.pqEncode]] bitwise. */
   private def pqOracleCte: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       cb AS (SELECT vec_id AS c, v AS cv FROM e WHERE vec_id < 16),
       pa AS (SELECT e.vec_id, cb.c, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.cv[i]) * (e.v[i] - cb.cv[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.cv", "js.j")} AS d
         FROM e CROSS JOIN cb CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, c, d FROM (
           SELECT vec_id, j, c, d,
@@ -2232,11 +2457,10 @@ object Catalog {
       .select(col("_id").as("vec_id"),
         concat_ws(",", col("codes").cast("array<string>")).as("codes"),
         col("err")),
-    Some(pqOracleCte + """
+    Some(pqOracleCte + s"""
       SELECT vec_id,
         array_to_string(list(c ORDER BY j), ',') AS codes,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-          (x, y) -> x + y) AS err
+        ${foldSql("list(d ORDER BY j)")} AS err
       FROM sel GROUP BY vec_id"""))
 
   /** PQ asymmetric-distance top-5 for the first 10 query vectors:
@@ -2250,16 +2474,13 @@ object Catalog {
       Similarity.pqAdcTopK(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", topK = 5)
     },
-    Some(pqOracleCte + """,
+    Some(pqOracleCte + s""",
       q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
       tj AS (SELECT s.vec_id, q.q_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(q.qv[i] - cb.cv[i]) * (q.qv[i] - cb.cv[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS t
+          ${subDistFoldSql("q.qv", "cb.cv", "s.j")} AS t
         FROM sel s JOIN cb ON cb.c = s.c CROSS JOIN q),
       dist AS (SELECT q_id, vec_id AS n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY j)),
-            (x, y) -> x + y) AS d
+          ${foldSql("list(t ORDER BY j)")} AS d
         FROM tj GROUP BY q_id, vec_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id,
@@ -2276,9 +2497,8 @@ object Catalog {
     (s, dir) => Packing.packBudget(t(s, dir, "documents"), "doc_id",
       TextAnalysis.tokenCount(col("text")), budget = 1024L, bucketSpan = 64L)
       .withColumnRenamed("_id", "doc_id"),
-    Some("""WITH d AS (SELECT doc_id,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS n_tokens
+    Some(s"""WITH d AS (SELECT doc_id,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens
         FROM documents),
       c AS (SELECT doc_id, n_tokens,
         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
@@ -2297,7 +2517,7 @@ object Catalog {
     (s, dir) => Sampling.mixtureSample(t(s, dir, "documents"),
       "doc_id", "source",
       Map("src0" -> 0.4, "src1" -> 0.25, "src2" -> 0.2, "src3" -> 0.15)),
-    Some("""WITH w(source, wt) AS (VALUES
+    Some(s"""WITH w(source, wt) AS (VALUES
         ('src0', 0.4), ('src1', 0.25), ('src2', 0.2), ('src3', 0.15)),
       c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source),
       cw AS (SELECT c.source, cnt, wt FROM c JOIN w USING (source)),
@@ -2306,7 +2526,7 @@ object Catalog {
         FROM cw),
       r AS (SELECT d.doc_id, d.source, k.keep,
           row_number() OVER (PARTITION BY d.source
-            ORDER BY ((d.doc_id % 2147483648) * 2654435761) % 2147483647,
+            ORDER BY ${knuthSql("d.doc_id")},
               d.doc_id) AS rn
         FROM documents d JOIN k USING (source))
       SELECT doc_id, source FROM r WHERE rn <= keep"""))
@@ -2345,14 +2565,13 @@ object Catalog {
         .select(col("left_id").as("train_id"),
           col("right_id").as("eval_id"), col("jaccard"))
     },
-    Some("""WITH t AS (
+    Some(s"""WITH t AS (
         SELECT doc_id, lang || CAST(n_chars // 64 AS VARCHAR) AS blk,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (
         SELECT doc_id, blk,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3)
       SELECT train_id, eval_id, jaccard FROM (
         SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
@@ -2387,9 +2606,8 @@ object Catalog {
     (s, dir) => Packing.packMaterialize(t(s, dir, "documents"),
       "doc_id", "text", TextAnalysis.tokenCount(col("text")),
       budget = 1024L, bucketSpan = 64L),
-    Some("""WITH d AS (SELECT doc_id, text,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS n_tokens
+    Some(s"""WITH d AS (SELECT doc_id, text,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens
         FROM documents),
       c AS (SELECT doc_id, text, n_tokens,
         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
@@ -2411,7 +2629,7 @@ object Catalog {
     Some {
       val (k1, b) = (1.2, 0.75)
       s"""WITH tk AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS tk
+          ${tokensSql("text")} AS tk
           FROM documents),
         dl AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tk),
         st AS (SELECT CAST(count(*) AS BIGINT) AS nd,
@@ -2428,8 +2646,7 @@ object Catalog {
                   / (CAST(st.sd AS DOUBLE) / CAST(st.nd AS DOUBLE))))) AS s
           FROM tf f JOIN dfs d USING (t) JOIN dl l USING (doc_id) CROSS JOIN st)
         SELECT doc_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(s ORDER BY t)),
-            (x, y) -> x + y) AS bm25_micro
+          ${foldSql("list(s ORDER BY t)")} AS bm25_micro
         FROM sc GROUP BY doc_id"""
     })
 
@@ -2443,12 +2660,11 @@ object Catalog {
       "text", "doc_id", evalPred = col("doc_id") % 3 === 0,
       blockCols = Seq(col("lang"), expr("n_chars div 64")),
       n = 3, threshold = 0.6, budget = 1024L),
-    Some("""WITH s AS (SELECT doc_id, text,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS n,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
+    Some(s"""WITH s AS (SELECT doc_id, text,
+        len(${tokensSql("text")}) AS n,
+        len(list_filter(string_split_regex(trim(text), '\\s+'),
           x -> x IN ('the','a','of','and','is'))) AS hits,
-        len(regexp_replace(text, '\s', '', 'g')) AS ink
+        len(regexp_replace(text, '\\s', '', 'g')) AS ink
         FROM documents WHERE doc_id % 3 <> 0),
       f AS (SELECT doc_id, text, n FROM s
         WHERE n > 0 AND hits * 1.0 / n >= 0.05
@@ -2456,16 +2672,15 @@ object Catalog {
             ELSE ink * 1.0 / len(text) END)
             * (least(n, 200) * 1.0 / 200.0) >= 0.2),
       d AS (SELECT doc_id, n, row_number() OVER (
-          PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
+          PARTITION BY lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
           ORDER BY doc_id ASC) AS rn
         FROM f),
       cur AS (SELECT doc_id, CAST(n AS BIGINT) AS n_tokens FROM d WHERE rn = 1),
       t2 AS (SELECT doc_id, lang || CAST(n_chars // 64 AS VARCHAR) AS blk,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id, blk,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t2 WHERE len(toks) >= 3),
       bad AS (SELECT DISTINCT a.doc_id FROM g a JOIN g b
         ON a.blk = b.blk AND b.doc_id % 3 = 0
@@ -2501,9 +2716,7 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, v, nrm, cell FROM (
         SELECT n.vec_id AS n_id, n.v, n.nrm, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       dropped AS (SELECT DISTINCT b.n_id AS id
         FROM asg a JOIN asg b ON a.cell = b.cell AND a.n_id < b.n_id
@@ -2524,8 +2737,7 @@ object Catalog {
       keep AS (SELECT a.n_id AS doc_id, a.cell FROM asg a
         WHERE a.n_id NOT IN (SELECT id FROM dropped)),
       s AS (SELECT d.doc_id, k.cell,
-          len(list_filter(string_split_regex(trim(d.text), '\\s+'),
-            x -> len(x) > 0)) AS ntok,
+          len(${tokensSql("d.text")}) AS ntok,
           len(regexp_replace(d.text, '\\s', '', 'g')) AS ink,
           len(d.text) AS lt
         FROM documents d JOIN keep k ON k.doc_id = d.doc_id)
@@ -2596,9 +2808,7 @@ object Catalog {
       cosineOracleCte + s""",
       $kmeansTwoRoundsSql,
       pa AS (SELECT e.vec_id, cb.cent_id AS cc, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.c[i]) * (e.v[i] - cb.c[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.c", "js.j")} AS d
         FROM e CROSS JOIN c2 cb
         CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, cc, d FROM (
@@ -2607,8 +2817,7 @@ object Catalog {
           FROM pa) z WHERE rn = 1)
       SELECT vec_id,
         array_to_string(list(cc ORDER BY j), ',') AS codes,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-          (x, y) -> x + y) AS err
+        ${foldSql("list(d ORDER BY j)")} AS err
       FROM sel GROUP BY vec_id"""
     })
 
@@ -2654,12 +2863,10 @@ object Catalog {
         s"${b * rowsPerBand + rowsPerBand}], ',') AS bk FROM s")
       .mkString("\n        UNION ALL ")
     s"""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-          x -> len(x) > 0) AS toks
+        ${tokensSql("text")} AS toks
       FROM documents $where),
       g AS (SELECT doc_id,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       h AS (SELECT doc_id, sh,
           [list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -2691,17 +2898,13 @@ object Catalog {
       b AS (SELECT vec_id, v, nrm, ${lshBucketSql(planes)} AS bucket FROM n),
       apx AS (SELECT q_id, n_id FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
-            c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM b q JOIN b c ON q.bucket = c.bucket
           AND q.vec_id < 100 AND c.vec_id <> q.vec_id) z
       WHERE rank <= 3),
       ext AS (SELECT q_id, n_id FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
-            c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM n q JOIN n c ON q.vec_id < 100 AND c.vec_id <> q.vec_id) z
       WHERE rank <= 3)
       SELECT e.q_id,
@@ -2732,14 +2935,10 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, cell FROM (
         SELECT n.vec_id AS n_id, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       pa AS (SELECT e.vec_id, cb.cent_id AS cc, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.c[i]) * (e.v[i] - cb.c[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.c", "js.j")} AS d
         FROM e CROSS JOIN c2 cb
         CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, cc FROM (
@@ -2748,20 +2947,15 @@ object Catalog {
           FROM pa) z WHERE rn = 1),
       prb AS (SELECT q_id, qv, cell FROM (
         SELECT n.vec_id AS q_id, n.v AS qv, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 50) z WHERE pr <= 2),
       tj AS (SELECT s.vec_id, p.q_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qv[i] - cb.c[i]) * (p.qv[i] - cb.c[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS t
+          ${subDistFoldSql("p.qv", "cb.c", "s.j")} AS t
         FROM sel s JOIN c2 cb ON cb.cent_id = s.cc
         JOIN asg a ON a.n_id = s.vec_id
         JOIN prb p ON p.cell = a.cell),
       dist AS (SELECT q_id, vec_id AS n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY j)),
-            (x, y) -> x + y) AS d
+          ${foldSql("list(t ORDER BY j)")} AS d
         FROM tj GROUP BY q_id, vec_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id,
@@ -2775,9 +2969,8 @@ object Catalog {
   private val q122 = Q("q122_doc_chunking",
     (s, dir) => Packing.chunkDocs(t(s, dir, "documents"),
       "text", "doc_id", window = 64, overlap = 16),
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
       FROM documents),
       c AS (SELECT doc_id, toks,
         unnest(range(0, ((len(toks) - 1) // 48) + 1)) AS chunk_id
@@ -2803,9 +2996,8 @@ object Catalog {
         .select(col("_id").as("chunk_key"), col("n_tokens"),
           col("start"), col("shard"))
     },
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
       FROM documents),
       c AS (SELECT doc_id, toks,
         unnest(range(0, ((len(toks) - 1) // 64) + 1)) AS chunk_id
@@ -2853,7 +3045,7 @@ object Catalog {
   private val q125 = Q("q125_temperature_sample",
     (s, dir) => Sampling.temperatureSample(t(s, dir, "documents"),
       "doc_id", "lang", alpha = 0.5),
-    Some("""WITH c AS (SELECT lang, count(*) AS cnt FROM documents
+    Some(s"""WITH c AS (SELECT lang, count(*) AS cnt FROM documents
         GROUP BY lang),
       w AS (SELECT lang, cnt, sqrt(CAST(cnt AS DOUBLE)) AS wt FROM c),
       s AS (SELECT min(CAST(cnt AS DOUBLE) / wt) AS scale FROM w),
@@ -2861,7 +3053,7 @@ object Catalog {
         CAST(floor(wt * (SELECT scale FROM s)) AS BIGINT) AS keep FROM w),
       r AS (SELECT d.doc_id, d.lang, k.keep,
           row_number() OVER (PARTITION BY d.lang
-            ORDER BY ((d.doc_id % 2147483648) * 2654435761) % 2147483647,
+            ORDER BY ${knuthSql("d.doc_id")},
               d.doc_id) AS rn
         FROM documents d JOIN k USING (lang))
       SELECT doc_id, lang FROM r WHERE rn <= keep"""))
@@ -2924,10 +3116,9 @@ object Catalog {
   private val q115 = Q("q115_histogram",
     (s, dir) => Profiling.histogram(t(s, dir, "documents"),
       TextAnalysis.tokenCount(col("text")), width = 25L),
-    Some("""SELECT n // 25 AS bucket, (n // 25) * 25 AS bucket_lo,
+    Some(s"""SELECT n // 25 AS bucket, (n // 25) * 25 AS bucket_lo,
         count(*) AS n, CAST(min(n) AS BIGINT) AS lo, CAST(max(n) AS BIGINT) AS hi
-      FROM (SELECT CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS n
+      FROM (SELECT CAST(len(${tokensSql("text")}) AS BIGINT) AS n
         FROM documents) z
       GROUP BY n // 25"""))
 
@@ -2940,9 +3131,8 @@ object Catalog {
   private val q128 = Q("q128_span_dedup",
     (s, dir) => Dedup.dedupSpans(t(s, dir, "documents"),
       "text", "doc_id", k = 8),
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks FROM documents),
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks FROM documents),
       g AS (SELECT doc_id, i - 1 AS pos,
           array_to_string(toks[i:i+7], ' ') AS gram
         FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 8 + 2)) AS i
@@ -2997,7 +3187,7 @@ object Catalog {
     Some {
       val (k1, b) = (1.2, 0.75)
       s"""WITH tk AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS tk
+          ${tokensSql("text")} AS tk
           FROM documents),
         dl AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tk),
         st AS (SELECT CAST(count(*) AS BIGINT) AS nd,
@@ -3014,8 +3204,7 @@ object Catalog {
                   / (CAST(st.sd AS DOUBLE) / CAST(st.nd AS DOUBLE))))) AS s
           FROM tf f JOIN dfs d USING (t) JOIN dl l USING (doc_id) CROSS JOIN st),
         bm AS (SELECT doc_id,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(s ORDER BY t)),
-              (x, y) -> x + y) AS bm25_micro
+            ${foldSql("list(s ORDER BY t)")} AS bm25_micro
           FROM sc GROUP BY doc_id),
         sp AS (SELECT doc_id, rs FROM (SELECT doc_id, row_number() OVER (
             ORDER BY bm25_micro DESC, doc_id ASC) AS rs FROM bm) z
@@ -3046,10 +3235,10 @@ object Catalog {
     (s, dir) => Sampling.hashSplit(t(s, dir, "documents"), "doc_id",
       Seq(("train", 80), ("val", 10), ("test", 10)))
       .select(col("doc_id"), col("split")),
-    Some("""SELECT doc_id, CASE
-        WHEN ((doc_id % 2147483648) * 2654435761) % 2147483647 % 100 < 80
+    Some(s"""SELECT doc_id, CASE
+        WHEN ${knuthSql("doc_id")} % 100 < 80
           THEN 'train'
-        WHEN ((doc_id % 2147483648) * 2654435761) % 2147483647 % 100 < 90
+        WHEN ${knuthSql("doc_id")} % 100 < 90
           THEN 'val'
         ELSE 'test' END AS split
       FROM documents"""))
@@ -3108,8 +3297,7 @@ object Catalog {
     * in. */
   private def bigramLmCtesFrom(src: String): String =
     s"""t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-          x -> len(x) > 0) AS toks FROM $src),
+        ${tokensSql("text")} AS toks FROM $src),
       b AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
         FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
               FROM t WHERE len(toks) >= 2)),
@@ -3150,15 +3338,11 @@ object Catalog {
         WHERE vec_id < 400 ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, cell FROM (
         SELECT n.vec_id AS n_id, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       cb AS (SELECT vec_id AS c, v AS cv2 FROM e WHERE vec_id < 16),
       pa AS (SELECT e.vec_id, cb.c, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.cv2[i]) * (e.v[i] - cb.cv2[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.cv2", "js.j")} AS d
         FROM e CROSS JOIN cb CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, c FROM (
           SELECT vec_id, j, c,
@@ -3166,20 +3350,15 @@ object Catalog {
           FROM pa) z WHERE rn = 1),
       prb AS (SELECT q_id, qv, cell FROM (
         SELECT n.vec_id AS q_id, n.v AS qv, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 40) z WHERE pr <= 3),
       tj AS (SELECT s.vec_id, p.q_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qv[i] - cb.cv2[i]) * (p.qv[i] - cb.cv2[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS t
+          ${subDistFoldSql("p.qv", "cb.cv2", "s.j")} AS t
         FROM sel s JOIN cb ON cb.c = s.c
         JOIN asg a ON a.n_id = s.vec_id
         JOIN prb p ON p.cell = a.cell),
       dist AS (SELECT q_id, vec_id AS n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY j)),
-            (x, y) -> x + y) AS d
+          ${foldSql("list(t ORDER BY j)")} AS d
         FROM tj GROUP BY q_id, vec_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id,
@@ -3309,8 +3488,7 @@ object Catalog {
         s"CASE WHEN 2 * sv[${j + 1}] > nt THEN ${1L << j} ELSE 0 END")
         .mkString("\n        + ")
       s"""WITH t AS (SELECT doc_id,
-          list_distinct(list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0)) AS toks
+          list_distinct(${tokensSql("text")}) AS toks
         FROM documents),
       tn AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
       h AS (SELECT doc_id, len(toks) AS nt,
@@ -3346,11 +3524,10 @@ object Catalog {
           concat_ws(",", col("codes").cast("array<string>")).as("codes"),
           col("err"))
     },
-    Some(cosineOracleCte + residualPqCtes + """
+    Some(cosineOracleCte + residualPqCtes + s"""
       SELECT n_id AS vec_id, CAST(cell AS BIGINT) AS cell,
         array_to_string(list(c ORDER BY j), ',') AS codes,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-          (x, y) -> x + y) AS err
+        ${foldSql("list(d ORDER BY j)")} AS err
       FROM sel GROUP BY n_id, cell"""))
 
   /** Shared DuckDB CTE chain of the residual-PQ family (q138/q139):
@@ -3363,9 +3540,7 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 8),
       asg AS (SELECT n_id, v, cell FROM (
         SELECT n.vec_id AS n_id, n.v, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       r AS (SELECT a.n_id, a.cell,
           [a.v[i] - c.cv[i] FOR i IN range(1, 65)] AS rv
@@ -3373,9 +3548,7 @@ object Catalog {
       cb AS (SELECT n_id - 8 AS c, rv AS cv FROM r
         WHERE n_id >= 8 AND n_id < 24),
       pa AS (SELECT r.n_id, r.cell, cb.c, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(r.rv[i] - cb.cv[i]) * (r.rv[i] - cb.cv[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("r.rv", "cb.cv", "js.j")} AS d
         FROM r CROSS JOIN cb
         CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT n_id, cell, j, c, d FROM (
@@ -3404,19 +3577,14 @@ object Catalog {
       prb AS (SELECT q_id, cell, qrv FROM (
         SELECT n.vec_id AS q_id, cent.cent_id AS cell,
           [n.v[i] - cent.cv[i] FOR i IN range(1, 65)] AS qrv,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 30) z WHERE pr <= 2),
       dj AS (SELECT p.q_id, s.n_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qrv[i] - cb.cv[i]) * (p.qrv[i] - cb.cv[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("p.qrv", "cb.cv", "s.j")} AS d
         FROM prb p JOIN sel s ON s.cell = p.cell AND s.n_id <> p.q_id
         JOIN cb ON cb.c = s.c),
       dd AS (SELECT q_id, n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-            (x, y) -> x + y) AS dist
+          ${foldSql("list(d ORDER BY j)")} AS dist
         FROM dj GROUP BY q_id, n_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
@@ -3468,13 +3636,11 @@ object Catalog {
       Dedup.gramOverlapScores(d.filter(col("doc_id") % 10 =!= 0),
         d.filter(col("doc_id") % 10 === 0), "text", "doc_id", n = 3)
     },
-    Some("""WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+          ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       tr AS (SELECT DISTINCT unnest(sh) AS gm FROM g WHERE doc_id % 10 <> 0),
       ev AS (SELECT doc_id, unnest(sh) AS gm FROM g WHERE doc_id % 10 = 0)
@@ -3557,9 +3723,7 @@ object Catalog {
       cbd AS (SELECT row_number() OVER (ORDER BY cent_id) - 1 AS cc,
           c AS cv FROM c2),
       pb AS (SELECT r.n_id, r.cell, cbd.cc, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(r.rv[i] - cbd.cv[i]) * (r.rv[i] - cbd.cv[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("r.rv", "cbd.cv", "js.j")} AS d
         FROM r CROSS JOIN cbd
         CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       se2 AS (SELECT n_id, cell, j, cc FROM (
@@ -3569,19 +3733,14 @@ object Catalog {
       prb AS (SELECT q_id, cell, qrv FROM (
         SELECT n.vec_id AS q_id, cent.cent_id AS cell,
           [n.v[i] - cent.cv[i] FOR i IN range(1, 65)] AS qrv,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 30) z WHERE pr <= 2),
       dj AS (SELECT p.q_id, s.n_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qrv[i] - cbd.cv[i]) * (p.qrv[i] - cbd.cv[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("p.qrv", "cbd.cv", "s.j")} AS d
         FROM prb p JOIN se2 s ON s.cell = p.cell AND s.n_id <> p.q_id
         JOIN cbd ON cbd.cc = s.cc),
       dd AS (SELECT q_id, n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-            (x, y) -> x + y) AS dist
+          ${foldSql("list(d ORDER BY j)")} AS dist
         FROM dj GROUP BY q_id, n_id)
       SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
         SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
@@ -3638,14 +3797,7 @@ object Catalog {
     },
     Some {
       def iterSql(prev: String, out: String): String =
-        s"""$out AS (SELECT nodes.n,
-            CAST(150000 + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS n,
-              CAST(sum((r.r * 850000) // (deg.d * 1000000)) AS BIGINT) AS s
-            FROM e JOIN $prev r ON r.n = e.src
-            JOIN deg ON deg.src = e.src
-            GROUP BY e.dst) x ON nodes.n = x.n)"""
+        pageRankStepSql("e", "nodes", "deg", "150000", prev, out)
       s"""WITH e AS (SELECT DISTINCT o_custkey AS src,
           l_suppkey + 1000000 AS dst
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -3664,17 +3816,16 @@ object Catalog {
   private val q146 = Q("q146_dataset_card",
     (s, dir) => TextAnalysis.datasetCard(t(s, dir, "documents"),
       "text", "doc_id", "lang"),
-    Some("""SELECT lang, count(*) AS n_docs,
+    Some(s"""SELECT lang, count(*) AS n_docs,
         CAST(sum(tk) AS BIGINT) AS n_tokens,
         CAST(sum(ch) AS BIGINT) AS n_chars,
         count(*) - count(DISTINCT nk) AS n_dups,
         CAST(sum(CASE WHEN tk < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
         CAST(sum(tk) AS DOUBLE) / count(*) AS mean_tokens
       FROM (SELECT lang,
-          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS BIGINT) AS tk,
+          CAST(len(${tokensSql("text")}) AS BIGINT) AS tk,
           CAST(len(text) AS BIGINT) AS ch,
-          lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS nk
+          lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS nk
         FROM documents)
       GROUP BY lang"""))
 
@@ -3720,8 +3871,7 @@ object Catalog {
           FROM $prev CROSS JOIN tp$r t) z)"""
     }.mkString(",\n      ")
     s"""WITH wc AS (SELECT tok AS w, count(*) AS n FROM (
-          SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0)) AS tok FROM documents) z GROUP BY tok),
+          SELECT unnest(${tokensSql("text")}) AS tok FROM documents) z GROUP BY tok),
       w0 AS (SELECT w, [w[i] FOR i IN range(1, len(w) + 1)] AS a, n
         FROM wc),
       $rounds"""
@@ -3736,11 +3886,10 @@ object Catalog {
       val merges = graft.ext.Bpe.mergesMemoized(d, "text", k = 8)
       graft.ext.Bpe.encodeTokenCounts(d, "text", "doc_id", merges)
     },
-    Some(bpeRoundsCtes(8) + """
+    Some(bpeRoundsCtes(8) + s"""
       SELECT d.doc_id, CAST(sum(len(w8.a)) AS BIGINT) AS n_bpe_tokens
       FROM (SELECT doc_id,
-          unnest(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS tok
+          unnest(${tokensSql("text")}) AS tok
         FROM documents) d
       JOIN w8 ON d.tok = w8.w
       GROUP BY d.doc_id"""))
@@ -3752,9 +3901,8 @@ object Catalog {
   private val q149 = Q("q149_span_corrupt",
     (s, dir) => TextAnalysis.spanCorrupt(t(s, dir, "documents"),
       "text", "doc_id"),
-    Some("""WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+          ${tokensSql("text")} AS toks
         FROM documents),
       e AS (SELECT doc_id, i AS pos, toks[i] AS tok,
           ((((doc_id * 1000003 + i) % 2147483648) * 2654435761)
@@ -3788,9 +3936,8 @@ object Catalog {
   private val q150 = Q("q150_oov_rate",
     (s, dir) => TextAnalysis.oovRate(t(s, dir, "documents"),
       "text", "doc_id", vocabSize = 16),
-    Some("""WITH e AS (SELECT doc_id,
-          unnest(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS t
+    Some(s"""WITH e AS (SELECT doc_id,
+          unnest(${tokensSql("text")}) AS t
         FROM documents),
       v AS (SELECT t FROM (
           SELECT t, count(*) AS c FROM e GROUP BY t
@@ -3864,14 +4011,7 @@ object Catalog {
     },
     Some {
       def iterSql(prev: String, out: String): String =
-        s"""$out AS (SELECT nodes.n,
-            CAST(150000 + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS n,
-              CAST(sum((r.r * 850000) // (deg.d * 1000000)) AS BIGINT) AS s
-            FROM e JOIN $prev r ON r.n = e.src
-            JOIN deg ON deg.src = e.src
-            GROUP BY e.dst) x ON nodes.n = x.n)"""
+        pageRankStepSql("e", "nodes", "deg", "150000", prev, out)
       s"""WITH nm AS (SELECT source,
           row_number() OVER (ORDER BY source) - 1 AS node
         FROM (SELECT DISTINCT source FROM documents)),
@@ -3896,7 +4036,7 @@ object Catalog {
         FROM cw),
       r AS (SELECT d.doc_id, d.source, k.keep,
           row_number() OVER (PARTITION BY d.source
-            ORDER BY ((d.doc_id % 2147483648) * 2654435761) % 2147483647,
+            ORDER BY ${knuthSql("d.doc_id")},
               d.doc_id) AS rn
         FROM documents d JOIN k USING (source))
       SELECT doc_id, source FROM r WHERE rn <= keep"""
@@ -3918,9 +4058,8 @@ object Catalog {
     * `t(doc_id, lang, text, ws, ls)` tokenized docs, `s(doc_id,
     * signals…)` the per-doc quality signals; [[gopherKeepSql]] is the
     * published keep conjunction over `s`'s columns. */
-  private def gopherSignalCtes: String = """t AS (SELECT doc_id, lang, text,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS ws,
+  private def gopherSignalCtes: String = s"""t AS (SELECT doc_id, lang, text,
+        ${tokensSql("text")} AS ws,
         list_filter([trim(l) FOR l IN string_split(text, chr(10))],
           l -> len(l) > 0) AS ls
       FROM documents),
@@ -4014,16 +4153,12 @@ object Catalog {
       Retrieval.hardNegatives(withSrc.filter(col("vec_id") < 10),
         withSrc, "vec_id", "embedding", "source", k = 5)
     },
-    Some(cosineOracleCte + """,
+    Some(cosineOracleCte + s""",
       g AS (SELECT n.vec_id, n.v, n.nrm, d.source
         FROM n JOIN documents d ON d.doc_id = n.vec_id)
       SELECT q_id, neg_id, CAST(rank AS INT) AS rank FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS neg_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              [q.v[i] * c.v[i] FOR i IN range(1, len(q.v) + 1)]),
-              (a, b) -> a + b)
-             / sqrt(q.nrm * c.nrm)) DESC, c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM g q JOIN g c ON c.vec_id <> q.vec_id
           AND c.source <> q.source
         WHERE q.vec_id < 10) z
@@ -4036,10 +4171,9 @@ object Catalog {
   private val q155 = Q("q155_top_ngram",
     (s, dir) => TextAnalysis.topNgramStats(t(s, dir, "documents"),
       "text", "doc_id"),
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS ws,
-        len(regexp_replace(text, '\s', '', 'g')) AS denom
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS ws,
+        len(regexp_replace(text, '\\s', '', 'g')) AS denom
       FROM documents),
       g2 AS (SELECT doc_id,
           unnest([array_to_string(ws[i:i+1], ' ')
@@ -4087,9 +4221,8 @@ object Catalog {
         TextAnalysis.fingerprint(col("text")).as("_fp"))
       Packing.shardManifest(assignment, fp)
     },
-    Some("""WITH d AS (SELECT doc_id,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS n_tokens
+    Some(s"""WITH d AS (SELECT doc_id,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens
         FROM documents),
       c AS (SELECT doc_id, n_tokens,
         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
@@ -4129,14 +4262,13 @@ object Catalog {
         .withColumn("fertility",
           col("n_bpe_tokens") * lit(1.0) / col("n_words"))
     },
-    Some(bpeRoundsCtes(8) + """
+    Some(bpeRoundsCtes(8) + s"""
       SELECT dm.lang,
         CAST(sum(len(w8.a)) AS BIGINT) AS n_bpe_tokens,
         CAST(count(*) AS BIGINT) AS n_words,
         CAST(sum(len(w8.a)) AS DOUBLE) / count(*) AS fertility
       FROM (SELECT doc_id,
-          unnest(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS tok
+          unnest(${tokensSql("text")}) AS tok
         FROM documents) e
       JOIN w8 ON e.tok = w8.w
       JOIN documents dm ON dm.doc_id = e.doc_id
@@ -4169,9 +4301,8 @@ object Catalog {
                 AND v2.piece = s.w[s.pos:s.pos+len(v2.piece)-1])
         ) SELECT w, n, piece FROM s WHERE piece IS NOT NULL)"""
     val wc = if (includeWc)
-      """WITH wc AS (SELECT tok AS w, count(*) AS n FROM (
-          SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS tok FROM documents) z GROUP BY tok),
+      s"""WITH wc AS (SELECT tok AS w, count(*) AS n FROM (
+          SELECT unnest(${tokensSql("text")}) AS tok FROM documents) z GROUP BY tok),
       """
     else ""
     s"""$wc
@@ -4239,14 +4370,7 @@ object Catalog {
     Some {
       def iterSql(e: String, nodes: String, deg: String,
           prev: String, out: String): String =
-        s"""$out AS (SELECT $nodes.n,
-            CAST(150000 + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM $nodes LEFT JOIN (
-            SELECT $e.dst AS n,
-              CAST(sum((r.r * 850000) // ($deg.d * 1000000)) AS BIGINT) AS s
-            FROM $e JOIN $prev r ON r.n = $e.src
-            JOIN $deg ON $deg.src = $e.src
-            GROUP BY $e.dst) x ON $nodes.n = x.n)"""
+        pageRankStepSql(e, nodes, deg, "150000", prev, out)
       s"""WITH eb AS (SELECT DISTINCT o_custkey AS src,
           l_suppkey + 1000000 AS dst
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -4369,7 +4493,7 @@ object Catalog {
         .withColumn("uni_fertility",
           col("n_uni_tokens") * lit(1.0) / col("n_words"))
     },
-    Some(bpeRoundsCtes(8) + "," + unigramCtes(includeWc = false) + """,
+    Some(bpeRoundsCtes(8) + "," + unigramCtes(includeWc = false) + s""",
       uwpc AS (SELECT w, CAST(count(*) AS BIGINT) AS p
         FROM useg2 GROUP BY w)
       SELECT dm.lang,
@@ -4379,8 +4503,7 @@ object Catalog {
         CAST(sum(len(w8.a)) AS DOUBLE) / count(*) AS bpe_fertility,
         CAST(sum(u.p) AS DOUBLE) / count(*) AS uni_fertility
       FROM (SELECT doc_id,
-          unnest(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS tok
+          unnest(${tokensSql("text")}) AS tok
         FROM documents) e
       JOIN w8 ON e.tok = w8.w
       JOIN uwpc u ON e.tok = u.w
@@ -4533,8 +4656,7 @@ object Catalog {
           s" % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT)")
         .mkString("[", ",\n        ", "]")
       s"""WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0) AS ws
+          ${tokensSql("text")} AS ws
         FROM documents),
         e AS (SELECT doc_id,
             unnest([list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -4592,9 +4714,9 @@ object Catalog {
         JOIN g y ON y.doc_id = c.doc_b) z
       WHERE jaccard >= 0.5),
       sp AS (SELECT doc_id, CASE
-        WHEN ((doc_id % 2147483648) * 2654435761) % 2147483647 % 100 < 80
+        WHEN ${knuthSql("doc_id")} % 100 < 80
           THEN 'train'
-        WHEN ((doc_id % 2147483648) * 2654435761) % 2147483647 % 100 < 90
+        WHEN ${knuthSql("doc_id")} % 100 < 90
           THEN 'val'
         ELSE 'test' END AS split
       FROM documents)
@@ -4640,8 +4762,7 @@ object Catalog {
           s" % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT)")
         .mkString("[", ",\n        ", "]")
       s"""WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0) AS ws
+          ${tokensSql("text")} AS ws
         FROM documents),
         e AS (SELECT doc_id,
             unnest([list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -4651,9 +4772,7 @@ object Catalog {
         he AS (SELECT doc_id, $comps AS iv FROM e GROUP BY doc_id),
         n AS (SELECT doc_id,
             [CAST(x AS DOUBLE) FOR x IN iv] AS v,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              [CAST(x AS DOUBLE) * CAST(x AS DOUBLE) FOR x IN iv]),
-              (a, b) -> a + b) AS nrm
+            ${foldSql("[CAST(x AS DOUBLE) * CAST(x AS DOUBLE) FOR x IN iv]")} AS nrm
           FROM he),
         nz AS (SELECT * FROM n WHERE nrm > 0),
         cent AS (SELECT doc_id AS cent_id, v AS cv, nrm AS cn FROM nz
@@ -4666,7 +4785,7 @@ object Catalog {
           FROM nz CROSS JOIN cent) z WHERE cr = 1),
         r AS (SELECT doc_id, cell,
             row_number() OVER (PARTITION BY cell ORDER BY
-              ((doc_id % 2147483648) * 2654435761) % 2147483647,
+              ${knuthSql("doc_id")},
               doc_id) AS rn
           FROM asg)
         SELECT doc_id, cell AS cluster FROM r WHERE rn <= 20"""
@@ -4681,9 +4800,8 @@ object Catalog {
     (s, dir) => TextAnalysis.knBigramLmScores(t(s, dir, "documents"),
       "text", "doc_id")
       .withColumnRenamed("_id", "doc_id"),
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks FROM documents),
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks FROM documents),
       b AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
         FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
               FROM t WHERE len(toks) >= 2)),
@@ -4744,8 +4862,7 @@ object Catalog {
           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
           CAST(sum(fp % 1000000007) % 1000000007 AS BIGINT) AS checksum
         FROM (SELECT doc_id,
-          CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0)) AS BIGINT) AS n_tokens,
+          CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens,
           CASE WHEN len(text) = 0 THEN 0 ELSE
             list_reduce(list_prepend(CAST(0 AS BIGINT),
               [CAST(ord(text[i]) AS BIGINT)
@@ -4853,9 +4970,8 @@ object Catalog {
           (col("covered").cast("double") / col("_tot").cast("double"))
             .as("coverage"))
     },
-    Some("""WITH tc AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM (
-          SELECT unnest(list_filter(string_split_regex(trim(text),
-            '\s+'), x -> len(x) > 0)) AS t
+    Some(s"""WITH tc AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM (
+          SELECT unnest(${tokensSql("text")}) AS t
           FROM documents) GROUP BY t),
       r AS (SELECT t, c,
           row_number() OVER (ORDER BY c DESC, t ASC) AS rk,
@@ -5268,11 +5384,10 @@ object Catalog {
               WHEN m THEN tok END, ' ' ORDER BY pos) AS targets
           FROM r2$sfx GROUP BY doc_id)"""
       s"""WITH t AS (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> len(x) > 0) AS toks
+          ${tokensSql("text")} AS toks
         FROM documents),
       md AS (SELECT doc_id, toks,
-          ((doc_id * 2654435761) % 2147483647) % 3 AS md
+          (${seedSql("doc_id")}) % 3 AS md
         FROM t),
       ${chain("r", 150000, 0)},
       ${chain("x", 400000, 1)},
@@ -5313,18 +5428,17 @@ object Catalog {
         weightsMicro = Seq("src0" -> 500000L, "src1" -> 250000L,
           "src2" -> 150000L, "src3" -> 100000L))
     },
-    Some("""WITH w(source, wm) AS (VALUES
+    Some(s"""WITH w(source, wm) AS (VALUES
         ('src0', 500000), ('src1', 250000),
         ('src2', 150000), ('src3', 100000)),
       q AS (SELECT source,
         (CAST(30000 AS BIGINT) * wm) // 1000000 AS quota FROM w),
       d AS (SELECT doc_id, source,
-          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-            x -> len(x) > 0)) AS BIGINT) AS tok
+          CAST(len(${tokensSql("text")}) AS BIGINT) AS tok
         FROM documents),
       r AS (SELECT d.doc_id, d.source, d.tok, q.quota,
           sum(d.tok) OVER (PARTITION BY d.source
-            ORDER BY ((d.doc_id % 2147483648) * 2654435761) % 2147483647,
+            ORDER BY ${knuthSql("d.doc_id")},
               d.doc_id
             ROWS UNBOUNDED PRECEDING) AS ct
         FROM d JOIN q USING (source))
@@ -5581,15 +5695,11 @@ object Catalog {
         ORDER BY vec_id ASC LIMIT 16),
       asg AS (SELECT n_id, cell FROM (
         SELECT n.vec_id AS n_id, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS cr
+          $centroidRankSql AS cr
         FROM n CROSS JOIN cent) z WHERE cr = 1),
       cb AS (SELECT vec_id AS c, v AS cv2 FROM e WHERE vec_id < 16),
       pa AS (SELECT e.vec_id, cb.c, js.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(e.v[i] - cb.cv2[i]) * (e.v[i] - cb.cv2[i])
-             FOR i IN range(js.j * 8 + 1, js.j * 8 + 9)]), (x, y) -> x + y) AS d
+          ${subDistFoldSql("e.v", "cb.cv2", "js.j")} AS d
         FROM e CROSS JOIN cb CROSS JOIN (SELECT unnest(range(0, 8)) AS j) js),
       sel AS (SELECT vec_id, j, c FROM (
           SELECT vec_id, j, c,
@@ -5597,20 +5707,15 @@ object Catalog {
           FROM pa) z WHERE rn = 1),
       prb AS (SELECT q_id, qv, cell FROM (
         SELECT n.vec_id AS q_id, n.v AS qv, cent.cent_id AS cell,
-          row_number() OVER (PARTITION BY n.vec_id ORDER BY
-            (${dotFoldSql("n.v", "cent.cv")} / sqrt(n.nrm * cent.cn)) DESC,
-            cent.cent_id ASC) AS pr
+          $centroidRankSql AS pr
         FROM n CROSS JOIN cent WHERE n.vec_id < 50) z WHERE pr <= 2),
       tj AS (SELECT s.vec_id, p.q_id, s.j,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            [(p.qv[i] - cb.cv2[i]) * (p.qv[i] - cb.cv2[i])
-             FOR i IN range(s.j * 8 + 1, s.j * 8 + 9)]), (x, y) -> x + y) AS t
+          ${subDistFoldSql("p.qv", "cb.cv2", "s.j")} AS t
         FROM sel s JOIN cb ON cb.c = s.c
         JOIN asg a ON a.n_id = s.vec_id
         JOIN prb p ON p.cell = a.cell),
       dist AS (SELECT q_id, vec_id AS n_id,
-          list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY j)),
-            (x, y) -> x + y) AS d
+          ${foldSql("list(t ORDER BY j)")} AS d
         FROM tj GROUP BY q_id, vec_id),
       adcr AS (SELECT q_id, n_id,
           row_number() OVER (PARTITION BY q_id ORDER BY d, n_id) AS rank
@@ -5663,9 +5768,7 @@ object Catalog {
     Some(twoStageCtes(10) + s""",
       ext AS (SELECT q_id, n_id FROM (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            (${dotFoldSql("q.v", "c.v")} / sqrt(q.nrm * c.nrm)) DESC,
-            c.vec_id ASC) AS rank
+          $cosineRankSql AS rank
         FROM n q JOIN n c ON q.vec_id < 50 AND c.vec_id <> q.vec_id) z
       WHERE rank <= 3),
       a3 AS (SELECT q_id, n_id FROM adcr WHERE rank <= 3),
@@ -5700,9 +5803,8 @@ object Catalog {
     * (min packed (doc,pos) per substring class, -1 sentinel), the
     * overlapped length-12 key, keeper selection, and the per-doc
     * gaps-and-islands interval merge up to `isl`. */
-  private def suffixDedupCtes: String = """WITH tk0 AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+  private def suffixDedupCtes: String = s"""WITH tk0 AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       tk AS (SELECT doc_id, i AS pos, toks[i] AS tok, len(toks) AS dlen
         FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i
@@ -5897,9 +5999,8 @@ object Catalog {
     (s, dir) => graft.ops.Profiling.quantileProfile(
       t(s, dir, "documents"), "source",
       TextAnalysis.tokenCount(col("text")), width = 8L),
-    Some("""WITH v AS (SELECT source,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS tok
+    Some(s"""WITH v AS (SELECT source,
+        len(${tokensSql("text")}) AS tok
         FROM documents),
       h AS (SELECT source, tok // 8 AS b, count(*) AS c
         FROM v GROUP BY source, tok // 8),
@@ -5932,9 +6033,8 @@ object Catalog {
       t(s, dir, "documents"), "doc_id",
       TextAnalysis.tokenCount(col("text")),
       bucketWidth = 16L, batchSize = 8),
-    Some("""WITH v AS (SELECT doc_id,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS tok
+    Some(s"""WITH v AS (SELECT doc_id,
+        len(${tokensSql("text")}) AS tok
         FROM documents),
       r AS (SELECT doc_id, tok, tok // 16 AS lb,
           row_number() OVER (PARTITION BY tok // 16
@@ -6008,10 +6108,10 @@ object Catalog {
           sum(col("n_chars")).as("sum_chars"),
           countDistinct(col("source")).as("n_sources"))
     },
-    Some("""WITH ids AS (SELECT range AS doc_id
+    Some(s"""WITH ids AS (SELECT range AS doc_id
         FROM range(12345, 45678)),
       g AS (SELECT doc_id,
-          (doc_id * 2654435761) % 2147483647 AS a FROM ids),
+          ${seedSql("doc_id")} AS a FROM ids),
       g2 AS (SELECT doc_id, a, (a * 48271) % 2147483647 AS b FROM g),
       rws AS (SELECT
           CASE a % 5 WHEN 0 THEN 'en' WHEN 1 THEN 'de' WHEN 2 THEN 'fr'
@@ -6047,14 +6147,7 @@ object Catalog {
       val seedBase = "CASE WHEN nodes.n < 1000000 AND nodes.n % 10 = 0" +
         " THEN 150000 ELSE 0 END"
       def iterSql(prev: String, out: String): String =
-        s"""$out AS (SELECT nodes.n,
-            CAST($seedBase + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS n,
-              CAST(sum((r.r * 850000) // (deg.d * 1000000)) AS BIGINT) AS s
-            FROM e JOIN $prev r ON r.n = e.src
-            JOIN deg ON deg.src = e.src
-            GROUP BY e.dst) x ON nodes.n = x.n)"""
+        pageRankStepSql("e", "nodes", "deg", seedBase, prev, out)
       s"""WITH e AS (SELECT DISTINCT o_custkey AS src,
           l_suppkey + 1000000 AS dst
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -6289,14 +6382,7 @@ object Catalog {
       val seedBase =
         "CASE WHEN nodes.n < 50 THEN 150000 ELSE 0 END"
       def iterSql(prev: String, out: String): String =
-        s"""$out AS (SELECT nodes.n,
-            CAST($seedBase + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS n,
-              CAST(sum((r.r * 850000) // (deg.d * 1000000)) AS BIGINT) AS s
-            FROM e JOIN $prev r ON r.n = e.src
-            JOIN deg ON deg.src = e.src
-            GROUP BY e.dst) x ON nodes.n = x.n)"""
+        pageRankStepSql("e", "nodes", "deg", seedBase, prev, out)
       s"""WITH RECURSIVE syn AS (SELECT doc_id,
           doc_id % 499 AS src_host,
           'See https://site' || (doc_id * 7 % 499) ||
@@ -6412,15 +6498,14 @@ object Catalog {
           sum(col("_tok")).as("tokens"))
         .crossJoin(broadcast(leaky))
     },
-    Some("""WITH a AS (SELECT doc_id, doc_id // 20 AS h,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS tok
+    Some(s"""WITH a AS (SELECT doc_id, doc_id // 20 AS h,
+        len(${tokensSql("text")}) AS tok
         FROM documents),
       sp AS (SELECT doc_id, h, tok,
           CASE WHEN b < 90 THEN 'train'
             WHEN b < 95 THEN 'valid' ELSE 'test' END AS split
         FROM (SELECT *,
-          ((h % 2147483648) * 2654435761) % 2147483647 % 100 AS b
+          ${knuthSql("h")} % 100 AS b
           FROM a) z),
       lk AS (SELECT CAST(coalesce(sum(
             CASE WHEN k > 1 THEN 1 END), 0) AS BIGINT) AS leaky_hosts
@@ -6545,8 +6630,7 @@ object Catalog {
     val lnTabSql = graft.ext.Hll.linearCountTableMicro(64)
       .mkString("[", ", ", "]")
     s"""WITH t AS (SELECT source,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-          x -> len(x) > 0) AS toks
+        ${tokensSql("text")} AS toks
         FROM documents),
       w AS (SELECT source, unnest(toks) AS tok FROM t),
       h0 AS (SELECT source, list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -6730,9 +6814,8 @@ object Catalog {
           coalesce(col("n_sel"), lit(0L)).as("n_sel"),
           coalesce(col("sel_tokens"), lit(0L)).as("sel_tokens"))
     },
-    Some("""WITH v AS (SELECT doc_id, source,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS tok
+    Some(s"""WITH v AS (SELECT doc_id, source,
+        len(${tokensSql("text")}) AS tok
         FROM documents),
       m AS (SELECT source, count(*) AS n_rows,
           CAST(sum(tok) AS HUGEINT) AS s1,
@@ -6758,7 +6841,7 @@ object Catalog {
       r AS (SELECT *, row_number() OVER (PARTITION BY source
           ORDER BY h31, doc_id) AS rnk
         FROM (SELECT v.*,
-          ((doc_id % 2147483648) * 2654435761) % 2147483647 AS h31
+          ${knuthSql("doc_id")} AS h31
           FROM v) z),
       s AS (SELECT r.source, count(*) AS n_sel, sum(r.tok) AS sel_tokens
         FROM r JOIN q USING (source) WHERE rnk <= quota
@@ -6898,13 +6981,11 @@ object Catalog {
   private val q213 = Q("q213_prefix_join",
     (s, dir) => Dedup.prefixFilterJaccardPairs(t(s, dir, "documents"),
       "text", "doc_id", n = 3, thresholdNum = 3, thresholdDen = 5),
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3)
       SELECT doc_a, doc_b, jaccard FROM (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -7010,9 +7091,8 @@ object Catalog {
         .agg(max(col("_n")).as("n_docs"),
           expr("sum(abs(_p - _q)) div 2").as("tvd_micro"))
     },
-    Some("""WITH v AS (SELECT source,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) // 8 AS b
+    Some(s"""WITH v AS (SELECT source,
+        len(${tokensSql("text")}) // 8 AS b
         FROM documents),
       per AS (SELECT source, b, count(*) AS c FROM v GROUP BY source, b),
       ns AS (SELECT source, count(*) AS n FROM v GROUP BY source),
@@ -7194,13 +7274,11 @@ object Catalog {
         .select(col("component").as("keeper"), col("n_members"),
           (col("n_members") - 1).as("n_removed"))
     },
-    Some("""WITH RECURSIVE t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH RECURSIVE t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id,
-          list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          list_distinct($trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       pr AS (SELECT doc_a, doc_b FROM (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -7325,15 +7403,14 @@ object Catalog {
           .as("n_det_en"))
       .withColumn("agree_micro",
         expr("n_agree * 1000000L div n_docs")),
-    Some("""WITH d AS (SELECT source, lang,
+    Some(s"""WITH d AS (SELECT source, lang,
         CASE WHEN n = 0 THEN 'empty'
              WHEN hits * 1.0 / n >= 0.10 THEN 'en'
              WHEN hits * 1.0 / n >= 0.05 THEN 'en_like'
              ELSE 'other' END AS det
       FROM (SELECT source, lang,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS n,
-        len(list_filter(string_split_regex(trim(text), '\s+'),
+        len(${tokensSql("text")}) AS n,
+        len(list_filter(string_split_regex(trim(text), '\\s+'),
           x -> x IN ('the','a','of','and','is'))) AS hits
         FROM documents) z)
       SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -7410,14 +7487,7 @@ object Catalog {
     },
     Some {
       def iterSql(prev: String, out: String): String =
-        s"""$out AS (SELECT nodes.n,
-            CAST(150000 + coalesce(x.s, 0) AS BIGINT) AS r
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS n,
-              CAST(sum((r.r * 850000) // (deg.d * 1000000)) AS BIGINT) AS s
-            FROM e JOIN $prev r ON r.n = e.src
-            JOIN deg ON deg.src = e.src
-            GROUP BY e.dst) x ON nodes.n = x.n)"""
+        pageRankStepSql("e", "nodes", "deg", "150000", prev, out)
       def deltaSql(i: Int): String =
         s"""SELECT $i AS iter,
           CAST(sum(abs(a.r - b.r)) AS BIGINT) AS delta_mass_micro,
@@ -7511,9 +7581,8 @@ object Catalog {
       s.createDataFrame(
         s.sparkContext.parallelize(collected.toIndexedSeq), res.schema)
     },
-    Some("""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0))) AS BIGINT) AS n_tokens,
+    Some(s"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS n_tokens,
         CAST(sum(n_chars) AS BIGINT) AS n_chars,
         CAST(0 AS BIGINT) AS n_quarantined
       FROM documents GROUP BY source"""))
@@ -7620,10 +7689,9 @@ object Catalog {
           expr("(2000000L * target_micro div 1000000L) * 1000000L " +
             "div available").as("repeat_micro"))
     },
-    Some("""WITH a0 AS (SELECT source,
-        CAST(sum(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0))) AS BIGINT) AS available,
-        TRY_CAST(NULLIF(regexp_extract(source, '([0-9]+)$', 1), '')
+    Some(s"""WITH a0 AS (SELECT source,
+        CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS available,
+        TRY_CAST(NULLIF(regexp_extract(source, '([0-9]+)$$', 1), '')
           AS BIGINT) AS idx
         FROM documents GROUP BY source),
       a AS (SELECT source, available, 20000 + idx * 3000 AS target_micro
@@ -7676,20 +7744,18 @@ object Catalog {
         .unionByName(tier("2_exact", exact))
         .unionByName(tier("3_near", near))
     },
-    Some("""WITH RECURSIVE d AS (SELECT doc_id, text,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS tok
+    Some(s"""WITH RECURSIVE d AS (SELECT doc_id, text,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS tok
         FROM documents),
       ex AS (SELECT doc_id, text, tok FROM (SELECT *,
           row_number() OVER (PARTITION BY
-            lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
+            lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
             ORDER BY doc_id) AS rn FROM d) z
         WHERE rn = 1),
       g AS (SELECT doc_id, list_distinct(
-          [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          $trigramsSql) AS sh
         FROM (SELECT doc_id, list_filter(
-            string_split_regex(trim(text), '\s+'), x -> len(x) > 0)
+            string_split_regex(trim(text), '\\s+'), x -> len(x) > 0)
             AS toks FROM ex) t0
         WHERE len(toks) >= 3),
       pr AS (SELECT doc_a, doc_b FROM (
@@ -7735,40 +7801,8 @@ object Catalog {
   private val q231 = Q("q231_image_dhash",
     (s, dir) => graft.ext.Images.dHashNearDupPairs(
       s, t(s, dir, "documents"), "doc_id", maxDist = 2),
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END * 2654435761) % 2147483647 AS m,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      cell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM b, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      h AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          AS INT) AS hamming
-      FROM h a JOIN h z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-        <= 2"""))
+    Some(s"""WITH $imageHashCtes
+      ${hammingPairsSql("h")}"""))
 
   /** Interleaved multimodal sequence packing — the VLM training-shard
     * sheet ([[Packing.packMultimodal]]): every 3rd document carries a
@@ -7801,9 +7835,8 @@ object Catalog {
             .otherwise(0L)).as("image_tokens"),
           sum(when(col("spills"), 1L).otherwise(0L)).as("n_spills"))
     },
-    Some("""WITH txt AS (SELECT doc_id * 2 AS id, 'text' AS kind,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS c
+    Some(s"""WITH txt AS (SELECT doc_id * 2 AS id, 'text' AS kind,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS c
         FROM documents),
       img AS (SELECT doc_id * 2 + 1 AS id, 'image' AS kind,
           CAST(9 AS BIGINT) AS c
@@ -7843,13 +7876,11 @@ object Catalog {
     (s, dir) => Dedup.prefixFilterJaccardPairsCapped(
       t(s, dir, "documents"), "text", "doc_id", n = 3,
       thresholdNum = 3, thresholdDen = 5, maxCandidates = 1)._2,
-    Some("""WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id, list_distinct(
-          [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          $trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       tok AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS tk FROM g),
       df AS (SELECT tk, count(*) AS d FROM tok GROUP BY tk),
@@ -7892,18 +7923,11 @@ object Catalog {
   private val q234 = Q("q234_image_dhash_vardims",
     (s, dir) => graft.ext.Images.dHashNearDupPairsVarDims(
       s, t(s, dir, "documents"), "doc_id", maxDist = 2),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      d AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+    Some(s"""WITH b AS ($plantedRowsSql),
+      d AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         10 + (pid * 7) % 23 AS w, 9 + (pid * 5) % 19 AS h FROM b),
       px AS (SELECT doc_id, w, h, x, y,
-          ((m % 256 + 1) * (7*x + 13*y + 1)
-            + ((m // 256) % 256) * (x*x + 11*y + 3)
-            + ((m // 65536) % 256) * (3*x + 5*y*y + 2)
+          (${pixelSql("x", "y")}
             + CASE WHEN pert AND x = 0 THEN 16 ELSE 0 END) % 256 AS g
         FROM d, range(32) rx(x), range(27) ry(y)
         WHERE x < w AND y < h),
@@ -7915,23 +7939,11 @@ object Catalog {
         WHERE least((cx+1)*w, (x+1)*9) > greatest(cx*w, x*9)
           AND least((cy+1)*h, (y+1)*8) > greatest(cy*h, y*8)
         GROUP BY doc_id, w, h, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.gv > l.gv THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      bits AS (${gridBitsSql("cell", "gv")}),
       hh AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM bits GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          AS INT) AS hamming
-      FROM hh a JOIN hh z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-        <= 2"""))
+      ${hammingPairsSql("hh")}"""))
 
   /** REAL audio decode via the JDK's `javax.sound.sampled` WAV codec
     * ([[graft.ext.Audio]]): synthetic 16-bit mono PCM clips (integer
@@ -7951,20 +7963,10 @@ object Catalog {
     (s, dir) => graft.ext.Audio.features(
       s, graft.ext.Audio.syntheticWavFrame(s, t(s, dir, "documents"),
         "doc_id")),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      d AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+    Some(s"""WITH b AS ($plantedRowsSql),
+      d AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         400 + (pid * 11) % 257 AS n FROM b),
-      s AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM d, range(657) r(i) WHERE i < n),
+      s AS (${audioSamplesSql("d")}),
       zc AS (SELECT doc_id, v,
           lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM s),
       feat AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
@@ -7973,18 +7975,10 @@ object Catalog {
       zcc AS (SELECT doc_id, CAST(count(*) FILTER (WHERE pv IS NOT NULL
           AND ((pv < 0) <> (v < 0))) AS BIGINT) AS n_zero_cross
         FROM zc GROUP BY doc_id),
-      bins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM s GROUP BY doc_id, (i * 65) // n),
-      bits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM bins l JOIN bins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
+      bins AS (${energyBinsSql("s")}),
+      bits AS (${energyBitsSql("bins")}),
       fp AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS fp_lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS fp_hi
+          ${bitPackSql("fp_lo", "fp_hi")}
         FROM bits GROUP BY doc_id)
       SELECT f.doc_id AS media_id, f.n_samples, f.sum_abs, f.sum_sq,
         z.n_zero_cross, p.fp_lo, p.fp_hi
@@ -8000,39 +7994,16 @@ object Catalog {
   private val q236 = Q("q236_audio_neardup",
     (s, dir) => graft.ext.Audio.fingerprintNearDupPairs(
       s, t(s, dir, "documents"), "doc_id", maxDist = 2),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      d AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+    Some(s"""WITH b AS ($plantedRowsSql),
+      d AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         400 + (pid * 11) % 257 AS n FROM b),
-      s AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM d, range(657) r(i) WHERE i < n),
-      bins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM s GROUP BY doc_id, (i * 65) // n),
-      bits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM bins l JOIN bins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
+      s AS (${audioSamplesSql("d")}),
+      bins AS (${energyBinsSql("s")}),
+      bits AS (${energyBitsSql("bins")}),
       fp AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM bits GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          AS INT) AS hamming
-      FROM fp a JOIN fp z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-        <= 2"""))
+      ${hammingPairsSql("fp")}"""))
 
   /** REAL video container demux + scene-change detection
     * ([[graft.ext.Video]]): synthetic clips are MUXED into real
@@ -8052,40 +8023,22 @@ object Catalog {
   private val q237 = Q("q237_video_scene_cuts",
     (s, dir) => graft.ext.Video.sceneCuts(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid
+    Some(s"""WITH b AS (SELECT doc_id,
+        ${plantedIdSql("doc_id")} AS pid
         FROM documents),
       fr AS (SELECT doc_id, f,
           (pid * 8 + CASE WHEN f >= 2 + pid % 3 THEN 1 ELSE 0 END)
             * 2654435761 % 2147483647 AS m
         FROM b, range(9) r(f) WHERE f < 4 + pid % 5),
-      cell AS (SELECT doc_id, f, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM fr, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, f, cx, cy),
-      bits AS (SELECT l.doc_id, l.f, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id AND r.f = l.f
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      cell AS (${frameCellsSql("(cx*4+dx)")}),
+      bits AS ($frameBitsSql),
       h AS (SELECT doc_id, f,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM bits GROUP BY doc_id, f)
       SELECT a.doc_id AS media_id, CAST(a.f AS INT) AS frame_idx,
-        CAST(bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi))
+        CAST(${hammingSql("a", "p")}
           AS INT) AS hamming,
-        (bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi)) > 0)
+        (${hammingSql("a", "p")} > 0)
           AS is_cut
       FROM h a JOIN h p ON p.doc_id = a.doc_id AND p.f = a.f - 1"""))
 
@@ -8100,19 +8053,11 @@ object Catalog {
     (s, dir) => graft.ext.Audio.autocorrPitch(
       s, graft.ext.Audio.syntheticWavFrame(s, t(s, dir, "documents"),
         "doc_id")),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      d AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+    Some(s"""WITH b AS ($plantedRowsSql),
+      d AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         400 + (pid * 11) % 257 AS n FROM b),
       s AS (SELECT doc_id, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
+          $audioSampleSql AS v
         FROM d, range(657) r(i) WHERE i < n),
       r AS (SELECT a.doc_id, l.lg, CAST(sum(a.v * bb.v) AS BIGINT) AS r
         FROM s a, range(40, 73) l(lg), s bb
@@ -8143,45 +8088,12 @@ object Catalog {
         .select(col("doc_a"), col("doc_b"))
       img.join(txt, Seq("doc_a", "doc_b"), "left_anti")
     },
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END * 2654435761) % 2147483647 AS m,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      cell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM b, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      h AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY doc_id),
-      ip AS (SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-          CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-            AS INT) AS hamming
-        FROM h a JOIN h z ON a.doc_id < z.doc_id
-        WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          <= 2),
+    Some(s"""WITH $imageHashCtes,
+      ip AS (${hammingPairsSql("h")}),
       g AS (SELECT doc_id, list_distinct(
-          [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          $trigramsSql) AS sh
         FROM (SELECT doc_id, list_filter(
-            string_split_regex(trim(text), '\s+'), x -> len(x) > 0)
+            string_split_regex(trim(text), '\\s+'), x -> len(x) > 0)
             AS toks FROM documents) t0
         WHERE len(toks) >= 3),
       tp AS (SELECT a.doc_id AS da, b.doc_id AS db
@@ -8215,40 +8127,8 @@ object Catalog {
       Dedup.hammingDeltaPairsFromFingerprints(baseF, deltaF,
         "media_id", "dhash", maxDist = 2, chunks = 4, nBits = 64)
     },
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END * 2654435761) % 2147483647 AS m,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      cell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM b, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      h AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          AS INT) AS hamming
-      FROM h a JOIN h z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-        <= 2
+    Some(s"""WITH $imageHashCtes
+      ${hammingPairsSql("h")}
         AND (a.doc_id % 4 = 0 OR z.doc_id % 4 = 0)"""))
 
   /** Video-aware multimodal packing — q232's VLM shard sheet with the
@@ -8285,15 +8165,11 @@ object Catalog {
             .otherwise(0L)).as("video_tokens"),
           sum(when(col("spills"), 1L).otherwise(0L)).as("n_spills"))
     },
-    Some("""WITH txt AS (SELECT doc_id * 2 AS id, 'text' AS kind,
-        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0)) AS BIGINT) AS c
+    Some(s"""WITH txt AS (SELECT doc_id * 2 AS id, 'text' AS kind,
+        CAST(len(${tokensSql("text")}) AS BIGINT) AS c
         FROM documents),
       vid AS (SELECT doc_id * 2 + 1 AS id, 'video' AS kind,
-          CAST((4 + (CASE WHEN doc_id > 0 AND doc_id % 25 = 0
-                THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END) % 5) * 9 AS BIGINT) AS c
+          CAST((4 + (${plantedIdSql("doc_id")}) % 5) * 9 AS BIGINT) AS c
         FROM documents WHERE doc_id % 4 = 0),
       items AS (SELECT * FROM txt UNION ALL SELECT * FROM vid),
       pos AS (SELECT id, kind, c, CAST(coalesce(sum(c) OVER (
@@ -8373,40 +8249,8 @@ object Catalog {
       s.read.parquet(pairs)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
     },
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END * 2654435761) % 2147483647 AS m,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      cell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM b, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      h AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          AS INT) AS hamming
-      FROM h a JOIN h z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-        <= 2"""))
+    Some(s"""WITH $imageHashCtes
+      ${hammingPairsSql("h")}"""))
 
   /** Unified mixed-modality fingerprint pass
     * ([[graft.ext.Multimodal.unifiedFingerprints]]): ONE decode pass
@@ -8423,81 +8267,8 @@ object Catalog {
     (s, dir) => graft.ext.Multimodal.unifiedFingerprints(s,
       graft.ext.Multimodal.syntheticMixedFrame(s,
         t(s, dir, "documents"), "doc_id")),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      im AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert
-        FROM b WHERE doc_id % 3 = 0),
-      icell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM im, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      ibits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM icell l JOIN icell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      ih AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY doc_id),
-      ad AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
-        400 + (pid * 11) % 257 AS n FROM b WHERE doc_id % 3 = 1),
-      sa AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM ad, range(657) r(i) WHERE i < n),
-      abins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM sa GROUP BY doc_id, (i * 65) // n),
-      abits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM abins l JOIN abins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
-      ah AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY doc_id),
-      vd AS (SELECT doc_id,
-          (pid * 8 * 2654435761) % 2147483647 AS m
-        FROM b WHERE doc_id % 3 = 2),
-      vcell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM vd, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      vbits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM vcell l JOIN vcell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      vh AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY doc_id)
+    Some(s"""WITH b AS ($plantedRowsSql),
+      ${unifiedHashCtes("doc_id % 3")}
       SELECT doc_id AS media_id, 'image' AS kind,
         lo AS fp_lo, hi AS fp_hi FROM ih
       UNION ALL
@@ -8519,21 +8290,17 @@ object Catalog {
   private val q244 = Q("q244_image_mirror_dedup",
     (s, dir) => graft.ext.Images.dHashNearDupPairsMirrorAware(
       s, t(s, dir, "documents"), "doc_id", maxDist = 2),
-    Some("""WITH src AS (SELECT doc_id,
+    Some(s"""WITH src AS (SELECT doc_id,
         CASE WHEN doc_id > 10 AND doc_id % 40 = 11 THEN doc_id - 1
              ELSE doc_id END AS rid,
         (doc_id > 10 AND doc_id % 40 = 11) AS mir
         FROM documents),
       b AS (SELECT doc_id, mir,
-        (CASE WHEN rid > 0 AND rid % 25 = 0 THEN rid - 1
-              WHEN rid > 6 AND rid % 50 = 7 THEN rid - 1
-              ELSE rid END * 2654435761) % 2147483647 AS m,
-        (rid > 6 AND rid % 50 = 7) AS pert
+        ${seedSql(plantedIdSql("rid"))} AS m,
+        ${perturbedSql("rid")} AS pert
         FROM src),
       px AS (SELECT doc_id, x, y,
-          ((m % 256 + 1) * (7*xx + 13*y + 1)
-            + ((m // 256) % 256) * (xx*xx + 11*y + 3)
-            + ((m // 65536) % 256) * (3*xx + 5*y*y + 2)
+          (${pixelSql("xx", "y")}
             + CASE WHEN pert AND xx = 0 THEN 16 ELSE 0 END) % 256 AS g
         FROM (SELECT doc_id, m, pert, x, y,
             CASE WHEN mir THEN 35 - x ELSE x END AS xx
@@ -8541,36 +8308,25 @@ object Catalog {
       cell AS (SELECT doc_id, x // 4 AS cx, y // 4 AS cy,
           sum(g) // 16 AS g
         FROM px GROUP BY doc_id, x // 4, y // 4),
-      obits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      obits AS (${gridBitsSql("cell", "g")}),
       mbits AS (SELECT l.doc_id, l.cy * 8 + (8 - l.cx) AS k,
           CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
         FROM cell l JOIN cell r ON r.doc_id = l.doc_id
           AND r.cy = l.cy AND r.cx = l.cx - 1
         WHERE l.cx > 0),
       fp AS (SELECT doc_id, 0 AS v,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM obits GROUP BY doc_id
         UNION ALL
         SELECT doc_id, 1,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END),
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END)
+          $loWordSql,
+          $hiWordSql
         FROM mbits GROUP BY doc_id)
       SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(min(bit_count(xor(a.lo, z.lo))
-          + bit_count(xor(a.hi, z.hi))) AS INT) AS hamming
+        CAST(min(${hammingSql("a", "z")}) AS INT) AS hamming
       FROM fp a JOIN fp z ON a.doc_id < z.doc_id
       GROUP BY a.doc_id, z.doc_id
-      HAVING min(bit_count(xor(a.lo, z.lo))
-        + bit_count(xor(a.hi, z.hi))) <= 2"""))
+      HAVING min(${hammingSql("a", "z")}) <= 2"""))
 
   /** The BOUNDED cross-modal consistency audit — q239 with its one
     * measured scale law closed ([[Dedup.prefixFilterJaccardPairsBounded]]):
@@ -8664,47 +8420,13 @@ object Catalog {
         } finally outs.release()
       } finally { fps.unpersist(); () }
     },
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END * 2654435761) % 2147483647 AS m,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      cell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM b, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      bits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      h AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY doc_id),
-      ip AS (SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-          CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-            AS INT) AS hamming
-        FROM h a JOIN h z ON a.doc_id < z.doc_id
-        WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
-          <= 2),
+    Some(s"""WITH $imageHashCtes,
+      ip AS (${hammingPairsSql("h")}),
       t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\s+'),
-          x -> len(x) > 0) AS toks
+        ${tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT doc_id, list_distinct(
-          [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-            FOR i IN range(1, len(toks) - 1)]) AS sh
+          $trigramsSql) AS sh
         FROM t WHERE len(toks) >= 3),
       tok AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS tk FROM g),
       df AS (SELECT tk, count(*) AS d FROM tok GROUP BY tk),
@@ -8778,21 +8500,17 @@ object Catalog {
       s.read.parquet(pairs)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
     },
-    Some("""WITH src AS (SELECT doc_id,
+    Some(s"""WITH src AS (SELECT doc_id,
         CASE WHEN doc_id > 10 AND doc_id % 40 = 11 THEN doc_id - 1
              ELSE doc_id END AS rid,
         (doc_id > 10 AND doc_id % 40 = 11) AS mir
         FROM documents),
       b AS (SELECT doc_id, mir,
-        (CASE WHEN rid > 0 AND rid % 25 = 0 THEN rid - 1
-              WHEN rid > 6 AND rid % 50 = 7 THEN rid - 1
-              ELSE rid END * 2654435761) % 2147483647 AS m,
-        (rid > 6 AND rid % 50 = 7) AS pert
+        ${seedSql(plantedIdSql("rid"))} AS m,
+        ${perturbedSql("rid")} AS pert
         FROM src),
       px AS (SELECT doc_id, x, y,
-          ((m % 256 + 1) * (7*xx + 13*y + 1)
-            + ((m // 256) % 256) * (xx*xx + 11*y + 3)
-            + ((m // 65536) % 256) * (3*xx + 5*y*y + 2)
+          (${pixelSql("xx", "y")}
             + CASE WHEN pert AND xx = 0 THEN 16 ELSE 0 END) % 256 AS g
         FROM (SELECT doc_id, m, pert, x, y,
             CASE WHEN mir THEN 35 - x ELSE x END AS xx
@@ -8800,36 +8518,25 @@ object Catalog {
       cell AS (SELECT doc_id, x // 4 AS cx, y // 4 AS cy,
           sum(g) // 16 AS g
         FROM px GROUP BY doc_id, x // 4, y // 4),
-      obits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      obits AS (${gridBitsSql("cell", "g")}),
       mbits AS (SELECT l.doc_id, l.cy * 8 + (8 - l.cx) AS k,
           CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
         FROM cell l JOIN cell r ON r.doc_id = l.doc_id
           AND r.cy = l.cy AND r.cx = l.cx - 1
         WHERE l.cx > 0),
       fp AS (SELECT doc_id, 0 AS v,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM obits GROUP BY doc_id
         UNION ALL
         SELECT doc_id, 1,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END),
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END)
+          $loWordSql,
+          $hiWordSql
         FROM mbits GROUP BY doc_id)
       SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(min(bit_count(xor(a.lo, z.lo))
-          + bit_count(xor(a.hi, z.hi))) AS INT) AS hamming
+        CAST(min(${hammingSql("a", "z")}) AS INT) AS hamming
       FROM fp a JOIN fp z ON a.doc_id < z.doc_id
       GROUP BY a.doc_id, z.doc_id
-      HAVING min(bit_count(xor(a.lo, z.lo))
-        + bit_count(xor(a.hi, z.hi))) <= 2"""))
+      HAVING min(${hammingSql("a", "z")}) <= 2"""))
 
   /** Scene cuts over INTER-coded clips — q237's surface earned
     * through the temporally-dependent decode
@@ -8847,40 +8554,22 @@ object Catalog {
   private val q247 = Q("q247_video_inter_scene_cuts",
     (s, dir) => graft.ext.Video.sceneCutsInter(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid
+    Some(s"""WITH b AS (SELECT doc_id,
+        ${plantedIdSql("doc_id")} AS pid
         FROM documents),
       fr AS (SELECT doc_id, f,
           (pid * 8 + CASE WHEN f >= 2 + pid % 3 THEN 1 ELSE 0 END)
             * 2654435761 % 2147483647 AS m
         FROM b, range(9) r(f) WHERE f < 4 + pid % 5),
-      cell AS (SELECT doc_id, f, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM fr, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, f, cx, cy),
-      bits AS (SELECT l.doc_id, l.f, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id AND r.f = l.f
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      cell AS (${frameCellsSql("(cx*4+dx)")}),
+      bits AS ($frameBitsSql),
       h AS (SELECT doc_id, f,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM bits GROUP BY doc_id, f)
       SELECT a.doc_id AS media_id, CAST(a.f AS INT) AS frame_idx,
-        CAST(bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi))
+        CAST(${hammingSql("a", "p")}
           AS INT) AS hamming,
-        (bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi)) > 0)
+        (${hammingSql("a", "p")} > 0)
           AS is_cut
       FROM h a JOIN h p ON p.doc_id = a.doc_id AND p.f = a.f - 1"""))
 
@@ -8914,98 +8603,25 @@ object Catalog {
       s.read.parquet(pairs)
         .select(col("doc_a"), col("doc_b"), col("hamming"), col("kind"))
     },
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      im AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert
-        FROM b WHERE (doc_id // 4) % 3 = 0),
-      icell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM im, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      ibits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM icell l JOIN icell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      ih AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY doc_id),
-      ad AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
-        400 + (pid * 11) % 257 AS n FROM b WHERE (doc_id // 4) % 3 = 1),
-      sa AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM ad, range(657) r(i) WHERE i < n),
-      abins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM sa GROUP BY doc_id, (i * 65) // n),
-      abits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM abins l JOIN abins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
-      ah AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY doc_id),
-      vd AS (SELECT doc_id,
-          (pid * 8 * 2654435761) % 2147483647 AS m
-        FROM b WHERE (doc_id // 4) % 3 = 2),
-      vcell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM vd, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      vbits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM vcell l JOIN vcell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      vh AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY doc_id)
+    Some(s"""WITH b AS ($plantedRowsSql),
+      ${unifiedHashCtes("(doc_id // 4) % 3")}
       SELECT a.doc_id AS doc_a, z.doc_id AS doc_b,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
+        CAST(${hammingSql("a", "z")}
           AS INT) AS hamming, 'image' AS kind
       FROM ih a JOIN ih z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi)) <= 2
+      WHERE ${hammingSql("a", "z")} <= 2
       UNION ALL
       SELECT a.doc_id, z.doc_id,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
+        CAST(${hammingSql("a", "z")}
           AS INT), 'audio'
       FROM ah a JOIN ah z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi)) <= 2
+      WHERE ${hammingSql("a", "z")} <= 2
       UNION ALL
       SELECT a.doc_id, z.doc_id,
-        CAST(bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
+        CAST(${hammingSql("a", "z")}
           AS INT), 'video'
       FROM vh a JOIN vh z ON a.doc_id < z.doc_id
-      WHERE bit_count(xor(a.lo, z.lo)) + bit_count(xor(a.hi, z.hi))
+      WHERE ${hammingSql("a", "z")}
         <= 2"""))
 
   /** One scratch dir for queries that exercise a real FILE boundary
@@ -9042,81 +8658,8 @@ object Catalog {
           t(s, dir, "documents"), "doc_id"), landing)
       graft.ext.MediaFiles.ingestAudit(s, landing)
     },
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      im AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert
-        FROM b WHERE doc_id % 3 = 0),
-      icell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM im, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      ibits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM icell l JOIN icell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      ih AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY doc_id),
-      ad AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
-        400 + (pid * 11) % 257 AS n FROM b WHERE doc_id % 3 = 1),
-      sa AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM ad, range(657) r(i) WHERE i < n),
-      abins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM sa GROUP BY doc_id, (i * 65) // n),
-      abits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM abins l JOIN abins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
-      ah AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY doc_id),
-      vd AS (SELECT doc_id,
-          (pid * 8 * 2654435761) % 2147483647 AS m
-        FROM b WHERE doc_id % 3 = 2),
-      vcell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM vd, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      vbits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM vcell l JOIN vcell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      vh AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY doc_id)
+    Some(s"""WITH b AS ($plantedRowsSql),
+      ${unifiedHashCtes("doc_id % 3")}
       SELECT doc_id AS media_id, 'image' AS kind,
         lo AS fp_lo, hi AS fp_hi, (doc_id % 7 = 3) AS ext_lied FROM ih
       UNION ALL
@@ -9143,20 +8686,10 @@ object Catalog {
           .filter(col("kind") === "audio")
           .select(col("media_id"), col("payload")))
     },
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
-      d AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+    Some(s"""WITH b AS ($plantedRowsSql),
+      d AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         400 + (pid * 11) % 257 AS n FROM b WHERE doc_id % 3 = 1),
-      s AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM d, range(657) r(i) WHERE i < n),
+      s AS (${audioSamplesSql("d")}),
       zc AS (SELECT doc_id, v,
           lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM s),
       feat AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
@@ -9165,18 +8698,10 @@ object Catalog {
       zcc AS (SELECT doc_id, CAST(count(*) FILTER (WHERE pv IS NOT NULL
           AND ((pv < 0) <> (v < 0))) AS BIGINT) AS n_zero_cross
         FROM zc GROUP BY doc_id),
-      bins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM s GROUP BY doc_id, (i * 65) // n),
-      bits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM bins l JOIN bins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
+      bins AS (${energyBinsSql("s")}),
+      bits AS (${energyBitsSql("bins")}),
       fp AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS fp_lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS fp_hi
+          ${bitPackSql("fp_lo", "fp_hi")}
         FROM bits GROUP BY doc_id)
       SELECT f.doc_id AS media_id, f.n_samples, f.sum_abs, f.sum_sq,
         z.n_zero_cross, p.fp_lo, p.fp_hi
@@ -9258,81 +8783,8 @@ object Catalog {
             "2026-01-01T00:30:00")
           .select(col("media_id"), col("payload")))
     },
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents WHERE doc_id % 2 = 1),
-      im AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert
-        FROM b WHERE doc_id % 3 = 0),
-      icell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2)
-            + CASE WHEN pert AND cx*4+dx = 0 THEN 16 ELSE 0 END)
-            % 256) // 16 AS g
-        FROM im, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      ibits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM icell l JOIN icell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      ih AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY doc_id),
-      ad AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
-        400 + (pid * 11) % 257 AS n FROM b WHERE doc_id % 3 = 1),
-      sa AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM ad, range(657) r(i) WHERE i < n),
-      abins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM sa GROUP BY doc_id, (i * 65) // n),
-      abits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM abins l JOIN abins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
-      ah AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY doc_id),
-      vd AS (SELECT doc_id,
-          (pid * 8 * 2654435761) % 2147483647 AS m
-        FROM b WHERE doc_id % 3 = 2),
-      vcell AS (SELECT doc_id, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM vd, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, cx, cy),
-      vbits AS (SELECT l.doc_id, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM vcell l JOIN vcell r ON r.doc_id = l.doc_id
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
-      vh AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY doc_id)
+    Some(s"""WITH b AS ($plantedRowsSql WHERE doc_id % 2 = 1),
+      ${unifiedHashCtes("doc_id % 3")}
       SELECT doc_id AS media_id, 'image' AS kind,
         lo AS fp_lo, hi AS fp_hi FROM ih
       UNION ALL
@@ -9415,51 +8867,25 @@ object Catalog {
   private val q255 = Q("q255_av_container_audit",
     (s, dir) => graft.ext.Video.avConsistency(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid,
-        (doc_id > 6 AND doc_id % 50 = 7) AS pert
-        FROM documents),
+    Some(s"""WITH b AS ($plantedRowsSql),
       fr AS (SELECT doc_id, f,
           (pid * 8 + CASE WHEN f >= 2 + pid % 3 THEN 1 ELSE 0 END)
             * 2654435761 % 2147483647 AS m
         FROM b, range(9) r(f) WHERE f < 4 + pid % 5),
-      cell AS (SELECT doc_id, f, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx)*(cx*4+dx) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM fr, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, f, cx, cy),
-      vbits AS (SELECT l.doc_id, l.f, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id AND r.f = l.f
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      cell AS (${frameCellsSql("(cx*4+dx)")}),
+      vbits AS ($frameBitsSql),
       h AS (SELECT doc_id, f,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM vbits GROUP BY doc_id, f),
       vc AS (SELECT a.doc_id,
           CAST(count(*) FILTER (WHERE
-            bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi)) > 0)
+            ${hammingSql("a", "p")} > 0)
             AS BIGINT) AS n_cuts
         FROM h a JOIN h p ON p.doc_id = a.doc_id AND p.f = a.f - 1
         GROUP BY a.doc_id),
-      ad AS (SELECT doc_id, (pid * 2654435761) % 2147483647 AS m, pert,
+      ad AS (SELECT doc_id, ${seedSql("pid")} AS m, pert,
         400 + (pid * 11) % 257 AS n FROM b),
-      sa AS (SELECT doc_id, n, i,
-          ((m % 256 + 1) * (5*i + 7)
-            + ((m // 256) % 256) * ((i*i) % 1009)
-            + CASE WHEN pert AND i < 8 THEN 128 ELSE 0 END)
-            % 65536 - 32768 AS v
-        FROM ad, range(657) r(i) WHERE i < n),
+      sa AS (${audioSamplesSql("ad")}),
       zc0 AS (SELECT doc_id, v,
           lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM sa),
       feat AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
@@ -9467,18 +8893,10 @@ object Catalog {
       zcc AS (SELECT doc_id, CAST(count(*) FILTER (WHERE pv IS NOT NULL
           AND ((pv < 0) <> (v < 0))) AS BIGINT) AS n_zero_cross
         FROM zc0 GROUP BY doc_id),
-      abins AS (SELECT doc_id, (i * 65) // n AS bin, sum(abs(v)) AS e
-        FROM sa GROUP BY doc_id, (i * 65) // n),
-      abits AS (SELECT l.doc_id, l.bin AS k,
-          CASE WHEN r.e > l.e THEN 1 ELSE 0 END AS bit
-        FROM abins l JOIN abins r ON r.doc_id = l.doc_id
-          AND r.bin = l.bin + 1
-        WHERE l.bin < 64),
+      abins AS (${energyBinsSql("sa")}),
+      abits AS (${energyBitsSql("abins")}),
       afp AS (SELECT doc_id,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS fp_lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS fp_hi
+          ${bitPackSql("fp_lo", "fp_hi")}
         FROM abits GROUP BY doc_id)
       SELECT b.doc_id AS media_id,
         CAST(4 + b.pid % 5 AS INT) AS n_frames, vc.n_cuts,
@@ -9589,10 +9007,8 @@ object Catalog {
   private val q258 = Q("q258_av_sync_audit",
     (s, dir) => graft.ext.Video.avSyncAudit(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END) AS pid
+    Some(s"""WITH b AS (SELECT doc_id,
+        (${plantedIdSql("doc_id")}) AS pid
         FROM documents),
       t AS (SELECT doc_id, CAST(4 + pid % 5 AS INT) AS nf,
           CAST(400 + (pid * 11) % 257 AS BIGINT) AS len FROM b),
@@ -9641,39 +9057,21 @@ object Catalog {
   private val q260 = Q("q260_video_pan_mc_cuts",
     (s, dir) => graft.ext.Video.panCutsInterMcRange(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-             WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-             ELSE doc_id END AS pid
+    Some(s"""WITH b AS (SELECT doc_id,
+        ${plantedIdSql("doc_id")} AS pid
         FROM documents),
       fr AS (SELECT doc_id, f,
           (pid * 8) * 2654435761 % 2147483647 AS m
         FROM b, range(9) r(f) WHERE f < 4 + pid % 5),
-      cell AS (SELECT doc_id, f, cx, cy,
-          sum(((m % 256 + 1) * (7*(cx*4+dx + f*2) + 13*(cy*4+dy) + 1)
-            + ((m // 256) % 256)
-              * ((cx*4+dx + f*2)*(cx*4+dx + f*2) + 11*(cy*4+dy) + 3)
-            + ((m // 65536) % 256)
-              * (3*(cx*4+dx + f*2) + 5*(cy*4+dy)*(cy*4+dy) + 2))
-            % 256) // 16 AS g
-        FROM fr, range(9) r1(cx), range(8) r2(cy),
-          range(4) r3(dx), range(4) r4(dy)
-        GROUP BY doc_id, f, cx, cy),
-      bits AS (SELECT l.doc_id, l.f, l.cy * 8 + l.cx AS k,
-          CASE WHEN r.g > l.g THEN 1 ELSE 0 END AS bit
-        FROM cell l JOIN cell r ON r.doc_id = l.doc_id AND r.f = l.f
-          AND r.cy = l.cy AND r.cx = l.cx + 1
-        WHERE l.cx < 8),
+      cell AS (${frameCellsSql("(cx*4+dx + f*2)")}),
+      bits AS ($frameBitsSql),
       h AS (SELECT doc_id, f,
-          bit_or(CASE WHEN bit = 1 AND k < 32
-            THEN (1::BIGINT << k) ELSE 0 END) AS lo,
-          bit_or(CASE WHEN bit = 1 AND k >= 32
-            THEN (1::BIGINT << (k - 32)) ELSE 0 END) AS hi
+          ${bitPackSql("lo", "hi")}
         FROM bits GROUP BY doc_id, f)
       SELECT a.doc_id AS media_id, CAST(a.f AS INT) AS frame_idx,
-        CAST(bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi))
+        CAST(${hammingSql("a", "p")}
           AS INT) AS hamming,
-        (bit_count(xor(a.lo, p.lo)) + bit_count(xor(a.hi, p.hi)) > 0)
+        (${hammingSql("a", "p")} > 0)
           AS is_cut
       FROM h a JOIN h p ON p.doc_id = a.doc_id AND p.f = a.f - 1"""))
 
@@ -9695,10 +9093,8 @@ object Catalog {
   private val q261 = Q("q261_av_sync_varclock",
     (s, dir) => graft.ext.Video.avSyncAuditVarClock(
       s, t(s, dir, "documents"), "doc_id"),
-    Some("""WITH b AS (SELECT doc_id,
-        (CASE WHEN doc_id > 0 AND doc_id % 25 = 0 THEN doc_id - 1
-              WHEN doc_id > 6 AND doc_id % 50 = 7 THEN doc_id - 1
-              ELSE doc_id END) AS pid
+    Some(s"""WITH b AS (SELECT doc_id,
+        (${plantedIdSql("doc_id")}) AS pid
         FROM documents),
       c AS (SELECT doc_id, CAST(4 + pid % 5 AS INT) AS nf,
           CASE WHEN pid % 3 = 0 THEN 33367
@@ -9956,26 +9352,10 @@ object Catalog {
         .select(col("l_orderkey"), col("l_linenumber"), col("quantity"),
           col("part"))
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1),
+    Some(s"""WITH base AS (
+        $snapshotBaseSql),
       fw AS (
-        SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
-          SELECT l_orderkey, l_linenumber,
-            CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY l_linenumber DESC,
-                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1)
+        $snapshotFeedSql)
       SELECT l_orderkey, l_linenumber, quantity, part
       FROM fw WHERE op <> 'D'
       UNION ALL
@@ -10098,26 +9478,10 @@ object Catalog {
         Seq("l_linenumber", "quantity"), "op", Seq("part"), Some(2L))
       graft.ops.SnapshotTable.changesBetween(s, tbl, "l_orderkey", 1L, 2L)
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1),
+    Some(s"""WITH base AS (
+        $snapshotBaseSql),
       fw AS (
-        SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
-          SELECT l_orderkey, l_linenumber,
-            CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY l_linenumber DESC,
-                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1)
+        $snapshotFeedSql)
       SELECT f.l_orderkey, f.l_linenumber, f.quantity, f.part,
         'insert' AS _change_type
       FROM fw f WHERE f.op <> 'D' AND NOT EXISTS
@@ -10273,26 +9637,10 @@ object Catalog {
           col("part"), col("_change_type"), col("_from_version"),
           col("_to_version"))
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1),
+    Some(s"""WITH base AS (
+        $snapshotBaseSql),
       fw AS (
-        SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
-          SELECT l_orderkey, l_linenumber,
-            CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY l_linenumber DESC,
-                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1)
+        $snapshotFeedSql)
       SELECT l_orderkey, l_linenumber, quantity, part,
         'insert' AS _change_type, CAST(0 AS BIGINT) AS _from_version,
         CAST(1 AS BIGINT) AS _to_version
@@ -10358,15 +9706,8 @@ object Catalog {
         .select(col("l_orderkey"), col("l_linenumber"), col("quantity"),
           col("part"))
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1)
+    Some(s"""WITH base AS (
+        $snapshotBaseSql)
       SELECT l_orderkey, l_linenumber, quantity, part FROM base
       WHERE l_orderkey % 10 <> 3
       UNION ALL
@@ -10448,26 +9789,10 @@ object Catalog {
           col("part"), col("_change_type"), col("_from_version"),
           col("_to_version"))
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1),
+    Some(s"""WITH base AS (
+        $snapshotBaseSql),
       fw AS (
-        SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
-          SELECT l_orderkey, l_linenumber,
-            CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY l_linenumber DESC,
-                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1),
+        $snapshotFeedSql),
       v2 AS (
         SELECT l_orderkey, l_linenumber, quantity, part
         FROM fw WHERE op <> 'D'
@@ -10845,26 +10170,10 @@ object Catalog {
           col("part"), col("_change_type"), col("_from_version"),
           col("_to_version"))
     },
-    Some("""WITH base AS (
-        SELECT l_orderkey, l_linenumber, quantity, part FROM (
-          SELECT l_orderkey, l_linenumber,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber = 1) z WHERE rn = 1),
+    Some(s"""WITH base AS (
+        $snapshotBaseSql),
       fw AS (
-        SELECT l_orderkey, l_linenumber, quantity, part, op FROM (
-          SELECT l_orderkey, l_linenumber,
-            CASE WHEN l_linenumber = 7 THEN 'D' ELSE 'U' END AS op,
-            CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR) AS quantity,
-            l_orderkey % 4 AS part,
-            row_number() OVER (PARTITION BY l_orderkey
-              ORDER BY l_linenumber DESC,
-                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS VARCHAR)
-                DESC) rn
-          FROM lineitem WHERE l_linenumber >= 2) z WHERE rn = 1),
+        $snapshotFeedSql),
       v2 AS (
         SELECT l_orderkey, l_linenumber, quantity, part
         FROM fw WHERE op <> 'D'

@@ -21,8 +21,9 @@ import org.apache.spark.sql.SparkSession
   * the local filesystem (the window shrinks to the syscall gap). The
   * same rename claims a staged DIRECTORY ([[claimStaged]]): an existing
   * destination dir refuses instead of taking the source as a child —
-  * on the local filesystem, a racer landing inside the gap can still
-  * leave it nested there, hidden (`_`-named) from every reader. A claim
+  * on the local filesystem, a racer landing inside the gap makes the
+  * rename copy the source in as a child, so the claim checks for that
+  * nested copy and treats it as the lost claim it is. A claim
   * lost to a racer deletes its own staging and raises [[Conflict]];
   * any other rename failure (permissions, quota, a missing source)
   * propagates as the IOException it is, so a retry loop never spins on
@@ -75,14 +76,32 @@ object Claims {
   }
 
   /** Claim `dst` with `body`: per-attempt tmp write, then the
-    * no-clobber rename ([[claimStaged]]). */
+    * no-clobber rename. */
   def claim(spark: SparkSession, dst: Path, body: String): Unit =
-    claimStaged(spark, stage(spark, dst, body), dst)
+    renameNoClobber(spark, stage(spark, dst, body), dst)
 
-  /** Claim `dst` with an already-staged file or directory: the
-    * no-clobber rename. Lost to a racer (`dst` exists) → the staging is
-    * deleted and [[Conflict]] raised; any other failure propagates. */
-  def claimStaged(spark: SparkSession, staged: Path, dst: Path): Unit =
+  /** Claim `dst` with an already-staged DIRECTORY: the no-clobber
+    * rename, then one check of `dst/<staged name>`. A racer's dir that
+    * lands inside the local filesystem's check-then-rename gap turns
+    * the rename into a copy INTO it; that nested copy is the lost
+    * claim, so it is deleted and [[Conflict]] raised, as for a racer
+    * that landed before the check. */
+  def claimStaged(spark: SparkSession, staged: Path, dst: Path): Unit = {
+    renameNoClobber(spark, staged, dst)
+    val nested = new Path(dst, staged.getName)
+    val fs = fsOf(spark, dst)
+    if (fs.exists(nested)) {
+      fs.delete(nested, true)
+      throw new Conflict(s"$dst already exists — a concurrent writer " +
+        "claimed it first (our staging landed nested inside it)")
+    }
+  }
+
+  /** The no-clobber rename of `staged` onto `dst`. Lost to a racer
+    * (`dst` exists) → the staging is deleted and [[Conflict]] raised;
+    * any other failure propagates. */
+  private def renameNoClobber(spark: SparkSession, staged: Path,
+      dst: Path): Unit =
     try fcOf(spark, dst).rename(staged, dst) // Options.Rename.NONE
     catch {
       case e: java.io.IOException =>

@@ -65,5 +65,11 @@ class BenchSpec extends SparkSpec {
     // no successful reading: the first pass's stands
     assert(m.adopted.toMap.apply("q00_boom") == failed.head._1)
     assert(m.adopted.toMap.apply(q01) == ok.map(_._1).min)
+    // an interrupt is no query's failure: it ends the measurement
+    val halt: Bench.Query = (_, _) => throw new InterruptedException("halt")
+    intercept[InterruptedException] {
+      Bench.measure(spark, sf(),
+        Seq("q00_halt" -> halt, q01 -> SparkEntry.queries(q01)))
+    }
   }
 }

@@ -88,6 +88,38 @@ class ClaimSpec extends SparkSpec {
       Seq(1L, 2L))
   }
 
+  test("a publisher whose range dir appears inside its claim's rename " +
+      "gap loses the claim: the nested copy is removed, the feed reads " +
+      "once") {
+    val base = tmpDir("claimnest")
+    val tbl = s"$base/t"
+    SnapshotTable.merge(spark, tbl,
+      Seq((1L, "a", 1), (2L, "b", 2)).toDF("k", "v", "p"), "k", "v",
+      Seq("p"), Some(1L))
+    SnapshotTable.publishChanges(spark, tbl, "k", s"$base/racer")
+    val land = s"$base/land"
+    // the racer's range lands after the claim's existence check, at
+    // the staging rename itself: the local rename then copies the
+    // staging INTO the racer's dir
+    FaultFs.arm("**/changes_v0_v1", 1) { _ =>
+      val src = java.nio.file.Paths.get(s"$base/racer/changes_v0_v1")
+      val dst = java.nio.file.Paths.get(s"$land/changes_v0_v1")
+      java.nio.file.Files.walk(src).sorted().forEach(p =>
+        java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))))
+    }
+    try assert(SnapshotTable.publishChanges(spark, tbl, "k",
+      FaultFs.path(land)) == Some((0L, 1L)))
+    finally assert(FaultFs.disarm() == 1, "the racer must have run")
+    val left = java.nio.file.Files.walk(java.nio.file.Paths.get(land))
+      .map(_.getFileName.toString)
+      .filter(_.startsWith("_staging_changes_")).count()
+    assert(left == 0L, "the lost claim must leave no staging, nested or not")
+    val feed = spark.read.parquet(s"$land/changes_*")
+    assert(feed.count() == 2L)
+    assert(feed.select(col("k")).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
   test("contract refusals stay plain IllegalArgumentExceptions: an " +
       "existing check name is no Conflict, and a merge refused by a " +
       "CHECK whose text says 'already exists' is not retried") {
